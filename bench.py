@@ -285,13 +285,11 @@ def main() -> None:
             "dedup_minhash_fast",
             lambda: dedup_minhash_sf(spark, sf_dir).count(),
         )
-        # free the dedup/packing plan-pins between bench sections
+        # free the session pins between bench sections
         # (cached blocks otherwise accumulate for the rest of the session)
-        from fs2_osm_spark.operators.dedup import release_pins
-        from fs2_osm_spark.operators.packing import release_pins as release_pack
+        from fs2_osm_spark.pins import release_pins
 
         release_pins()
-        release_pack()
 
         # IVF-PQ at index scale: 1M synthetic 64-d vectors (pure Column
         # arithmetic — no data files), 64 IVF lists, 4-bit PQ codes.

@@ -67,8 +67,9 @@ def sec_lifecycle(spark, results: dict) -> None:
 
 
 def sec_phash(spark, results: dict) -> None:
-    from fs2_osm_spark.operators.dedup import connected_components, release_pins
+    from fs2_osm_spark.operators.dedup import connected_components
     from fs2_osm_spark.operators.multimodal import phash_band_pairs, phash_frame
+    from fs2_osm_spark.pins import release_pins
     from fs2_osm_spark.synth.images import neardup_table
 
     nd_path = os.path.join(CACHE_DIR, "images_neardup_100k.parquet")
@@ -107,8 +108,9 @@ def sec_cc(spark, results: dict) -> None:
     """CC in isolation over a pre-materialized pair list (latency profile)."""
     from pyspark.sql import functions as F
 
-    from fs2_osm_spark.operators.dedup import connected_components, release_pins
+    from fs2_osm_spark.operators.dedup import connected_components
     from fs2_osm_spark.operators.multimodal import phash_band_pairs, phash_frame
+    from fs2_osm_spark.pins import release_pins
 
     nd_path = os.path.join(CACHE_DIR, "images_neardup_100k.parquet")
     hashed = phash_frame(spark.read.parquet(nd_path))

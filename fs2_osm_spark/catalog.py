@@ -14,14 +14,18 @@ suite through it to prove the boundary is real.
 
 from __future__ import annotations
 
+import atexit
 import os
 import re
+import shutil
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
 WriteFn = Callable[[DataFrame, str, str], None]
 ReadFn = Callable[[SparkSession, str], DataFrame]
+DropFn = Callable[[SparkSession, str], None]  # evicts a superseded result
 
 
 def _write_parquet(df: DataFrame, path: str, mode: str) -> None:
@@ -30,6 +34,10 @@ def _write_parquet(df: DataFrame, path: str, mode: str) -> None:
 
 def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
+
+
+def _drop_parquet(spark: SparkSession, path: str) -> None:
+    shutil.rmtree(path, ignore_errors=True)
 
 
 _BATCH_RE = re.compile(r"^batch=(.+)$")
@@ -125,8 +133,14 @@ def _read_iceberg(spark: SparkSession, path: str) -> DataFrame:
     return df
 
 
+def _drop_iceberg(spark: SparkSession, path: str) -> None:
+    spark.sql(f"DROP TABLE IF EXISTS {_iceberg_ident(path)} PURGE")
+    shutil.rmtree(path, ignore_errors=True)  # the local name placeholder
+
+
 WRITERS: dict[str, WriteFn] = {"parquet": _write_parquet, "iceberg": _write_iceberg}
 READERS: dict[str, ReadFn] = {"parquet": _read_parquet, "iceberg": _read_iceberg}
+DROPPERS: dict[str, DropFn] = {"parquet": _drop_parquet, "iceberg": _drop_iceberg}
 
 _format = os.environ.get("FS2_OSM_TABLE_FORMAT", "parquet")
 
@@ -151,36 +165,45 @@ def read_table(spark: SparkSession, path: str) -> DataFrame:
     return READERS[_format](spark, path)
 
 
-# last durable result table per query key written by THIS process; the
-# superseded tree is deleted on the next swap so disk stays bounded (the
-# stream_cdc_state _CDC_STATE convention, shared by every query that
-# returns a materialized result)
-_DURABLE_RESULTS: dict[str, str] = {}
+# durable results per key written by THIS process, (format, path, session)
+# each: the last one is the live result, any earlier ones are superseded
+# results whose drop failed and is retried on the next swap and at exit,
+# so storage stays bounded.
+_DURABLE_RESULTS: dict[str, list[tuple[str, str, SparkSession]]] = {}
+
+
+def _drop_results(entries: list) -> list:
+    """Drop each (format, path, session) entry; return those that failed.
+    A format with no DROPPERS entry raises KeyError."""
+    failed = []
+    for fmt, path, spark in entries:
+        drop = DROPPERS[fmt]
+        try:
+            drop(spark, path)
+        except Exception:  # noqa: BLE001 — kept for a later retry
+            failed.append((fmt, path, spark))
+    return failed
+
+
+@atexit.register
+def _drop_durable_results() -> None:
+    for entries in _DURABLE_RESULTS.values():
+        _drop_results(entries)
+    _DURABLE_RESULTS.clear()
 
 
 def swap_durable_result(
     df: DataFrame, key: str, prefix: str = "fs2_osm_result_"
 ) -> DataFrame:
-    """Materialize ``df`` through the table-format boundary into a fresh
-    per-run directory and return a plain read of the durable table.
-
-    This is the eviction-proof alternative to ``cache()+count()`` (a cached
-    result can be dropped under memory pressure and silently recomputed
-    through upstream state — e.g. released plan pins or a re-sampled range
-    partitioner — after the fact) and to ``toPandas()`` round-trips (a
-    driver-side collect of data-cardinality results, the 100x-scale
-    killer). The directory is unique per call (mkdtemp), so concurrent
-    processes never clobber each other; within one process the PREVIOUS
-    run's tree for the same key is deleted — only the latest returned
-    DataFrame for a key stays readable, exactly the _CDC_STATE contract.
-    """
-    import shutil
-    import tempfile
-
+    """Write ``df`` through the table-format boundary into a fresh per-run
+    table (mkdtemp: processes never clobber each other) and return a plain
+    read of it: the eviction-proof alternative to ``cache()+count()``, which
+    can silently recompute through released pins, and to ``toPandas()``.
+    The PREVIOUS result for ``key`` is then dropped through ``DROPPERS``, so
+    only the latest frame per key stays readable. A failed drop does not
+    fail the swap; that result stays registered and is retried later."""
     path = tempfile.mkdtemp(prefix=prefix)
     write_table(df, path)
-    prev = _DURABLE_RESULTS.get(key)
-    if prev is not None:
-        shutil.rmtree(prev, ignore_errors=True)
-    _DURABLE_RESULTS[key] = path
+    entries = _DURABLE_RESULTS.setdefault(key, [])
+    entries[:] = _drop_results(entries) + [(_format, path, df.sparkSession)]
     return read_table(df.sparkSession, path)

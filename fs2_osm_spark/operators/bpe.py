@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from fs2_osm_spark.pins import checkpoint, unpin
+
 END_MARK = "</w>"
 
 
@@ -53,13 +55,16 @@ def bpe_train(
     Returns ([(left, right, pair_count, corpus_tokens_after)], final
     symbolized vocab ``(word, cnt, s array<string>)``). Symbols start as
     characters plus the end-of-word marker; ties on pair count break
-    lexicographically on (left, right) so training is deterministic.
+    lexicographically on (left, right) so training is deterministic. Only
+    the returned vocab's checkpoint outlives the call (a session pin).
     """
-    syms = vocab.select(
-        "word",
-        "cnt",
-        F.concat(F.split("word", ""), F.array(F.lit(END_MARK))).alias("s"),
-    ).localCheckpoint()
+    syms = checkpoint(
+        vocab.select(
+            "word",
+            "cnt",
+            F.concat(F.split("word", ""), F.array(F.lit(END_MARK))).alias("s"),
+        )
+    )
     merges: list[tuple[str, str, int, int]] = []
     for _ in range(n_merges):
         n = F.size("s")
@@ -84,8 +89,10 @@ def bpe_train(
         if not best:
             break
         left, right, pc = best[0].a, best[0].b, int(best[0].pc)
-        syms = syms.withColumn("s", F.expr(_merge_expr(left, right)))
-        syms = syms.localCheckpoint()
+        prev, syms = syms, checkpoint(
+            syms.withColumn("s", F.expr(_merge_expr(left, right)))
+        )
+        unpin(prev)
         tokens_after = int(
             syms.select(F.sum(F.col("cnt") * F.size("s")).alias("t"))
             .collect()[0]

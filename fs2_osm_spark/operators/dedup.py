@@ -2,13 +2,19 @@
 
 Unlike queries/dedup.py (md5 fragments chosen for cross-engine oracle
 parity), these use xxhash64 — Spark's JVM-side 64-bit hash — so the whole
-MinHash/SimHash pipeline stays inside whole-stage codegen: shingling is
-posexplode + window lead, hashing is a Catalyst expression, signatures are
-plain min() aggregates. No Python in the hot path at all.
+MinHash/SimHash pipeline stays inside whole-stage codegen: shingles slide
+an n-gram window over each document's word array (no shuffle), hashing is
+a Catalyst expression, signatures are plain min() aggregates. No Python in
+the hot path at all.
 
 Clustering uses iterative min-label propagation over the candidate-pair
 graph (connected components), a bounded number of self-join rounds — the
 set-based replacement for a driver-side union-find.
+
+The self-joins (LSH banding, hamming blocking) share one upstream pass
+through a lazy session ``persist`` (fs2_osm_spark.pins): zero jobs at
+compose time, where even localCheckpoint(eager=False) would materialize
+the upstream shuffle stages under AQE.
 """
 
 from __future__ import annotations
@@ -16,56 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _pin(df: DataFrame) -> DataFrame:
-    """Truncate lineage before ITERATION (connected components).
-
-    Uses a RELIABLE checkpoint when the session has a checkpoint dir
-    (survives executor loss — what a 1000-executor job must use), else
-    localCheckpoint (fine on local[N]; pins executors on a real cluster).
-    Eager by design: callers are iterative loops that run actions anyway.
-
-    Non-iterative self-joins (LSH banding, hamming blocking) use persist()
-    instead — lazy share-once semantics with zero jobs at compose time
-    (under AQE even localCheckpoint(eager=False) materializes the upstream
-    shuffle stages, because RDD conversion executes the adaptive plan).
-    """
-    sc = df.sparkSession.sparkContext
-    if sc._jsc.sc().getCheckpointDir().isDefined():
-        return df.checkpoint(eager=True)
-    return df.localCheckpoint()
-
-
-# Every lazy plan-pin persist() issued by this module, so long-lived
-# sessions (bench loops, the driver sampling all queries) have a release
-# path: cached blocks otherwise accumulate until session end, since an
-# operator cannot unpersist mid-plan without losing the share-once shape.
-_PINNED: list[DataFrame] = []
-
-
-def _persist_pinned(df: DataFrame) -> DataFrame:
-    df = df.persist()
-    _PINNED.append(df)
-    return df
-
-
-# public name for sibling operator modules (multimodal's phash banding)
-# whose pins should ride the same release path callers already invoke
-persist_pinned = _persist_pinned
-
-
-def release_pins() -> int:
-    """Unpersist every plan-pin this module has persisted. Safe any time —
-    an in-flight plan that still references a released pin just recomputes.
-    Call after materializing a dedup query's result. Returns the count."""
-    n = 0
-    while _PINNED:
-        try:
-            _PINNED.pop().unpersist()
-        except Exception:  # noqa: BLE001 — session may already be gone
-            pass
-        n += 1
-    return n
+# release_pins is re-exported: existing callers import it from here
+from fs2_osm_spark.pins import checkpoint, persist, release_pins, unpin  # noqa: F401
 
 
 def shingles(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
@@ -142,9 +100,8 @@ def lsh_candidate_pairs(
         id_col, "bk.band", "bk.key"
     )
     # persist before the self-join: otherwise BOTH join sides re-run the
-    # whole shingle+minhash pipeline (lazy — composing runs no job);
-    # registered in _PINNED so release_pins() can free the cache later
-    banded = _persist_pinned(banded)
+    # whole shingle+minhash pipeline (lazy — composing runs no job)
+    banded = persist(banded)
     a = banded.alias("a")
     b = banded.alias("b")
     return (
@@ -169,6 +126,7 @@ def connected_components(
     Each round joins current labels across edges and takes the min —
     converges in O(diameter) rounds; near-dup clusters are tiny, so
     max_iters=10 is far beyond any realistic diameter. Deterministic.
+    Only the result's checkpoint outlives the call (a session pin).
     """
     # pin the pair list first — the symmetric union would otherwise compute
     # the upstream pair-generation pipeline twice; then pin the edge list so
@@ -176,16 +134,19 @@ def connected_components(
     # symmetric union (r08): id_a < id_b makes the two directions disjoint,
     # and the per-round min() aggregate is duplicate-insensitive anyway —
     # the distinct was a whole extra shuffle of the edge list for nothing.
-    pairs = _pin(pairs)
-    edges = pairs.select(F.col("id_a").alias("x"), F.col("id_b").alias("y")).unionByName(
-        pairs.select(F.col("id_b").alias("x"), F.col("id_a").alias("y"))
+    pairs = checkpoint(pairs)
+    edges = checkpoint(
+        pairs.select(F.col("id_a").alias("x"), F.col("id_b").alias("y")).unionByName(
+            pairs.select(F.col("id_b").alias("x"), F.col("id_a").alias("y"))
+        )
     )
-    edges = _pin(edges)
+    unpin(pairs)
     labels = (
         edges.select(F.col("x").alias("id"))
         .distinct()
         .select("id", F.col("id").alias("cluster"))
     )
+    new_labels = None
     for _ in range(max_iters):
         # one join + ONE aggregation per round (r08): the self label and
         # every neighbor label land in a union keyed by id, and a single
@@ -199,7 +160,7 @@ def connected_components(
         nbr = edges.join(labels, edges.y == labels.id).select(
             F.col("x").alias("id"), F.col("cluster"), F.lit(False).alias("_own")
         )
-        new_labels = (
+        prev, new_labels = new_labels, checkpoint(  # truncate the plan
             own.unionByName(nbr)
             .groupBy("id")
             .agg(
@@ -210,10 +171,12 @@ def connected_components(
                 "id", "cluster", (F.col("cluster") < F.col("_old")).alias("_chg")
             )
         )
-        new_labels = _pin(new_labels)  # truncate the plan per round
+        unpin(prev)  # nothing reads the previous round now
         labels = new_labels.select("id", "cluster")
         if new_labels.filter(F.col("_chg")).limit(1).count() == 0:
             break
+    if max_iters > 0:  # the result reads only its own checkpoint
+        unpin(edges)
     return labels
 
 
@@ -320,8 +283,8 @@ def hamming_pairs(
                     )
         return out
 
-    # lazy: self-join sides reuse one simhash pass (release via release_pins)
-    sims = _persist_pinned(sims)
+    # lazy: self-join sides reuse one simhash pass
+    sims = persist(sims)
     exact = sims.select(
         F.col(id_col), "simhash", F.explode(F.array(*entries(False))).alias("bk")
     ).select(id_col, "simhash", "bk.band", "bk.key")

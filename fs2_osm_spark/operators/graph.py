@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from fs2_osm_spark.pins import checkpoint, unpin
+
 PR_SCALE = 10**12  # 1.0 of rank mass, in pico-rank units
 PR_DAMPING_PCT = 85
 
@@ -38,22 +40,23 @@ def pagerank_fixed_point(
 
     Sinks (vertices with no out-edges) simply leak their mass — no
     dangling-mass redistribution — which the oracle mirrors; on a
-    symmetrized graph there are no sinks. localCheckpoint per round
-    truncates the growing lineage (the connected-components convention)
-    so the plan stays O(1) deep regardless of n_iters.
+    symmetrized graph there are no sinks. A checkpoint per round truncates
+    the growing lineage (the connected-components convention) so the plan
+    stays O(1) deep regardless of n_iters; only the result's checkpoint
+    outlives the call (a session pin).
     """
     deg = edges.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
-    nodes = (
+    nodes = checkpoint(
         edges.select(F.col("u").alias("node_id"))
         .union(edges.select(F.col("v").alias("node_id")))
         .distinct()
-        .localCheckpoint()
     )
     n = nodes.count()
     if n == 0:
+        unpin(nodes)
         raise ValueError("pagerank_fixed_point: empty edge list")
     base = (100 - damping_pct) * scale // (100 * n)
-    e = edges.join(deg, "u").localCheckpoint()  # (u, v, deg): reused per round
+    e = checkpoint(edges.join(deg, "u"))  # (u, v, deg): reused per round
     pr = nodes.select(
         "node_id", F.lit(scale // n).cast("bigint").alias("pr")
     )
@@ -64,7 +67,7 @@ def pagerank_fixed_point(
             .groupBy("v")
             .agg(F.sum("share").alias("agg"))
         )
-        pr = (
+        prev, pr = pr, checkpoint(
             nodes.join(agg, nodes.node_id == agg.v, "left")
             .select(
                 "node_id",
@@ -78,6 +81,9 @@ def pagerank_fixed_point(
                 .cast("bigint")
                 .alias("pr"),
             )
-            .localCheckpoint()
         )
+        unpin(prev)
+    unpin(e)
+    if n_iters > 0:  # the result reads only its own checkpoint
+        unpin(nodes)
     return pr

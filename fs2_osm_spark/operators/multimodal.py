@@ -458,11 +458,11 @@ def phash_band_pairs(
         )
     # pin the (id, phash) frame before the self-join — otherwise BOTH join
     # sides re-run the whole upstream pipeline (for image corpora that is
-    # the full decode+hash pass, the dominant cost). Same share-once persist
-    # the minhash banding uses; released by dedup.release_pins().
-    from fs2_osm_spark.operators.dedup import persist_pinned
+    # the full decode+hash pass, the dominant cost). Same share-once
+    # session pin the minhash banding uses.
+    from fs2_osm_spark.pins import persist
 
-    hashed = persist_pinned(hashed.select(F.col(id_col), "phash"))
+    hashed = persist(hashed.select(F.col(id_col), "phash"))
     bands = hashed.select(
         F.col(id_col),
         "phash",

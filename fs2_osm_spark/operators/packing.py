@@ -32,25 +32,9 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
-# plan pins (same pattern as operators/dedup.py): the ranged+pid frame must
-# stay persisted while results derived from it are alive; long-lived
-# sessions release via release_pins() after materializing
-_PINNED: list[DataFrame] = []
-
-
-def release_pins() -> int:
-    """Unpersist every frame this module has pinned. Call AFTER
-    materializing the derived result (a later recompute would re-derive
-    partition ids, which the already-collected offset map may not match)."""
-    n = 0
-    while _PINNED:
-        try:
-            _PINNED.pop().unpersist()
-        except Exception:  # noqa: BLE001 — session may already be gone
-            pass
-        n += 1
-    return n
+from fs2_osm_spark.pins import persist
 
 
 def distributed_prefix_sum(
@@ -61,7 +45,8 @@ def distributed_prefix_sum(
     num_partitions: int | None = None,
 ) -> DataFrame:
     """Exclusive prefix sum of value_col over the global order_cols order,
-    without a single-task global window. Rows keep all original columns."""
+    without a single-task global window. Rows keep all original columns.
+    The ranged frame is a session pin (see the recompute guard below)."""
     parts = num_partitions or df.sparkSession.sparkContext.defaultParallelism
     ranged = (
         df.repartitionByRange(parts, *[F.col(c) for c in order_cols])
@@ -75,8 +60,7 @@ def distributed_prefix_sum(
         # shuffle was already paid; the staging read is narrow).
         .withColumn("_pid", F.spark_partition_id())
     )
-    ranged = ranged.persist()
-    _PINNED.append(ranged)
+    ranged = persist(ranged)
 
     # pass 1: per-range-partition totals (narrow)
     totals = (
@@ -96,7 +80,9 @@ def distributed_prefix_sum(
     # splits and any coalescing of ranges into one task)
     bc = df.sparkSession.sparkContext.broadcast((offsets, expected))
     out_fields = [c for c in ranged.schema.fieldNames() if c != "_pid"] + [out_col]
-    schema = df.schema.add(out_col, "long")
+    # a new StructType: schema.add() would mutate the one PySpark caches
+    # on the caller's frame
+    schema = StructType([*df.schema.fields, StructField(out_col, LongType())])
 
     def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         offs, exp = bc.value

@@ -33,6 +33,7 @@ from fs2_osm_spark.operators.assembly import (
     build_osm_lines,
     simple_polygons,
 )
+from fs2_osm_spark.pins import Pins
 from fs2_osm_spark.plans.features import run_all_features
 
 
@@ -161,27 +162,29 @@ def run_export(
 
     # ---- Phase B: feature passes (after the barrier) ----
     t_b = time.time()
-    lines = build_osm_lines(ways_t, nodes_t).cache()
-    lines.count()  # materialize before concurrent consumers
-    tm["phase_b_lines"] = round(time.time() - t_b, 3)
-    rw_t = read_table(spark, os.path.join(output_root, "relations_ways"))
-    # feature passes each filter the UN-whitelisted closed-way ∪ multipolygon
-    # union with their own predicate, like the reference's per-feature SQL;
-    # cache it or every polygon feature re-runs the stitch applyInPandas
-    t_p = time.time()
-    polys = all_polygons(lines, rels_t, rw_t).cache()
-    polys.count()
-    tm["phase_b_polys"] = round(time.time() - t_p, 3)
-    # the `polygons` table is way-sourced only (PolygonFeature.scala:30-32:
-    # combineWays is commented out), with the exact taggedPolygons whitelist
-    phase_b: dict[str, DataFrame] = {
-        "osm_lines": lines,
-        "polygons": simple_polygons(lines),
-        **run_all_features(
-            lines, polys, ways=ways_t, relations=rels_t, relations_ways=rw_t
-        ),
-    }
-    try:
+    # a failed sink must not leak the Phase-B caches for the session
+    with Pins() as pins:
+        lines = pins.persist(build_osm_lines(ways_t, nodes_t))
+        lines.count()  # materialize before concurrent consumers
+        tm["phase_b_lines"] = round(time.time() - t_b, 3)
+        rw_t = read_table(spark, os.path.join(output_root, "relations_ways"))
+        # feature passes each filter the UN-whitelisted closed-way ∪
+        # multipolygon union with their own predicate, like the reference's
+        # per-feature SQL; cache it or every polygon feature re-runs the
+        # stitch applyInPandas
+        t_p = time.time()
+        polys = pins.persist(all_polygons(lines, rels_t, rw_t))
+        polys.count()
+        tm["phase_b_polys"] = round(time.time() - t_p, 3)
+        # the `polygons` table is way-sourced only (PolygonFeature.scala:30-32:
+        # combineWays is commented out), with the exact taggedPolygons whitelist
+        phase_b: dict[str, DataFrame] = {
+            "osm_lines": lines,
+            "polygons": simple_polygons(lines),
+            **run_all_features(
+                lines, polys, ways=ways_t, relations=rels_t, relations_ways=rw_t
+            ),
+        }
         if sink_parallelism > 1:
             from concurrent.futures import ThreadPoolExecutor
 
@@ -192,9 +195,5 @@ def run_export(
         else:
             for n, df in phase_b.items():
                 sink(df, n)
-    finally:
-        # a failed sink must not leak the Phase-B caches for the session
-        lines.unpersist()
-        polys.unpersist()
     tm["phase_b_total"] = round(time.time() - t_b, 3)
     return summary

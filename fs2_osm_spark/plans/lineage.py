@@ -23,6 +23,7 @@ import time
 from collections.abc import Callable
 
 from fs2_osm_spark.catalog import read_table, write_table
+from fs2_osm_spark.pins import Pins
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -141,16 +142,15 @@ def run_batched(
     def process(b: str) -> None:
         t0 = time.time()
         part = source.filter(F.col(batch_col).cast("string") == b)
-        out = transform(part) if transform is not None else part
-        out = out.cache()
-        pstats = (
-            out.groupBy(F.spark_partition_id().alias("pid"))
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        )
-        n = sum(r.n for r in pstats)
-        write_table(out, os.path.join(root, "data", f"batch={b}"))
-        out.unpersist()
+        with Pins() as pins:
+            out = pins.persist(transform(part) if transform is not None else part)
+            pstats = (
+                out.groupBy(F.spark_partition_id().alias("pid"))
+                .agg(F.count(F.lit(1)).alias("n"))
+                .collect()
+            )
+            n = sum(r.n for r in pstats)
+            write_table(out, os.path.join(root, "data", f"batch={b}"))
         # batch data dirs are disjoint, so batch jobs overlap freely; the
         # lineage log is ONE append-mode table, and concurrent appends to
         # the same path share the committer's _temporary staging dir —
@@ -168,11 +168,19 @@ def run_batched(
         # batches are independent filter->write jobs over the (cached)
         # source: submit a few concurrently so the next batch's tasks
         # back-fill executors freed by the current batch's tail (guide
-        # §2.6). 3 in flight fills the tail without starving any job.
-        from concurrent.futures import ThreadPoolExecutor
+        # §2.6). 4 in flight fills the tail without starving any job. The
+        # first failure cancels every batch that has not started (resume
+        # stays correct: completed batches are logged).
+        from concurrent.futures import ThreadPoolExecutor, as_completed
 
         with ThreadPoolExecutor(max_workers=4) as ex:
-            list(ex.map(process, todo))
+            futures = [ex.submit(process, b) for b in todo]
+            try:
+                for fut in as_completed(futures):
+                    fut.result()
+            except BaseException:
+                ex.shutdown(cancel_futures=True)
+                raise
         return len(todo)
 
     # sequential path: keeps fail_after's "crash after exactly n completed

@@ -25,17 +25,19 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from fs2_osm_spark.pins import Pins
+
 
 def frame_tables(
-    spark: SparkSession, pbf_dir: str, share_relations: bool = False
+    spark: SparkSession, pbf_dir: str, pins: Pins | None = None
 ) -> dict[str, DataFrame]:
     """Decoded wire rows -> normalized nodes/ways/relations/relations_ways.
 
-    share_relations=True persists the decoded relation frames so the FOUR
-    consumers (the relations sink + the three member-table splits) share a
-    single Python frame-decode pass instead of re-decoding per action; the
-    handle is returned under "_rels_raw" for the caller to unpersist once
-    the consumers have materialized.
+    With the caller's ``pins``, the decoded relation frames are persisted
+    there so the FOUR consumers (the relations sink + the three member-table
+    splits) share a single Python frame-decode pass instead of re-decoding
+    per action; the caller releases them once the consumers have
+    materialized.
     """
     from fs2_osm_spark.sources.pbf_frames import (
         read_nodes_from_frames,
@@ -65,8 +67,8 @@ def frame_tables(
         "relation_id", tags_map.alias("_tags"),
         "member_ids", "member_roles", "member_types",
     )
-    if share_relations:
-        rels_raw = rels_raw.persist()
+    if pins is not None:
+        rels_raw = pins.persist(rels_raw)
     relations = rels_raw.select(
         F.col("relation_id").alias("osm_id"),
         F.col("_tags")["name"].alias("name"),
@@ -107,7 +109,6 @@ def frame_tables(
         "relations_ways": relations_ways,
         "relations_nodes": relations_nodes,
         "relations_relations": relations_relations,
-        "_rels_raw": rels_raw if share_relations else None,
     }
 
 
@@ -136,9 +137,9 @@ def run_pbf_pipeline(
 
     tm = phase_timings if phase_timings is not None else {}
     t0 = time.time()
-    t = frame_tables(spark, pbf_dir, share_relations=True)
     export_root = os.path.join(output_root, "export")
-    try:
+    with Pins() as pins:
+        t = frame_tables(spark, pbf_dir, pins)
         summary = run_export(
             spark, t["nodes"], t["ways"], t["relations"], t["relations_ways"],
             export_root,
@@ -146,9 +147,6 @@ def run_pbf_pipeline(
             relations_relations=t["relations_relations"],
             phase_timings=tm,
         )
-    finally:
-        if t["_rels_raw"] is not None:
-            t["_rels_raw"].unpersist()
     tm["export_total"] = round(time.time() - t0, 3)
 
     t1 = time.time()
@@ -174,15 +172,13 @@ def run_pbf_pipeline(
     # bytes-bearing input. At a scale where even that exceeds memory, stage
     # it to parquet partitioned BY the batch column instead, so each batch
     # filter becomes partition pruning rather than recompute.
-    batched = result.withColumn(
-        "batch", F.pmod(F.col("tile_x"), F.lit(n_batches))
-    ).cache()
-    try:
+    with Pins() as pins:
+        batched = pins.persist(
+            result.withColumn("batch", F.pmod(F.col("tile_x"), F.lit(n_batches)))
+        )
         n = run_batched(
             spark, batched, "batch", os.path.join(output_root, "flagship"),
             fail_after=fail_after,
         )
-    finally:
-        batched.unpersist()
     tm["flagship_batched"] = round(time.time() - t1, 3)
     return {"summary": summary, "batches": n}

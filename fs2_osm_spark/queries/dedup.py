@@ -288,11 +288,13 @@ def dedup_minhash_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     reproduce first-principles clusters exactly (anti-drift pytest:
     tests/test_dedup_fixture.py). The sf-scaled throughput of the same
     pipeline is what bench.py times (dedup_minhash_fast section)."""
+    from fs2_osm_spark.catalog import swap_durable_result
     from fs2_osm_spark.operators.dedup import (
         connected_components,
         lsh_candidate_pairs,
         minhash_signatures,
     )
+    from fs2_osm_spark.pins import release_pins
     from fs2_osm_spark.synth.docs import dedup_corpus
     from fs2_osm_spark.synth.staging import ensure_dedup_fixture
 
@@ -300,10 +302,16 @@ def dedup_minhash_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     sigs = minhash_signatures(dedup_corpus(spark), "doc_id", "text", n_hashes=32)
     pairs = lsh_candidate_pairs(sigs, "doc_id", n_bands=8, n_hashes=32)
     labels = connected_components(pairs)
-    return labels.select(
-        F.col("id").cast("bigint").alias("id"),
-        F.col("cluster").cast("bigint").alias("cluster"),
+    # durable, then release: the labels read CC's last checkpoint
+    out = swap_durable_result(
+        labels.select(
+            F.col("id").cast("bigint").alias("id"),
+            F.col("cluster").cast("bigint").alias("cluster"),
+        ),
+        "dedup_minhash_fast",
     )
+    release_pins()
+    return out
 
 
 def _simhash_oracle(name: str) -> str:
@@ -381,9 +389,14 @@ def dedup_cc_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB twin computes the same components by transitive closure
     (recursive CTE), so every label must match exactly. The xxhash64 fast
     path (dedup_minhash_fast) reuses this operator on engine-native pairs."""
+    from fs2_osm_spark.catalog import swap_durable_result
     from fs2_osm_spark.operators.dedup import connected_components
+    from fs2_osm_spark.pins import release_pins
 
     pairs = _lsh_pairs(spark, sf_dir).select(
         F.col("doc_a").alias("id_a"), F.col("doc_b").alias("id_b")
     )
-    return connected_components(pairs)
+    # durable, then release: the labels read CC's last checkpoint
+    out = swap_durable_result(connected_components(pairs), "dedup_cc_clusters")
+    release_pins()
+    return out

@@ -97,7 +97,9 @@ def img_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin re-derives bands, candidate pairs, the popcount verification, AND
     the transitive closure from the fixture's recorded hashes — the only
     trust boundary is hash == recorded-hash, pinned by the anti-drift test."""
-    from fs2_osm_spark.operators.dedup import connected_components, release_pins
+    from fs2_osm_spark.catalog import swap_durable_result
+    from fs2_osm_spark.operators.dedup import connected_components
+    from fs2_osm_spark.pins import release_pins
 
     corpus = spark.read.parquet(ensure_phash_corpus())
     hashed = phash_frame(corpus)
@@ -107,18 +109,12 @@ def img_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # decode pipeline should run once (inside the pinned band join), not
     # again just to list the corpus
     ids = corpus.select("img_id")
-    out = (
-        ids.join(cc, ids.img_id == cc.id, "left")
-        .select(
-            "img_id",
-            F.coalesce(F.col("cluster"), F.col("img_id")).alias("cluster"),
-        )
-        .cache()
+    out = ids.join(cc, ids.img_id == cc.id, "left").select(
+        "img_id",
+        F.coalesce(F.col("cluster"), F.col("img_id")).alias("cluster"),
     )
-    # materialize, then drop the CC iteration pins — a post-release
-    # re-execution of `out` is CORRECT (unlike the packing guard), just
-    # recomputes; selfcheck clears the result cache per-query
-    out.count()
+    # durable, then release: the CC result reads its last checkpoint
+    out = swap_durable_result(out, "img_phash_neardup")
     release_pins()
     return out
 
@@ -277,18 +273,13 @@ def img_shard_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     order. The naive formulation is a single-task global window; this runs
     the distributed exclusive prefix sum (range shuffle + two narrow
     passes — the machinery sequence packing uses), so shard assignment
-    parallelizes at any corpus size. The manifest is materialized through
-    the durable-table swap BEFORE release_pins(): r07 used cache()+count(),
-    and a cached result evicted after the pins are released recomputes
-    through a RE-SAMPLED repartitionByRange against the stale broadcast
-    offset map — the nondeterminism window behind the CORRECTNESS_r07 hash
-    mismatch. The returned plan is a plain scan of the written table, so a
-    late re-execution can never reach the prefix-sum machinery."""
+    parallelizes at any corpus size. The manifest is written durably before
+    the pins are released, so a late re-execution scans the table and never
+    reaches the prefix-sum machinery (r07's cache()+count() could recompute
+    through a re-sampled range partitioner: the CORRECTNESS_r07 window)."""
     from fs2_osm_spark.catalog import swap_durable_result
-    from fs2_osm_spark.operators.packing import (
-        distributed_prefix_sum,
-        release_pins,
-    )
+    from fs2_osm_spark.operators.packing import distributed_prefix_sum
+    from fs2_osm_spark.pins import release_pins
 
     imgs = spark.read.parquet(ensure_images_fixture()).select(
         "image_id", F.octet_length("bytes").cast("bigint").alias("sz")
@@ -466,20 +457,18 @@ def img_phash_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     back. The oracle is brute force: every pair within hamming 6 from the
     recorded hashes — so the blocked index must achieve EXACTLY full
     recall at 1/256th the candidate volume."""
-    from fs2_osm_spark.operators.dedup import hamming_pairs, release_pins
+    from fs2_osm_spark.catalog import swap_durable_result
+    from fs2_osm_spark.operators.dedup import hamming_pairs
+    from fs2_osm_spark.pins import release_pins
 
     corpus = spark.read.parquet(ensure_phash_corpus())
     hashed = phash_frame(corpus).select(
         F.col("img_id"), F.col("phash").alias("simhash")
     )
-    out = (
-        hamming_pairs(
-            hashed, "img_id", max_distance=PHASH_T, n_bands=4, probe_bits=1
-        )
-        .select("id_a", "id_b", F.col("hamming").cast("bigint").alias("hamming"))
-        .cache()
-    )
-    out.count()
+    pairs = hamming_pairs(
+        hashed, "img_id", max_distance=PHASH_T, n_bands=4, probe_bits=1
+    ).select("id_a", "id_b", F.col("hamming").cast("bigint").alias("hamming"))
+    out = swap_durable_result(pairs, "img_phash_multiprobe")
     release_pins()
     return out
 

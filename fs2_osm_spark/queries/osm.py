@@ -450,11 +450,12 @@ def osm_feature_catalog(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicates re-transcribed as EXISTS over the EAV tag tables, the
     multipolygon contribution via the recursive stitch-structure CTE."""
     from fs2_osm_spark.operators.assembly import all_polygons
+    from fs2_osm_spark.pins import persist
     from fs2_osm_spark.synth.staging import ensure_osm_fixture
 
     ensure_osm_fixture(spark)
     t = osm_tables(spark, N_ZONES)
-    lines = build_osm_lines(t["ways"], t["nodes"]).cache()
+    lines = persist(build_osm_lines(t["ways"], t["nodes"]))
     polys = all_polygons(lines, t["relations"], t["relations_ways"])
     outs = run_all_features(
         lines,
@@ -965,15 +966,16 @@ def osm_apply_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     with a window, so survivor choice, delete-beats-modify ordering, and
     payload propagation are all independently checked."""
     from fs2_osm_spark.operators.diff import apply_diff
+    from fs2_osm_spark.pins import persist
     from fs2_osm_spark.synth.staging import ensure_osm_fixture
 
     ensure_osm_fixture(spark)
     t = osm_tables(spark, N_ZONES)
     # the base feeds four scans (base + three diff branches): cache the
     # tiny synth output once instead of re-running the generator per branch
-    # (left cached for the session — the driver consumes the result lazily;
-    # O(nodes-at-256-zones) ~ a few hundred KB; selfcheck clears per-query)
-    base = t["nodes"].select("osm_id", "lon", "lat").cache()
+    # (a session pin — the driver consumes the result lazily;
+    # O(nodes-at-256-zones) ~ a few hundred KB)
+    base = persist(t["nodes"].select("osm_id", "lon", "lat"))
     modify = base.filter(F.col("osm_id") % 7 == 0).select(
         "osm_id",
         (F.col("lon") + 0.001).alias("lon"),
@@ -1087,6 +1089,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     returned plan is a plain scan, not the live iteration lineage."""
     from fs2_osm_spark.catalog import swap_durable_result
     from fs2_osm_spark.operators.graph import pagerank_fixed_point
+    from fs2_osm_spark.pins import release_pins
     from fs2_osm_spark.synth.staging import ensure_osm_fixture, osm_fixture_path
 
     ensure_osm_fixture(spark)
@@ -1100,6 +1103,8 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs.select(F.col("v").alias("u"), F.col("u").alias("v"))
     ).distinct()
     pr = pagerank_fixed_point(edges, n_iters=PR_ITERS)
-    return swap_durable_result(
+    out = swap_durable_result(
         pr.select("node_id", F.col("pr").alias("pr_pico")), "graph_pagerank"
     )
+    release_pins()
+    return out

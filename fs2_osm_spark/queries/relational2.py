@@ -123,14 +123,15 @@ def r23_type_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def r11_derived_reuse(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from fs2_osm_spark.pins import persist
+
     li = load(spark, sf_dir, "lineitem")
-    stats = (
-        li.groupBy(F.col("l_orderkey").alias("order_id"))
-        .agg(
+    # compute once, consume twice (D1/R11)
+    stats = persist(
+        li.groupBy(F.col("l_orderkey").alias("order_id")).agg(
             F.count(F.lit(1)).alias("n_items"),
             F.round(F.sum("l_extendedprice"), 2).cast("double").alias("total"),
         )
-        .cache()  # compute once, consume twice (D1/R11)
     )
     big = stats.filter(F.col("n_items") > 4).agg(
         F.lit("big").alias("consumer"),

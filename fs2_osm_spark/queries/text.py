@@ -185,7 +185,9 @@ def text_pack_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators/packing.py; a global Window would collapse to one task); the
     oracle is DuckDB's single-node window cumsum, so the distributed
     decomposition must reproduce the sequential scan exactly."""
+    from fs2_osm_spark.catalog import swap_durable_result
     from fs2_osm_spark.operators.packing import pack_token_bins
+    from fs2_osm_spark.pins import release_pins
 
     docs = load(spark, sf_dir, "documents")
     counted = docs.select(
@@ -193,11 +195,18 @@ def text_pack_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size(F.split(F.col("text"), " ")).cast("bigint").alias("n_tokens"),
     )
     packed = pack_token_bins(counted, "n_tokens", ["doc_id"], PACK_BUDGET)
-    return packed.select(
-        "doc_id", "n_tokens",
-        F.col("bin_id"),
-        F.col("offset_in_bin").cast("bigint").alias("offset_in_bin"),
+    # durable, then release: a late re-execution through the released
+    # ranged frame would trip the prefix sum's recompute guard
+    out = swap_durable_result(
+        packed.select(
+            "doc_id", "n_tokens",
+            F.col("bin_id"),
+            F.col("offset_in_bin").cast("bigint").alias("offset_in_bin"),
+        ),
+        "text_pack_bins",
     )
+    release_pins()
+    return out
 
 
 # deterministic mixing weights: keep-permille per source bucket (a "data
@@ -402,10 +411,9 @@ def text_global_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     distributed_prefix_sum (range shuffle + two narrow passes — the same
     scale-safe machinery sequence packing uses), counting 1 per row, so
     rank assignment parallelizes at any corpus size."""
-    from fs2_osm_spark.operators.packing import (
-        distributed_prefix_sum,
-        release_pins,
-    )
+    from fs2_osm_spark.catalog import swap_durable_result
+    from fs2_osm_spark.operators.packing import distributed_prefix_sum
+    from fs2_osm_spark.pins import release_pins
 
     docs = load(spark, sf_dir, "documents")
     h = F.expr(h16_sql("doc_id || '|shuf'")).cast("bigint")
@@ -415,15 +423,9 @@ def text_global_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranked = distributed_prefix_sum(
         keyed, "one", ["h", "doc_id"], out_col="shuffle_rank"
     ).select("doc_id", F.col("shuffle_rank").cast("bigint").alias("shuffle_rank"))
-    # Deliberately left cached for the session: the caller (driver gate)
-    # consumes the returned frame lazily AFTER release_pins(), and an
-    # uncached re-execution would recompute the ranged frame the released
-    # offsets were collected from (the fail-fast guard in
-    # distributed_prefix_sum would raise). The pinned output is
-    # O(doc_id + rank) — a few hundred KB at the gate's scale; selfcheck
-    # clears it per-query.
-    out = ranked.cache()
-    out.count()  # materialize before releasing the module's plan pins
+    # durable, then release: a late re-execution through the released
+    # ranged frame would trip the prefix sum's recompute guard
+    out = swap_durable_result(ranked, "text_global_shuffle")
     release_pins()
     return out
 
@@ -803,7 +805,9 @@ def text_pipeline_end2end(spark: SparkSession, sf_dir: str) -> DataFrame:
     filters and the mix are narrow."""
     from pyspark.sql import Window
 
+    from fs2_osm_spark.catalog import swap_durable_result
     from fs2_osm_spark.operators.packing import pack_token_bins
+    from fs2_osm_spark.pins import release_pins
 
     docs = load(spark, sf_dir, "documents")
     base = docs.select("doc_id", "text", "source", "n_chars")
@@ -853,10 +857,15 @@ def text_pipeline_end2end(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size(toks).cast("bigint").alias("n_tokens"),
     )
     packed = pack_token_bins(mixed, "n_tokens", ["doc_id"], PACK_BUDGET)
-    return packed.select(
-        "doc_id", "source", "split", "n_tokens",
-        "bin_id", F.col("offset_in_bin").cast("bigint").alias("offset_in_bin"),
+    out = swap_durable_result(
+        packed.select(
+            "doc_id", "source", "split", "n_tokens",
+            "bin_id", F.col("offset_in_bin").cast("bigint").alias("offset_in_bin"),
+        ),
+        "text_pipeline_end2end",
     )
+    release_pins()  # as in text_pack_bins
+    return out
 
 
 BPE_MERGES = 3
@@ -952,6 +961,7 @@ def text_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     from fs2_osm_spark.operators.bpe import bpe_train
+    from fs2_osm_spark.pins import release_pins
 
     docs = load(spark, sf_dir, "documents")
     vocab = (
@@ -960,6 +970,7 @@ def text_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
     )
     merges, _ = bpe_train(vocab, BPE_MERGES)
+    release_pins()  # only the driver-side merge list is returned
     pdf = pd.DataFrame(
         [(k + 1, l, r, pc, ta) for k, (l, r, pc, ta) in enumerate(merges)],
         columns=[

@@ -266,11 +266,6 @@ def stream_stream_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# last durable CDC snapshot written by THIS process (superseded snapshots
-# are deleted on the next run; unique dir names keep processes independent)
-_CDC_STATE: dict[str, str | None] = {"path": None}
-
-
 def stream_cdc_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming CDC merge via foreachBatch: the event stream is a change
     feed over a per-user state table — every event upserts the user's
@@ -283,16 +278,15 @@ def stream_cdc_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     which is exactly what the batch twin (one merge over all events) and
     the DuckDB oracle check. State lands in a per-batch parquet dir (the
     same swap-on-write pattern a lakehouse MERGE target uses), and the
-    FINAL state is swapped through catalog.write_table into a durable
-    table the returned DataFrame reads — the driver never materializes
+    FINAL state is swapped through catalog.swap_durable_result into a
+    durable table the returned DataFrame reads — the driver never materializes
     state (r07; the r06 version round-tripped it through toPandas)."""
-    import os
     import shutil
     import tempfile
 
     import pandas as pd
 
-    from fs2_osm_spark.catalog import read_table, write_table
+    from fs2_osm_spark.catalog import swap_durable_result
     from fs2_osm_spark.operators.diff import apply_diff
 
     stream = _events_stream(spark, sf_dir)
@@ -347,23 +341,15 @@ def stream_cdc_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     final = spark.read.parquet(holder["path"])
     # durable snapshot swap: write the cleaned final state THROUGH the
     # table-format boundary (one distributed job — tombstones dropped, meta
-    # columns pruned), then drop the per-batch working tree and return a
-    # plain read of the durable table. The snapshot dir is UNIQUE per run
-    # (mkdtemp): a fixed shared path would let concurrent processes —
-    # bench + driver, parallel pytest sessions, other users on the host —
-    # clobber each other's overwrite while a returned lazy reader is still
-    # evaluating. Bounded disk: each run deletes the PREVIOUS run's
-    # snapshot in this process (at most one superseded tree ever exists).
-    state_table = tempfile.mkdtemp(prefix="fs2_osm_cdc_state_")
-    write_table(
+    # columns pruned) into a per-run table, then drop the per-batch working
+    # tree and return a plain read of the durable table (the previous run's
+    # snapshot in this process is evicted by the swap).
+    out = swap_durable_result(
         final.filter(F.col("op") != "delete").select(
             "user_id", "value", "event_type"
         ),
-        state_table,
+        "stream_cdc_state",
+        prefix="fs2_osm_cdc_state_",
     )
     shutil.rmtree(root, ignore_errors=True)
-    prev_state = _CDC_STATE.get("path")
-    if prev_state is not None:
-        shutil.rmtree(prev_state, ignore_errors=True)
-    _CDC_STATE["path"] = state_table
-    return read_table(spark, state_table)
+    return out

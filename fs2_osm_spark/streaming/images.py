@@ -18,7 +18,7 @@ written sequentially (increasing mtime, replayed oldest-first, the
 events-stream pattern); a production feed would be a log source with
 per-partition ordering. State follows the CDC swap-on-write pattern:
 per-batch parquet snapshots, previous snapshot dropped, final state
-swapped through catalog.write_table into a durable per-run table.
+swapped through catalog.swap_durable_result into a durable per-run table.
 """
 
 from __future__ import annotations
@@ -31,10 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from fs2_osm_spark.operators.multimodal import band_cols, phash_frame
-
-# previous run's durable output table (same bounded-disk contract as
-# _CDC_STATE in streaming/events.py: at most one superseded tree)
-_IMG_DEDUP_OUT: dict[str, str | None] = {"path": None}
+from fs2_osm_spark.pins import Pins
 
 
 def _earlier_dup_ids(
@@ -79,7 +76,7 @@ def stream_image_dedup(
 ) -> DataFrame:
     """Run the ordered image feed through foreachBatch dedup-on-arrival;
     returns the durable (img_id, is_novel) table."""
-    from fs2_osm_spark.catalog import read_table, write_table
+    from fs2_osm_spark.catalog import swap_durable_result
 
     corpus = spark.read.parquet(corpus_path).select("img_id", "bytes", "fmt")
     # fixture-scale arrival rank (1000 rows). At feed scale arrival comes
@@ -124,12 +121,12 @@ def stream_image_dedup(
         # pin the decoded hashes: `hashed` feeds the dup join twice (probe
         # side + prior union), the flags join, and the state snapshot —
         # unpersisted, every micro-batch would decode its images ~4x
-        hashed = (
-            phash_frame(batch_df)
-            .join(batch_df.select("img_id", "arrival"), "img_id")
-            .persist()
-        )
-        try:
+        with Pins() as pins:
+            hashed = pins.persist(
+                phash_frame(batch_df).join(
+                    batch_df.select("img_id", "arrival"), "img_id"
+                )
+            )
             prev_path = holder["state"]
             if prev_path is not None:
                 state = spark.read.parquet(prev_path)
@@ -151,8 +148,6 @@ def stream_image_dedup(
             holder["state"] = out
             if prev_path is not None:
                 shutil.rmtree(prev_path, ignore_errors=True)
-        finally:
-            hashed.unpersist()
 
     q = (
         stream.writeStream.foreachBatch(apply_batch)
@@ -164,16 +159,12 @@ def stream_image_dedup(
     finally:
         q.stop()
 
-    out_table = tempfile.mkdtemp(prefix="fs2_osm_img_dedup_")
-    write_table(
+    out = swap_durable_result(
         spark.read.parquet(flags_dir).select(
             "img_id", (~F.col("is_dup")).alias("is_novel")
         ),
-        out_table,
+        "stream_image_dedup",
+        prefix="fs2_osm_img_dedup_",
     )
     shutil.rmtree(root, ignore_errors=True)
-    prev_out = _IMG_DEDUP_OUT.get("path")
-    if prev_out is not None:
-        shutil.rmtree(prev_out, ignore_errors=True)
-    _IMG_DEDUP_OUT["path"] = out_table
-    return read_table(spark, out_table)
+    return out

@@ -1,4 +1,6 @@
-"""Determinism pins for the two CORRECTNESS_r07 red rows (VERDICT item 1c).
+"""Determinism pins for the two CORRECTNESS_r07 red rows (VERDICT item 1c)
+and for the queries that release their pins before returning a durable
+result.
 
 Each query's fn runs TWICE in one session with induced cache pressure
 (`spark.catalog.clearCache()` between runs — evicting anything the first
@@ -9,6 +11,8 @@ and this test keeps it removed.
 """
 
 from __future__ import annotations
+
+import os
 
 import pytest
 
@@ -23,7 +27,19 @@ def _hash_of(df) -> tuple[int, str]:
     return len(rows), value_hash(rows, [c.lower() for c in df.columns])
 
 
-@pytest.mark.parametrize("name", ["img_shard_pack", "graph_pagerank"])
+@pytest.mark.skipif(not os.path.isdir(SF_DIR), reason=f"{SF_DIR} not present")
+@pytest.mark.parametrize(
+    "name",
+    [
+        "img_shard_pack",
+        "graph_pagerank",
+        "img_phash_neardup",
+        "img_phash_multiprobe",
+        "text_global_shuffle",
+        "text_pack_bins",
+        "text_pipeline_end2end",
+    ],
+)
 def test_rerun_under_cache_pressure_is_identical(spark, name):
     q = QUERIES[name]
     df1 = q.fn(spark, SF_DIR)

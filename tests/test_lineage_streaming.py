@@ -65,6 +65,41 @@ def test_run_batched_then_resume(spark, source):
         assert all(v == 100 for v in per_batch.values())
 
 
+def test_run_batched_failure_cancels_unstarted_batches(spark, monkeypatch):
+    """Concurrent path: the first failing batch stops every batch that has
+    not started yet, instead of running on until the in-order result scan
+    reaches it. The failing batch is the 4th submitted; the 3 before it
+    are slow, so an in-order scan would let 4 more batches start."""
+    import threading
+    import time
+
+    from fs2_osm_spark.plans import lineage
+
+    n_batches = 16
+    src = spark.range(0, 160).withColumn("batch", F.col("id") % n_batches)
+    failing = sorted(str(b) for b in range(n_batches))[3]
+    started: list[str] = []
+    lock = threading.Lock()
+    real_write = lineage.write_table
+
+    def write(df, path, mode="overwrite"):
+        b = os.path.basename(path).removeprefix("batch=")
+        if "/data/" in path:
+            with lock:
+                started.append(b)
+            if b == failing:
+                raise RuntimeError("injected batch failure")
+            time.sleep(1.5)
+        return real_write(df, path, mode)
+
+    monkeypatch.setattr(lineage, "write_table", write)
+    with tempfile.TemporaryDirectory() as root:
+        with pytest.raises(RuntimeError, match="injected batch failure"):
+            run_batched(spark, src, "batch", root)
+        assert failing in started
+        assert len(started) <= 6, sorted(started)
+
+
 def test_table_format_swap_reruns_lineage_resume(spark, source):
     """The catalog boundary is an interface fact: register a monkeypatch
     table format (a counting wrapper over parquet), switch the engine to

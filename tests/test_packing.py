@@ -8,8 +8,8 @@ import pandas as pd
 from fs2_osm_spark.operators.packing import (
     distributed_prefix_sum,
     pack_token_bins,
-    release_pins,
 )
+from fs2_osm_spark.pins import release_pins
 
 
 def _ref_prefix(vals):
@@ -52,6 +52,21 @@ def test_pack_bins_budget_semantics(spark):
     psum = [0, 100, 1000, 1100]
     assert got["bin_id"].tolist() == [p // 512 for p in psum]
     assert got["offset_in_bin"].tolist() == [p % 512 for p in psum]
+    release_pins()
+
+
+def test_prefix_sum_leaves_input_frame_unchanged(spark):
+    """The output schema is a new StructType: the input frame's cached
+    schema must not grow the output column, so a second call on the same
+    frame works and pack_token_bins returns exactly its own columns."""
+    df = spark.createDataFrame(pd.DataFrame({"k": [1, 2, 3], "v": [5, 6, 7]}))
+    for _ in range(2):
+        got = distributed_prefix_sum(df, "v", ["k"], num_partitions=2)
+        assert sorted(got.toPandas()["prefix_sum"]) == [0, 5, 11]
+        assert df.columns == ["k", "v"]
+    packed = pack_token_bins(df, "v", ["k"], budget=8, num_partitions=2)
+    assert packed.columns == ["k", "v", "bin_id", "offset_in_bin"]
+    assert len(packed.collect()) == 3
     release_pins()
 
 

@@ -91,7 +91,7 @@ def main() -> None:
 
     # the 100k phash near-dup band join (pre-CC stage; CC's final plan is an
     # iteration artifact, the band join is the shape that matters)
-    from fs2_osm_spark.operators.dedup import release_pins
+    from fs2_osm_spark.pins import release_pins
     from fs2_osm_spark.operators.multimodal import phash_band_pairs, phash_frame
     from fs2_osm_spark.synth.staging import ensure_phash_corpus
 

@@ -63,6 +63,7 @@ def main() -> int:
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
     name_filter = argv[1] if len(argv) > 1 else ""
 
+    from fs2_osm_spark.pins import release_pins
     from fs2_osm_spark.session import get_spark
 
     con = duckdb_connection(sf_dir)
@@ -88,32 +89,10 @@ def main() -> int:
         else:
             mode = "rows-only" if q.oracle is None else "oracle"
             print(f"ok   {name} [{mode}] ({dt:.1f}s)")
-        if name.startswith("dedup_"):
-            # the dedup operators pin small intermediate plans with
-            # .persist(); release them between queries so a 148-query
-            # session's storage memory stays flat instead of accumulating
-            from fs2_osm_spark.operators.dedup import release_pins
-
-            release_pins()
-        if name in ("text_pack_bins", "text_global_shuffle", "img_shard_pack"):
-            from fs2_osm_spark.operators.packing import release_pins as rp
-
-            rp()
-        if name == "img_phash_neardup":
-            # same pin hygiene as the dedup_ prefix: CC iteration pins
-            from fs2_osm_spark.operators.dedup import release_pins
-
-            release_pins()
-        if name in (
-            "text_global_shuffle",
-            "osm_apply_diff",
-            "img_shard_pack",
-            "img_phash_neardup",
-            "img_phash_multiprobe",
-        ):
-            # these queries cache small frames their lazily-consumed result
-            # depends on; once the CLI has collected, drop them
-            spark.catalog.clearCache()
+        # free the session pins (plan persists, CC/PageRank checkpoints)
+        # the query left behind, so a 148-query session's storage memory
+        # stays flat; the result has been collected by now
+        release_pins()
 
     print(f"\n{len(QUERIES)} queries, {len(failures)} failures: {failures}")
     return 1 if failures else 0
