@@ -10,7 +10,7 @@ zigzag ordering groups the zero-heavy high frequencies into long runs).
 
 All stages are vectorized: blocks are batched into an (N, 8, 8) array and
 transformed with two broadcast matmuls (C @ X @ C.T), so encode/decode cost
-one numpy pipeline per image — suitable for mapInPandas batches.
+one numpy pipeline per image — suitable for row kernels (`rowmap.map_rows`).
 
 Loss comes from quantization (and the float->uint8 color transform), so
 decode(encode(x)) != x but PSNR stays >= 40 dB at the default quality on

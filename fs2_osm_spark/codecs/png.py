@@ -6,8 +6,8 @@ Encode writes 8-bit RGB with filter type 0 scanlines; decode accepts any
 8-bit RGB/RGBA PNG restricted to filter types 0 (None) and 2 (Up), which
 covers everything this engine itself produces.
 
-Used inside mapInPandas batches: one numpy decode per image, no per-pixel
-Python.
+Used inside row kernels (`rowmap.map_rows`): one numpy decode per image,
+no per-pixel Python.
 """
 
 from __future__ import annotations

@@ -2,20 +2,19 @@
 equivalents of the PostGIS scalars the reference delegates to Postgres
 (ST_Length / ST_Area / ST_Centroid / ST_Simplify / ST_NPoints / bbox).
 
-All numpy-vectorized per geometry; exposed to DataFrames through
-mapInPandas wrappers that process one Arrow batch of packed arrays at a
-time. The per-point column variants used by the oracled queries live in
+All numpy-vectorized per geometry; exposed to DataFrames as row kernels
+behind `rowmap.map_rows` (one Arrow batch of packed arrays at a time).
+The per-point column variants used by the oracled queries live in
 queries/geom_q.py (lag-window formulations shared with DuckDB).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from fs2_osm_spark.rowmap import map_rows
 
 EARTH_RADIUS_M = 6_371_008.8
 
@@ -108,24 +107,11 @@ GEOM_STATS_SCHEMA = T.StructType(
 def geometry_stats(lines: DataFrame, simplify_tol: float = 1e-4) -> DataFrame:
     """Per-geometry scalar pass over osm_lines(way_id, geom)."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples():
-                g = np.asarray(r.geom, np.float64)
-                cx, cy = centroid(g)
-                simp = simplify_dp(g, simplify_tol)
-                rows.append(
-                    (
-                        r.way_id,
-                        line_length_m(g),
-                        shoelace_area_deg2(g),
-                        cx,
-                        cy,
-                        len(g) // 2,
-                        len(simp) // 2,
-                    )
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in GEOM_STATS_SCHEMA])
+    def kernel(way_id, geom):
+        g = np.asarray(geom, np.float64)
+        yield (
+            way_id, line_length_m(g), shoelace_area_deg2(g), *centroid(g),
+            len(g) // 2, len(simplify_dp(g, simplify_tol)) // 2,
+        )
 
-    return lines.select("way_id", "geom").mapInPandas(fn, GEOM_STATS_SCHEMA)
+    return map_rows(lines, ["way_id", "geom"], kernel, GEOM_STATS_SCHEMA)

@@ -1,9 +1,10 @@
 """Audio feature extraction over an opaque binary column (multimodal op).
 
-Decode + per-clip features run inside Arrow batches (mapInPandas) — the
-per-clip work is inherently per-row, but everything around it (schema,
-partitioning, batch shape) is plain DataFrame machinery, and the kernels
-are vectorized numpy per clip (no Python sample loops):
+Decode + per-clip features run as row kernels behind `rowmap.map_rows`
+(one Arrow-batched mapInArrow stage) — the per-clip work is inherently
+per-row, but everything around it (schema, partitioning, batch shape) is
+plain DataFrame machinery, and the kernels are vectorized numpy per clip
+(no Python sample loops):
 
 - duration_s:  n_samples / sr  (from the decoded stream, not the metadata)
 - rms:         sqrt(mean(x^2))
@@ -19,13 +20,11 @@ is pruned from downstream scans.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
+from fs2_osm_spark.rowmap import map_rows
 from fs2_osm_spark.synth.audio import decode_wav
 
 AUDIO_FEATURES_SCHEMA = T.StructType(
@@ -63,23 +62,11 @@ def clip_features_from_samples(
 
 
 def audio_features(clips: DataFrame) -> DataFrame:
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples():
-                rms, zcr, dom, clip_ratio, dur = clip_features(r.bytes)
-                rows.append((r.audio_id, dur, rms, zcr, dom, clip_ratio))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "audio_id", "duration_s", "rms", "zcr",
-                    "dom_freq_hz", "clip_ratio",
-                ],
-            )
+    def kernel(audio_id, data):
+        rms, zcr, dom, clip_ratio, dur = clip_features(data)
+        yield (audio_id, dur, rms, zcr, dom, clip_ratio)
 
-    return clips.select("audio_id", "bytes").mapInPandas(
-        fn, AUDIO_FEATURES_SCHEMA
-    )
+    return map_rows(clips, ["audio_id", "bytes"], kernel, AUDIO_FEATURES_SCHEMA)
 
 
 N_FP_BANDS = 64
@@ -112,9 +99,7 @@ def spectral_fingerprint(x: np.ndarray, sr: int) -> int:
     return int(sum(1 << k for k, v in enumerate(bits[:63]) if v))
 
 
-def audio_fingerprints(clips: "DataFrame") -> "DataFrame":
-    from pyspark.sql import types as T
-
+def audio_fingerprints(clips: DataFrame) -> DataFrame:
     schema = T.StructType(
         [
             T.StructField("audio_id", T.StringType(), False),
@@ -122,12 +107,7 @@ def audio_fingerprints(clips: "DataFrame") -> "DataFrame":
         ]
     )
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples():
-                x, sr = decode_wav(bytes(r.bytes))
-                rows.append((r.audio_id, spectral_fingerprint(x, sr)))
-            yield pd.DataFrame(rows, columns=["audio_id", "fingerprint"])
+    def kernel(audio_id, data):
+        yield (audio_id, spectral_fingerprint(*decode_wav(data)))
 
-    return clips.select("audio_id", "bytes").mapInPandas(fn, schema)
+    return map_rows(clips, ["audio_id", "bytes"], kernel, schema)

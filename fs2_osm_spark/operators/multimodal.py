@@ -1,8 +1,9 @@
 """Multimodal (image) operators over binary columns.
 
 Images travel as opaque `bytes` columns with typed metadata (input_hint
-schema). All pixel work happens in Arrow-batched mapInPandas with the
-pure-numpy codecs — no per-row Python UDFs, no image libs required.
+schema). All pixel work happens in row kernels behind `rowmap.map_rows`
+(one Arrow-batched mapInArrow stage each) with the pure-numpy codecs — no
+image libs required.
 
 Scale notes: the binary column is the widest thing in the table, so these
 operators keep it out of shuffles — geotag/cell/tile derivation works on
@@ -12,10 +13,7 @@ joins re-attaches bytes late by image_id (SURVEY.md §7.3).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -27,6 +25,7 @@ from fs2_osm_spark.codecs.png import (
     phash64,
     psnr,
 )
+from fs2_osm_spark.rowmap import map_rows
 
 CAPTION_COORD_RE = r"at (-?\d+\.\d+),(-?\d+\.\d+)"
 
@@ -97,40 +96,18 @@ def decode_stats(images: DataFrame) -> DataFrame:
     for lossless PNG, hamming <= PHASH_LOSSY_TOLERANCE for the lossy JQ01
     decode — a distorting decoder breaks it either way."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples():
-                img = decode_image(bytes(r.bytes), r.fmt)
-                flat = img.reshape(-1, 3).astype(np.float64)
-                means = flat.mean(axis=0)
-                stds = flat.std(axis=0)
-                dist = hamming64(phash64(img), r.phash)
-                ph_ok = dist == 0 if r.fmt == "png" else dist <= PHASH_LOSSY_TOLERANCE
-                rows.append(
-                    (
-                        r.image_id,
-                        img.shape[1],
-                        img.shape[0],
-                        float(means[0]),
-                        float(means[1]),
-                        float(means[2]),
-                        float(stds[0]),
-                        float(stds[1]),
-                        float(stds[2]),
-                        bool(ph_ok),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "image_id", "dec_w", "dec_h", "mean_r", "mean_g", "mean_b",
-                    "std_r", "std_g", "std_b", "phash_match",
-                ],
-            )
+    def kernel(image_id, data, fmt, phash):
+        img = decode_image(data, fmt)
+        flat = img.reshape(-1, 3).astype(np.float64)
+        dist = hamming64(phash64(img), phash)
+        ph_ok = dist == 0 if fmt == "png" else dist <= PHASH_LOSSY_TOLERANCE
+        yield (
+            image_id, img.shape[1], img.shape[0],
+            *flat.mean(axis=0).tolist(), *flat.std(axis=0).tolist(), ph_ok,
+        )
 
-    return images.select("image_id", "bytes", "fmt", "phash").mapInPandas(
-        fn, DECODE_STATS_SCHEMA
+    return map_rows(
+        images, ["image_id", "bytes", "fmt", "phash"], kernel, DECODE_STATS_SCHEMA
     )
 
 
@@ -141,7 +118,7 @@ def decode_channel_means(
     slim pixel pass for consumers that aggregate brightness (tile pyramid,
     cell mosaic). decode_stats additionally computes stds + the phash
     verification per image, which column pruning cannot remove through an
-    opaque mapInPandas (guide §4.1) — profiled at 77% of that pass's
+    opaque Python map (guide §4.1) — profiled at 77% of that pass's
     per-image Python time. The mean expression is byte-for-byte the one
     decode_stats uses, so derived luma values are bit-identical.
 
@@ -160,21 +137,13 @@ def decode_channel_means(
         ]
     )
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            means = np.empty((len(pdf), 3), np.float64)
-            for k, (b, f) in enumerate(zip(pdf["bytes"], pdf["fmt"])):
-                img = decode_image(bytes(b), f)
-                means[k] = img.reshape(-1, 3).astype(np.float64).mean(axis=0)
-            out = pdf[["image_id", *carry]].copy()
-            out["mean_r"] = means[:, 0]
-            out["mean_g"] = means[:, 1]
-            out["mean_b"] = means[:, 2]
-            yield out
+    def kernel(*vals):
+        *head, data, fmt = vals  # image_id and the carry values ride through
+        img = decode_image(data, fmt)
+        means = img.reshape(-1, 3).astype(np.float64).mean(axis=0)
+        yield (*head, *means.tolist())
 
-    return images.select("image_id", *carry, "bytes", "fmt").mapInPandas(
-        fn, schema
-    )
+    return map_rows(images, ["image_id", *carry, "bytes", "fmt"], kernel, schema)
 
 
 ROUNDTRIP_SCHEMA = T.StructType(
@@ -191,22 +160,14 @@ def pixel_roundtrip(images: DataFrame) -> DataFrame:
     """decode -> re-encode -> decode, report PSNR (input_hint invariant:
     allclose for lossless, >= 40 dB for lossy) with caption passthrough."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples():
-                img = decode_image(bytes(r.bytes), r.fmt)
-                re_bytes = encode_png(img) if r.fmt == "png" else encode_lossy(img)
-                again = decode_image(re_bytes, r.fmt)
-                rows.append(
-                    (r.image_id, r.caption, psnr(img, again), r.fmt == "png")
-                )
-            yield pd.DataFrame(
-                rows, columns=["image_id", "caption", "psnr_db", "lossless"]
-            )
+    def kernel(image_id, data, fmt, caption):
+        img = decode_image(data, fmt)
+        re_bytes = encode_png(img) if fmt == "png" else encode_lossy(img)
+        again = decode_image(re_bytes, fmt)
+        yield (image_id, caption, psnr(img, again), fmt == "png")
 
-    return images.select("image_id", "bytes", "fmt", "caption").mapInPandas(
-        fn, ROUNDTRIP_SCHEMA
+    return map_rows(
+        images, ["image_id", "bytes", "fmt", "caption"], kernel, ROUNDTRIP_SCHEMA
     )
 
 
@@ -249,24 +210,14 @@ def resize_block_mean(images: DataFrame, out_w: int, out_h: int) -> DataFrame:
         ]
     )
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples():
-                img = decode_image(bytes(r.bytes), r.fmt)
-                small = block_mean_resize(img, out_w, out_h)
-                # phash of the DERIVED image rides along: downstream
-                # decode_stats can verify the thumbnail losslessly, and
-                # thumbnail-level near-dup joins get their key for free
-                rows.append(
-                    (r.image_id, encode_png(small), out_w, out_h, "png",
-                     phash64(small))
-                )
-            yield pd.DataFrame(
-                rows, columns=["image_id", "bytes", "w", "h", "fmt", "phash"]
-            )
+    def kernel(image_id, data, fmt):
+        small = block_mean_resize(decode_image(data, fmt), out_w, out_h)
+        # phash of the DERIVED image rides along: downstream decode_stats
+        # can verify the thumbnail losslessly, and thumbnail-level near-dup
+        # joins get their key for free
+        yield (image_id, encode_png(small), out_w, out_h, "png", phash64(small))
 
-    return images.select("image_id", "bytes", "fmt").mapInPandas(fn, schema)
+    return map_rows(images, ["image_id", "bytes", "fmt"], kernel, schema)
 
 
 FRAME_SCHEMA = T.StructType(
@@ -305,22 +256,13 @@ def sample_frames(media: DataFrame, every_n: int = 4, n_frames: int = 16) -> Dat
             f"real video decode ({fmt}) requires a codec library absent here"
         )
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples():
-                frames = _decode_video(bytes(r.bytes), r.fmt)
-                for i in range(0, len(frames), every_n):
-                    img = frames[i]
-                    rows.append(
-                        (r.media_id, i, encode_png(img), img.shape[1], img.shape[0])
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "frame_idx", "frame_png", "frame_w", "frame_h"],
-            )
+    def kernel(media_id, data, fmt):
+        frames = _decode_video(data, fmt)
+        for i in range(0, len(frames), every_n):
+            img = frames[i]
+            yield (media_id, i, encode_png(img), img.shape[1], img.shape[0])
 
-    return media.select("media_id", "bytes", "fmt").mapInPandas(fn, FRAME_SCHEMA)
+    return map_rows(media, ["media_id", "bytes", "fmt"], kernel, FRAME_SCHEMA)
 
 
 def make_fake_video(media_id: int, n_frames: int = 16, w: int = 16, h: int = 12) -> bytes:
@@ -355,33 +297,21 @@ def sample_frames_indexed(media: DataFrame, every_n: int = 4) -> DataFrame:
     raise — no codec libraries exist in this sandbox."""
     from fs2_osm_spark.synth.video import decode_avi_frame, read_avi_index
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples():
-                if r.fmt != "avi":
-                    raise NotImplementedError(
-                        f"video codec {r.fmt!r} requires libraries absent here"
-                    )
-                raw = bytes(r.bytes)
-                _, idx = read_avi_index(raw)
-                for i in range(0, len(idx), every_n):
-                    off, size = idx[i]
-                    img = decode_avi_frame(raw, off, size)
-                    rows.append(
-                        (
-                            r.media_id, i, img.shape[1], img.shape[0],
-                            float(np.mean(img, dtype=np.float64)),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "frame_idx", "frame_w", "frame_h", "mean_px"],
+    def kernel(media_id, data, fmt):
+        if fmt != "avi":
+            raise NotImplementedError(
+                f"video codec {fmt!r} requires libraries absent here"
+            )
+        _, idx = read_avi_index(data)
+        for i in range(0, len(idx), every_n):
+            off, size = idx[i]
+            img = decode_avi_frame(data, off, size)
+            yield (
+                media_id, i, img.shape[1], img.shape[0],
+                float(np.mean(img, dtype=np.float64)),
             )
 
-    return media.select("media_id", "bytes", "fmt").mapInPandas(
-        fn, FRAME_STATS_SCHEMA
-    )
+    return map_rows(media, ["media_id", "bytes", "fmt"], kernel, FRAME_STATS_SCHEMA)
 
 
 # --- perceptual-hash near-duplicate detection -------------------------------
@@ -399,21 +329,10 @@ def phash_frame(images: DataFrame, id_col: str = "img_id") -> DataFrame:
     narrow (shuffle-free) pixel pass that turns a binary image table into a
     1-row-per-image hash table the dedup machinery can band and join."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "img_id": pdf[id_col],
-                    "phash": [
-                        phash64(decode_image(bytes(b), f))
-                        for b, f in zip(pdf["bytes"], pdf["fmt"])
-                    ],
-                }
-            )
+    def kernel(img_id, data, fmt):
+        yield (img_id, phash64(decode_image(data, fmt)))
 
-    return images.select(
-        F.col(id_col).alias(id_col), "bytes", "fmt"
-    ).mapInPandas(fn, PHASH_FRAME_SCHEMA)
+    return map_rows(images, [id_col, "bytes", "fmt"], kernel, PHASH_FRAME_SCHEMA)
 
 
 def band_cols(col: str, n_bands: int) -> list[Column]:
@@ -519,32 +438,17 @@ AUGMENT_SCHEMA = T.StructType(
 
 def augment_stats(images: DataFrame) -> DataFrame:
     """Deterministic augmentation pass (hflip + centered half crop) with
-    verification hashes/stats per image — one narrow mapInPandas, no
+    verification hashes/stats per image — one narrow row-kernel pass, no
     shuffle; the geometry ops are numpy views/slices (zero-copy) so the
     per-image cost is the decode plus two aHashes."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples():
-                img = decode_image(bytes(r.bytes), r.fmt)
-                crop = center_crop(img)
-                cm = crop.reshape(-1, 3).astype(np.float64).mean(axis=0)
-                rows.append(
-                    (
-                        r.image_id,
-                        phash64(img[:, ::-1]),
-                        phash64(crop),
-                        float(cm[0]),
-                        float(cm[1]),
-                        float(cm[2]),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in AUGMENT_SCHEMA])
+    def kernel(image_id, data, fmt):
+        img = decode_image(data, fmt)
+        crop = center_crop(img)
+        cm = crop.reshape(-1, 3).astype(np.float64).mean(axis=0)
+        yield (image_id, phash64(img[:, ::-1]), phash64(crop), *cm.tolist())
 
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        fn, AUGMENT_SCHEMA
-    )
+    return map_rows(images, ["image_id", "bytes", "fmt"], kernel, AUGMENT_SCHEMA)
 
 
 # --- video scene-cut detection ----------------------------------------------
@@ -564,26 +468,16 @@ def scene_cut_stats(media: DataFrame, threshold_per_px: int) -> DataFrame:
     the container index, emit the sum of absolute per-channel differences
     between consecutive frames (EXACT BIGINT — uint8 pixels, no floats
     anywhere) and the cut flag at threshold_per_px * n_pixel_channels.
-    One narrow mapInPandas; a clip's frames never leave their worker."""
+    One narrow row-kernel pass; a clip's frames never leave their worker."""
     from fs2_osm_spark.synth.video import decode_avi_frame, read_avi_index
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples():
-                raw = bytes(r.bytes)
-                movi, entries = read_avi_index(raw)
-                prev = None
-                for i, (off, size) in enumerate(entries):
-                    img = decode_avi_frame(raw, off, size).astype(np.int64)
-                    if prev is not None:
-                        d = int(np.abs(img - prev).sum())
-                        rows.append(
-                            (r.media_id, i, d, d > threshold_per_px * img.size)
-                        )
-                    prev = img
-            yield pd.DataFrame(rows, columns=[f.name for f in SCENE_CUT_SCHEMA])
+    def kernel(media_id, data):
+        prev = None
+        for i, (off, size) in enumerate(read_avi_index(data)[1]):
+            img = decode_avi_frame(data, off, size).astype(np.int64)
+            if prev is not None:
+                d = int(np.abs(img - prev).sum())
+                yield (media_id, i, d, d > threshold_per_px * img.size)
+            prev = img
 
-    return media.select("media_id", "bytes", "fmt").mapInPandas(
-        fn, SCENE_CUT_SCHEMA
-    )
+    return map_rows(media, ["media_id", "bytes"], kernel, SCENE_CUT_SCHEMA)

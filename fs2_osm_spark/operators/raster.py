@@ -5,9 +5,9 @@ North-star operator: polygons are rendered into per-tile raster masks
 (Moore-neighborhood boundary tracing). The round trip is validated by IoU
 between the original polygon and the re-vectorized ring.
 
-rasterize_tiles is the distributed entry: one applyInPandas-style
-mapInPandas pass where each row is a (z, x, y) tile; the polygon corpus is
-broadcast (same PolygonSet as the PIP join), the tile's pixel grid is
+rasterize_tiles is the distributed entry: one row-kernel pass
+(`rowmap.map_rows`) where each row is a (z, x, y) tile; the polygon corpus
+is broadcast (same PolygonSet as the PIP join), the tile's pixel grid is
 tested with the vectorized ray-cast kernel, and the mask is emitted as real
 PNG bytes. Plan shape: narrow map over the tile list — no shuffle.
 """
@@ -15,15 +15,14 @@ PNG bytes. Plan shape: narrow map over the tile list — no shuffle.
 from __future__ import annotations
 
 import math
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from fs2_osm_spark.codecs.png import decode_png, encode_png
 from fs2_osm_spark.functions.pip import PolygonSet
+from fs2_osm_spark.rowmap import map_rows
 
 MERCATOR_LAT_MAX = 85.05112878
 
@@ -161,25 +160,10 @@ def rasterize_tiles(
     spark = tiles.sparkSession
     bc = spark.sparkContext.broadcast(polygons)
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ps = bc.value
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples():
-                mask = rasterize_mask(ps, z, int(r.x), int(r.y), size)
-                rings = vectorize_mask(mask, z, int(r.x), int(r.y))
-                rows.append(
-                    (
-                        z,
-                        int(r.x),
-                        int(r.y),
-                        mask_to_png(mask),
-                        int(mask.sum()),
-                        len(rings),
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=["z", "x", "y", "png", "covered_px", "n_rings_vectorized"]
-            )
+    def kernel(x, y):
+        x, y = int(x), int(y)
+        mask = rasterize_mask(bc.value, z, x, y, size)
+        rings = vectorize_mask(mask, z, x, y)
+        yield (z, x, y, mask_to_png(mask), int(mask.sum()), len(rings))
 
-    return tiles.select("x", "y").mapInPandas(fn, RASTER_SCHEMA)
+    return map_rows(tiles, ["x", "y"], kernel, RASTER_SCHEMA)

@@ -92,41 +92,6 @@ def ivf_centroids(corpus: DataFrame, n_centroids: int, id_col: str = "vec_id",
     return [(i, np.asarray(r[vec_col], np.float64)) for i, r in enumerate(sampled)]
 
 
-def _assign_udf(centroid_matrix: np.ndarray, metric: str = "cos"):
-    """Nearest-centroid id per vector: argmax cosine (default) or argmin
-    expanded-L2 (`x·x − 2 x·c + c·c` — the PQ codebook metric). Ties
-    resolve to the lowest centroid id in both metrics (numpy arg* return
-    the first extremum)."""
-    if metric == "cos":
-        cm = centroid_matrix / np.linalg.norm(
-            centroid_matrix, axis=1, keepdims=True
-        )
-
-        def assign(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-            for s in it:
-                mat = np.stack([np.asarray(v, np.float64) for v in s])
-                mat = mat / np.maximum(
-                    np.linalg.norm(mat, axis=1, keepdims=True), 1e-30
-                )
-                sims = mat @ cm.T  # one matmul per Arrow batch
-                yield pd.Series(np.argmax(sims, axis=1).astype(np.int64))
-
-    elif metric == "l2":
-        cm = centroid_matrix
-        cc = np.einsum("ij,ij->i", cm, cm)
-
-        def assign(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-            for s in it:
-                mat = np.stack([np.asarray(v, np.float64) for v in s])
-                xx = np.einsum("ij,ij->i", mat, mat)
-                d2 = xx[:, None] - 2.0 * (mat @ cm.T) + cc[None, :]
-                yield pd.Series(np.argmin(d2, axis=1).astype(np.int64))
-
-    else:
-        raise ValueError(f"unknown metric {metric!r} (cos|l2)")
-    return F.pandas_udf(assign, T.LongType())
-
-
 def _list_to_matrix(col) -> np.ndarray:
     """pyarrow list<double> column -> (n, d) float64 matrix.
 

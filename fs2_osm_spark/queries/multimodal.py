@@ -242,8 +242,8 @@ def _resize_stats_oracle() -> str:
 
 @register("img_resize_stats", oracle=_resize_stats_oracle())
 def img_resize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two chained narrow pixel passes — resize (mapInPandas) feeding
-    decode_stats (mapInPandas), no shuffle between them — verified against
+    """Two chained narrow pixel passes — resize feeding decode_stats (two
+    map_rows kernels), no shuffle between them — verified against
     the fixture's recorded thumbnail stats. phash_match must be true for
     every row: the thumbnail is PNG (lossless), so the phash emitted by the
     resize stage must survive the encode/decode hop exactly."""
@@ -315,7 +315,7 @@ def img_rasterize_vectorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     Tiles = the z12 tiles containing the hot-city centers + neighbors.
     Hard-oracled against the staged fixture, whose ground truth is the
     same kernels run DRIVER-SIDE in a plain loop — the comparison proves
-    the distributed plumbing (broadcast corpus, mapInPandas batching)
+    the distributed plumbing (broadcast corpus, Arrow batching)
     reproduces the sequential computation; kernel drift is caught by the
     anti-drift recompute in tests/test_raster.py."""
     import pandas as pd
@@ -473,7 +473,7 @@ def audio_fingerprint_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_audio_fixture()
     fps = audio_fingerprints(audio_table(spark, N_FIXTURE_CLIPS))
     # window, not groupBy+self-join: the join would re-plan (and re-run)
-    # the decode+FFT mapInPandas scan for both branches; the window
+    # the decode+FFT row-kernel scan for both branches; the window
     # mirrors the oracle's count(*) OVER (PARTITION BY fingerprint) and
     # decodes each clip exactly once
     size = F.count(F.lit(1)).over(Window.partitionBy("fingerprint"))

@@ -5,7 +5,7 @@ dedup-on-arrival.
 
 All five run on committed fixture corpora (synth/staging.py) so every one
 carries a HARD DuckDB value oracle: the Spark side decodes pixels LIVE
-(mapInPandas over the binary column); the twin re-derives the identical
+(map_rows kernels over the binary column); the twin re-derives the identical
 result in pure SQL from the fixture's recorded columns, whose fidelity the
 anti-drift tests pin against live synthesis.
 
@@ -133,14 +133,14 @@ def _luma_micro_stats(images: DataFrame) -> DataFrame:
     cannot drift from each other or from the oracle expression. r08: the
     decode is the slim channel-means pass (decode_stats also computed
     stds + the phash check per image — 77% of the Python time — which an
-    opaque mapInPandas cannot column-prune away; the mean expression is
+    opaque Python map cannot column-prune away; the mean expression is
     identical, so luma_micro is bit-identical)."""
     return _luma_micro_geo(images).select("image_id", "luma_micro")
 
 
 def _luma_micro_geo(images: DataFrame) -> DataFrame:
     """(image_id, lon, lat, luma_micro) off ONE decode pass: the caption
-    rides through the mapInPandas (decode_channel_means carry) and the
+    rides through the decode kernel (decode_channel_means carry) and the
     geotag regex runs JVM-side on the output — no image_id equi-join of
     two full corpus scans (r08; at 250k bench images the join was its own
     shuffle plus a second parquet scan). luma_micro is the shared
@@ -415,7 +415,7 @@ def img_augment(spark: SparkSession, sf_dir: str) -> DataFrame:
     must reproduce the fixture's recorded ground truth exactly. The flip
     hash pins spatial layout (a channels-only decoder would still pass
     mean checks but not this); the crop hash + means pin the crop window
-    geometry. One narrow mapInPandas, zero-copy numpy views for both
+    geometry. One narrow row-kernel pass, zero-copy numpy views for both
     transforms, no shuffle."""
     from fs2_osm_spark.operators.multimodal import augment_stats
 

@@ -86,11 +86,10 @@ def read_nodes_from_urls(spark: SparkSession, urls: list[str]) -> DataFrame:
     frames, and dense-decodes to node rows — bytes never transit the
     driver, and parallelism equals manifest length (matching how mirror
     sites actually publish planet extracts: one file per region)."""
-    from fs2_osm_spark.sources.dense_decode import decode_dense_block_np
-    from fs2_osm_spark.sources.pbf_frames import iter_frames
-    from fs2_osm_spark.sources.proto_wire import decode_primitive_block
-
-    from fs2_osm_spark.sources.pbf_frames import DECODED_NODES_SCHEMA
+    from fs2_osm_spark.sources.pbf_frames import (
+        DECODED_NODES_SCHEMA,
+        iter_node_blocks,
+    )
 
     manifest = spark.createDataFrame(
         pd.DataFrame({"url": urls})
@@ -105,16 +104,7 @@ def read_nodes_from_urls(spark: SparkSession, urls: list[str]) -> DataFrame:
                         payload = f.read()
                 finally:
                     os.unlink(path)
-                outs = []
-                for frame in iter_frames(payload):
-                    b = decode_primitive_block(frame)
-                    outs.append(
-                        decode_dense_block_np(
-                            b["ids"], b["lats"], b["lons"], b["keys_vals"],
-                            b["string_table"], b["granularity"],
-                            b["lat_offset"], b["lon_offset"],
-                        )
-                    )
+                outs = list(iter_node_blocks(payload))
                 if outs:
                     yield pd.concat(outs, ignore_index=True)
 

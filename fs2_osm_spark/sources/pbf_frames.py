@@ -24,6 +24,7 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from fs2_osm_spark.rowmap import map_rows
 from fs2_osm_spark.sources.dense_decode import (
     DECODED_NODES_SCHEMA,
     decode_dense_block_np,
@@ -100,27 +101,28 @@ def iter_frames(data: bytes) -> Iterator[bytes]:
         yield payload
 
 
+def iter_node_blocks(data: bytes) -> Iterator[pd.DataFrame]:
+    """Every frame of one PBF file, dense-decoded: one node frame per
+    block. Shared by the binaryFile scan and the URL-manifest path."""
+    for b in map(decode_block, iter_frames(data)):
+        yield decode_dense_block_np(
+            b["ids"], b["lats"], b["lons"], b["keys_vals"], b["string_table"],
+            b["granularity"], b["lat_offset"], b["lon_offset"],
+        )
+
+
 def read_nodes_from_frames(spark: SparkSession, path: str) -> DataFrame:
     """binaryFile scan -> per-file frame parse -> dense decode -> nodes.
 
     One file = one task; at scale the extract is split into many frame
     files (the reference's input is likewise a sequence of independent
-    blobs), so parallelism = file count."""
+    blobs), so parallelism = file count. The decode is vectorized per
+    block, so this stays a batch kernel on mapInPandas."""
     files = spark.read.format("binaryFile").load(path)
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            outs = []
-            for content in pdf["content"]:
-                for payload in iter_frames(bytes(content)):
-                    b = decode_block(payload)
-                    outs.append(
-                        decode_dense_block_np(
-                            b["ids"], b["lats"], b["lons"], b["keys_vals"],
-                            b["string_table"], b["granularity"],
-                            b["lat_offset"], b["lon_offset"],
-                        )
-                    )
+            outs = [nb for c in pdf["content"] for nb in iter_node_blocks(bytes(c))]
             if outs:
                 yield pd.concat(outs, ignore_index=True)
 
@@ -159,35 +161,20 @@ def read_ways_from_frames(spark: SparkSession, path: str) -> DataFrame:
 
     from fs2_osm_spark.sources.dense_decode import decode_delta_refs
 
+    def kernel(content):
+        for b in map(decode_block, iter_frames(content)):
+            st = b["string_table"]
+            dg = int(b.get("date_granularity", 1000))
+            for w in b["ways"]:
+                tags = {st[k]: st[v] for k, v in zip(w["keys"], w["vals"])}
+                yield (
+                    w["way_id"],
+                    _json.dumps(tags, sort_keys=True),
+                    decode_delta_refs(w["refs"]),
+                ) + _info_tuple(w.get("info"), st, dg)
+
     files = spark.read.format("binaryFile").load(path)
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for content in pdf["content"]:
-                for payload in iter_frames(bytes(content)):
-                    b = decode_block(payload)
-                    st = b["string_table"]
-                    dg = int(b.get("date_granularity", 1000))
-                    for w in b["ways"]:
-                        tags = {st[k]: st[v] for k, v in zip(w["keys"], w["vals"])}
-                        rows.append(
-                            (
-                                w["way_id"],
-                                _json.dumps(tags, sort_keys=True),
-                                decode_delta_refs(w["refs"]),
-                            )
-                            + _info_tuple(w.get("info"), st, dg)
-                        )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "way_id", "tags_json", "refs",
-                    "version", "epoch_ms", "changeset", "uid", "user",
-                ],
-            )
-
-    return files.select("content").mapInPandas(fn, WAYS_FRAME_SCHEMA)
+    return map_rows(files, ["content"], kernel, WAYS_FRAME_SCHEMA)
 
 
 def read_relations_from_frames(spark: SparkSession, path: str) -> DataFrame:
@@ -199,38 +186,22 @@ def read_relations_from_frames(spark: SparkSession, path: str) -> DataFrame:
     from fs2_osm_spark.sources.dense_decode import decode_delta_refs
     from fs2_osm_spark.sources.proto_wire import MEMBER_TYPES
 
+    def kernel(content):
+        for b in map(decode_block, iter_frames(content)):
+            st = b["string_table"]
+            dg = int(b.get("date_granularity", 1000))
+            for r in b["relations"]:
+                tags = {st[k]: st[v] for k, v in zip(r["keys"], r["vals"])}
+                yield (
+                    r["rel_id"],
+                    _json.dumps(tags, sort_keys=True),
+                    decode_delta_refs(r["memids"]),
+                    [st[i] for i in r["roles_sid"]],
+                    [MEMBER_TYPES[t] for t in r["types"]],
+                ) + _info_tuple(r.get("info"), st, dg)
+
     files = spark.read.format("binaryFile").load(path)
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for content in pdf["content"]:
-                for payload in iter_frames(bytes(content)):
-                    b = decode_block(payload)
-                    st = b["string_table"]
-                    dg = int(b.get("date_granularity", 1000))
-                    for r in b["relations"]:
-                        tags = {st[k]: st[v] for k, v in zip(r["keys"], r["vals"])}
-                        rows.append(
-                            (
-                                r["rel_id"],
-                                _json.dumps(tags, sort_keys=True),
-                                decode_delta_refs(r["memids"]),
-                                [st[i] for i in r["roles_sid"]],
-                                [MEMBER_TYPES[t] for t in r["types"]],
-                            )
-                            + _info_tuple(r.get("info"), st, dg)
-                        )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "relation_id", "tags_json", "member_ids",
-                    "member_roles", "member_types",
-                    "version", "epoch_ms", "changeset", "uid", "user",
-                ],
-            )
-
-    return files.select("content").mapInPandas(fn, RELS_FRAME_SCHEMA)
+    return map_rows(files, ["content"], kernel, RELS_FRAME_SCHEMA)
 
 
 NODE_INFO_SCHEMA = (
@@ -246,42 +217,31 @@ def read_node_info_from_frames(spark: SparkSession, path: str) -> DataFrame:
     timestamps scaled by date_granularity (default 1000 ms)."""
     import numpy as np
 
+    def kernel(content):
+        for b in map(decode_block, iter_frames(content)):
+            di = b.get("dense_info") or {}
+            if not di:
+                continue
+            ids = np.cumsum(np.asarray(b["ids"], np.int64))
+            st = b["string_table"]
+            ts = np.cumsum(np.asarray(di.get("timestamps", []), np.int64))
+            cs = np.cumsum(np.asarray(di.get("changesets", []), np.int64))
+            uid = np.cumsum(np.asarray(di.get("uids", []), np.int64))
+            usid = np.cumsum(np.asarray(di.get("user_sids", []), np.int64))
+            vers = di.get("versions", [])
+            # osmformat.proto: timestamp epoch ms = value * date_granularity
+            # (field 18, default 1000) — a foreign file may use a
+            # non-default unit
+            dg = int(b.get("date_granularity", 1000))
+            for k, osm_id in enumerate(ids.tolist()):
+                yield (
+                    osm_id,
+                    int(vers[k]) if k < len(vers) else -1,
+                    int(ts[k]) * dg if k < len(ts) else None,
+                    int(cs[k]) if k < len(cs) else None,
+                    int(uid[k]) if k < len(uid) else None,
+                    st[int(usid[k])] if k < len(usid) else None,
+                )
+
     files = spark.read.format("binaryFile").load(path)
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for content in pdf["content"]:
-                for payload in iter_frames(bytes(content)):
-                    b = decode_block(payload)
-                    di = b.get("dense_info") or {}
-                    if not di:
-                        continue
-                    ids = np.cumsum(np.asarray(b["ids"], np.int64))
-                    st = b["string_table"]
-                    ts = np.cumsum(np.asarray(di.get("timestamps", []), np.int64))
-                    cs = np.cumsum(np.asarray(di.get("changesets", []), np.int64))
-                    uid = np.cumsum(np.asarray(di.get("uids", []), np.int64))
-                    usid = np.cumsum(np.asarray(di.get("user_sids", []), np.int64))
-                    vers = di.get("versions", [])
-                    # osmformat.proto: timestamp epoch ms = value *
-                    # date_granularity (field 18, default 1000) — a foreign
-                    # file may use a non-default unit
-                    dg = int(b.get("date_granularity", 1000))
-                    for k, osm_id in enumerate(ids.tolist()):
-                        rows.append(
-                            (
-                                osm_id,
-                                int(vers[k]) if k < len(vers) else -1,
-                                int(ts[k]) * dg if k < len(ts) else None,
-                                int(cs[k]) if k < len(cs) else None,
-                                int(uid[k]) if k < len(uid) else None,
-                                st[int(usid[k])] if k < len(usid) else None,
-                            )
-                        )
-            yield pd.DataFrame(
-                rows,
-                columns=["osm_id", "version", "epoch_ms", "changeset", "uid", "user"],
-            )
-
-    return files.select("content").mapInPandas(fn, NODE_INFO_SCHEMA)
+    return map_rows(files, ["content"], kernel, NODE_INFO_SCHEMA)

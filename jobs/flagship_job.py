@@ -29,24 +29,18 @@ def main() -> None:
     ap.add_argument("--batches", type=int, default=64, help="tile batch count")
     args = ap.parse_args()
 
-    import numpy as np
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    from fs2_osm_spark.functions.pip import PolygonSet
-    from fs2_osm_spark.plans.flagship import flagship_from_tables
+    from fs2_osm_spark.plans.flagship import flagship_from_tables, prepare_corpus
     from fs2_osm_spark.plans.lineage import run_batched
 
     spark = SparkSession.builder.appName("fs2_osm_spark_flagship").getOrCreate()
 
-    rows = spark.read.parquet(args.polygons).collect()
-    ps = PolygonSet(
-        ids=[r.polygon_id for r in rows],
-        outers=[np.asarray(r.outer) for r in rows],
-        inners=[[np.asarray(h) for h in (r.inners or [])] for r in rows],
-    )
+    # the cover is built once from the corpus table; every batch reuses it
+    cover = prepare_corpus(spark, spark.read.parquet(args.polygons))
     images = spark.read.parquet(args.images)
-    result = flagship_from_tables(images, ps)
+    result = flagship_from_tables(images, cover)
     # batch key: coarse tile stripe — deterministic, resumable
     batched = result.withColumn(
         "batch", F.pmod(F.col("tile_x") + F.col("tile_y") * 7, args.batches)

@@ -144,6 +144,53 @@ def test_geotag_matches_generation(spark):
         assert r.lat == pytest.approx(lat[k], abs=1e-6)
 
 
+def test_caption_parser_matches_coord_regex(spark):
+    """caption_lat/caption_lon (substring_index) equal CAPTION_COORD_RE
+    extraction — the form the DuckDB twins use — over generated captions
+    and the same caption grammar with negative coordinates (the generator's
+    extent is all-positive). neardup_batch rows carry no caption."""
+    import re
+
+    from pyspark.sql import functions as F
+
+    from fs2_osm_spark.operators.multimodal import (
+        CAPTION_COORD_RE,
+        caption_lat,
+        caption_lon,
+    )
+
+    ids = np.arange(2000)
+    captions = generate_batch(ids, slim=True)["caption"].tolist()
+    captions += generate_batch(np.arange(5000, 5020))["caption"].tolist()
+    lon, lat = coords_for_ids(ids[:500])
+    captions += [
+        f"img {i} taken at {sla * la:.6f},{slo * lo:.6f} near city"
+        for i, la, lo in zip(ids[:500].tolist(), lat.tolist(), lon.tolist())
+        for sla, slo in ((-1, 1), (1, -1), (-1, -1))
+    ]
+    captions += [
+        "img 1 taken at -0.500000,-179.999999 near city",
+        "img 2 taken at 0.000000,-0.000001 near city",
+    ]
+    c = F.col("caption")
+    got = (
+        spark.createDataFrame([(s,) for s in captions], "caption string")
+        .select(
+            "caption",
+            caption_lat(c).alias("lat"),
+            caption_lon(c).alias("lon"),
+            F.regexp_extract(c, CAPTION_COORD_RE, 1).cast("double").alias("re_lat"),
+            F.regexp_extract(c, CAPTION_COORD_RE, 2).cast("double").alias("re_lon"),
+        )
+        .collect()
+    )
+    assert len(got) == len(captions)
+    for r in got:
+        m = re.search(CAPTION_COORD_RE, r.caption)
+        want = (float(m.group(1)), float(m.group(2)))
+        assert (r.lat, r.lon) == (r.re_lat, r.re_lon) == want, r.caption
+
+
 # ------------------------------------------------------------ flagship -----
 def test_flagship_runs_and_is_deterministic(spark):
     out1 = flagship_query(spark, "/root/testdata/sf0.001", n_images=500, n_zones=64)

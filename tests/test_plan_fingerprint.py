@@ -76,7 +76,7 @@ def assert_flagship_plan_properties(nodes: list[str]) -> None:
     assert counts.get("BroadcastNestedLoopJoin", 0) == 0, nodes
     assert counts.get("CartesianProduct", 0) == 0, nodes
     for py_node in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas",
-                    "FlatMapGroupsInPandas", "PythonMapInArrow"):
+                    "FlatMapGroupsInPandas", "MapInArrow"):
         assert counts.get(py_node, 0) == 0, (py_node, nodes)
     assert counts.get("Sort", 0) == 0, nodes
 

@@ -72,6 +72,7 @@ def test_flagship_scan_prunes_bytes(spark):
         img_subtree = plan.split("caption")[0]
         assert "ArrowEvalPython" not in img_subtree
         assert "MapInPandas" not in img_subtree
+        assert "MapInArrow" not in img_subtree
 
 
 def test_dimension_join_broadcasts(spark):

@@ -1,0 +1,101 @@
+"""The row-kernel adapter ``map_rows``: fan-out, empty batches, nulls,
+nested/binary output types, and kernel errors reaching the driver."""
+
+from __future__ import annotations
+
+import pytest
+from pyspark.sql import types as T
+
+from fs2_osm_spark.rowmap import map_rows
+
+
+def test_one_to_many_kernel(spark):
+    def kernel(n):
+        for k in range(n):
+            yield (n, k)
+
+    out = map_rows(spark.range(0, 6, 1, 2), ["id"], kernel, "n long, k long")
+    assert sorted(tuple(r) for r in out.collect()) == [
+        (n, k) for n in range(6) for k in range(n)
+    ]
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInArrow") == 1 and "MapInPandas" not in plan
+
+
+def test_batch_where_every_row_yields_nothing(spark):
+    """Partition 0 holds ids 0-3 and yields no rows at all; partition 1
+    yields one row per id. A frame where nothing yields is empty with the
+    declared schema."""
+
+    def kernel(n):
+        if n >= 4:
+            yield (n * 10,)
+
+    df = spark.range(0, 8, 1, 2)
+    out = map_rows(df, ["id"], kernel, "v long")
+    assert sorted(r.v for r in out.collect()) == [40, 50, 60, 70]
+    none = map_rows(df, ["id"], lambda n: iter(()), "v long")
+    assert none.collect() == [] and none.schema.fieldNames() == ["v"]
+
+
+def test_null_in_nullable_column(spark):
+    """The node-info shape: nullable inputs arrive as None, and None in
+    nullable output columns becomes null."""
+    df = spark.createDataFrame(
+        [(1, "a", 7), (2, None, None)], "id long, user string, uid long"
+    )
+
+    def kernel(i, user, uid):
+        yield (i, user, uid * 2 if uid is not None else None, user is None)
+
+    out = map_rows(
+        df, ["id", "user", "uid"], kernel,
+        "id long, user string, uid2 long, missing boolean",
+    )
+    assert sorted(tuple(r) for r in out.collect()) == [
+        (1, "a", 14, False), (2, None, None, True),
+    ]
+
+
+def test_array_map_and_binary_output(spark):
+    schema = T.StructType(
+        [
+            T.StructField("id", T.LongType(), False),
+            T.StructField("refs", T.ArrayType(T.LongType()), False),
+            T.StructField("tags", T.MapType(T.StringType(), T.StringType()), False),
+            T.StructField("payload", T.BinaryType(), False),
+        ]
+    )
+
+    def kernel(payload, i):
+        assert type(payload) is bytes  # binary inputs arrive as bytes
+        yield (i, list(range(i)), {"k": str(i)} if i else {}, payload * 2)
+
+    df = spark.createDataFrame(
+        [(bytearray(b"ab"), 0), (bytearray(b"xyz"), 3)], "b binary, id long"
+    )
+    rows = sorted(map_rows(df, ["b", "id"], kernel, schema).collect())
+    assert [(r.id, r.refs, r.tags, bytes(r.payload)) for r in rows] == [
+        (0, [], {}, b"abab"),
+        (3, [0, 1, 2], {"k": "3"}, b"xyzxyz"),
+    ]
+
+
+def test_kernel_exception_reaches_driver(spark):
+    def kernel(n):
+        if n == 3:
+            raise ValueError(f"kernel rejected row {n}")
+        yield (n,)
+
+    out = map_rows(spark.range(0, 5, 1, 1), ["id"], kernel, "n long")
+    with pytest.raises(Exception, match="kernel rejected row 3"):
+        out.collect()
+
+
+def test_row_of_wrong_width_fails(spark):
+    def kernel(n):
+        yield (n,) if n < 3 else (n, n)
+
+    out = map_rows(spark.range(0, 5, 1, 1), ["id"], kernel, "n long")
+    with pytest.raises(Exception, match=r"zip\(\) argument \d+ is (longer|shorter)"):
+        out.collect()

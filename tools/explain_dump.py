@@ -45,7 +45,7 @@ def main() -> None:
         "check per plan: `PushedFilters`/`ReadSchema` on scans (pushdown +\n"
         "pruning), `BroadcastHashJoin` for dimension joins, leading `*(n)`\n"
         "markers (whole-stage codegen), Python appearing only as\n"
-        "MapInPandas/FlatMapGroupsInPandas kernels.\n"
+        "MapInArrow/MapInPandas/FlatMapGroupsInPandas kernels.\n"
     )
     def fmt(df) -> str:
         return df._jdf.queryExecution().explainString(
