@@ -1,29 +1,28 @@
 """Point-in-polygon spatial joins — the engine's core operator.
 
-Three physical strategies (SURVEY.md §4.2):
+One join body with a driver-built or executor-built cover (SURVEY.md §4.2):
 
-1. broadcast_pip_join — the Arrow/Python baseline: a PolygonSet (packed
-   coord arrays + grid index) broadcast to executors, each batch tested
-   with the vectorized numpy ray-cast inside mapInPandas. One narrow stage,
-   no shuffle. Replaces the reference's per-relation correlated PostGIS
-   lookups (/root/reference/postgres/src/main/scala/fs2/osm/postgres/ComplexPolygonBuilder.scala:52-56).
+- apply_cell_pip is the join. Its CellCover lists each polygon's covering
+  hex cells, split INTERIOR vs BOUNDARY: a cell whose center lies inside
+  the polygon with clearance > one circumradius is wholly inside, so points
+  in it join with NO exact test; only boundary-cell candidates are refined
+  — by a Catalyst higher-order-function ray cast over the packed ring
+  arrays (pip_inside_column). The per-point path is all JVM: no Arrow
+  boundary, no Python workers.
+- One numpy loop classifies the cover (_cover_frame over
+  classify_cover_cells). build_cell_cover runs it on the driver and
+  broadcast-hints the result: zero shuffle of the point side, the flagship
+  path for corpora that fit on the driver. cell_pip_join runs it on
+  executors (polygons_to_cells) for large corpora: the cell equi-join then
+  shuffle-partitions both sides (AQE skew-split applies; hot cells saltable
+  via operators/skew).
 
-2. cell_pip_join — the JVM scale path. Polygons are pre-classified into
-   covering hex cells split INTERIOR vs BOUNDARY (numpy kernel, runs once
-   over the polygon side): a cell whose center lies inside the polygon with
-   clearance > one circumradius is wholly inside, so points in it join with
-   NO exact test; only boundary-cell candidates are refined — and the
-   refine is a Catalyst higher-order-function ray cast over the packed ring
-   arrays (pip_inside_column), so the entire join is JVM-side: no Arrow
-   boundary, no Python workers, whole pipeline shuffle-partitioned on the
-   cell key (AQE skew-split applies; hot cells saltable via operators/skew).
-
-3. broadcast_cell_pip_join — strategy 2 with explicit broadcast hints on
-   the (small) cover + geometry tables: zero shuffle of the point side.
-   This is the flagship path: it scales with cores because every stage is
-   whole-stage-codegen'd JVM work.
+broadcast_pip_join is the Arrow/Python baseline and the tests' reference
+twin: a PolygonSet (packed coord arrays + grid index) broadcast to
+executors, each batch tested with the vectorized numpy ray cast inside
+mapInArrow. It replaces the reference's per-relation correlated PostGIS
+lookups (ComplexPolygonBuilder.scala:52-56).
 """
-
 from __future__ import annotations
 
 from collections.abc import Iterator
@@ -158,63 +157,81 @@ def classify_cover_cells(
     return cells[cover], interior[cover]
 
 
-COVER_SCHEMA = T.StructType(
-    [
-        T.StructField("polygon_id", T.LongType(), False),
-        T.StructField("cell", T.LongType(), False),
-        T.StructField("interior", T.BooleanType(), False),
-    ]
-)
+COVER_SCHEMA = "cell long, polygon_id long, interior boolean"
 
 
-def polygons_to_cells(
-    polygons: DataFrame,
-    id_col: str,
-    outer_col: str,
-    res: int,
-    inners_col: str | None = None,
-) -> DataFrame:
-    """Explode each polygon into covering hex cells with the interior flag.
+def _cover_frame(rows, res: int) -> pd.DataFrame:
+    """The cover of (polygon_id, outer, inners) rows: one (cell, polygon_id,
+    interior) row per covering cell. The one cover loop — build_cell_cover
+    runs it on the driver, polygons_to_cells inside executors."""
+    cells, ids = [np.zeros(0, np.int64)], [np.zeros(0, np.int64)]
+    ints = [np.zeros(0, bool)]
+    for pid, outer, inners in rows:
+        # Arrow delivers arrays as numpy object arrays: no `or []`
+        inners = () if inners is None else inners
+        holes = [np.asarray(h, np.float64) for h in inners]
+        cc, ii = classify_cover_cells(np.asarray(outer, np.float64), holes, res)
+        cells.append(cc)
+        ids.append(np.full(cc.shape, int(pid), np.int64))
+        ints.append(ii)
+    return pd.DataFrame(
+        {
+            "cell": np.concatenate(cells),
+            "polygon_id": np.concatenate(ids),
+            "interior": np.concatenate(ints),
+        }
+    )
 
-    Output: (polygon_id, cell, interior). Runs as a pandas-vectorized
-    flatMap over the (small relative to points) polygon side; output size
-    ~ polygon area / cell area + perimeter / cell pitch.
-    """
+
+class CellCover:
+    """A polygon corpus ready for apply_cell_pip: the (cell, polygon_id,
+    interior) cover plus the (polygon_id, outer, inners) ring table for the
+    lazy higher-order-function ray cast, at hex resolution res.
+
+    (A statically-unrolled edge-array variant was measured 2.5x SLOWER at
+    sf0.1/32c: codegen hoists the unconditional element_at subexpressions
+    out of the CASE WHEN, evaluating every edge for every candidate row,
+    while the lambda-based HOF ray cast stays lazy and runs only on
+    boundary-cell rows.)"""
+
+    def __init__(self, cover: DataFrame, rings: DataFrame, res: int):
+        self.cover = cover
+        self.rings = rings
+        self.res = res
+
+
+def build_cell_cover(spark, polygons: DataFrame, res: int) -> CellCover:
+    """Driver-side cover build for broadcast-scale corpora: collect the
+    (polygon_id, outer, inners) table, classify cover cells in numpy, return
+    a CellCover of broadcast-hinted DataFrames — the whole join plan is then
+    pure JVM Column work with zero shuffle of the point side. One-time per
+    job — cost is O(corpus), independent of the point-table size, so it
+    amortizes to nothing on a long-running ingest."""
+    rows = polygons.select("polygon_id", "outer", "inners").collect()
+    cover = spark.createDataFrame(_cover_frame(rows, res), COVER_SCHEMA)
+    rings = spark.createDataFrame(
+        pd.DataFrame(
+            [(r.polygon_id, r.outer, r.inners or []) for r in rows],
+            columns=["polygon_id", "outer", "inners"],
+        ),
+        "polygon_id long, outer array<double>, inners array<array<double>>",
+    )
+    return CellCover(F.broadcast(cover), F.broadcast(rings), res)
+
+
+def polygons_to_cells(polygons: DataFrame, res: int) -> DataFrame:
+    """Executor-side cover of a (polygon_id, outer, inners) table:
+    (cell, polygon_id, interior) rows from one narrow pandas pass over the
+    (small relative to points) polygon side; output size ~ polygon area /
+    cell area + perimeter / cell pitch."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            ids: list[np.ndarray] = []
-            cells: list[np.ndarray] = []
-            interiors: list[np.ndarray] = []
-            inner_series = (
-                pdf[inners_col]
-                if inners_col is not None and inners_col in pdf.columns
-                else [None] * len(pdf)
-            )
-            for pid, packed, raw_inners in zip(pdf[id_col], pdf[outer_col], inner_series):
-                ring = np.asarray(packed, np.float64)
-                # Arrow delivers arrays as numpy object arrays: no `or []`
-                holes = [
-                    np.asarray(h, np.float64)
-                    for h in (raw_inners if raw_inners is not None else [])
-                ]
-                cc, ii = classify_cover_cells(ring, holes, res)
-                ids.append(np.full(cc.shape, int(pid), np.int64))
-                cells.append(cc)
-                interiors.append(ii)
-            if ids:
-                yield pd.DataFrame(
-                    {
-                        "polygon_id": np.concatenate(ids),
-                        "cell": np.concatenate(cells),
-                        "interior": np.concatenate(interiors),
-                    }
-                )
+            yield _cover_frame(pdf.itertuples(index=False, name=None), res)
 
-    sel = [id_col, outer_col] + (
-        [inners_col] if inners_col is not None and inners_col in polygons.columns else []
+    return polygons.select("polygon_id", "outer", "inners").mapInPandas(
+        fn, COVER_SCHEMA
     )
-    return polygons.select(*sel).mapInPandas(fn, COVER_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -273,22 +290,31 @@ def _cell_key(lon_col: str, lat_col: str, res: int) -> Column:
     return F.coalesce(hex_cell(F.col(lon_col), F.col(lat_col), res), F.lit(-1))
 
 
-def _split_cell_join(
-    pts: DataFrame,
-    cover: DataFrame,
-    poly_geo: DataFrame,
+def apply_cell_pip(
+    points: DataFrame,
+    cover: CellCover,
     lon_col: str,
     lat_col: str,
     point_keep: list[str],
 ) -> DataFrame:
-    """Shared tail: cell equi-join -> interior fast path OR ray-cast refine.
+    """The PIP join body for either cover: cell equi-join -> interior fast
+    path OR ray-cast refine. Output: point_keep + polygon_id.
+
+    The point side gets a `cell` key (pure Column math) and joins the slim
+    cover — ring geometry stays OUT of the cover, so a shuffled cell join
+    moves only 17-byte cover rows. Interior-cell candidates are exact hits
+    with no further work; only boundary-cell candidates run the Catalyst
+    ray cast — no Python, no Arrow boundary, anywhere in the per-point
+    path. Duplicate (point, polygon) candidates are impossible: a point
+    belongs to exactly one cell and cover cells are unique per polygon.
 
     Single pass on purpose: a hits ∪ refined union would evaluate the point
     scan (and its geotag expressions) twice — measured ~2x wall at sf0.1.
     CASE WHEN keeps the ray cast lazy, so interior candidates never touch
     ring geometry beyond the (cheap) hash-join attach; the rings are
     dropped by the same-stage project, so they never cross a shuffle."""
-    cand = pts.join(cover, "cell").join(poly_geo, "polygon_id")
+    pts = points.withColumn("cell", _cell_key(lon_col, lat_col, cover.res))
+    cand = pts.join(cover.cover, "cell").join(cover.rings, "polygon_id")
     keep = F.when(F.col("interior"), F.lit(True)).otherwise(
         pip_inside_column(
             F.col("outer"), F.col("inners"), F.col(lon_col), F.col(lat_col)
@@ -304,144 +330,12 @@ def cell_pip_join(
     lon_col: str,
     lat_col: str,
     point_keep: list[str],
-    polygon_id_col: str = "polygon_id",
-    outer_col: str = "outer",
-    inners_col: str | None = "inners",
 ) -> DataFrame:
-    """Large-corpus PIP: cell-keyed equi-join, interior fast path, JVM refine.
-
-    points:   ... lon, lat
-    polygons: polygon_id, outer (array<double>), [inners array<array<double>>]
-
-    Plan shape: the point side gets a `cell` key (pure Column math), the
-    polygon side a slim (cell, polygon_id, interior) cover (one narrow
-    pandas pass over the small side — ring geometry stays OUT of the cover,
-    so the cell join shuffles only 17-byte rows). The equi-join on cell
-    shuffle-partitions both sides (AQE skew-split applies; hot cells
-    saltable). Interior-cell candidates are exact hits with no further
-    work; only boundary-cell candidates join ring geometry by polygon_id
-    and run the Catalyst ray-cast — no Python, no Arrow boundary, anywhere
-    in the per-point path. Duplicate (point, polygon) candidates are
-    impossible: a point belongs to exactly one cell and cover cells are
-    unique per polygon.
-    """
-    pts = points.withColumn("cell", _cell_key(lon_col, lat_col, res))
-    cover = polygons_to_cells(polygons, polygon_id_col, outer_col, res, inners_col)
-
-    sel = [
-        polygons[polygon_id_col].alias("polygon_id"),
-        polygons[outer_col].alias("outer"),
-    ]
-    if inners_col is not None and inners_col in polygons.columns:
-        sel.append(polygons[inners_col].alias("inners"))
-    else:
-        sel.append(F.array().cast("array<array<double>>").alias("inners"))
-    poly_geo = polygons.select(*sel)
-
-    return _split_cell_join(pts, cover, poly_geo, lon_col, lat_col, point_keep)
-
-
-class CellCover:
-    """Prebuilt broadcast index: (cell, polygon_id, interior) cover plus the
-    per-polygon ring table for the lazy higher-order-function ray cast.
-
-    (A statically-unrolled edge-array variant was measured 2.5x SLOWER at
-    sf0.1/32c: codegen hoists the unconditional element_at subexpressions
-    out of the CASE WHEN, evaluating every edge for every candidate row,
-    while the lambda-based HOF ray cast stays lazy and runs only on
-    boundary-cell rows.)"""
-
-    def __init__(self, cover: DataFrame, rings: DataFrame, res: int):
-        self.cover = cover
-        self.rings = rings
-        self.res = res
-
-
-def build_cell_cover(
-    spark,
-    polygons: DataFrame,
-    res: int,
-    polygon_id_col: str = "polygon_id",
-    outer_col: str = "outer",
-    inners_col: str | None = "inners",
-) -> CellCover:
-    """Driver-side cover build for broadcast-scale corpora: collect the
-    polygon table, classify cover cells in numpy, return a CellCover of
-    broadcast-hinted DataFrames. One-time per job — cost is O(corpus),
-    independent of the point-table size, so it amortizes to nothing on a
-    long-running ingest.
-
-    """
-    has_inners = inners_col is not None and inners_col in polygons.columns
-    cols = [polygon_id_col, outer_col] + ([inners_col] if has_inners else [])
-    rows = polygons.select(*cols).collect()
-
-    ids, cells, ints = [], [], []
-    ring_rows = []
-    for r in rows:
-        outer = np.asarray(r[outer_col], np.float64)
-        holes = [
-            np.asarray(h, np.float64)
-            for h in ((r[inners_col] if has_inners else None) or [])
-        ]
-        cc, ii = classify_cover_cells(outer, holes, res)
-        pid = int(r[polygon_id_col])
-        ids.append(np.full(cc.shape, pid, np.int64))
-        cells.append(cc)
-        ints.append(ii)
-        ring_rows.append((pid, outer.tolist(), [h.tolist() for h in holes]))
-
-    cover_pdf = pd.DataFrame(
-        {
-            "cell": np.concatenate(cells) if cells else np.zeros(0, np.int64),
-            "polygon_id": np.concatenate(ids) if ids else np.zeros(0, np.int64),
-            "interior": np.concatenate(ints) if ints else np.zeros(0, bool),
-        }
-    )
-    cover = F.broadcast(
-        spark.createDataFrame(cover_pdf, "cell long, polygon_id long, interior boolean")
-    )
-    rings = F.broadcast(
-        spark.createDataFrame(
-            pd.DataFrame(ring_rows, columns=["polygon_id", "outer", "inners"]),
-            "polygon_id long, outer array<double>, inners array<array<double>>",
-        )
-    )
-    return CellCover(cover, rings, res)
-
-
-def apply_cell_pip(
-    points: DataFrame,
-    cover: CellCover,
-    lon_col: str,
-    lat_col: str,
-    point_keep: list[str],
-) -> DataFrame:
-    """Join points against a prebuilt CellCover — the steady-state path."""
-    pts = points.withColumn("cell", _cell_key(lon_col, lat_col, cover.res))
-    return _split_cell_join(pts, cover.cover, cover.rings, lon_col, lat_col, point_keep)
-
-
-def broadcast_cell_pip_join(
-    points: DataFrame,
-    polygons: DataFrame,
-    res: int,
-    lon_col: str,
-    lat_col: str,
-    point_keep: list[str],
-    polygon_id_col: str = "polygon_id",
-    outer_col: str = "outer",
-    inners_col: str | None = "inners",
-) -> DataFrame:
-    """cell_pip_join for corpora that fit on the driver: the cover is
-    classified driver-side (numpy, no Spark stage) and broadcast, so the
-    whole query plan is pure JVM Column work — zero shuffle of the point
-    side, zero Python workers. This is the flagship path; throughput
-    scales with executor threads because nothing leaves whole-stage
-    codegen except the two O(corpus)-sized broadcast builds."""
-    cover = build_cell_cover(
-        points.sparkSession, polygons, res, polygon_id_col, outer_col, inners_col
-    )
+    """Large-corpus PIP: apply_cell_pip over an executor-built cover of the
+    (polygon_id, outer, inners) table. The cell equi-join shuffle-partitions
+    both sides (AQE skew-split applies; hot cells saltable)."""
+    rings = polygons.select("polygon_id", "outer", "inners")
+    cover = CellCover(polygons_to_cells(polygons, res), rings, res)
     return apply_cell_pip(points, cover, lon_col, lat_col, point_keep)
 
 

@@ -23,6 +23,7 @@ from __future__ import annotations
 
 import os
 import time
+from concurrent.futures import ThreadPoolExecutor
 
 from fs2_osm_spark.catalog import read_table, write_table
 from pyspark.sql import DataFrame, SparkSession
@@ -44,7 +45,6 @@ def run_export(
     relations: DataFrame,
     relations_ways: DataFrame,
     output_root: str,
-    sink_parallelism: int = 16,
     relations_nodes: DataFrame | None = None,
     relations_relations: DataFrame | None = None,
     phase_timings: dict[str, float] | None = None,
@@ -87,6 +87,14 @@ def run_export(
         tm[f"sink_{name}"] = round(time.time() - t0, 3)
         return out
 
+    def sink_all(tables: dict[str, DataFrame]) -> dict[str, DataFrame]:
+        """sink() every table as concurrent Spark actions, at most 16 at a
+        time (a pool starts no more threads than it has tasks, so Phase A
+        runs 3 and then 4); re-raises the first failure in table order."""
+        with ThreadPoolExecutor(max_workers=16) as ex:
+            futures = {n: ex.submit(sink, df, n) for n, df in tables.items()}
+            return {n: fut.result() for n, fut in futures.items()}
+
     # ---- Phase A: raw tables (the importer fan-out) ----
     # The three entity sinks are independent (each consumes its own kind's
     # frames), so they run as concurrent Spark actions (guide §2.6): wall
@@ -94,16 +102,7 @@ def run_export(
     # each sink's job is dominated by the Python frame-decode pass.
     t_a = time.time()
     raw_tables = {"nodes": nodes, "ways": ways, "relations": relations}
-    if sink_parallelism > 1:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(
-            max_workers=min(sink_parallelism, len(raw_tables))
-        ) as ex:
-            raw_futs = {n: ex.submit(sink, df, n) for n, df in raw_tables.items()}
-            raw_out = {n: fut.result() for n, fut in raw_futs.items()}
-    else:
-        raw_out = {n: sink(df, n) for n, df in raw_tables.items()}
+    raw_out = sink_all(raw_tables)
     nodes_t, ways_t, rels_t = raw_out["nodes"], raw_out["ways"], raw_out["relations"]
     # the member tables of the way/relation sinks (WayImporter.scala:25-53,
     # RelationImporter.scala:52-71, DefaultSchema.scala:34-60): exploded
@@ -142,22 +141,7 @@ def run_export(
             "parent_id", "child_id", "role"
         ).agg(F.min("index").alias("index")),
     }
-    if sink_parallelism > 1:
-        from concurrent.futures import ThreadPoolExecutor
-
-        # honor the caller's parallelism cap in Phase A too (a caller
-        # throttling to sink_parallelism=2 must not get 4 concurrent jobs)
-        with ThreadPoolExecutor(
-            max_workers=min(sink_parallelism, len(member_tables))
-        ) as ex:
-            futures = {
-                n: ex.submit(sink, df, n) for n, df in member_tables.items()
-            }
-            for n, fut in futures.items():
-                fut.result()
-    else:
-        for n, df in member_tables.items():
-            sink(df, n)
+    sink_all(member_tables)
     tm["phase_a_total"] = round(time.time() - t_a, 3)
 
     # ---- Phase B: feature passes (after the barrier) ----
@@ -185,15 +169,6 @@ def run_export(
                 lines, polys, ways=ways_t, relations=rels_t, relations_ways=rw_t
             ),
         }
-        if sink_parallelism > 1:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=sink_parallelism) as ex:
-                futures = {n: ex.submit(sink, df, n) for n, df in phase_b.items()}
-                for n, fut in futures.items():
-                    fut.result()  # propagate the first failure
-        else:
-            for n, df in phase_b.items():
-                sink(df, n)
+        sink_all(phase_b)
     tm["phase_b_total"] = round(time.time() - t_b, 3)
     return summary

@@ -5,15 +5,15 @@ table and the OSM world deterministically, geotag images from captions,
 index into hex cells, point-in-polygon join against OSM-derived polygons,
 and assign z/x/y Web-Mercator tiles.
 
-Join strategy: broadcast_cell_pip_join — the polygon corpus is pre-exploded
-into hex cells classified interior/boundary (one pandas pass over the tiny
-polygon side); points join the broadcast cover on their cell key, interior
-candidates are exact hits, boundary candidates run the Catalyst ray-cast.
-The whole per-image path is JVM Column work: no Python workers, no Arrow
-boundary, no shuffle — which is what makes throughput scale with cores
-(the former mapInPandas kernel saturated the Arrow serde lanes well before
-32 threads). The Arrow baseline remains available as
-operators.spatial_join.broadcast_pip_join.
+Join: apply_cell_pip over the driver-built cover of prepare_corpus — the
+polygon corpus is pre-exploded into hex cells classified interior/boundary
+(one numpy pass over the tiny polygon side, broadcast); points join the
+cover on their cell key, interior candidates are exact hits, boundary
+candidates run the Catalyst ray-cast. The whole per-image path is JVM
+Column work: no Python workers, no Arrow boundary, no shuffle — which is
+what makes throughput scale with cores (the former mapInPandas kernel
+saturated the Arrow serde lanes well before 32 threads). The Arrow baseline
+remains available as operators.spatial_join.broadcast_pip_join.
 
 Output: (image_id, polygon_id, cell, tile_x, tile_y) — byte-identical
 across parallelism levels (everything is id-derived and the join is
@@ -37,7 +37,11 @@ from fs2_osm_spark.functions.hex import hex_cell
 from fs2_osm_spark.functions.pip import PolygonSet
 from fs2_osm_spark.operators.assembly import feature_polygons
 from fs2_osm_spark.operators.multimodal import geotag
-from fs2_osm_spark.operators.spatial_join import broadcast_cell_pip_join
+from fs2_osm_spark.operators.spatial_join import (
+    CellCover,
+    apply_cell_pip,
+    build_cell_cover,
+)
 from fs2_osm_spark.synth.images import images_table
 from fs2_osm_spark.synth.osm import osm_tables
 
@@ -94,33 +98,20 @@ def polygon_corpus(spark: SparkSession, n_zones: int) -> PolygonSet:
     )
 
 
-def prepare_corpus(spark: SparkSession, polygons: DataFrame):
-    """One-time cover build (broadcastable (cover, poly_geo) pair). A
-    long-running ingest builds this once per corpus version; its cost is
-    O(polygons), independent of how many images flow through."""
-    from fs2_osm_spark.operators.spatial_join import build_cell_cover
-
+def prepare_corpus(spark: SparkSession, polygons: DataFrame) -> CellCover:
+    """One-time cover build of a (polygon_id, outer, inners) corpus
+    (broadcastable cover + ring tables). A long-running ingest builds this
+    once per corpus version; its cost is O(polygons), independent of how
+    many images flow through."""
     return build_cell_cover(spark, polygons, JOIN_RES)
 
 
-def flagship_from_tables(images: DataFrame, polygons) -> DataFrame:
+def flagship_from_tables(images: DataFrame, cover: CellCover) -> DataFrame:
     """The timed pipeline: geotag -> PIP join -> hex cell + z/x/y tiles.
-    Input-agnostic (synthesized or parquet/Iceberg-scanned images);
-    `polygons` is the (polygon_id, outer, inners) corpus DataFrame, or the
-    prepare_corpus() result to reuse a prebuilt cover."""
-    from fs2_osm_spark.operators.spatial_join import apply_cell_pip
-
-    from fs2_osm_spark.operators.spatial_join import CellCover
-
+    Input-agnostic (synthesized or parquet/Iceberg-scanned images); `cover`
+    is the prepare_corpus() result."""
     pts = geotag(images).select("image_id", "lon", "lat")
-    if isinstance(polygons, CellCover):
-        joined = apply_cell_pip(
-            pts, polygons, "lon", "lat", ["image_id", "lon", "lat"]
-        )
-    else:
-        joined = broadcast_cell_pip_join(
-            pts, polygons, JOIN_RES, "lon", "lat", ["image_id", "lon", "lat"]
-        )
+    joined = apply_cell_pip(pts, cover, "lon", "lat", ["image_id", "lon", "lat"])
     tx, ty = tile_xyz(F.col("lon"), F.col("lat"), TILE_Z)
     return joined.select(
         "image_id",
@@ -141,4 +132,6 @@ def flagship_query(
     n_img = n_images or n_img
     n_z = n_zones or n_z
     images = images_table(spark, n_img)
-    return flagship_from_tables(images, polygon_corpus_df(spark, n_z))
+    return flagship_from_tables(
+        images, prepare_corpus(spark, polygon_corpus_df(spark, n_z))
+    )

@@ -129,7 +129,7 @@ def run_pbf_pipeline(
     batch (fail_after is the pytest crash hook)."""
     from fs2_osm_spark.operators.assembly import feature_polygons
     from fs2_osm_spark.plans.export import run_export
-    from fs2_osm_spark.plans.flagship import flagship_from_tables
+    from fs2_osm_spark.plans.flagship import flagship_from_tables, prepare_corpus
     from fs2_osm_spark.plans.lineage import run_batched
     from fs2_osm_spark.synth.images import images_table
 
@@ -163,7 +163,7 @@ def run_pbf_pipeline(
         read_table(spark, os.path.join(export_root, "relations_ways")),
     ).select("polygon_id", "outer", "inners")
     images = images_table(spark, n_images)
-    result = flagship_from_tables(images, polygons)
+    result = flagship_from_tables(images, prepare_corpus(spark, polygons))
     # cache the slim join OUTPUT before batching: run_batched issues one
     # action per batch plus the distinct() scan, and without the cache each
     # action re-runs the whole upstream (image synthesis incl. per-image

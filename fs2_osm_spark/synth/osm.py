@@ -289,17 +289,6 @@ def osm_tables(
 # ---------------------------------------------------------------------------
 # Golden hand-built fixtures (pytest tier; mirrors the reference's specs)
 # ---------------------------------------------------------------------------
-def golden_nodes() -> pd.DataFrame:
-    return pd.DataFrame(
-        [
-            (1, 13.3290697, 52.4519232, None, {"test": "value"}),
-            (2, 13.3290697, 52.4519232, None, {}),
-            (125799, 8.7868047, 53.0749415, "golden", {}),
-        ],
-        columns=["osm_id", "lon", "lat", "name", "tags"],
-    )
-
-
 def golden_dense_blocks() -> pd.DataFrame:
     """Encoded dense blocks pinning the decode contract
     (DenseNodeStreamSpec.scala:22-76):

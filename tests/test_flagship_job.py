@@ -26,7 +26,11 @@ def _load_job():
 def test_flagship_job_main_completes_batches(spark, capsys):
     from pyspark.sql import functions as F
 
-    from fs2_osm_spark.plans.flagship import flagship_from_tables, polygon_corpus_df
+    from fs2_osm_spark.plans.flagship import (
+        flagship_from_tables,
+        polygon_corpus_df,
+        prepare_corpus,
+    )
     from fs2_osm_spark.plans.lineage import read_all_batches
     from fs2_osm_spark.synth.images import images_table
 
@@ -36,7 +40,8 @@ def test_flagship_job_main_completes_batches(spark, capsys):
         images_table(spark, 300, slim=True).write.parquet(images)
         polygon_corpus_df(spark, 64).write.parquet(polygons)
         want = flagship_from_tables(
-            spark.read.parquet(images), spark.read.parquet(polygons)
+            spark.read.parquet(images),
+            prepare_corpus(spark, spark.read.parquet(polygons)),
         )
         n_batches = (
             want.select(F.pmod(F.col("tile_x") + F.col("tile_y") * 7, 3))

@@ -43,7 +43,7 @@ def test_flagship_scan_prunes_bytes(spark):
 
     import pandas as pd
 
-    from fs2_osm_spark.plans.flagship import flagship_from_tables
+    from fs2_osm_spark.plans.flagship import flagship_from_tables, prepare_corpus
     from fs2_osm_spark.synth.images import images_table
 
     with tempfile.TemporaryDirectory() as d:
@@ -57,7 +57,7 @@ def test_flagship_scan_prunes_bytes(spark):
             ),
             "polygon_id long, outer array<double>, inners array<array<double>>",
         )
-        plan = _plan(flagship_from_tables(images, polygons))
+        plan = _plan(flagship_from_tables(images, prepare_corpus(spark, polygons)))
         img_scan = [
             seg.splitlines()[0]
             for seg in plan.split("ReadSchema:")[1:]

@@ -138,15 +138,37 @@ def test_knn_kring_matches_brute_force(spark):
 
 
 def test_cell_pip_join_matches_broadcast(spark):
+    """Executor-built cover (cell_pip_join), driver-built cover
+    (apply_cell_pip over prepare_corpus) and the Arrow baseline agree —
+    including a holed polygon with points in the hole, in the hole's
+    boundary cells and in interior cells — and both cover builders emit the
+    same cover."""
+    from fs2_osm_spark.functions.hex import hex_cell_np
     from fs2_osm_spark.functions.pip import PolygonSet
-    from fs2_osm_spark.operators.spatial_join import broadcast_pip_join, cell_pip_join
+    from fs2_osm_spark.operators.spatial_join import (
+        apply_cell_pip,
+        broadcast_pip_join,
+        build_cell_cover,
+        cell_pip_join,
+        polygons_to_cells,
+    )
+    from fs2_osm_spark.plans.flagship import prepare_corpus
 
     rng = np.random.default_rng(13)
+    holed_id = 105  # outer lon 8.0-8.4, lat 52.1-52.6
+    hole = [8.15, 52.25, 8.25, 52.25, 8.25, 52.45, 8.15, 52.45]
+    in_hole = [(x, 52.35) for x in np.arange(8.155, 8.25, 0.01)] + [
+        (8.2, y) for y in np.arange(52.255, 52.45, 0.01)
+    ]
+    in_ring = [(8.145, 52.35), (8.255, 52.35), (8.2, 52.245), (8.2, 52.455),
+               (8.075, 52.35), (8.325, 52.35), (8.2, 52.175), (8.2, 52.525)]
+    extra = np.asarray(in_hole + in_ring)
+    n_rand, n_hole = 2000, len(in_hole)
     pts = pd.DataFrame(
         {
-            "point_id": np.arange(2000),
-            "lon": rng.uniform(7.5, 9.5, 2000),
-            "lat": rng.uniform(51.5, 53.5, 2000),
+            "point_id": np.arange(n_rand + len(extra)),
+            "lon": np.concatenate([rng.uniform(7.5, 9.5, n_rand), extra[:, 0]]),
+            "lat": np.concatenate([rng.uniform(51.5, 53.5, n_rand), extra[:, 1]]),
         }
     )
     polys = []
@@ -154,7 +176,7 @@ def test_cell_pip_join_matches_broadcast(spark):
         ox = 7.5 + (i % 4) * 0.5
         oy = 51.5 + (i // 4) * 0.6
         ring = [ox, oy, ox + 0.4, oy, ox + 0.4, oy + 0.5, ox, oy + 0.5]
-        polys.append((100 + i, ring, []))
+        polys.append((100 + i, ring, [hole] if 100 + i == holed_id else []))
     points = spark.createDataFrame(pts)
     polygons = spark.createDataFrame(
         pd.DataFrame(polys, columns=["polygon_id", "outer", "inners"]),
@@ -163,15 +185,34 @@ def test_cell_pip_join_matches_broadcast(spark):
     ps = PolygonSet(
         ids=[p[0] for p in polys],
         outers=[np.asarray(p[1]) for p in polys],
-        inners=[[] for _ in polys],
+        inners=[[np.asarray(h) for h in p[2]] for p in polys],
     )
     a = broadcast_pip_join(points, ps, "lon", "lat", ["point_id"])
     b = cell_pip_join(
         points, polygons, res=6, lon_col="lon", lat_col="lat", point_keep=["point_id"]
     )
+    cover = prepare_corpus(spark, polygons)
+    c = apply_cell_pip(points, cover, "lon", "lat", ["point_id"])
     ra = sorted((r.point_id, r.polygon_id) for r in a.collect())
     rb = sorted((r.point_id, r.polygon_id) for r in b.collect())
-    assert ra == rb and len(ra) > 100
+    rc = sorted((r.point_id, r.polygon_id) for r in c.collect())
+    assert ra == rb == rc and len(ra) > 100
+    hits = {pid for pid, poly in ra if poly == holed_id}
+    assert not hits & set(range(n_rand, n_rand + n_hole))
+    assert set(range(n_rand + n_hole, len(pts))) <= hits
+
+    executor = {tuple(r) for r in polygons_to_cells(polygons, 6).select(
+        "polygon_id", "cell", "interior").collect()}
+    driver = {tuple(r) for r in build_cell_cover(spark, polygons, 6).cover.select(
+        "polygon_id", "cell", "interior").collect()}
+    assert executor == driver
+    # the extra points exercise every cover class of the holed polygon:
+    # hole points in boundary cells (rejected by the ray cast against the
+    # hole), ring points in boundary and in interior cells
+    cls = {cell: interior for pid, cell, interior in driver if pid == holed_id}
+    cells = hex_cell_np(extra[:, 0], extra[:, 1], 6)
+    assert any(cls.get(int(cell)) is False for cell in cells[:n_hole])
+    assert {cls.get(int(cell)) for cell in cells[n_hole:]} == {True, False}
 
 
 def test_hamming_pairs_full_recall_top_bits(spark):
