@@ -125,8 +125,11 @@ def connected_components(
 
     Each round joins current labels across edges and takes the min —
     converges in O(diameter) rounds; near-dup clusters are tiny, so
-    max_iters=10 is far beyond any realistic diameter. Deterministic.
-    Only the result's checkpoint outlives the call (a session pin).
+    max_iters=10 is far beyond any realistic diameter. Converged means a
+    round changed no label; if none of the ``max_iters`` rounds did, the
+    labels may still be split and RuntimeError is raised instead.
+    Deterministic. Only the result's checkpoint outlives the call (a
+    session pin).
     """
     # pin the pair list first — the symmetric union would otherwise compute
     # the upstream pair-generation pipeline twice; then pin the edge list so
@@ -175,8 +178,15 @@ def connected_components(
         labels = new_labels.select("id", "cluster")
         if new_labels.filter(F.col("_chg")).limit(1).count() == 0:
             break
-    if max_iters > 0:  # the result reads only its own checkpoint
+    else:
+        unpin(new_labels)
         unpin(edges)
+        raise RuntimeError(
+            f"connected_components: labels still changing after "
+            f"max_iters={max_iters} rounds (a component's diameter "
+            f"exceeds the cap); raise max_iters"
+        )
+    unpin(edges)  # the result reads only its own checkpoint
     return labels
 
 

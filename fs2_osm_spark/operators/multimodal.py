@@ -231,12 +231,12 @@ FRAME_SCHEMA = T.StructType(
 )
 
 
-def sample_frames(media: DataFrame, every_n: int = 4, n_frames: int = 16) -> DataFrame:
+def sample_frames(media: DataFrame, every_n: int = 4) -> DataFrame:
     """Video frame sampling — Spark-side plumbing is real, the video DECODE
     is a STUB (no video codec libs in this container).
 
     Contract: media(media_id, bytes, fmt) where fmt='fakevideo' payloads are
-    a deterministic container of n_frames PNG frames (built by
+    a deterministic container of length-prefixed PNG frames (built by
     make_fake_video below); real deployments swap `_decode_video` for an
     ffmpeg/PyAV call with the same signature. Every `every_n`-th frame is
     emitted as its own row (one row per sampled frame — the explode shape a

@@ -8,13 +8,14 @@ feature passes (run_export), then the image PIP join + tiling, batched with
 per-batch lineage rows so a killed run resumes idempotently
 (plans/lineage.py).
 
-The frame readers yield wire-shaped rows (tags_json, delta-decoded refs,
-member arrays); `frame_tables` bridges them to the engine's normalized
-schemas — the name column lifts from tags["name"] (which stays in the map,
-as in real OSM data; FIXTURES.md: name = tags['name'] when present),
-relation members explode to the (relation_id, way_id, index, role) table
-filtered to way members, exactly the reference's RelationImporter split
-(RelationImporter.scala:21-70).
+The frame source decodes each file once into one entity frame
+(sources/pbf_frames.read_entities: kind, osm_id, coordinates, a tags map,
+delta-decoded refs, member arrays); `frame_tables` projects it to the
+engine's normalized schemas — the name column lifts from tags["name"]
+(which stays in the map, as in real OSM data; FIXTURES.md: name =
+tags['name'] when present), relation members explode to the
+(relation_id, member id, index, role) tables split by member type, exactly
+the reference's RelationImporter split (RelationImporter.scala:21-70).
 """
 
 from __future__ import annotations
@@ -31,58 +32,36 @@ from fs2_osm_spark.pins import Pins
 def frame_tables(
     spark: SparkSession, pbf_dir: str, pins: Pins | None = None
 ) -> dict[str, DataFrame]:
-    """Decoded wire rows -> normalized nodes/ways/relations/relations_ways.
+    """The decoded entity frame -> normalized nodes/ways/relations and the
+    three relation member tables.
 
-    With the caller's ``pins``, the decoded relation frames are persisted
-    there so the FOUR consumers (the relations sink + the three member-table
-    splits) share a single Python frame-decode pass instead of re-decoding
-    per action; the caller releases them once the consumers have
+    With the caller's ``pins``, the entity frame is persisted there, so
+    the six tables and their consumers share a single Python frame-decode
+    pass (the reference's broadcastThrough fan-out) instead of re-decoding
+    per action; the caller releases it once the consumers have
     materialized.
     """
-    from fs2_osm_spark.sources.pbf_frames import (
-        read_nodes_from_frames,
-        read_relations_from_frames,
-        read_ways_from_frames,
-    )
+    from fs2_osm_spark.sources.pbf_frames import entity_nodes, read_entities
 
-    nodes = read_nodes_from_frames(spark, pbf_dir)
-
-    tags_map = F.from_json("tags_json", "map<string,string>")
-    ways = (
-        read_ways_from_frames(spark, pbf_dir)
-        .select(
-            F.col("way_id").alias("osm_id"),
-            tags_map.alias("_tags"),
-            F.col("refs").alias("nodes"),
-        )
-        .select(
-            "osm_id",
-            F.col("_tags")["name"].alias("name"),
-            "nodes",
-            F.col("_tags").alias("tags"),
-        )
-    )
-
-    rels_raw = read_relations_from_frames(spark, pbf_dir).select(
-        "relation_id", tags_map.alias("_tags"),
-        "member_ids", "member_roles", "member_types",
-    )
+    ents = read_entities(spark, pbf_dir)
     if pins is not None:
-        rels_raw = pins.persist(rels_raw)
-    relations = rels_raw.select(
-        F.col("relation_id").alias("osm_id"),
-        F.col("_tags")["name"].alias("name"),
-        F.col("_tags")["type"].alias("type"),
-        F.col("_tags").alias("tags"),
+        ents = pins.persist(ents)
+    kind, tags = F.col("kind"), F.col("tags")
+    ways = ents.filter(kind == "way").select(
+        "osm_id", tags["name"].alias("name"), F.col("refs").alias("nodes"), "tags"
     )
-    members = rels_raw.select(
-        "relation_id",
+    rels = ents.filter(kind == "relation")
+    relations = rels.select(
+        "osm_id", tags["name"].alias("name"), tags["type"].alias("type"), "tags"
+    )
+    members = rels.select(
+        F.col("osm_id").alias("relation_id"),
         F.posexplode(
-            F.arrays_zip("member_ids", "member_roles", "member_types")
+            F.arrays_zip("refs", "member_roles", "member_types")
         ).alias("index", "m"),
     ).select(
         "relation_id",
-        F.col("m.member_ids").alias("member_id"),
+        F.col("m.refs").alias("member_id"),
         F.col("index").cast("int").alias("index"),
         F.col("m.member_roles").alias("role"),
         F.col("m.member_types").alias("member_type"),
@@ -103,7 +82,7 @@ def frame_tables(
         "role",
     )
     return {
-        "nodes": nodes,
+        "nodes": entity_nodes(ents),
         "ways": ways,
         "relations": relations,
         "relations_ways": relations_ways,

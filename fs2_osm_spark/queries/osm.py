@@ -773,11 +773,11 @@ def _wire_fixture(spark: SparkSession):
     return path
 
 
-# json.dumps(sort_keys=True) default separators put a space after ':' —
-# the VALUES literals below must match that byte-for-byte
+# the tags map serializes through _driver_safe_tags (Spark to_json, no
+# spaces) — the literals below must match that byte-for-byte
 _WAY_FRAME_ORACLE = """
     SELECT CAST(100 + i AS BIGINT) AS way_id,
-           '{"highway": "residential"}' AS tags_json,
+           '{"highway":"residential"}' AS tags_json,
            CAST(3 AS BIGINT) AS n_refs,
            CAST(10 * i + 1 AS BIGINT) AS first_ref,
            CAST(10 * i + 6 AS BIGINT) AS last_ref,
@@ -801,9 +801,9 @@ def osm_way_frame_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fs2_osm_spark.sources.pbf_frames import read_ways_from_frames
 
     ways = read_ways_from_frames(spark, _wire_fixture(spark))
-    return ways.select(
+    return _driver_safe_tags(ways.select(
         "way_id",
-        "tags_json",
+        "tags",
         F.size("refs").cast("bigint").alias("n_refs"),
         F.element_at("refs", 1).alias("first_ref"),
         F.element_at("refs", -1).alias("last_ref"),
@@ -812,12 +812,12 @@ def osm_way_frame_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         "changeset",
         "uid",
         "user",
-    )
+    ))
 
 
 _REL_FRAME_ORACLE = """
     SELECT CAST(900 + i AS BIGINT) AS relation_id,
-           '{"type": "multipolygon"}' AS tags_json,
+           '{"type":"multipolygon"}' AS tags_json,
            CAST(2 AS BIGINT) AS n_members,
            'outer,inner' AS roles_csv,
            'way,way' AS types_csv,
@@ -842,9 +842,9 @@ def osm_relation_frame_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fs2_osm_spark.sources.pbf_frames import read_relations_from_frames
 
     rels = read_relations_from_frames(spark, _wire_fixture(spark))
-    return rels.select(
+    return _driver_safe_tags(rels.select(
         "relation_id",
-        "tags_json",
+        "tags",
         F.size("member_ids").cast("bigint").alias("n_members"),
         F.array_join("member_roles", ",").alias("roles_csv"),
         F.array_join("member_types", ",").alias("types_csv"),
@@ -854,7 +854,7 @@ def osm_relation_frame_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         "changeset",
         "uid",
         "user",
-    )
+    ))
 
 
 # hand-derived from the deltas below: ids 100,101,102; timestamp cumsum

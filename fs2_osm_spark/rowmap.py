@@ -1,14 +1,14 @@
 """One adapter for per-row Python kernels: ``map_rows``.
 
 Domain work that cannot be Column math — image, audio and geometry passes,
-OSM way/relation/node-info decode — is a function of one input row. The
-adapter owns everything around that function: the column selection, the
-Arrow batch loop, plain Python values in and typed Arrow arrays out. A
-kernel is a generator over one row's values.
+the PBF entity decode (one frame file or encoded block in, its entities
+out) — is a function of one input row. The adapter owns everything around
+that function: the column selection, the Arrow batch loop, plain Python
+values in and typed Arrow arrays out. A kernel is a generator over one
+row's values.
 
-Batch and column kernels (PIP, PQ/IVF encode, the dense node decoders)
-work on whole Arrow columns and call ``mapInArrow``/``mapInPandas``
-themselves.
+Batch and column kernels (PIP, PQ/IVF encode, the synth generators) work
+on whole Arrow columns and call ``mapInArrow``/``mapInPandas`` themselves.
 """
 
 from __future__ import annotations

@@ -2,10 +2,11 @@
 
 Reproduces the semantics of the reference's streaming decoder
 (/root/reference/core/src/main/scala/fs2/osm/core/DenseNodeStream.scala:11-58,
-model.scala:15-61) as vectorized numpy inside mapInPandas — the wire format
-is already columnar (parallel packed arrays, osmformat.proto:216-239), so
-the decode is cumsum + scaling + dictionary take per block, one Arrow batch
-per block set, no per-row Python.
+model.scala:15-61) as vectorized numpy per block — the wire format is
+already columnar (parallel packed arrays, osmformat.proto:216-239), so the
+decode is cumsum + scaling + dictionary take per block. The Spark side is
+the PBF entity kernel (pbf_frames.block_entities on rowmap.map_rows), which
+calls this contract for every block's dense nodes.
 
 Pinned semantics (SURVEY.md §4.3):
 1. delta chains: value_i = sum of deltas[0..i]        (ids, refs, memids)
@@ -15,26 +16,17 @@ Pinned semantics (SURVEY.md §4.3):
    into the block string table; duplicate keys keep the LAST value
    (Scala toMap semantics, package.scala:15-24)
 4. name column = tags['name'] (NodeImporter.scala:41)
+5. a keys_vals stream with trailing pairs after its last 0, or with more
+   0-closed segments than nodes, is malformed: ValueError, not lost tags
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import types as T
 
-DECODED_NODES_SCHEMA = T.StructType(
-    [
-        T.StructField("osm_id", T.LongType(), False),
-        T.StructField("lon", T.DoubleType(), False),
-        T.StructField("lat", T.DoubleType(), False),
-        T.StructField("name", T.StringType(), True),
-        T.StructField("tags", T.MapType(T.StringType(), T.StringType()), False),
-    ]
-)
+from fs2_osm_spark.rowmap import map_rows
 
 
 def decode_dense_block_np(
@@ -63,6 +55,14 @@ def decode_dense_block_np(
         # split the 0-delimited stream into per-node segments, then decode
         # pairs via dictionary take; last-write-wins via dict() insertion
         zeros = np.nonzero(kv == 0)[0]
+        if kv[-1] != 0:
+            raise ValueError(
+                "dense keys_vals: trailing (key, val) pairs without a closing 0"
+            )
+        if len(zeros) > n:
+            raise ValueError(
+                f"dense keys_vals: {len(zeros)} tag segments for {n} nodes"
+            )
         start = 0
         for z in zeros.tolist():
             seg = kv[start:z]
@@ -83,32 +83,29 @@ def decode_dense_block_np(
     )
 
 
+_BLOCK_COLS = (
+    "ids", "lats", "lons", "keys_vals", "string_table",
+    "granularity", "lat_offset", "lon_offset",
+)
+
+
 def decode_dense_blocks(blocks: DataFrame) -> DataFrame:
-    """Encoded dense-block DataFrame -> decoded nodes DataFrame.
+    """Encoded dense-block DataFrame -> decoded nodes DataFrame, each row
+    run through the PBF entity kernel like a block parsed off the wire.
 
     blocks schema (FIXTURES.md §2): block_id, ids, lats, lons, keys_vals,
     string_table, granularity, lat_offset, lon_offset.
     """
+    from fs2_osm_spark.sources.pbf_frames import (
+        ENTITY_SCHEMA,
+        block_entities,
+        entity_nodes,
+    )
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            outs = [
-                decode_dense_block_np(
-                    row.ids,
-                    row.lats,
-                    row.lons,
-                    row.keys_vals,
-                    list(row.string_table),
-                    int(row.granularity),
-                    int(row.lat_offset),
-                    int(row.lon_offset),
-                )
-                for row in pdf.itertuples()
-            ]
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
+    def kernel(*vals):
+        return block_entities(dict(zip(_BLOCK_COLS, vals)))
 
-    return blocks.mapInPandas(fn, DECODED_NODES_SCHEMA)
+    return entity_nodes(map_rows(blocks, _BLOCK_COLS, kernel, ENTITY_SCHEMA))
 
 
 def decode_delta_refs(refs_delta: list[int]) -> list[int]:

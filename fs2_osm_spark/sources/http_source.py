@@ -28,10 +28,11 @@ import tempfile
 import urllib.error
 import urllib.parse
 import urllib.request
-from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+
+from fs2_osm_spark.rowmap import map_rows
 
 _CHUNK = 1 << 20
 
@@ -82,30 +83,28 @@ def read_nodes_from_url(spark: SparkSession, url: str) -> DataFrame:
 def read_nodes_from_urls(spark: SparkSession, urls: list[str]) -> DataFrame:
     """S2 at scale: manifest of extract URLs -> one fetch+decode per task.
 
-    Each task streams ITS OWN url to executor-local disk, parses the
-    frames, and dense-decodes to node rows — bytes never transit the
+    Each task streams ITS OWN url to executor-local disk and runs the
+    file through the PBF entity kernel (the one ``read_entities`` maps over
+    binaryFile contents), keeping the node rows — bytes never transit the
     driver, and parallelism equals manifest length (matching how mirror
     sites actually publish planet extracts: one file per region)."""
     from fs2_osm_spark.sources.pbf_frames import (
-        DECODED_NODES_SCHEMA,
-        iter_node_blocks,
+        ENTITY_SCHEMA,
+        entity_nodes,
+        file_entities,
     )
 
     manifest = spark.createDataFrame(
         pd.DataFrame({"url": urls})
     ).repartition(max(1, min(len(urls), spark.sparkContext.defaultParallelism)))
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for url in pdf["url"]:
-                path = download_to_file(url)
-                try:
-                    with open(path, "rb") as f:
-                        payload = f.read()
-                finally:
-                    os.unlink(path)
-                outs = list(iter_node_blocks(payload))
-                if outs:
-                    yield pd.concat(outs, ignore_index=True)
+    def kernel(url):
+        path = download_to_file(url)
+        try:
+            with open(path, "rb") as f:
+                payload = f.read()
+        finally:
+            os.unlink(path)
+        return file_entities(payload)
 
-    return manifest.mapInPandas(fn, DECODED_NODES_SCHEMA)
+    return entity_nodes(map_rows(manifest, ["url"], kernel, ENTITY_SCHEMA))

@@ -4,7 +4,11 @@ Reproduces the reference's wire layer
 (/root/reference/core/src/main/scala/fs2/osm/core/PbfReader.scala:11-29:
 repeat: read 4-byte big-endian length -> BlobHeader -> datasize bytes ->
 Blob; core/src/main/scala/fs2/osm/core/package.scala:27-44: zlib inflate ->
-PrimitiveBlock) as a Spark `binaryFile` scan + per-file frame parser.
+PrimitiveBlock) as a Spark `binaryFile` scan + per-file frame parser,
+and the reference's one entity stream (OsmEntityDecoder.pipe) as one
+entity frame: ``read_entities`` parses each file once through one kernel,
+``block_entities``, on ``map_rows``, and the node/way/relation/node-info
+readers are kind filters over that frame.
 
 The container has no protobuf library, so the protobuf WIRE FORMAT itself
 is implemented in sources/proto_wire.py (varint/zigzag/length-delimited) —
@@ -21,15 +25,17 @@ import struct
 import zlib
 from collections.abc import Iterator
 
-import pandas as pd
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from fs2_osm_spark.rowmap import map_rows
 from fs2_osm_spark.sources.dense_decode import (
-    DECODED_NODES_SCHEMA,
+    decode_delta_refs,
     decode_dense_block_np,
 )
 from fs2_osm_spark.sources.proto_wire import (
+    MEMBER_TYPES,
     decode_blob,
     decode_blob_header,
     decode_primitive_block,
@@ -57,10 +63,6 @@ def encode_block(
         ids, lats, lons, keys_vals, string_table,
         granularity, lat_offset, lon_offset, dense_info, date_granularity,
     )
-
-
-def decode_block(payload: bytes) -> dict:
-    return decode_primitive_block(payload)
 
 
 def write_frames(path: str, blocks: list[bytes]) -> None:
@@ -101,40 +103,18 @@ def iter_frames(data: bytes) -> Iterator[bytes]:
         yield payload
 
 
-def iter_node_blocks(data: bytes) -> Iterator[pd.DataFrame]:
-    """Every frame of one PBF file, dense-decoded: one node frame per
-    block. Shared by the binaryFile scan and the URL-manifest path."""
-    for b in map(decode_block, iter_frames(data)):
-        yield decode_dense_block_np(
-            b["ids"], b["lats"], b["lons"], b["keys_vals"], b["string_table"],
-            b["granularity"], b["lat_offset"], b["lon_offset"],
-        )
-
-
-def read_nodes_from_frames(spark: SparkSession, path: str) -> DataFrame:
-    """binaryFile scan -> per-file frame parse -> dense decode -> nodes.
-
-    One file = one task; at scale the extract is split into many frame
-    files (the reference's input is likewise a sequence of independent
-    blobs), so parallelism = file count. The decode is vectorized per
-    block, so this stays a batch kernel on mapInPandas."""
-    files = spark.read.format("binaryFile").load(path)
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            outs = [nb for c in pdf["content"] for nb in iter_node_blocks(bytes(c))]
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
-
-    return files.select("content").mapInPandas(fn, DECODED_NODES_SCHEMA)
-
-
-_INFO_COLS = ", version int, epoch_ms long, changeset long, uid long, user string"
-WAYS_FRAME_SCHEMA = "way_id long, tags_json string, refs array<long>" + _INFO_COLS
-RELS_FRAME_SCHEMA = (
-    "relation_id long, tags_json string, member_ids array<long>,"
-    " member_roles array<string>, member_types array<string>" + _INFO_COLS
+# One row per entity. Nodes fill lon/lat; ways fill refs with their node
+# ids; relations fill refs with their member ids, plus member_roles and
+# member_types. The five Info columns are null for a node whose block has
+# no DenseInfo, and the proto defaults (version -1, rest null) for a way or
+# relation without Info.
+ENTITY_SCHEMA = (
+    "kind string, osm_id long, lon double, lat double,"
+    " tags map<string,string>, refs array<long>,"
+    " member_roles array<string>, member_types array<string>,"
+    " version int, epoch_ms long, changeset long, uid long, user string"
 )
+_INFO_COLS = ("version", "epoch_ms", "changeset", "uid", "user")
 
 
 def _info_tuple(info: dict | None, st: list[str], date_granularity: int) -> tuple:
@@ -154,94 +134,126 @@ def _info_tuple(info: dict | None, st: list[str], date_granularity: int) -> tupl
     )
 
 
-def read_ways_from_frames(spark: SparkSession, path: str) -> DataFrame:
-    """Way groups from PBF frames (WayImporter.scala:25-53 semantics): tags
-    from keys/vals string-table indices, refs delta-decoded."""
-    import json as _json
+def _dense_info_tuples(
+    di: dict | None, n: int, st: list[str], date_granularity: int
+) -> list[tuple]:
+    """DenseInfo (S10: osmformat.proto:154-170) aligned with the n dense
+    ids: versions plain; timestamp/changeset/uid/user_sid delta-coded
+    running sums; usernames through the block string table; timestamps
+    scaled by date_granularity. No DenseInfo -> all-null tuples."""
+    if not di:
+        return [(None,) * 5] * n
+    vers = di.get("versions", [])
+    ts, cs, uid, usid = (
+        np.cumsum(np.asarray(di.get(k, []), np.int64)).tolist()
+        for k in ("timestamps", "changesets", "uids", "user_sids")
+    )
+    return [
+        (
+            int(vers[k]) if k < len(vers) else -1,
+            ts[k] * date_granularity if k < len(ts) else None,
+            cs[k] if k < len(cs) else None,
+            uid[k] if k < len(uid) else None,
+            st[usid[k]] if k < len(usid) else None,
+        )
+        for k in range(n)
+    ]
 
-    from fs2_osm_spark.sources.dense_decode import decode_delta_refs
 
-    def kernel(content):
-        for b in map(decode_block, iter_frames(content)):
-            st = b["string_table"]
-            dg = int(b.get("date_granularity", 1000))
-            for w in b["ways"]:
-                tags = {st[k]: st[v] for k, v in zip(w["keys"], w["vals"])}
-                yield (
-                    w["way_id"],
-                    _json.dumps(tags, sort_keys=True),
-                    decode_delta_refs(w["refs"]),
-                ) + _info_tuple(w.get("info"), st, dg)
+def block_entities(b: dict) -> Iterator[tuple]:
+    """One decoded PrimitiveBlock (``decode_primitive_block``'s dict) ->
+    ENTITY_SCHEMA rows: dense nodes through the decode contract
+    (``decode_dense_block_np``) with their DenseInfo; ways with tags from
+    keys/vals string-table indices and delta-decoded refs
+    (WayImporter.scala:25-53); relations with delta-decoded member ids,
+    roles via the string table, types via the MemberType enum
+    (RelationImporter.scala:21-70). A block without ways, relations,
+    DenseInfo or date_granularity (field 18, default 1000 ms) may omit
+    those keys."""
+    st = b["string_table"]
+    dg = b.get("date_granularity", 1000)
+    nodes = decode_dense_block_np(
+        b["ids"], b["lats"], b["lons"], b["keys_vals"], st,
+        b["granularity"], b["lat_offset"], b["lon_offset"],
+    )
+    for osm_id, lon, lat, tags, info in zip(
+        nodes["osm_id"].tolist(), nodes["lon"].tolist(), nodes["lat"].tolist(),
+        nodes["tags"], _dense_info_tuples(b.get("dense_info"), len(nodes), st, dg),
+    ):
+        yield ("node", osm_id, lon, lat, tags, None, None, None, *info)
+    for w in b.get("ways", ()):
+        yield (
+            "way", w["way_id"], None, None,
+            {st[k]: st[v] for k, v in zip(w["keys"], w["vals"])},
+            decode_delta_refs(w["refs"]), None, None,
+            *_info_tuple(w["info"], st, dg),
+        )
+    for r in b.get("relations", ()):
+        yield (
+            "relation", r["rel_id"], None, None,
+            {st[k]: st[v] for k, v in zip(r["keys"], r["vals"])},
+            decode_delta_refs(r["memids"]),
+            [st[i] for i in r["roles_sid"]],
+            [MEMBER_TYPES[t] for t in r["types"]],
+            *_info_tuple(r["info"], st, dg),
+        )
 
+
+def file_entities(data: bytes) -> Iterator[tuple]:
+    """Every entity of one PBF file, frame by frame."""
+    for payload in iter_frames(data):
+        yield from block_entities(decode_primitive_block(payload))
+
+
+def read_entities(spark: SparkSession, path: str) -> DataFrame:
+    """binaryFile scan -> per-file frame parse -> one ENTITY_SCHEMA frame.
+
+    One file = one task; at scale the extract is split into many frame
+    files (the reference's input is likewise a sequence of independent
+    blobs), so parallelism = file count. Each file is parsed once for all
+    entity kinds; the per-kind readers below are projections of this
+    frame."""
     files = spark.read.format("binaryFile").load(path)
-    return map_rows(files, ["content"], kernel, WAYS_FRAME_SCHEMA)
+    return map_rows(files, ["content"], file_entities, ENTITY_SCHEMA)
+
+
+def _of_kind(ents: DataFrame, kind: str) -> DataFrame:
+    return ents.filter(F.col("kind") == kind)
+
+
+def entity_nodes(ents: DataFrame) -> DataFrame:
+    """Node rows (osm_id, lon, lat, name, tags) of an entity frame; name =
+    tags['name'] (NodeImporter.scala:41)."""
+    return _of_kind(ents, "node").select(
+        "osm_id", "lon", "lat", F.col("tags")["name"].alias("name"), "tags"
+    )
+
+
+def read_nodes_from_frames(spark: SparkSession, path: str) -> DataFrame:
+    return entity_nodes(read_entities(spark, path))
+
+
+def read_ways_from_frames(spark: SparkSession, path: str) -> DataFrame:
+    return _of_kind(read_entities(spark, path), "way").select(
+        F.col("osm_id").alias("way_id"), "tags", "refs", *_INFO_COLS
+    )
 
 
 def read_relations_from_frames(spark: SparkSession, path: str) -> DataFrame:
-    """Relation groups from PBF frames (RelationImporter.scala:21-70):
-    member ids delta-decoded, roles via string table, types via the
-    MemberType enum."""
-    import json as _json
-
-    from fs2_osm_spark.sources.dense_decode import decode_delta_refs
-    from fs2_osm_spark.sources.proto_wire import MEMBER_TYPES
-
-    def kernel(content):
-        for b in map(decode_block, iter_frames(content)):
-            st = b["string_table"]
-            dg = int(b.get("date_granularity", 1000))
-            for r in b["relations"]:
-                tags = {st[k]: st[v] for k, v in zip(r["keys"], r["vals"])}
-                yield (
-                    r["rel_id"],
-                    _json.dumps(tags, sort_keys=True),
-                    decode_delta_refs(r["memids"]),
-                    [st[i] for i in r["roles_sid"]],
-                    [MEMBER_TYPES[t] for t in r["types"]],
-                ) + _info_tuple(r.get("info"), st, dg)
-
-    files = spark.read.format("binaryFile").load(path)
-    return map_rows(files, ["content"], kernel, RELS_FRAME_SCHEMA)
-
-
-NODE_INFO_SCHEMA = (
-    "osm_id long, version int, epoch_ms long, changeset long,"
-    " uid long, user string"
-)
+    return _of_kind(read_entities(spark, path), "relation").select(
+        F.col("osm_id").alias("relation_id"),
+        "tags",
+        F.col("refs").alias("member_ids"),
+        "member_roles",
+        "member_types",
+        *_INFO_COLS,
+    )
 
 
 def read_node_info_from_frames(spark: SparkSession, path: str) -> DataFrame:
-    """DenseInfo metadata (S10: osmformat.proto:154-170) aligned with the
-    dense ids: versions plain; timestamp/changeset/uid/user_sid delta-coded
-    running sums; usernames resolved through the block string table;
-    timestamps scaled by date_granularity (default 1000 ms)."""
-    import numpy as np
-
-    def kernel(content):
-        for b in map(decode_block, iter_frames(content)):
-            di = b.get("dense_info") or {}
-            if not di:
-                continue
-            ids = np.cumsum(np.asarray(b["ids"], np.int64))
-            st = b["string_table"]
-            ts = np.cumsum(np.asarray(di.get("timestamps", []), np.int64))
-            cs = np.cumsum(np.asarray(di.get("changesets", []), np.int64))
-            uid = np.cumsum(np.asarray(di.get("uids", []), np.int64))
-            usid = np.cumsum(np.asarray(di.get("user_sids", []), np.int64))
-            vers = di.get("versions", [])
-            # osmformat.proto: timestamp epoch ms = value * date_granularity
-            # (field 18, default 1000) — a foreign file may use a
-            # non-default unit
-            dg = int(b.get("date_granularity", 1000))
-            for k, osm_id in enumerate(ids.tolist()):
-                yield (
-                    osm_id,
-                    int(vers[k]) if k < len(vers) else -1,
-                    int(ts[k]) * dg if k < len(ts) else None,
-                    int(cs[k]) if k < len(cs) else None,
-                    int(uid[k]) if k < len(uid) else None,
-                    st[int(usid[k])] if k < len(usid) else None,
-                )
-
-    files = spark.read.format("binaryFile").load(path)
-    return map_rows(files, ["content"], kernel, NODE_INFO_SCHEMA)
+    """DenseInfo rows; nodes of a block without DenseInfo have none."""
+    return (
+        _of_kind(read_entities(spark, path), "node")
+        .filter(F.col("version").isNotNull())
+        .select("osm_id", *_INFO_COLS)
+    )

@@ -13,7 +13,6 @@ from fs2_osm_spark.operators.assembly import (
     simple_polygons,
 )
 from fs2_osm_spark.sources.dense_decode import (
-    DECODED_NODES_SCHEMA,
     decode_dense_block_np,
     decode_dense_blocks,
     decode_delta_refs,
@@ -83,6 +82,24 @@ def test_tag_decode_and_last_write_wins():
     assert out["tags"].iloc[0] == {"amenity": "bar", "name": "x"}
     assert out["name"].iloc[0] == "x"
     assert out["tags"].iloc[1] == {}
+
+
+@pytest.mark.parametrize(
+    "keys_vals, match",
+    [
+        ([1, 2, 0, 1, 2], "without a closing 0"),
+        ([1, 2], "without a closing 0"),
+        ([1, 2, 0, 0, 0], "3 tag segments for 2 nodes"),
+    ],
+)
+def test_malformed_dense_tag_stream_raises(keys_vals, match):
+    """keys_vals comes from foreign PBF files: a stream that does not split
+    into one 0-closed segment per node must fail by name, not drop tags."""
+    with pytest.raises(ValueError, match=match):
+        decode_dense_block_np(
+            ids=[1, 1], lats=[0, 0], lons=[0, 0],
+            keys_vals=keys_vals, string_table=["", "k", "v"],
+        )
 
 
 def test_way_refs_delta():

@@ -70,6 +70,18 @@ def test_pbf_roundtrip_tables_match_synth(spark, pbf_dir):
         assert g, f"{tbl} must be exercised by the synth world"
 
 
+def test_frame_tables_read_one_cached_entity_frame(spark, pbf_dir):
+    """With the caller's pins, all six tables are projections of the one
+    persisted entity frame: each file is parsed once per lifecycle run,
+    not once per table."""
+    from fs2_osm_spark.pins import Pins
+
+    with Pins() as pins:
+        for name, df in frame_tables(spark, pbf_dir, pins).items():
+            plan = df._jdf.queryExecution().optimizedPlan().toString()
+            assert plan.count("InMemoryRelation") == 1, (name, plan)
+
+
 def test_wire_info_round_trip(spark, pbf_dir):
     """S10 for ways/relations: the writer stamps deterministic Info
     (synth_info_fields) on every way/relation; the frame readers must

@@ -223,7 +223,7 @@ def test_way_relation_frame_decode(spark):
     assert len(ways) == 20
     assert ways[100].n_refs == 3
     assert ways[100].first_ref == 1 and ways[100].last_ref == 6  # 1, +2, +3
-    assert ways[105].tags_json == '{"highway": "residential"}'
+    assert ways[105].tags_json == '{"highway":"residential"}'
 
     rels = {r.relation_id: r for r in osm_relation_frame_decode(spark, "").collect()}
     assert len(rels) == 5
@@ -232,7 +232,7 @@ def test_way_relation_frame_decode(spark):
     assert r.roles_csv == "outer,inner"
     assert r.types_csv == "way,way"
     assert r.last_member_id == 103  # 102, +1 delta
-    assert r.tags_json == '{"type": "multipolygon"}'
+    assert r.tags_json == '{"type":"multipolygon"}'
 
 
 def test_dense_info_decode(spark):

@@ -67,6 +67,23 @@ def test_connected_components_clusters(doc_corpus, spark):
     assert labels[20] == labels[21] == labels[22] == labels[23] == 20
 
 
+def test_connected_components_raises_at_iteration_cap(spark):
+    """A 25-node path needs ~24 rounds: the default cap of 10 must raise
+    (leaving no pinned RDD behind), not return a split component."""
+    from fs2_osm_spark.pins import session_pins
+
+    path = spark.range(0, 24).select(
+        F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
+    )
+    held = len(session_pins._held)
+    with pytest.raises(RuntimeError, match="max_iters=10"):
+        connected_components(path)
+    assert len(session_pins._held) == held
+    labels = connected_components(path, max_iters=40)
+    assert labels.select("cluster").distinct().count() == 1
+    assert labels.count() == 25
+
+
 def test_simhash_locality(doc_corpus):
     sims = simhash64(doc_corpus, "doc_id", "text")
     rows = {r.doc_id: r.simhash for r in sims.collect()}
