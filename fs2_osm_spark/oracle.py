@@ -2,13 +2,15 @@
 
 Mirrors the driver's correctness gate: row count, schema (column names +
 coarse type classes), and an order-insensitive value hash computed over
-rows with columns sorted by name.
+rows with columns sorted by name. A value-hash mismatch names the columns
+whose own values differ and counts the rows only one side holds.
 """
 
 from __future__ import annotations
 
 import hashlib
 import os
+from collections import Counter
 
 import duckdb
 
@@ -80,15 +82,25 @@ def compare(sdf, oracle_sql: str, con: duckdb.DuckDBPyConnection) -> list[str]:
     sh = value_hash(srows, scols)
     oh = value_hash(orows, ocols)
     if sh != oh:
-        problems.append("value-hash mismatch")
+        # which columns differ on their own (each column's sorted values),
+        # and how many rows each side holds that the other does not
+        ocol = {c: i for i, c in enumerate(ocols)}
+        bad = sorted(
+            c for i, c in enumerate(scols)
+            if value_hash([(r[i],) for r in srows], [c])
+            != value_hash([(r[ocol[c]],) for r in orows], [c])
+        )
         order_s = sorted(range(len(scols)), key=lambda i: scols[i])
         order_o = sorted(range(len(ocols)), key=lambda i: ocols[i])
-        sset = {tuple(fmt_value(r[i]) for i in order_s) for r in srows}
-        oset = {tuple(fmt_value(r[i]) for i in order_o) for r in orows}
-        s_only = sorted(sset - oset)[:3]
-        o_only = sorted(oset - sset)[:3]
+        sset = Counter(tuple(fmt_value(r[i]) for i in order_s) for r in srows)
+        oset = Counter(tuple(fmt_value(r[i]) for i in order_o) for r in orows)
+        s_only, o_only = sset - oset, oset - sset
+        problems.append(
+            f"value-hash mismatch: columns {bad}; rows spark-only="
+            f"{s_only.total()} oracle-only={o_only.total()}"
+        )
         if s_only:
-            problems.append(f"spark-only: {s_only}")
+            problems.append(f"spark-only: {sorted(s_only)[:3]}")
         if o_only:
-            problems.append(f"oracle-only: {o_only}")
+            problems.append(f"oracle-only: {sorted(o_only)[:3]}")
     return problems

@@ -6,8 +6,9 @@ broadcastThrough fan-out into nodes/ways/relations sinks, folding a Summary
 monoid; Phase B runs every feature's INSERT…SELECT after a barrier.
 
 Spark-first re-expression:
-- the fan-out (D1) becomes compute-once / consume-many: the decoded entity
-  DataFrames are written once per kind — no re-decode, no per-entity objects;
+- the fan-out (D1) becomes compute-once / consume-many: the caller's entity
+  DataFrames are written once per table and never read back — Phase B
+  consumes the same frames, no re-decode, no per-entity objects;
 - the way sink (S13, WayImporter.scala:25-53) writes `ways` plus the
   order-bearing exploded `ways_nodes(way_id, node_id, index)`;
 - the relation sink (S14, RelationImporter.scala:21-70) splits members by
@@ -25,7 +26,7 @@ import os
 import time
 from concurrent.futures import ThreadPoolExecutor
 
-from fs2_osm_spark.catalog import read_table, write_table
+from fs2_osm_spark.catalog import write_table
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -45,35 +46,37 @@ def run_export(
     relations: DataFrame,
     relations_ways: DataFrame,
     output_root: str,
-    relations_nodes: DataFrame | None = None,
-    relations_relations: DataFrame | None = None,
+    relations_nodes: DataFrame,
+    relations_relations: DataFrame,
     phase_timings: dict[str, float] | None = None,
 ) -> dict[str, int]:
     """Load raw tables, then run the feature catalog. Returns the Summary:
-    table name -> rows written.
+    table name -> rows written. ``spark`` is unused; positional callers
+    keep passing it.
 
-    Phase A stays sequential (downstream reads depend on it); Phase B's
-    feature passes are independent INSERT…SELECTs, so they are submitted
-    as CONCURRENT Spark actions from a thread pool — the reference streams
-    its feature passes through one connection sequentially, but on a
-    cluster the scheduler interleaves independent small jobs and keeps
-    executors busy (a 17-sink tail of driver round-trips otherwise
-    serializes into fixed per-job latency). Both shared inputs (lines and
-    the closed-way ∪ multipolygon union) are cached and MATERIALIZED
-    before the pool starts, so concurrent consumers hit the cache instead
-    of racing to recompute the assembly/stitch lineage per feature."""
+    Every table is written once and read back by nobody: each consumer
+    uses the frame it already holds. Within a phase the sinks are
+    independent INSERT…SELECTs, so they are submitted as CONCURRENT Spark
+    actions from a thread pool — the reference streams its passes through
+    one connection sequentially, but on a cluster the scheduler
+    interleaves independent small jobs and keeps executors busy (a 24-sink
+    tail of driver round-trips otherwise serializes into fixed per-job
+    latency). Phase B's two shared inputs (lines and the closed-way ∪
+    multipolygon union) are cached and MATERIALIZED before its pool
+    starts, so concurrent consumers hit the cache instead of racing to
+    recompute the assembly/stitch lineage per feature."""
     summary: dict[str, int] = {}
     tm = phase_timings if phase_timings is not None else {}
 
-    def sink(df: DataFrame, name: str) -> DataFrame:
+    def sink(df: DataFrame, name: str) -> None:
         from pyspark.sql import Observation
 
         path = os.path.join(output_root, name)
         t0 = time.time()
         # one job per sink, not two: the inserted-count Summary metric is
         # observed ON the write itself (CollectMetrics) instead of a
-        # second count() job over the read-back — with 24 sink tables the
-        # driver round-trips were half the phase wall. The REBALANCE hint
+        # second count() job — with 24 sink tables the driver
+        # round-trips were half the phase wall. The REBALANCE hint
         # lets AQE size the write: tiny feature tables collapse to one
         # output file instead of one per cached partition (guide §6 —
         # same hint yields ~advisory-size files at cluster scale).
@@ -82,52 +85,30 @@ def run_export(
             df.observe(obs, F.count(F.lit(1)).alias("n")).hint("rebalance"),
             path,
         )
-        out = read_table(spark, path)
         summary[name] = int(obs.get["n"])
         tm[f"sink_{name}"] = round(time.time() - t0, 3)
-        return out
 
-    def sink_all(tables: dict[str, DataFrame]) -> dict[str, DataFrame]:
+    def sink_all(tables: dict[str, DataFrame]) -> None:
         """sink() every table as concurrent Spark actions, at most 16 at a
-        time (a pool starts no more threads than it has tasks, so Phase A
-        runs 3 and then 4); re-raises the first failure in table order."""
+        time; re-raises the first failure in table order."""
         with ThreadPoolExecutor(max_workers=16) as ex:
-            futures = {n: ex.submit(sink, df, n) for n, df in tables.items()}
-            return {n: fut.result() for n, fut in futures.items()}
+            futures = [ex.submit(sink, df, n) for n, df in tables.items()]
+            for fut in futures:
+                fut.result()
 
     # ---- Phase A: raw tables (the importer fan-out) ----
-    # The three entity sinks are independent (each consumes its own kind's
-    # frames), so they run as concurrent Spark actions (guide §2.6): wall
-    # time becomes max(decode) instead of sum(decode) — on the PBF path
-    # each sink's job is dominated by the Python frame-decode pass.
+    # the entity tables plus the member tables of the way/relation sinks
+    # (WayImporter.scala:25-53, RelationImporter.scala:52-71,
+    # DefaultSchema.scala:34-60): exploded ways_nodes and the three typed
+    # relation-member tables with the keep-first ON CONFLICT DO NOTHING
+    # dedupe per unique constraint. All seven derive from the caller's
+    # frames, so they are seven concurrent sink jobs.
     t_a = time.time()
-    raw_tables = {"nodes": nodes, "ways": ways, "relations": relations}
-    raw_out = sink_all(raw_tables)
-    nodes_t, ways_t, rels_t = raw_out["nodes"], raw_out["ways"], raw_out["relations"]
-    # the member tables of the way/relation sinks (WayImporter.scala:25-53,
-    # RelationImporter.scala:52-71, DefaultSchema.scala:34-60): exploded
-    # ways_nodes plus the three typed relation-member tables with the
-    # keep-first ON CONFLICT DO NOTHING dedupe per unique constraint.
-    # They are derived independently from already-materialized inputs, so
-    # their four small sink jobs run CONCURRENTLY — sequential submission
-    # paid four driver round-trips of fixed latency for no ordering gain.
-    if relations_nodes is None or relations_relations is None:
-        from fs2_osm_spark.synth.osm import (
-            RELATIONS_NODES_SCHEMA,
-            RELATIONS_RELATIONS_SCHEMA,
-        )
-
-        if relations_nodes is None:
-            relations_nodes = spark.createDataFrame([], RELATIONS_NODES_SCHEMA)
-        if relations_relations is None:
-            relations_relations = spark.createDataFrame(
-                [], RELATIONS_RELATIONS_SCHEMA
-            )
-    member_tables = {
-        # derived from the MATERIALIZED ways table, not the caller's `ways`
-        # pipeline: on the PBF path the latter would re-run the whole frame
-        # decode just to explode the refs a second time
-        "ways_nodes": ways_t.select(
+    sink_all({
+        "nodes": nodes,
+        "ways": ways,
+        "relations": relations,
+        "ways_nodes": ways.select(
             F.col("osm_id").alias("way_id"),
             F.posexplode("nodes").alias("index", "node_id"),
         ).select("way_id", "node_id", "index"),
@@ -140,35 +121,35 @@ def run_export(
         "relations_relations": relations_relations.groupBy(
             "parent_id", "child_id", "role"
         ).agg(F.min("index").alias("index")),
-    }
-    sink_all(member_tables)
+    })
     tm["phase_a_total"] = round(time.time() - t_a, 3)
 
     # ---- Phase B: feature passes (after the barrier) ----
     t_b = time.time()
     # a failed sink must not leak the Phase-B caches for the session
     with Pins() as pins:
-        lines = pins.persist(build_osm_lines(ways_t, nodes_t))
+        lines = pins.persist(build_osm_lines(ways, nodes))
         lines.count()  # materialize before concurrent consumers
         tm["phase_b_lines"] = round(time.time() - t_b, 3)
-        rw_t = read_table(spark, os.path.join(output_root, "relations_ways"))
         # feature passes each filter the UN-whitelisted closed-way ∪
         # multipolygon union with their own predicate, like the reference's
         # per-feature SQL; cache it or every polygon feature re-runs the
-        # stitch applyInPandas
+        # stitch applyInPandas. The raw memberships go in as they are:
+        # the multipolygon and admin-boundary assemblies each open with
+        # the keep-first dedupe.
         t_p = time.time()
-        polys = pins.persist(all_polygons(lines, rels_t, rw_t))
+        polys = pins.persist(all_polygons(lines, relations, relations_ways))
         polys.count()
         tm["phase_b_polys"] = round(time.time() - t_p, 3)
         # the `polygons` table is way-sourced only (PolygonFeature.scala:30-32:
         # combineWays is commented out), with the exact taggedPolygons whitelist
-        phase_b: dict[str, DataFrame] = {
+        sink_all({
             "osm_lines": lines,
             "polygons": simple_polygons(lines),
             **run_all_features(
-                lines, polys, ways=ways_t, relations=rels_t, relations_ways=rw_t
+                lines, polys, ways=ways, relations=relations,
+                relations_ways=relations_ways,
             ),
-        }
-        sink_all(phase_b)
+        })
     tm["phase_b_total"] = round(time.time() - t_b, 3)
     return summary

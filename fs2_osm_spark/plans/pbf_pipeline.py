@@ -16,6 +16,8 @@ engine's normalized schemas — the name column lifts from tags["name"]
 tags['name'] when present), relation members explode to the
 (relation_id, member id, index, role) tables split by member type, exactly
 the reference's RelationImporter split (RelationImporter.scala:21-70).
+The export and the flagship's polygon corpus both consume that pinned
+frame; no stage reads an exported table back.
 """
 
 from __future__ import annotations
@@ -112,37 +114,28 @@ def run_pbf_pipeline(
     from fs2_osm_spark.plans.lineage import run_batched
     from fs2_osm_spark.synth.images import images_table
 
-    from fs2_osm_spark.catalog import read_table
-
     tm = phase_timings if phase_timings is not None else {}
     t0 = time.time()
-    export_root = os.path.join(output_root, "export")
     with Pins() as pins:
         t = frame_tables(spark, pbf_dir, pins)
         summary = run_export(
             spark, t["nodes"], t["ways"], t["relations"], t["relations_ways"],
-            export_root,
+            os.path.join(output_root, "export"),
             relations_nodes=t["relations_nodes"],
             relations_relations=t["relations_relations"],
             phase_timings=tm,
         )
-    tm["export_total"] = round(time.time() - t0, 3)
+        tm["export_total"] = round(time.time() - t0, 3)
 
-    t1 = time.time()
-    # polygon corpus from the MATERIALIZED export tables: the raw-frame
-    # variant re-ran the whole Python wire decode of ways+nodes+relations a
-    # second time just to assemble geometry the export phase had already
-    # loaded. The exported relations_ways is the keep-first dedupe of the
-    # raw memberships, and build_multipolygons opens with exactly that
-    # dedupe, so the assembled polygons are identical by construction.
-    polygons = feature_polygons(
-        read_table(spark, os.path.join(export_root, "ways")),
-        read_table(spark, os.path.join(export_root, "nodes")),
-        read_table(spark, os.path.join(export_root, "relations")),
-        read_table(spark, os.path.join(export_root, "relations_ways")),
-    ).select("polygon_id", "outer", "inners")
+        t1 = time.time()
+        # the polygon corpus from the same pinned entity frame the export
+        # consumed; the cover build collects it to the driver, so nothing
+        # reads the pins once this block ends
+        cover = prepare_corpus(spark, feature_polygons(
+            t["ways"], t["nodes"], t["relations"], t["relations_ways"]
+        ).select("polygon_id", "outer", "inners"))
     images = images_table(spark, n_images)
-    result = flagship_from_tables(images, prepare_corpus(spark, polygons))
+    result = flagship_from_tables(images, cover)
     # cache the slim join OUTPUT before batching: run_batched issues one
     # action per batch plus the distinct() scan, and without the cache each
     # action re-runs the whole upstream (image synthesis incl. per-image

@@ -9,6 +9,12 @@ dtype-stable scalars remain rows-only."""
 
 from __future__ import annotations
 
+import atexit
+import functools
+import os
+import shutil
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -488,16 +494,22 @@ def _frame_source_oracle() -> str:
     """
 
 
+@functools.cache
+def _fixture_dir() -> str:
+    """This process's one directory of frame fixtures, removed at exit."""
+    d = tempfile.mkdtemp(prefix="opf_")
+    atexit.register(shutil.rmtree, d, ignore_errors=True)
+    return d
+
+
+@functools.cache
 def _write_frame_fixture() -> str:
     """The deterministic 100-node framed fixture shared by the frame-source
-    and http-source queries (same closed-form oracle)."""
-    import os
-    import tempfile
-
+    and http-source queries (same closed-form oracle); written once per
+    process."""
     from fs2_osm_spark.sources.pbf_frames import encode_block, write_frames
 
-    d = tempfile.mkdtemp(prefix="opf_")
-    path = os.path.join(d, "fixture.opf")
+    path = os.path.join(_fixture_dir(), "nodes.opf")
     blocks = [
         encode_block(
             ids=list(range(1, 101)),
@@ -515,15 +527,13 @@ def _write_frame_fixture() -> str:
 def osm_http_source_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S2/S3: the SAME framed fixture served over an in-process loopback
     HTTP server (no external data), fetched via the scheme-dispatched
-    downloader (Downloader.scala:17-21, toFile :36-47) into a temp file
-    and decoded by the standard frame scanner — same closed-form oracle as
-    the direct binaryFile path, so a transport-layer corruption breaks the
-    hash. The download is eager (driver-side), so the server is closed
-    before the DataFrame is evaluated; the distributed manifest fan-out
-    path is exercised in tests/test_http_source.py."""
-    import functools
+    downloader (Downloader.scala:17-21, toFile :36-47) and decoded by the
+    frame scanner's entity kernel — same closed-form oracle as the direct
+    binaryFile path, so a transport-layer corruption breaks the hash. The
+    download is eager (driver-side), so the server is closed before the
+    DataFrame is evaluated; the distributed manifest fan-out path is
+    exercised in tests/test_http_source.py."""
     import http.server
-    import os
     import socketserver
     import threading
 
@@ -555,28 +565,11 @@ def osm_frame_source_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     blocks, dense-decode to nodes. Hard-oracled (r05) against the
     closed-form expansion of the hand-built deltas — a mis-framed blob,
     broken inflate, or off-by-one delta chain all break the hash."""
-    import os
-    import tempfile
+    from fs2_osm_spark.sources.pbf_frames import read_nodes_from_frames
 
-    from fs2_osm_spark.sources.pbf_frames import (
-        encode_block,
-        read_nodes_from_frames,
-        write_frames,
+    return _driver_safe_tags(
+        read_nodes_from_frames(spark, _write_frame_fixture())
     )
-
-    d = tempfile.mkdtemp(prefix="opf_")
-    path = os.path.join(d, "fixture.opf")
-    blocks = [
-        encode_block(
-            ids=list(range(1, 101)),
-            lats=[500000000] + [1000000] * 99,
-            lons=[80000000] + [1000000] * 99,
-            keys_vals=[1, 2, 0] * 100,
-            string_table=["", "highway", "residential"],
-        )
-    ]
-    write_frames(path, blocks)
-    return _driver_safe_tags(read_nodes_from_frames(spark, path))
 
 
 def _export_summary_oracle() -> str:
@@ -642,8 +635,9 @@ def osm_export_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     Summary fold (table -> rows written), one row per materialized table.
     Hard-oracled (r05, extended to 24 tables r06): all Summary counts re-derived in SQL over the
     staged fixture — and the Spark side still actually WRITES each table
-    and counts it back, so the oracle covers the sink round trip too."""
-    import tempfile
+    and counts the rows each write took, so the oracle covers the sinks
+    too."""
+    import pandas as pd
 
     from fs2_osm_spark.plans.export import run_export
     from fs2_osm_spark.synth.staging import ensure_osm_fixture
@@ -651,12 +645,15 @@ def osm_export_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_osm_fixture(spark)
     t = osm_tables(spark, N_ZONES)
     root = tempfile.mkdtemp(prefix="export_")
-    summary = run_export(
-        spark, t["nodes"], t["ways"], t["relations"], t["relations_ways"], root,
-        relations_nodes=t["relations_nodes"],
-        relations_relations=t["relations_relations"],
-    )
-    import pandas as pd
+    try:
+        summary = run_export(
+            spark, t["nodes"], t["ways"], t["relations"], t["relations_ways"],
+            root,
+            relations_nodes=t["relations_nodes"],
+            relations_relations=t["relations_relations"],
+        )
+    finally:  # the Summary is local rows: nothing reads the tables
+        shutil.rmtree(root, ignore_errors=True)
 
     return spark.createDataFrame(
         pd.DataFrame(sorted(summary.items()), columns=["table_name", "n_rows"]),
@@ -716,11 +713,10 @@ def osm_decode_semantics_oracle(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _wire_fixture(spark: SparkSession):
-    """One framed PBF file holding a dense block + a ways/relations block."""
-    import os
-    import tempfile
-
+@functools.cache
+def _wire_fixture() -> str:
+    """One framed PBF file holding a dense block + a ways/relations block;
+    written once per process."""
     from fs2_osm_spark.sources.pbf_frames import encode_block, write_frames
     from fs2_osm_spark.sources.proto_wire import (
         encode_entity_group,
@@ -767,8 +763,7 @@ def _wire_fixture(spark: SparkSession):
         ),
         encode_entity_group(st, ways=ways, relations=rels),
     ]
-    d = tempfile.mkdtemp(prefix="opf_entities_")
-    path = os.path.join(d, "fixture.osm.pbf")
+    path = os.path.join(_fixture_dir(), "entities.osm.pbf")
     write_frames(path, blocks)
     return path
 
@@ -800,7 +795,7 @@ def osm_way_frame_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     decoded absolutes [10i+1, 10i+3, 10i+6] are known by construction."""
     from fs2_osm_spark.sources.pbf_frames import read_ways_from_frames
 
-    ways = read_ways_from_frames(spark, _wire_fixture(spark))
+    ways = read_ways_from_frames(spark, _wire_fixture())
     return _driver_safe_tags(ways.select(
         "way_id",
         "tags",
@@ -841,7 +836,7 @@ def osm_relation_frame_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     relation carries Info (model.scala:81-105) resolved the same way."""
     from fs2_osm_spark.sources.pbf_frames import read_relations_from_frames
 
-    rels = read_relations_from_frames(spark, _wire_fixture(spark))
+    rels = read_relations_from_frames(spark, _wire_fixture())
     return _driver_safe_tags(rels.select(
         "relation_id",
         "tags",
@@ -875,21 +870,11 @@ _DENSE_INFO_ORACLE = """
     """
 
 
-@register("osm_dense_info_decode", oracle=_DENSE_INFO_ORACLE)
-def osm_dense_info_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DenseInfo decode (S10): version/timestamp/changeset/uid/user carried
-    alongside dense nodes, delta chains + string-table usernames.
-    Hard-oracled (r05) against the hand-derived running sums of the
-    fixture's deltas (negative deltas and the default 1000 ms
-    date_granularity included)."""
-    import os
-    import tempfile
-
-    from fs2_osm_spark.sources.pbf_frames import (
-        encode_block,
-        read_node_info_from_frames,
-        write_frames,
-    )
+@functools.cache
+def _dense_info_fixture() -> str:
+    """One dense block of three nodes with DenseInfo; written once per
+    process."""
+    from fs2_osm_spark.sources.pbf_frames import encode_block, write_frames
     from fs2_osm_spark.sources.proto_wire import encode_dense_info
 
     info = encode_dense_info(
@@ -907,10 +892,21 @@ def osm_dense_info_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         string_table=["", "alice", "bob"],
         dense_info=info,
     )
-    d = tempfile.mkdtemp(prefix="opf_info_")
-    path = os.path.join(d, "fixture.osm.pbf")
+    path = os.path.join(_fixture_dir(), "dense_info.osm.pbf")
     write_frames(path, [block])
-    info = read_node_info_from_frames(spark, path)
+    return path
+
+
+@register("osm_dense_info_decode", oracle=_DENSE_INFO_ORACLE)
+def osm_dense_info_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """DenseInfo decode (S10): version/timestamp/changeset/uid/user carried
+    alongside dense nodes, delta chains + string-table usernames.
+    Hard-oracled (r05) against the hand-derived running sums of the
+    fixture's deltas (negative deltas and the default 1000 ms
+    date_granularity included)."""
+    from fs2_osm_spark.sources.pbf_frames import read_node_info_from_frames
+
+    info = read_node_info_from_frames(spark, _dense_info_fixture())
     return info.select(
         "osm_id",
         F.col("version").cast("bigint").alias("version"),

@@ -6,8 +6,8 @@ Reference shape (core/src/main/scala/fs2/osm/core/Downloader.scala):
 - ``Downloader.toFile`` (:36-47) streams an HTTP body into a temp file and
   returns its path, raising on a non-2xx response (:49-53).
 
-Spark-first re-expression: a single URL is fetched driver-side to a temp
-file and handed to the existing binaryFile frame scanner (the faithful
+Spark-first re-expression: a single URL is fetched driver-side through a
+temp file (removed once read) into the scanner's entity kernel (the faithful
 S3 path). The SCALE path is ``read_nodes_from_urls``: real extracts are
 distributed as many per-region files, so the natural 100 TB shape is a
 MANIFEST of URLs — one fetch+decode per task, executor-side, no driver
@@ -66,18 +66,36 @@ def download_to_file(url: str, dest_dir: str | None = None) -> str:
     return path
 
 
+def _fetch(url: str) -> bytes:
+    """The whole body of ``url``, through a temp file that is gone on
+    return."""
+    path = download_to_file(url)
+    try:
+        with open(path, "rb") as f:
+            return f.read()
+    finally:
+        os.unlink(path)
+
+
 def read_nodes_from_url(spark: SparkSession, url: str) -> DataFrame:
     """S2 single-extract path: scheme dispatch per Downloader.apply
-    (:17-21) — file URLs scan directly, HTTP downloads to a temp file
-    first, then the standard frame scanner decodes."""
-    from fs2_osm_spark.sources.pbf_frames import read_nodes_from_frames
+    (:17-21) — file URLs scan directly; an HTTP body is fetched eagerly on
+    the driver (the temp file is removed at once) and its bytes go through
+    the same PBF entity kernel as a scanned file."""
+    from fs2_osm_spark.sources.pbf_frames import (
+        ENTITY_SCHEMA,
+        entity_nodes,
+        file_entities,
+        read_nodes_from_frames,
+    )
 
     scheme = urllib.parse.urlparse(url).scheme or "file"
     if scheme == "file":
         return read_nodes_from_frames(
             spark, urllib.parse.urlparse(url).path or url
         )
-    return read_nodes_from_frames(spark, download_to_file(url))
+    content = spark.createDataFrame([(_fetch(url),)], "content binary")
+    return entity_nodes(map_rows(content, ["content"], file_entities, ENTITY_SCHEMA))
 
 
 def read_nodes_from_urls(spark: SparkSession, urls: list[str]) -> DataFrame:
@@ -99,12 +117,6 @@ def read_nodes_from_urls(spark: SparkSession, urls: list[str]) -> DataFrame:
     ).repartition(max(1, min(len(urls), spark.sparkContext.defaultParallelism)))
 
     def kernel(url):
-        path = download_to_file(url)
-        try:
-            with open(path, "rb") as f:
-                payload = f.read()
-        finally:
-            os.unlink(path)
-        return file_entities(payload)
+        return file_entities(_fetch(url))
 
     return entity_nodes(map_rows(manifest, ["url"], kernel, ENTITY_SCHEMA))

@@ -104,4 +104,6 @@ def test_parallel_export_propagates_sink_failure(spark, tmp_path, monkeypatch):
         export_mod.run_export(
             spark, t["nodes"], t["ways"], t["relations"], t["relations_ways"],
             str(tmp_path / "out"),
+            relations_nodes=t["relations_nodes"],
+            relations_relations=t["relations_relations"],
         )

@@ -148,3 +148,61 @@ def test_pbf_pipeline_summary_and_resume(spark, pbf_dir):
         # idempotent: nothing left
         again = run_pbf_pipeline(spark, pbf_dir, root, n_images=400, n_batches=5)
         assert again["batches"] == 0
+
+
+@pytest.fixture
+def counted_reads():
+    """Switch the engine to a parquet table format whose reader records
+    the path of every read; yields that list."""
+    from fs2_osm_spark import catalog
+
+    reads: list[str] = []
+
+    def read(sp, path):
+        reads.append(path)
+        return catalog.READERS["parquet"](sp, path)
+
+    catalog.WRITERS["counted"] = catalog.WRITERS["parquet"]
+    catalog.READERS["counted"] = read
+    catalog.set_table_format("counted")
+    try:
+        yield reads
+    finally:
+        catalog.set_table_format("parquet")
+        del catalog.WRITERS["counted"], catalog.READERS["counted"]
+
+
+def test_run_export_reads_no_table_back(spark, tmp_path, counted_reads):
+    """Each export table is written once and read by nobody: Phase B
+    consumes the caller's frames, and the Summary is the one the parquet
+    format gives."""
+    from fs2_osm_spark import catalog
+    from fs2_osm_spark.plans.export import run_export
+    from fs2_osm_spark.synth.osm import osm_tables
+
+    t = osm_tables(spark, 16)
+
+    def export(root):
+        return run_export(
+            spark, t["nodes"], t["ways"], t["relations"], t["relations_ways"],
+            str(tmp_path / root),
+            relations_nodes=t["relations_nodes"],
+            relations_relations=t["relations_relations"],
+        )
+
+    got = export("counted")
+    assert counted_reads == []
+    catalog.set_table_format("parquet")
+    assert got == export("parquet")
+
+
+def test_pbf_pipeline_reads_only_its_lineage_log(spark, pbf_dir, tmp_path,
+                                                 counted_reads):
+    """The lifecycle reads no exported table back: the polygon corpus comes
+    from the pinned entity frame, so the only reads are the flagship's
+    lineage log."""
+    root = str(tmp_path)
+    out = run_pbf_pipeline(spark, pbf_dir, root, n_images=200, n_batches=2)
+    assert out["batches"] == 2 and out["summary"]["ways"] > 0
+    lineage = os.path.join(root, "flagship", "_lineage")
+    assert counted_reads and all(p.startswith(lineage) for p in counted_reads)
