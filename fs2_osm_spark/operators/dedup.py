@@ -11,15 +11,19 @@ Clustering uses iterative min-label propagation over the candidate-pair
 graph (connected components), a bounded number of self-join rounds — the
 set-based replacement for a driver-side union-find.
 
-The self-joins (LSH banding, hamming blocking) share one upstream pass
-through a lazy session ``persist`` (fs2_osm_spark.pins): zero jobs at
-compose time, where even localCheckpoint(eager=False) would materialize
-the upstream shuffle stages under AQE.
+Near-dup pairing is ONE banded self-join for every hash family: MinHash
+LSH bands here, md5 bands in queries/dedup.py, SimHash and perceptual
+hashes through ``hamming_pairs`` (operators/multimodal.phash_band_pairs).
+``band_cols`` is the one 64-bit band-key definition and ``_band_join`` the
+one join body: it pins its band rows with a lazy session ``persist``
+(fs2_osm_spark.pins) — zero jobs at compose time, where even
+localCheckpoint(eager=False) would materialize the upstream shuffle stages
+under AQE — joins on (band, key, id_a < id_b) and dedupes each pair once.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # release_pins is re-exported: existing callers import it from here
@@ -73,11 +77,8 @@ def minhash_signatures(
 def lsh_candidate_pairs(
     sigs: DataFrame, id_col: str, n_bands: int, n_hashes: int
 ) -> DataFrame:
-    """Band the signature array, self-join on (band, key): candidate pairs.
-
-    Scale shape: the join key is (band, band-hash) — co-partitioned equi
-    join, no cross product; hot bands (boilerplate text) are exactly the
-    skew case AQE skew-join splitting handles.
+    """Candidate pairs: band the signature array (one xxhash64 key per
+    band of n_hashes/n_bands minima) and pair ids through ``_band_join``.
 
     n_hashes (the signature length) is required: composing this operator
     must never trigger a Spark job, and inferring the length from data would
@@ -99,23 +100,7 @@ def lsh_candidate_pairs(
     banded = sigs.select(F.col(id_col), F.explode(bands).alias("bk")).select(
         id_col, "bk.band", "bk.key"
     )
-    # persist before the self-join: otherwise BOTH join sides re-run the
-    # whole shingle+minhash pipeline (lazy — composing runs no job)
-    banded = persist(banded)
-    a = banded.alias("a")
-    b = banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-        )
-        .distinct()
-    )
+    return _band_join(banded, id_col)
 
 
 def connected_components(
@@ -215,15 +200,61 @@ def _band_bounds(n_bands: int) -> list[int]:
     return [round(i * 64 / n_bands) for i in range(n_bands + 1)]
 
 
-def _band_key(lo: int, hi: int) -> F.Column:
-    # bits [lo, hi) of the unsigned 64-bit hash; mask with bitwiseAND
-    # (sign-safe — % would follow the sign of a negative bigint and
-    # split equal low bits by bit 63). Full-width band needs no mask
-    # (the literal 2^64-1 would overflow int64).
-    shifted = F.shiftrightunsigned(F.col("simhash"), lo)
-    if hi - lo >= 64:
-        return shifted
-    return shifted.bitwiseAND(F.lit((1 << (hi - lo)) - 1))
+def band_cols(col: str, n_bands: int) -> list[Column]:
+    """The n_bands contiguous band keys of a 64-bit hash column: band k is
+    bits [lo, hi) of the UNSIGNED hash (``_band_bounds``; any band count,
+    widths differ by at most one bit). The one band-key definition — the
+    banded self-joins (``hamming_pairs``, phash) and the streaming
+    dedup-on-arrival join (streaming/images.py) all key on it.
+
+    Masked with bitwiseAND (sign-safe — % would follow the sign of a
+    negative bigint and split equal low bits by bit 63); the full-width
+    band needs no mask (the literal 2^64-1 would overflow int64). For
+    widths under 64 bits this equals the DuckDB twins' (h >> lo) & mask."""
+    bounds = _band_bounds(n_bands)
+    out = []
+    for lo, hi in zip(bounds, bounds[1:]):
+        shifted = F.shiftrightunsigned(F.col(col), lo)
+        if hi - lo < 64:
+            shifted = shifted.bitwiseAND(F.lit((1 << (hi - lo)) - 1))
+        out.append(shifted)
+    return out
+
+
+def _band_join(
+    exact: DataFrame, id_col: str, probe: DataFrame | None = None
+) -> DataFrame:
+    """The banded self-join: (id_a, id_b) with id_a < id_b for every pair
+    of ids sharing a (band, key) row, one row per pair.
+
+    ``exact`` holds the (id, band, key[, ...]) rows; the join's two sides
+    reuse them through one lazy session pin (otherwise BOTH sides re-run
+    the upstream signature/hash pipeline). ``probe`` (multi-probe only)
+    replaces the left side with its perturbed keys. Every other column c
+    rides along as c_a/c_b, and the distinct runs BEFORE the caller's
+    verification, so a pair colliding in several bands is verified once.
+    The join key is (band, key): a co-partitioned equi-join, no cross
+    product; a hot key (boilerplate text, flat thumbnails) is the AQE
+    skew-join case.
+    """
+    exact = persist(exact)
+    a = (exact if probe is None else probe).alias("a")
+    b = exact.alias("b")
+    carried = [c for c in exact.columns if c not in (id_col, "band", "key")]
+    return (
+        a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.key") == F.col("b.key"))
+            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+        )
+        .select(
+            F.col(f"a.{id_col}").alias("id_a"),
+            F.col(f"b.{id_col}").alias("id_b"),
+            *[F.col(f"{s}.{c}").alias(f"{c}_{s}") for c in carried for s in "ab"],
+        )
+        .distinct()
+    )
 
 
 def hamming_pairs(
@@ -256,68 +287,53 @@ def hamming_pairs(
                  buys half the band count and so squares the key space
                  relative to exact banding at the same d)
 
-    The join key stays (band_idx, band_bits): a co-partitioned equi-join per
-    band, no cross product; duplicates from pairs matching several
-    bands/probes are removed by the groupBy.
+    The pairs come from ``_band_join`` (deduped there, before the popcount
+    verification). Bad arguments raise ValueError.
     """
     if probe_bits is None:
         probe_bits = 0 if (n_bands is not None or max_distance <= 3) else 1
-    assert probe_bits in (0, 1)
+    if probe_bits not in (0, 1):
+        raise ValueError(f"probe_bits must be 0 or 1, got {probe_bits}")
     if n_bands is None:
         n_bands = (max_distance + probe_bits + 1) // (probe_bits + 1)
-    assert 1 <= n_bands <= 64
+    if not 1 <= n_bands <= 64:
+        raise ValueError(f"n_bands must be in [1, 64], got {n_bands}")
     if (probe_bits + 1) * n_bands < max_distance + 1:
         raise ValueError(
             f"recall guarantee violated: (probe_bits+1)*n_bands="
             f"{(probe_bits + 1) * n_bands} must exceed max_distance={max_distance}"
         )
     bounds = _band_bounds(n_bands)
+    keys = band_cols("simhash", n_bands)
 
-    def entries(probe: bool) -> list[F.Column]:
-        out = []
-        for i in range(n_bands):
-            lo, hi = bounds[i], bounds[i + 1]
-            key = _band_key(lo, hi)
-            out.append(F.struct(F.lit(i).alias("band"), key.alias("key")))
-            if probe and probe_bits >= 1:
+    def rows(df: DataFrame, probe: bool) -> DataFrame:
+        entries = []
+        for i, key in enumerate(keys):
+            entries.append(F.struct(F.lit(i).alias("band"), key.alias("key")))
+            width = bounds[i + 1] - bounds[i]
+            for j in range(width if probe else 0):
                 # every 1-bit perturbation of this band's key (XOR is
                 # literal-folded by Catalyst; bit 63 of a full-width band
                 # flips sign, which bitwiseXOR handles exactly)
-                for j in range(hi - lo):
-                    flip = (1 << j) if (hi - lo < 64 or j < 63) else -(1 << 63)
-                    out.append(
-                        F.struct(
-                            F.lit(i).alias("band"),
-                            key.bitwiseXOR(F.lit(flip)).alias("key"),
-                        )
+                flip = (1 << j) if j < 63 else -(1 << 63)
+                entries.append(
+                    F.struct(
+                        F.lit(i).alias("band"),
+                        key.bitwiseXOR(F.lit(flip)).alias("key"),
                     )
-        return out
+                )
+        return df.select(
+            F.col(id_col), "simhash", F.explode(F.array(*entries)).alias("bk")
+        ).select(id_col, "bk.band", "bk.key", "simhash")
 
-    # lazy: self-join sides reuse one simhash pass
-    sims = persist(sims)
-    exact = sims.select(
-        F.col(id_col), "simhash", F.explode(F.array(*entries(False))).alias("bk")
-    ).select(id_col, "simhash", "bk.band", "bk.key")
-    if probe_bits == 0:
-        probed = exact
-    else:
-        probed = sims.select(
-            F.col(id_col), "simhash", F.explode(F.array(*entries(True))).alias("bk")
-        ).select(id_col, "simhash", "bk.band", "bk.key")
-    a = probed.alias("a")
-    b = exact.alias("b")
-    dist = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .filter(dist <= max_distance)
-        .groupBy(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
-        .agg(F.first(dist).alias("hamming"))
+    if probe_bits:
+        # both sides explode from the hashes: pin them so the upstream
+        # hash pass runs once (lazy — composing runs no job)
+        sims = persist(sims)
+    pairs = _band_join(
+        rows(sims, False), id_col, rows(sims, True) if probe_bits else None
+    )
+    dist = F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
+    return pairs.select("id_a", "id_b", dist.alias("hamming")).where(
+        F.col("hamming") <= max_distance
     )

@@ -9,6 +9,9 @@ Scale notes: the binary column is the widest thing in the table, so these
 operators keep it out of shuffles — geotag/cell/tile derivation works on
 metadata only; pixel passes are narrow (no shuffle at all); anything that
 joins re-attaches bytes late by image_id (SURVEY.md §7.3).
+
+Perceptual near-dup pairing (``phash_band_pairs``) is the banded hamming
+join of operators/dedup.py over the phash column.
 """
 
 from __future__ import annotations
@@ -25,6 +28,8 @@ from fs2_osm_spark.codecs.png import (
     phash64,
     psnr,
 )
+# band_cols is re-exported: callers import the band key from here
+from fs2_osm_spark.operators.dedup import band_cols, hamming_pairs  # noqa: F401
 from fs2_osm_spark.rowmap import map_rows
 
 CAPTION_COORD_RE = r"at (-?\d+\.\d+),(-?\d+\.\d+)"
@@ -335,80 +340,25 @@ def phash_frame(images: DataFrame, id_col: str = "img_id") -> DataFrame:
     return map_rows(images, [id_col, "bytes", "fmt"], kernel, PHASH_FRAME_SCHEMA)
 
 
-def band_cols(col: str, n_bands: int) -> list[Column]:
-    """The (64/n_bands)-bit band values of a 64-bit hash column — ONE
-    definition shared by the batch band join below and the streaming
-    dedup-on-arrival join (streaming/images.py), so the width/mask
-    arithmetic cannot drift between them. Arithmetic shift + mask ==
-    logical byte extract (sign bits masked off), mirrored exactly by the
-    DuckDB twins' (phash >> s) & mask."""
-    if 64 % n_bands:
-        raise ValueError(f"n_bands must divide 64, got {n_bands}")
-    band_w = 64 // n_bands
-    mask = (1 << band_w) - 1
-    return [
-        F.shiftright(F.col(col), band_w * k).bitwiseAND(F.lit(mask)).alias(f"b{k}")
-        for k in range(n_bands)
-    ]
-
-
 def phash_band_pairs(
     hashed: DataFrame,
     id_col: str = "img_id",
     n_bands: int = 8,
     hamming_t: int = 6,
 ) -> DataFrame:
-    """Near-dup candidate pairs by LSH banding over the 64-bit hash, then
-    exact hamming verification — (id_a, id_b) with id_a < id_b.
+    """Near-dup pairs (id_a, id_b), id_a < id_b, within hamming_t of each
+    other's 64-bit perceptual hash: exact banding through the one banded
+    self-join (operators/dedup.hamming_pairs, probe_bits=0).
 
     With 8 bands of 8 bits, pigeonhole guarantees FULL recall for any pair
     within hamming 7 (>= the verify threshold 6): d flipped bits can dirty
-    at most d bands, leaving a clean band that collides. The band join
-    shuffles only (band_idx, band_val, id, phash) — never the pixel bytes —
-    and distinct-s candidates BEFORE the popcount so a pair colliding in
-    several bands is verified once. At cluster scale a pathologically hot
-    band value (e.g. a flat-white-thumbnail band) is an AQE-skew-split or
-    salting case, same as any hot join key.
+    at most d bands, leaving a clean band that collides; hamming_t >
+    n_bands-1 raises ValueError. Only (id, band, key, phash) is shuffled,
+    never the pixel bytes.
     """
-    if hamming_t > n_bands - 1:
-        raise ValueError(
-            f"banding recall guarantee needs hamming_t <= n_bands-1; "
-            f"got t={hamming_t}, bands={n_bands}"
-        )
-    # pin the (id, phash) frame before the self-join — otherwise BOTH join
-    # sides re-run the whole upstream pipeline (for image corpora that is
-    # the full decode+hash pass, the dominant cost). Same share-once
-    # session pin the minhash banding uses.
-    from fs2_osm_spark.pins import persist
-
-    hashed = persist(hashed.select(F.col(id_col), "phash"))
-    bands = hashed.select(
-        F.col(id_col),
-        "phash",
-        F.posexplode(F.array(*band_cols("phash", n_bands))).alias(
-            "band_k", "band_v"
-        ),
-    )
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            on=[
-                F.col("a.band_k") == F.col("b.band_k"),
-                F.col("a.band_v") == F.col("b.band_v"),
-                F.col(f"a.{id_col}") < F.col(f"b.{id_col}"),
-            ],
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.col("a.phash").alias("ph_a"),
-            F.col("b.phash").alias("ph_b"),
-        )
-        .distinct()
-    )
-    return cand.where(
-        F.bit_count(F.col("ph_a").bitwiseXOR(F.col("ph_b"))) <= hamming_t
+    sims = hashed.select(F.col(id_col), F.col("phash").alias("simhash"))
+    return hamming_pairs(
+        sims, id_col, hamming_t, n_bands=n_bands, probe_bits=0
     ).select("id_a", "id_b")
 
 

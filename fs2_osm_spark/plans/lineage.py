@@ -164,34 +164,27 @@ def run_batched(
                 partition_rows=[(int(r.pid), int(r.n)) for r in pstats],
             )
 
-    if fail_after is None and len(todo) > 1:
-        # batches are independent filter->write jobs over the (cached)
-        # source: submit a few concurrently so the next batch's tasks
-        # back-fill executors freed by the current batch's tail (guide
-        # §2.6). 4 in flight fills the tail without starving any job. The
-        # first failure cancels every batch that has not started (resume
-        # stays correct: completed batches are logged).
-        from concurrent.futures import ThreadPoolExecutor, as_completed
+    # batches are independent filter->write jobs over the (cached) source:
+    # submit a few concurrently so the next batch's tasks back-fill
+    # executors freed by the current batch's tail (guide §2.6). 4 in
+    # flight fills the tail without starving any job. The first failure
+    # cancels every batch that has not started (resume stays correct:
+    # completed batches are logged). fail_after=n runs the first n, then
+    # crashes before the next.
+    from concurrent.futures import ThreadPoolExecutor, as_completed
 
-        with ThreadPoolExecutor(max_workers=4) as ex:
-            futures = [ex.submit(process, b) for b in todo]
-            try:
-                for fut in as_completed(futures):
-                    fut.result()
-            except BaseException:
-                ex.shutdown(cancel_futures=True)
-                raise
-        return len(todo)
-
-    # sequential path: keeps fail_after's "crash after exactly n completed
-    # batches" contract for the resume tests
-    processed = 0
-    for b in todo:
-        if fail_after is not None and processed >= fail_after:
-            raise RuntimeError(f"injected failure before batch {b}")
-        process(b)
-        processed += 1
-    return processed
+    run = todo if fail_after is None else todo[:fail_after]
+    with ThreadPoolExecutor(max_workers=4) as ex:
+        futures = [ex.submit(process, b) for b in run]
+        try:
+            for fut in as_completed(futures):
+                fut.result()
+        except BaseException:
+            ex.shutdown(cancel_futures=True)
+            raise
+    if len(run) < len(todo):
+        raise RuntimeError(f"injected failure before batch {todo[len(run)]}")
+    return len(run)
 
 
 def read_all_batches(spark: SparkSession, root: str) -> DataFrame:

@@ -8,8 +8,9 @@ construct it identically, giving the banding/verification path real positives
 with known ground truth (each doc should pair with its mutant).
 
 Hashing uses the md5 fragments from functions/text.py so Spark and DuckDB
-compute identical signatures; the engine-native fast path (xxhash64,
-JVM-side) lives in operators/dedup.py and is pinned by pytest instead.
+compute identical signatures; the band self-join itself is the one in
+operators/dedup.py. The engine-native fast path (xxhash64, JVM-side) lives
+there too and is pinned by pytest instead.
 """
 
 from __future__ import annotations
@@ -19,6 +20,7 @@ from pyspark.sql import functions as F
 
 from fs2_osm_spark.functions.text import minhash_sql
 from fs2_osm_spark.io import load
+from fs2_osm_spark.operators.dedup import _band_join
 from fs2_osm_spark.queries.registry import register
 
 N_HASHES = 8
@@ -131,17 +133,8 @@ def _band_rows(sigs: DataFrame) -> DataFrame:
 
 def _lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     bands = _band_rows(_signatures(_corpus(spark, sf_dir)))
-    a = bands.alias("a")
-    b = bands.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
+    return _band_join(bands, "doc_id").select(
+        F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b")
     )
 
 

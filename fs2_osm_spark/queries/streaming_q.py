@@ -65,20 +65,23 @@ def lineage_batched_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     source = spark.range(0, 10_000, 1, 8).select(
         F.col("id"), (F.col("id") % 8).cast("string").alias("batch")
     )
-    root = tempfile.mkdtemp(prefix="lineage_q_")
-    try:
-        run_batched(
-            spark, source, "batch", root,
-            transform=lambda df: df.withColumn("v", F.col("id") * 2),
-            fail_after=3,
+
+    def transform(df: DataFrame) -> DataFrame:
+        return df.withColumn("v", F.col("id") * 2)
+
+    # the metrics are materialized as local rows: nothing reads the root
+    # once the block removes it
+    with tempfile.TemporaryDirectory(prefix="lineage_q_") as root:
+        try:
+            run_batched(spark, source, "batch", root, transform, fail_after=3)
+        except RuntimeError:
+            pass  # injected failure after 3 batches
+        run_batched(spark, source, "batch", root, transform)
+        metrics = LineageLog(spark, root).metrics().select(
+            "batch_id", "status", "n_rows"
         )
-    except RuntimeError:
-        pass  # injected failure after 3 batches
-    run_batched(
-        spark, source, "batch", root,
-        transform=lambda df: df.withColumn("v", F.col("id") * 2),
-    )
-    return LineageLog(spark, root).metrics().select("batch_id", "status", "n_rows")
+        rows = metrics.collect()
+    return spark.createDataFrame(rows, metrics.schema)
 
 
 @register(

@@ -10,7 +10,10 @@ watermarked stream dedupe — with results identical to the batch plan
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -22,12 +25,11 @@ _STAGED: dict[str, str] = {}
 def _stage_dir(spark: SparkSession, sf_dir: str) -> str:
     """The file stream source wants a directory of files; stage the single
     events.parquet as 4 files so maxFilesPerTrigger=1 yields real
-    incremental micro-batches."""
+    incremental micro-batches. Staged once per process, removed at exit."""
     key = os.path.abspath(sf_dir)
     if key not in _STAGED:
-        import tempfile
-
         out = tempfile.mkdtemp(prefix="events_stream_")
+        atexit.register(shutil.rmtree, out, ignore_errors=True)
         ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
         # stage as 4 time-ordered files written sequentially (increasing
         # mtime): the file source replays them oldest-first, so event time

@@ -30,7 +30,8 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from fs2_osm_spark.operators.multimodal import band_cols, phash_frame
+from fs2_osm_spark.operators.dedup import band_cols
+from fs2_osm_spark.operators.multimodal import phash_frame
 from fs2_osm_spark.pins import Pins
 
 
@@ -38,8 +39,10 @@ def _earlier_dup_ids(
     batch: DataFrame, prior: DataFrame, n_bands: int, hamming_t: int
 ) -> DataFrame:
     """img_ids in `batch` having a near-dup in `prior` with smaller
-    arrival (prior may include the batch itself). Banded join: only
-    (arrival, phash, band) reaches the shuffle, never image bytes."""
+    arrival (prior may include the batch itself). Banded join on the
+    one band key (operators/dedup.band_cols), but its own two-frame join
+    ordered by arrival, not the dedup self-join: only (arrival, phash,
+    band) reaches the shuffle, never image bytes."""
     explode = F.posexplode(
         F.array(*band_cols("phash", n_bands))
     ).alias("k", "bv")

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import http.server
 import os
+import shutil
 import socketserver
 import tempfile
 import threading
@@ -56,6 +57,7 @@ def served_fixture():
         yield d, f"http://127.0.0.1:{port}"
     finally:
         httpd.shutdown()
+        shutil.rmtree(d, ignore_errors=True)
 
 
 def test_download_to_file_roundtrip(served_fixture):

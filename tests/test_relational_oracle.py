@@ -51,21 +51,25 @@ def test_compare_names_the_differing_column(spark):
 
 
 def test_fixture_queries_leave_no_temp_state(spark):
-    """The frame-fixture, HTTP and export queries clean up after themselves:
-    run twice, they leave at most this process's one `opf_` fixture dir
-    and no `export_` or `download_` entry in the temp dir."""
+    """The frame-fixture, HTTP, export and lineage-resume queries clean up
+    after themselves: run twice, they leave at most this process's one
+    `opf_` fixture dir and no `export_`, `download_` or `lineage_q_` entry
+    in the temp dir."""
     import os
     import tempfile
 
     def entries(prefix):
         return {e for e in os.listdir(tempfile.gettempdir()) if e.startswith(prefix)}
 
-    prefixes = ("opf_", "export_", "download_")
+    prefixes = ("opf_", "export_", "download_", "lineage_q_")
     before = {p: entries(p) for p in prefixes}
     for name in (
         "osm_frame_source_decode", "osm_http_source_decode", "osm_way_frame_decode",
         "osm_relation_frame_decode", "osm_dense_info_decode", "osm_export_summary",
+        "lineage_batched_resume",
     ) * 2:
         assert QUERIES[name].fn(spark, SF_SMOKE).collect(), name
     new = {p: entries(p) - before[p] for p in prefixes}
-    assert len(new["opf_"]) <= 1 and not new["export_"] and not new["download_"], new
+    assert len(new["opf_"]) <= 1 and not any(
+        new[p] for p in ("export_", "download_", "lineage_q_")
+    ), new

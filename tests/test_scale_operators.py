@@ -365,6 +365,70 @@ def test_hamming_multiprobe_recall_spread_bits(spark):
     assert got == want
 
 
+def test_hamming_pairs_rejects_bad_arguments(spark):
+    """Caller input is checked with a raise, not an assert (python -O
+    strips asserts): probe_bits outside {0, 1} and n_bands outside
+    [1, 64] fail at compose time."""
+    sims = spark.createDataFrame([(1, 0)], "doc_id long, simhash long")
+    with pytest.raises(ValueError, match="probe_bits"):
+        hamming_pairs(sims, "doc_id", max_distance=3, probe_bits=2)
+    with pytest.raises(ValueError, match="n_bands"):
+        hamming_pairs(sims, "doc_id", max_distance=3, n_bands=65)
+
+
+def _signed64(v: int) -> int:
+    return v - (1 << 64) if v >= (1 << 63) else v
+
+
+def test_phash_band_pairs_match_brute_force(spark):
+    """phash_band_pairs at the benchmark's (4 bands, t=3) and the img_phash
+    (8 bands, t=6) settings equals the all-pairs popcount <= t over
+    hand-built hashes: pairs differing only in the sign bit, pairs whose
+    differences all sit in the top band, and random near/far flips."""
+    import itertools
+
+    from fs2_osm_spark.operators.multimodal import phash_band_pairs
+
+    rng = np.random.default_rng(5)
+    vals = []
+    for i, b in enumerate(rng.integers(0, 1 << 64, size=20, dtype=np.uint64)):
+        b = int(b)
+        top = rng.choice(range(56, 64), size=int(rng.integers(1, 7)), replace=False)
+        spread = rng.choice(64, size=int(rng.integers(0, 9)), replace=False)
+        for k, flips in enumerate(([], [63], list(top), list(spread))):
+            v = b
+            for bit in flips:
+                v ^= 1 << int(bit)
+            vals.append((f"img_{4 * i + k:03d}", _signed64(v)))
+    hashed = spark.createDataFrame(
+        pd.DataFrame(vals, columns=["img_id", "phash"]), "img_id string, phash long"
+    )
+    for n_bands, t in ((4, 3), (8, 6)):
+        got = {(r.id_a, r.id_b) for r in
+               phash_band_pairs(hashed, n_bands=n_bands, hamming_t=t).collect()}
+        want = {(a, b) for (a, x), (b, y) in itertools.combinations(vals, 2)
+                if _popcount64(x, y) <= t}
+        assert any(_popcount64(x, y) == 1 and (x ^ y) < 0
+                   for (a, x), (b, y) in itertools.combinations(vals, 2)
+                   if (a, b) in want)  # a sign-bit-only pair is in the set
+        assert got == want, (n_bands, t, got ^ want)
+
+
+def test_band_cols_unsigned_shift_and_mask(spark):
+    """band_cols(c, n) for n in {4, 8} equals (h >> lo) & mask of the
+    unsigned hash, computed in Python, on negative hashes."""
+    from fs2_osm_spark.operators.dedup import band_cols
+
+    hashes = [-1, -(1 << 63), _signed64(0x8123456789ABCDEF), -2, 0x0123456789ABCDEF]
+    df = spark.createDataFrame([(h,) for h in hashes], "h long")
+    for n in (4, 8):
+        w = 64 // n
+        got = [list(r) for r in df.select(*band_cols("h", n)).collect()]
+        want = [[((h & ((1 << 64) - 1)) >> (k * w)) & ((1 << w) - 1)
+                 for k in range(n)] for h in hashes]
+        assert got == want, n
+
+
 def test_hamming_candidate_volume_bounded(spark):
     """Candidate volume (pre-verify join rows) on the sf0.001 dedup corpus:
     the registered d=3 / 16-bit-band point must stay ~linear in N, and the
