@@ -6,7 +6,8 @@ ImporterPropertiesFeature.scala:10-31) into the north-rule requirement:
 every processed batch (e.g. a tile batch of the spatial join) writes
 per-partition lineage/metrics rows to a checkpoint table; a restarted job
 anti-joins completed batch ids and reprocesses only the remainder, so a
-failed run resumes idempotently.
+failed run resumes idempotently. `run_batched` pins its source once and
+takes the batch ids and per-partition counts from one aggregate over it.
 
 All reads/writes route through fs2_osm_spark.catalog (write_table /
 read_table), so the storage format is a single switch: parquet here (the
@@ -20,11 +21,10 @@ from __future__ import annotations
 
 import os
 import time
-from collections.abc import Callable
 
 from fs2_osm_spark.catalog import read_table, write_table
 from fs2_osm_spark.pins import Pins
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -116,72 +116,78 @@ def run_batched(
     source: DataFrame,
     batch_col: str,
     root: str,
-    transform: Callable[[DataFrame], DataFrame] | None = None,
     fail_after: int | None = None,
 ) -> int:
-    """Process `source` one batch-id at a time with resume.
+    """Process `source` one batch id at a time with resume.
 
-    - batch ids = distinct values of batch_col (e.g. a coarse tile / cell
-      prefix); completed ids (per the lineage log) are skipped
-    - each batch: transform -> write parquet partition dir -> lineage row
+    - one pin of `source`, and one aggregate over it by (batch_col,
+      spark_partition_id): batch ids (str() of each value) and each
+      batch's per-partition lineage rows; logged-complete ids are skipped
+    - each batch: write its pinned rows to data/batch=<id>/; the write's
+      observed count must equal the aggregate's (else RuntimeError, no log
+      row); then log one ok row plus one row per partition
     - fail_after=n aborts after n batches (test hook simulating a crash)
 
     Returns the number of batches processed in this invocation.
     """
-    log = LineageLog(spark, root)
-    done = log.completed()
-    todo = sorted(
-        str(r[0]) for r in source.select(batch_col).distinct().collect()
-        if str(r[0]) not in done
-    )
-
     import threading
-
-    record_lock = threading.Lock()
-
-    def process(b: str) -> None:
-        t0 = time.time()
-        part = source.filter(F.col(batch_col).cast("string") == b)
-        with Pins() as pins:
-            out = pins.persist(transform(part) if transform is not None else part)
-            pstats = (
-                out.groupBy(F.spark_partition_id().alias("pid"))
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            )
-            n = sum(r.n for r in pstats)
-            write_table(out, os.path.join(root, "data", f"batch={b}"))
-        # batch data dirs are disjoint, so batch jobs overlap freely; the
-        # lineage log is ONE append-mode table, and concurrent appends to
-        # the same path share the committer's _temporary staging dir —
-        # serialize just the tiny log append
-        with record_lock:
-            log.record(
-                b,
-                n,
-                len(pstats),
-                int((time.time() - t0) * 1000),
-                partition_rows=[(int(r.pid), int(r.n)) for r in pstats],
-            )
-
-    # batches are independent filter->write jobs over the (cached) source:
-    # submit a few concurrently so the next batch's tasks back-fill
-    # executors freed by the current batch's tail (guide §2.6). 4 in
-    # flight fills the tail without starving any job. The first failure
-    # cancels every batch that has not started (resume stays correct:
-    # completed batches are logged). fail_after=n runs the first n, then
-    # crashes before the next.
     from concurrent.futures import ThreadPoolExecutor, as_completed
 
-    run = todo if fail_after is None else todo[:fail_after]
-    with ThreadPoolExecutor(max_workers=4) as ex:
-        futures = [ex.submit(process, b) for b in run]
-        try:
-            for fut in as_completed(futures):
-                fut.result()
-        except BaseException:
-            ex.shutdown(cancel_futures=True)
-            raise
+    log = LineageLog(spark, root)
+    done = log.completed()
+    record_lock = threading.Lock()
+    # one pin for the whole run: unpinned, every batch write re-runs the
+    # upstream (in the PBF pipeline, image synthesis incl. per-image PNG
+    # encode: 6s/batch at 2k images). At a scale where the source exceeds
+    # memory, stage it to parquet partitioned BY the batch column instead,
+    # so each batch filter becomes partition pruning rather than recompute.
+    with Pins() as pins:
+        pinned = pins.persist(source)
+        parts: dict[str, list[tuple[int, int]]] = {}
+        for r in pinned.groupBy(
+            batch_col, F.spark_partition_id().alias("pid")
+        ).count().collect():
+            if str(r[0]) not in done:
+                parts.setdefault(str(r[0]), []).append((r.pid, r["count"]))
+        todo = sorted(parts)
+
+        def process(b: str) -> None:
+            t0 = time.time()
+            rows = sorted(parts[b])
+            n = sum(c for _, c in rows)
+            obs = Observation()
+            part = pinned.filter(F.col(batch_col).cast("string") == b)
+            write_table(
+                part.observe(obs, F.count(F.lit(1)).alias("n")),
+                os.path.join(root, "data", f"batch={b}"),
+            )
+            written = obs.get["n"]
+            if written != n:
+                raise RuntimeError(f"batch {b}: wrote {written} rows, counted {n}")
+            # batch data dirs are disjoint, so batch jobs overlap freely; the
+            # lineage log is ONE append-mode table, and concurrent appends to
+            # the same path share the committer's _temporary staging dir —
+            # serialize just the tiny log append
+            with record_lock:
+                wall_ms = int((time.time() - t0) * 1000)
+                log.record(b, n, len(rows), wall_ms, partition_rows=rows)
+
+        # batches are independent filter->write jobs over the pin: submit a
+        # few concurrently so the next batch's tasks back-fill executors
+        # freed by the current batch's tail (guide §2.6). 4 in flight fills
+        # the tail without starving any job. The first failure cancels every
+        # batch that has not started (resume stays correct: completed
+        # batches are logged). fail_after=n runs the first n, then crashes
+        # before the next.
+        run = todo if fail_after is None else todo[:fail_after]
+        with ThreadPoolExecutor(max_workers=4) as ex:
+            futures = [ex.submit(process, b) for b in run]
+            try:
+                for fut in as_completed(futures):
+                    fut.result()
+            except BaseException:
+                ex.shutdown(cancel_futures=True)
+                raise
     if len(run) < len(todo):
         raise RuntimeError(f"injected failure before batch {todo[len(run)]}")
     return len(run)

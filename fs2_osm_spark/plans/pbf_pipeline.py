@@ -136,21 +136,10 @@ def run_pbf_pipeline(
         ).select("polygon_id", "outer", "inners"))
     images = images_table(spark, n_images)
     result = flagship_from_tables(images, cover)
-    # cache the slim join OUTPUT before batching: run_batched issues one
-    # action per batch plus the distinct() scan, and without the cache each
-    # action re-runs the whole upstream (image synthesis incl. per-image
-    # PNG encode) — 6s/batch of pure recompute at 2k images. The output is
-    # (image_id, polygon_id, cell, tile_x, tile_y): far smaller than the
-    # bytes-bearing input. At a scale where even that exceeds memory, stage
-    # it to parquet partitioned BY the batch column instead, so each batch
-    # filter becomes partition pruning rather than recompute.
-    with Pins() as pins:
-        batched = pins.persist(
-            result.withColumn("batch", F.pmod(F.col("tile_x"), F.lit(n_batches)))
-        )
-        n = run_batched(
-            spark, batched, "batch", os.path.join(output_root, "flagship"),
-            fail_after=fail_after,
-        )
+    n = run_batched(
+        spark,
+        result.withColumn("batch", F.pmod(F.col("tile_x"), F.lit(n_batches))),
+        "batch", os.path.join(output_root, "flagship"), fail_after=fail_after,
+    )
     tm["flagship_batched"] = round(time.time() - t1, 3)
     return {"summary": summary, "batches": n}

@@ -555,12 +555,12 @@ def img_text_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the parity-critical left-fold cosine — ONE definition shared with
     # sim_cosine_topk (its sequential fold is what matches DuckDB's
     # list_dot_product IEEE-exactly)
-    from fs2_osm_spark.queries.similarity import _cosine
+    from fs2_osm_spark.operators.similarity import cosine
 
     scored = F.broadcast(queries).crossJoin(corpus).select(
         "image_id",
         "vec_id",
-        _cosine(F.col("qv"), F.col("embedding")).alias("cos"),
+        cosine(F.col("qv"), F.col("embedding")).alias("cos"),
     )
     w = Window.partitionBy("image_id").orderBy(
         F.round(F.col("cos"), 7).desc(), F.col("vec_id")

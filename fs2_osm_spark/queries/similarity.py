@@ -13,27 +13,16 @@ operators/similarity.py with pytest recall checks.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from fs2_osm_spark.io import load
+from fs2_osm_spark.operators.similarity import cosine
 from fs2_osm_spark.queries.registry import register
 
 N_QUERIES = 20
 TOP_K = 5
 LSH_DIMS = (1, 9, 17, 25)  # 1-based dims for the sign-bucket hash
-
-
-def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def _cosine(a: Column, b: Column) -> Column:
-    return _dot(a, b) / (F.sqrt(_dot(a, a)) * F.sqrt(_dot(b, b)))
 
 
 @register(
@@ -70,7 +59,7 @@ def sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
-            _cosine(F.col("qv"), F.col("v")).alias("cos"),
+            cosine(F.col("qv"), F.col("v")).alias("cos"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -157,7 +146,7 @@ def sim_bucket_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
-            _cosine(F.col("qv"), F.col("v")).alias("cos"),
+            cosine(F.col("qv"), F.col("v")).alias("cos"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -195,7 +184,7 @@ def sim_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = emb.select("vec_id", "label", F.col("embedding").alias("v"))
     a = e.alias("a")
     b = e.alias("b")
-    cos = _cosine(F.col("a.v"), F.col("b.v"))
+    cos = cosine(F.col("a.v"), F.col("b.v"))
     return (
         a.join(
             b,
@@ -392,7 +381,7 @@ def sim_embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = e.withColumn("qv", qv).withColumn(
         "dv", F.transform(F.col("qv"), lambda x: x * F.col("m") / 127.0)
     )
-    cos = _cosine(F.col("v"), F.col("dv"))
+    cos = cosine(F.col("v"), F.col("dv"))
     return d.select("vec_id", F.round(cos, 5).cast("double").alias("recon_cos"))
 
 

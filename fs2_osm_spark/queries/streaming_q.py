@@ -63,20 +63,19 @@ def lineage_batched_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fs2_osm_spark.plans.lineage import LineageLog, run_batched
 
     source = spark.range(0, 10_000, 1, 8).select(
-        F.col("id"), (F.col("id") % 8).cast("string").alias("batch")
+        F.col("id"),
+        (F.col("id") % 8).cast("string").alias("batch"),
+        (F.col("id") * 2).alias("v"),
     )
-
-    def transform(df: DataFrame) -> DataFrame:
-        return df.withColumn("v", F.col("id") * 2)
 
     # the metrics are materialized as local rows: nothing reads the root
     # once the block removes it
     with tempfile.TemporaryDirectory(prefix="lineage_q_") as root:
         try:
-            run_batched(spark, source, "batch", root, transform, fail_after=3)
+            run_batched(spark, source, "batch", root, fail_after=3)
         except RuntimeError:
             pass  # injected failure after 3 batches
-        run_batched(spark, source, "batch", root, transform)
+        run_batched(spark, source, "batch", root)
         metrics = LineageLog(spark, root).metrics().select(
             "batch_id", "status", "n_rows"
         )

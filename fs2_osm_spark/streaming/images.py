@@ -94,80 +94,83 @@ def stream_image_dedup(
     n_rows = ordered.count()
     per = (n_rows + n_batches - 1) // n_batches
 
+    # the root holds the parquet feed copy of the corpus, the state
+    # snapshots and the stream checkpoint: removed on error too
     root = tempfile.mkdtemp(prefix="img_dedup_stream_")
-    feed_dir = os.path.join(root, "feed")
-    os.makedirs(feed_dir)
-    # FileStreamSource replays oldest-mtime-first at MILLISECOND
-    # granularity: two fast sequential writes can tie and replay in random
-    # part-file-name order, so each slice's files get an explicit strictly
-    # increasing timestamp instead of relying on write latency
-    base_t = int(os.stat(feed_dir).st_mtime)
-    for k in range(n_batches):
-        before = set(os.listdir(feed_dir))
-        ordered.filter(
-            (F.col("arrival") >= k * per) & (F.col("arrival") < (k + 1) * per)
-        ).coalesce(1).write.mode("append").parquet(feed_dir)
-        for f in set(os.listdir(feed_dir)) - before:
-            os.utime(os.path.join(feed_dir, f), (base_t + k + 1, base_t + k + 1))
-
-    schema = ordered.schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed_dir)
-    )
-
-    holder: dict[str, str | None] = {"state": None}
-    flags_dir = os.path.join(root, "flags")
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # pin the decoded hashes: `hashed` feeds the dup join twice (probe
-        # side + prior union), the flags join, and the state snapshot —
-        # unpersisted, every micro-batch would decode its images ~4x
-        with Pins() as pins:
-            hashed = pins.persist(
-                phash_frame(batch_df).join(
-                    batch_df.select("img_id", "arrival"), "img_id"
-                )
-            )
-            prev_path = holder["state"]
-            if prev_path is not None:
-                state = spark.read.parquet(prev_path)
-                prior = state.unionByName(hashed)
-            else:
-                prior = hashed
-            dup = _earlier_dup_ids(hashed, prior, n_bands, hamming_t)
-            flags = hashed.join(
-                dup.withColumn("_d", F.lit(True)), "img_id", "left"
-            ).select(
-                "img_id", F.coalesce(F.col("_d"), F.lit(False)).alias("is_dup")
-            )
-            flags.write.mode("append").parquet(flags_dir)
-            out = os.path.join(root, f"state_v{batch_id}")
-            # every arrival joins the index (dups of dups are still dups)
-            prior.select("img_id", "arrival", "phash").write.mode(
-                "overwrite"
-            ).parquet(out)
-            holder["state"] = out
-            if prev_path is not None:
-                shutil.rmtree(prev_path, ignore_errors=True)
-
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", os.path.join(root, "_ckpt"))
-        .start()
-    )
     try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+        feed_dir = os.path.join(root, "feed")
+        os.makedirs(feed_dir)
+        # FileStreamSource replays oldest-mtime-first at MILLISECOND
+        # granularity: two fast sequential writes can tie and replay in random
+        # part-file-name order, so each slice's files get an explicit strictly
+        # increasing timestamp instead of relying on write latency
+        base_t = int(os.stat(feed_dir).st_mtime)
+        for k in range(n_batches):
+            before = set(os.listdir(feed_dir))
+            ordered.filter(
+                (F.col("arrival") >= k * per) & (F.col("arrival") < (k + 1) * per)
+            ).coalesce(1).write.mode("append").parquet(feed_dir)
+            for f in set(os.listdir(feed_dir)) - before:
+                os.utime(os.path.join(feed_dir, f), (base_t + k + 1, base_t + k + 1))
 
-    out = swap_durable_result(
-        spark.read.parquet(flags_dir).select(
-            "img_id", (~F.col("is_dup")).alias("is_novel")
-        ),
-        "stream_image_dedup",
-        prefix="fs2_osm_img_dedup_",
-    )
-    shutil.rmtree(root, ignore_errors=True)
-    return out
+        schema = ordered.schema
+        stream = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(feed_dir)
+        )
+
+        holder: dict[str, str | None] = {"state": None}
+        flags_dir = os.path.join(root, "flags")
+
+        def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
+            # pin the decoded hashes: `hashed` feeds the dup join twice (probe
+            # side + prior union), the flags join, and the state snapshot —
+            # unpersisted, every micro-batch would decode its images ~4x
+            with Pins() as pins:
+                hashed = pins.persist(
+                    phash_frame(batch_df).join(
+                        batch_df.select("img_id", "arrival"), "img_id"
+                    )
+                )
+                prev_path = holder["state"]
+                if prev_path is not None:
+                    state = spark.read.parquet(prev_path)
+                    prior = state.unionByName(hashed)
+                else:
+                    prior = hashed
+                dup = _earlier_dup_ids(hashed, prior, n_bands, hamming_t)
+                flags = hashed.join(
+                    dup.withColumn("_d", F.lit(True)), "img_id", "left"
+                ).select(
+                    "img_id", F.coalesce(F.col("_d"), F.lit(False)).alias("is_dup")
+                )
+                flags.write.mode("append").parquet(flags_dir)
+                out = os.path.join(root, f"state_v{batch_id}")
+                # every arrival joins the index (dups of dups are still dups)
+                prior.select("img_id", "arrival", "phash").write.mode(
+                    "overwrite"
+                ).parquet(out)
+                holder["state"] = out
+                if prev_path is not None:
+                    shutil.rmtree(prev_path, ignore_errors=True)
+
+        q = (
+            stream.writeStream.foreachBatch(apply_batch)
+            .option("checkpointLocation", os.path.join(root, "_ckpt"))
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+
+        return swap_durable_result(
+            spark.read.parquet(flags_dir).select(
+                "img_id", (~F.col("is_dup")).alias("is_novel")
+            ),
+            "stream_image_dedup",
+            prefix="fs2_osm_img_dedup_",
+        )
+    finally:
+        shutil.rmtree(root, ignore_errors=True)

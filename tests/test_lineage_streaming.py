@@ -34,11 +34,11 @@ def test_run_batched_then_resume(spark, source):
     with tempfile.TemporaryDirectory() as root:
         # crash after 2 of 5 batches
         with pytest.raises(RuntimeError, match="injected failure"):
-            run_batched(spark, source, "batch", root, _transform, fail_after=2)
+            run_batched(spark, _transform(source), "batch", root, fail_after=2)
         assert len(LineageLog(spark, root).completed()) == 2
 
         # resume: only the remaining 3 run
-        n = run_batched(spark, source, "batch", root, _transform)
+        n = run_batched(spark, _transform(source), "batch", root)
         assert n == 3
 
         # output equals the unbatched transform
@@ -49,7 +49,7 @@ def test_run_batched_then_resume(spark, source):
         assert got == want
 
         # idempotent: nothing left to do
-        assert run_batched(spark, source, "batch", root, _transform) == 0
+        assert run_batched(spark, _transform(source), "batch", root) == 0
 
         # lineage metrics: one ok row per batch with positive counts
         m = LineageLog(spark, root).metrics()
@@ -100,6 +100,90 @@ def test_run_batched_failure_cancels_unstarted_batches(spark, monkeypatch):
         assert len(started) <= 6, sorted(started)
 
 
+def _counted_source(spark):
+    """An unpinned 500-row, 4-partition source whose batch key comes from a
+    Python UDF that counts its calls: the accumulator reads how many times
+    the source was evaluated."""
+    calls = spark.sparkContext.accumulator(0)
+
+    def key(i):
+        calls.add(1)
+        return i % 5
+
+    src = spark.range(0, 500, 1, 4).withColumn(
+        "batch", F.udf(key, "long")(F.col("id"))
+    )
+    return src, calls
+
+
+def _lineage_rows(spark, root):
+    cols = ["batch_id", "status", "partition_id", "n_rows", "n_partitions"]
+    m = LineageLog(spark, root).metrics().select(cols).orderBy(cols)
+    return [tuple(r) for r in m.collect()]
+
+
+def test_run_batched_evaluates_source_once(spark):
+    """run_batched pins the source itself: the batch ids, the per-partition
+    counts and all 5 batch writes read one evaluation of each row."""
+    src, calls = _counted_source(spark)
+    with tempfile.TemporaryDirectory() as root:
+        assert run_batched(spark, src, "batch", root) == 5
+        assert read_all_batches(spark, root).count() == 500
+    assert calls.value == 500
+
+
+def test_run_batched_lineage_matches_pinned_source(spark):
+    """The ok and partition rows of an unpinned source equal those written
+    for a pinned copy of the same source."""
+    from fs2_osm_spark.pins import Pins
+
+    src, _ = _counted_source(spark)
+    with tempfile.TemporaryDirectory() as a, tempfile.TemporaryDirectory() as b:
+        run_batched(spark, src, "batch", a)
+        with Pins() as pins:
+            run_batched(spark, pins.persist(src), "batch", b)
+        got, want = _lineage_rows(spark, a), _lineage_rows(spark, b)
+    assert got == want
+    assert sum(r[3] for r in got if r[1] == "partition") == 500
+    assert {r[4] for r in got} == {4}
+
+
+def test_run_batched_raises_when_write_count_differs(spark, monkeypatch, tmp_path):
+    """The observed-count check: with the pin disabled, a source whose rows
+    change after the aggregate (a filter that drops odd ids once the first
+    batch write starts) writes fewer rows than the aggregate counted. The
+    batch raises and logs nothing. A seeded rand() filter would not do:
+    Spark redraws the same rows on every evaluation of one plan."""
+    from fs2_osm_spark.pins import Pins
+    from fs2_osm_spark.plans import lineage
+
+    flag = str(tmp_path / "writing")
+
+    @F.udf("boolean")
+    def keep(i):
+        return i % 2 == 0 or not os.path.exists(flag)
+
+    src = (
+        spark.range(0, 400, 1, 4)
+        .filter(keep.asNondeterministic()(F.col("id")))
+        .withColumn("batch", F.col("id") % 5)
+    )
+    real_write = lineage.write_table
+
+    def write(df, path, mode="overwrite"):
+        if "/data/" in path:
+            open(flag, "w").close()
+        return real_write(df, path, mode)
+
+    monkeypatch.setattr(Pins, "persist", lambda self, df: df)
+    monkeypatch.setattr(lineage, "write_table", write)
+    root = str(tmp_path / "out")
+    with pytest.raises(RuntimeError, match=r"wrote 40 rows, counted 80"):
+        run_batched(spark, src, "batch", root)
+    assert LineageLog(spark, root).completed() == set()
+    assert not os.path.exists(os.path.join(root, "_lineage"))
+
+
 def test_table_format_swap_reruns_lineage_resume(spark, source):
     """The catalog boundary is an interface fact: register a monkeypatch
     table format (a counting wrapper over parquet), switch the engine to
@@ -123,8 +207,8 @@ def test_table_format_swap_reruns_lineage_resume(spark, source):
     try:
         with tempfile.TemporaryDirectory() as root:
             with pytest.raises(RuntimeError, match="injected failure"):
-                run_batched(spark, source, "batch", root, _transform, fail_after=2)
-            assert run_batched(spark, source, "batch", root, _transform) == 3
+                run_batched(spark, _transform(source), "batch", root, fail_after=2)
+            assert run_batched(spark, _transform(source), "batch", root) == 3
             got = sorted(
                 (r.id, r.val2) for r in read_all_batches(spark, root).collect()
             )
@@ -159,8 +243,8 @@ def test_record_is_arrow_conf_independent(spark, source):
         with tempfile.TemporaryDirectory() as root:
             # full lifecycle under the arrow-off session
             with pytest.raises(RuntimeError, match="injected failure"):
-                run_batched(spark, source, "batch", root, _transform, fail_after=2)
-            assert run_batched(spark, source, "batch", root, _transform) == 3
+                run_batched(spark, _transform(source), "batch", root, fail_after=2)
+            assert run_batched(spark, _transform(source), "batch", root) == 3
             assert len(LineageLog(spark, root).completed()) == 5
     finally:
         spark.conf.set(conf, prev)
@@ -175,7 +259,7 @@ def test_iceberg_format_fails_clearly_without_catalog(spark, source):
     try:
         with tempfile.TemporaryDirectory() as root:
             with pytest.raises(RuntimeError, match="no 'lake' catalog"):
-                run_batched(spark, source, "batch", root, _transform)
+                run_batched(spark, _transform(source), "batch", root)
     finally:
         catalog.set_table_format("parquet")
     with pytest.raises(ValueError, match="unknown table format"):
