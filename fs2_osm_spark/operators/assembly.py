@@ -18,6 +18,11 @@ Re-expresses the reference's SQL feature passes as DataFrame plans:
   orientation flips (package.scala:16-21), ring-closure repair by appending
   the start point (ComplexPolygonBuilder.scala:90-93), inner rings require
   > 3 points (ComplexPolygonBuilder.scala:116-130).
+
+- polygon_union: closed ways ∪ multipolygons over lines the caller already
+  holds — the one body behind feature_polygons (the whitelisted corpus),
+  all_polygons (the feature catalog's source) and the lifecycle corpus
+  built on the export's pins.
 """
 
 from __future__ import annotations
@@ -274,27 +279,38 @@ def build_multipolygons(
     return members.groupBy("relation_id").applyInPandas(assemble, MP_SCHEMA)
 
 
+def polygon_union(lines: DataFrame, multipolygons: DataFrame,
+                  whitelist: bool = True) -> DataFrame:
+    """Closed ways of the assembled ``lines`` ∪ their relation
+    ``multipolygons`` (build_multipolygons over the same lines) — the
+    two-pass union-all shape of WaterFeature.scala:28-32 generalized.
+
+    With ``whitelist`` the closed ways are the faithful `polygons` table
+    (the engine's polygon corpus); without it every closed way goes in,
+    the source the feature-catalog passes filter with their own
+    predicates (each reference feature runs its own closed-way query over
+    ways, e.g. WaterFeature.scala:36-53, not a scan of the polygons
+    table)."""
+    ways = simple_polygons(lines) if whitelist else closed_way_polygons(lines)
+    return ways.unionByName(multipolygons)
+
+
 def feature_polygons(
     ways: DataFrame,
     nodes: DataFrame,
     relations: DataFrame,
     relations_ways: DataFrame,
 ) -> DataFrame:
-    """The engine's polygon corpus (flagship/bench input): the faithful
-    whitelisted `polygons` table plus relation multipolygons — the two-pass
-    union-all shape of WaterFeature.scala:28-32 generalized."""
+    """The engine's polygon corpus (flagship/bench input) from the raw
+    tables: polygon_union(whitelist=True)."""
     lines = build_osm_lines(ways, nodes)
-    simple = simple_polygons(lines)
-    complex_ = build_multipolygons(relations, relations_ways, lines)
-    return simple.unionByName(complex_)
+    return polygon_union(lines, build_multipolygons(relations, relations_ways, lines))
 
 
 def all_polygons(lines: DataFrame, relations: DataFrame,
                  relations_ways: DataFrame) -> DataFrame:
-    """Every closed way + every multipolygon, NO whitelist — the source the
-    feature-catalog passes filter with their own predicates (each reference
-    feature runs its own closed-way query over ways, e.g.
-    WaterFeature.scala:36-53, not a scan of the polygons table)."""
-    return closed_way_polygons(lines).unionByName(
-        build_multipolygons(relations, relations_ways, lines)
+    """Every closed way + every multipolygon, NO whitelist:
+    polygon_union(whitelist=False)."""
+    return polygon_union(
+        lines, build_multipolygons(relations, relations_ways, lines), whitelist=False
     )

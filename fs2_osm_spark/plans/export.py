@@ -17,7 +17,10 @@ Spark-first re-expression:
 - Summary (D6, Summary.scala:6-50) becomes a per-table inserted-count dict;
 - Phase B materializes the whole feature catalog (run_all_features) after
   the raw tables land — Highway/Coastline consume the assembled osm_lines
-  (derived-table reuse, R11), which is cached once.
+  (derived-table reuse, R11). The lines and the stitched multipolygons
+  are each pinned once; the polygon features read a lazy union of the two
+  pins, and export_tables hands both pins back so the caller's polygon
+  corpus assembles nothing again.
 """
 
 from __future__ import annotations
@@ -31,8 +34,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from fs2_osm_spark.operators.assembly import (
-    all_polygons,
+    build_multipolygons,
     build_osm_lines,
+    polygon_union,
     simple_polygons,
 )
 from fs2_osm_spark.pins import Pins
@@ -52,7 +56,31 @@ def run_export(
 ) -> dict[str, int]:
     """Load raw tables, then run the feature catalog. Returns the Summary:
     table name -> rows written. ``spark`` is unused; positional callers
-    keep passing it.
+    keep passing it. export_tables under pins of its own, released on
+    return or failure."""
+    with Pins() as pins:
+        summary, _, _ = export_tables(
+            nodes, ways, relations, relations_ways, output_root,
+            relations_nodes, relations_relations, pins, phase_timings,
+        )
+    return summary
+
+
+def export_tables(
+    nodes: DataFrame,
+    ways: DataFrame,
+    relations: DataFrame,
+    relations_ways: DataFrame,
+    output_root: str,
+    relations_nodes: DataFrame,
+    relations_relations: DataFrame,
+    pins: Pins,
+    phase_timings: dict[str, float] | None = None,
+) -> tuple[dict[str, int], DataFrame, DataFrame]:
+    """The export body: (Summary, osm_lines, multipolygons). The two
+    frames are the assembled geometry Phase B consumed, pinned in the
+    caller's ``pins`` and materialized, so the caller can build more on
+    them (run_pbf_pipeline's polygon corpus) without assembling again.
 
     Every table is written once and read back by nobody: each consumer
     uses the frame it already holds. Within a phase the sinks are
@@ -61,10 +89,10 @@ def run_export(
     one connection sequentially, but on a cluster the scheduler
     interleaves independent small jobs and keeps executors busy (a 24-sink
     tail of driver round-trips otherwise serializes into fixed per-job
-    latency). Phase B's two shared inputs (lines and the closed-way ∪
-    multipolygon union) are cached and MATERIALIZED before its pool
-    starts, so concurrent consumers hit the cache instead of racing to
-    recompute the assembly/stitch lineage per feature."""
+    latency). Phase B's two shared inputs (lines and the multipolygons)
+    are pinned and MATERIALIZED before its pool starts, so concurrent
+    consumers hit the cache instead of racing to recompute the
+    assembly/stitch lineage per feature."""
     summary: dict[str, int] = {}
     tm = phase_timings if phase_timings is not None else {}
 
@@ -126,30 +154,29 @@ def run_export(
 
     # ---- Phase B: feature passes (after the barrier) ----
     t_b = time.time()
-    # a failed sink must not leak the Phase-B caches for the session
-    with Pins() as pins:
-        lines = pins.persist(build_osm_lines(ways, nodes))
-        lines.count()  # materialize before concurrent consumers
-        tm["phase_b_lines"] = round(time.time() - t_b, 3)
-        # feature passes each filter the UN-whitelisted closed-way ∪
-        # multipolygon union with their own predicate, like the reference's
-        # per-feature SQL; cache it or every polygon feature re-runs the
-        # stitch applyInPandas. The raw memberships go in as they are:
-        # the multipolygon and admin-boundary assemblies each open with
-        # the keep-first dedupe.
-        t_p = time.time()
-        polys = pins.persist(all_polygons(lines, relations, relations_ways))
-        polys.count()
-        tm["phase_b_polys"] = round(time.time() - t_p, 3)
-        # the `polygons` table is way-sourced only (PolygonFeature.scala:30-32:
-        # combineWays is commented out), with the exact taggedPolygons whitelist
-        sink_all({
-            "osm_lines": lines,
-            "polygons": simple_polygons(lines),
-            **run_all_features(
-                lines, polys, ways=ways, relations=relations,
-                relations_ways=relations_ways,
-            ),
-        })
+    lines = pins.persist(build_osm_lines(ways, nodes))
+    lines.count()  # materialize before concurrent consumers
+    tm["phase_b_lines"] = round(time.time() - t_b, 3)
+    # the stitch applyInPandas runs once: every polygon feature and the
+    # caller's corpus read this pin. The raw memberships go in as they
+    # are: the multipolygon and admin-boundary assemblies each open with
+    # the keep-first dedupe.
+    t_p = time.time()
+    multipolygons = pins.persist(build_multipolygons(relations, relations_ways, lines))
+    multipolygons.count()
+    tm["phase_b_polys"] = round(time.time() - t_p, 3)
+    # feature passes each filter the UN-whitelisted closed-way ∪
+    # multipolygon union with their own predicate, like the reference's
+    # per-feature SQL; the `polygons` table is way-sourced only
+    # (PolygonFeature.scala:30-32: combineWays is commented out), with the
+    # exact taggedPolygons whitelist
+    sink_all({
+        "osm_lines": lines,
+        "polygons": simple_polygons(lines),
+        **run_all_features(
+            lines, polygon_union(lines, multipolygons, whitelist=False),
+            ways=ways, relations=relations, relations_ways=relations_ways,
+        ),
+    })
     tm["phase_b_total"] = round(time.time() - t_b, 3)
-    return summary
+    return summary, lines, multipolygons

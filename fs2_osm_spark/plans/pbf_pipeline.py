@@ -16,8 +16,10 @@ engine's normalized schemas — the name column lifts from tags["name"]
 tags['name'] when present), relation members explode to the
 (relation_id, member id, index, role) tables split by member type, exactly
 the reference's RelationImporter split (RelationImporter.scala:21-70).
-The export and the flagship's polygon corpus both consume that pinned
-frame; no stage reads an exported table back.
+The export consumes that pinned frame, and the flagship's polygon corpus
+is the union of the osm_lines and multipolygon pins the export's Phase B
+built (export_tables), so the geometry is assembled and stitched once per
+run; no stage reads an exported table back.
 """
 
 from __future__ import annotations
@@ -105,11 +107,14 @@ def run_pbf_pipeline(
     """The full lifecycle. Returns {"summary": export Summary dict,
     "batches": batches processed this invocation}.
 
-    The flagship stage writes batched by a coarse tile stripe through the
-    lineage log — kill and re-submit to resume from the last completed
-    batch (fail_after is the pytest crash hook)."""
-    from fs2_osm_spark.operators.assembly import feature_polygons
-    from fs2_osm_spark.plans.export import run_export
+    One Pins block holds the entity frame and the export's lines and
+    multipolygon pins until the cover build has collected the corpus;
+    they are released on success and on failure alike. The flagship stage
+    writes batched by a coarse tile stripe through the lineage log — kill
+    and re-submit to resume from the last completed batch (fail_after is
+    the pytest crash hook)."""
+    from fs2_osm_spark.operators.assembly import polygon_union
+    from fs2_osm_spark.plans.export import export_tables
     from fs2_osm_spark.plans.flagship import flagship_from_tables, prepare_corpus
     from fs2_osm_spark.plans.lineage import run_batched
     from fs2_osm_spark.synth.images import images_table
@@ -118,22 +123,21 @@ def run_pbf_pipeline(
     t0 = time.time()
     with Pins() as pins:
         t = frame_tables(spark, pbf_dir, pins)
-        summary = run_export(
-            spark, t["nodes"], t["ways"], t["relations"], t["relations_ways"],
+        summary, lines, multipolygons = export_tables(
+            t["nodes"], t["ways"], t["relations"], t["relations_ways"],
             os.path.join(output_root, "export"),
-            relations_nodes=t["relations_nodes"],
-            relations_relations=t["relations_relations"],
+            t["relations_nodes"], t["relations_relations"], pins,
             phase_timings=tm,
         )
         tm["export_total"] = round(time.time() - t0, 3)
 
         t1 = time.time()
-        # the polygon corpus from the same pinned entity frame the export
-        # consumed; the cover build collects it to the driver, so nothing
-        # reads the pins once this block ends
-        cover = prepare_corpus(spark, feature_polygons(
-            t["ways"], t["nodes"], t["relations"], t["relations_ways"]
-        ).select("polygon_id", "outer", "inners"))
+        # the corpus (whitelisted closed ways ∪ multipolygons) from the
+        # pins Phase B built; the cover build collects it to the driver,
+        # so nothing reads the pins once this block ends
+        cover = prepare_corpus(spark, polygon_union(lines, multipolygons).select(
+            "polygon_id", "outer", "inners"
+        ))
     images = images_table(spark, n_images)
     result = flagship_from_tables(images, cover)
     n = run_batched(

@@ -5,6 +5,12 @@ AQE on (runtime coalescing + skew-join splitting), Arrow on (all custom
 kernels are pandas/Arrow vectorized), shuffle partitions sized to cores
 rather than the 200 default, UTC session timezone so results are comparable
 with the DuckDB oracle.
+
+AQE also coalesces the plans it caches
+(``canChangeCachedPlanOutputPartitioning``; Spark defaults it off): a
+persisted shuffled frame is materialized in as many partitions as its data
+needs, not ``spark.sql.shuffle.partitions``, so every consumer of a small
+pin runs a few tasks instead of one per shuffle partition.
 """
 
 from __future__ import annotations
@@ -43,6 +49,7 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "100000")

@@ -326,32 +326,35 @@ def stream_cdc_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         if prev_path is not None:  # superseded snapshot: drop it
             shutil.rmtree(prev_path, ignore_errors=True)
 
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", f"{root}/_ckpt")
-        .start()
-    )
+    # the root holds the state snapshots and the stream checkpoint:
+    # removed on error too
     try:
-        q.processAllAvailable()
+        q = (
+            stream.writeStream.foreachBatch(apply_batch)
+            .option("checkpointLocation", f"{root}/_ckpt")
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        schema = "user_id long, value double, event_type string"
+        if holder["path"] is None:  # zero micro-batches: empty state
+            return spark.createDataFrame(pd.DataFrame(
+                {"user_id": [], "value": [], "event_type": []}), schema)
+        final = spark.read.parquet(holder["path"])
+        # durable snapshot swap: write the cleaned final state THROUGH the
+        # table-format boundary (one distributed job — tombstones dropped,
+        # meta columns pruned) into a per-run table, then drop the
+        # per-batch working tree and return a plain read of the durable
+        # table (the previous run's snapshot in this process is evicted by
+        # the swap).
+        return swap_durable_result(
+            final.filter(F.col("op") != "delete").select(
+                "user_id", "value", "event_type"
+            ),
+            "stream_cdc_state",
+            prefix="fs2_osm_cdc_state_",
+        )
     finally:
-        q.stop()
-    schema = "user_id long, value double, event_type string"
-    if holder["path"] is None:  # zero micro-batches: empty state
         shutil.rmtree(root, ignore_errors=True)
-        return spark.createDataFrame(pd.DataFrame(
-            {"user_id": [], "value": [], "event_type": []}), schema)
-    final = spark.read.parquet(holder["path"])
-    # durable snapshot swap: write the cleaned final state THROUGH the
-    # table-format boundary (one distributed job — tombstones dropped, meta
-    # columns pruned) into a per-run table, then drop the per-batch working
-    # tree and return a plain read of the durable table (the previous run's
-    # snapshot in this process is evicted by the swap).
-    out = swap_durable_result(
-        final.filter(F.col("op") != "delete").select(
-            "user_id", "value", "event_type"
-        ),
-        "stream_cdc_state",
-        prefix="fs2_osm_cdc_state_",
-    )
-    shutil.rmtree(root, ignore_errors=True)
-    return out

@@ -3,6 +3,7 @@ from __future__ import annotations
 import os
 import sys
 import tempfile
+import time
 
 import pytest
 
@@ -37,6 +38,25 @@ def no_leaked_temp_state():
             leaked += extra
     if leaked:
         pytest.fail(f"tests left temp state in {tmp}: {leaked}")
+
+
+def persistent_rdd_ids(spark) -> set[int]:
+    it = spark.sparkContext._jsc.sc().getPersistentRDDs().keysIterator()
+    out = set()
+    while it.hasNext():
+        out.add(int(it.next()))
+    return out
+
+
+def new_persistent_rdds(spark, before: set[int], at_most: int) -> set[int]:
+    """Persistent RDDs created since ``before``, polled until at most
+    ``at_most`` remain (unpersist is asynchronous) or 10 s pass."""
+    for _ in range(40):
+        new = persistent_rdd_ids(spark) - before
+        if len(new) <= at_most:
+            return new
+        time.sleep(0.25)
+    return persistent_rdd_ids(spark) - before
 
 
 @pytest.fixture(scope="session")

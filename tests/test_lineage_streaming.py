@@ -414,3 +414,25 @@ def test_stream_cdc_merge_matches_single_batch_merge(spark):
         )
     )
     assert got == want and got
+
+
+def test_failing_cdc_micro_batch_leaves_no_state_root(spark, monkeypatch):
+    """A CDC micro-batch that raises still removes the run's cdc_state_
+    root (state snapshots and stream checkpoint)."""
+    from fs2_osm_spark.operators import diff
+    from fs2_osm_spark.streaming.events import stream_cdc_state
+
+    def roots():
+        return {
+            e for e in os.listdir(tempfile.gettempdir())
+            if e.startswith("cdc_state_")
+        }
+
+    def fail(*_args, **_kwargs):
+        raise RuntimeError("planted micro-batch failure")
+
+    before = roots()
+    monkeypatch.setattr(diff, "apply_diff", fail)
+    with pytest.raises(Exception, match="planted micro-batch failure"):
+        stream_cdc_state(spark, SF_SMOKE)
+    assert roots() == before

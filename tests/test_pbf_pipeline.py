@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from fs2_osm_spark.plans.pbf_pipeline import frame_tables, run_pbf_pipeline
 from fs2_osm_spark.sources.pbf_writer import write_osm_pbf
+from tests.conftest import new_persistent_rdds, persistent_rdd_ids
 
 N_ZONES = 48
 
@@ -148,6 +149,63 @@ def test_pbf_pipeline_summary_and_resume(spark, pbf_dir):
         # idempotent: nothing left
         again = run_pbf_pipeline(spark, pbf_dir, root, n_images=400, n_batches=5)
         assert again["batches"] == 0
+
+
+def test_pbf_pipeline_stitches_multipolygons_once(spark, pbf_dir, tmp_path,
+                                                monkeypatch):
+    """One lifecycle run builds the multipolygon stitch once: the flagship
+    corpus is the union of the export's Phase B pins, not a second
+    assembly of the raw tables. Every module that imported
+    build_multipolygons is patched to count its calls."""
+    import sys
+
+    import fs2_osm_spark.plans.export  # noqa: F401 — patched below if it imports it
+    from fs2_osm_spark.operators import assembly
+
+    real = assembly.build_multipolygons
+    calls = []
+
+    def counted(*args, **kwargs):
+        calls.append(1)
+        return real(*args, **kwargs)
+
+    for name, mod in list(sys.modules.items()):
+        if name.startswith("fs2_osm_spark") and getattr(
+            mod, "build_multipolygons", None
+        ) is real:
+            monkeypatch.setattr(mod, "build_multipolygons", counted)
+    out = run_pbf_pipeline(spark, pbf_dir, str(tmp_path), n_images=200, n_batches=2)
+    assert out["batches"] == 2 and out["summary"]["polygons"] > 0
+    assert len(calls) == 1
+
+
+def test_pbf_pipeline_releases_its_pins(spark, pbf_dir, tmp_path, monkeypatch):
+    """A lifecycle run leaves no persistent RDD behind: the entity frame
+    and the export's lines/multipolygon pins are released after the corpus
+    is collected, and on a failing export sink or flagship batch too."""
+    from fs2_osm_spark.plans import export as export_mod
+
+    before = persistent_rdd_ids(spark)
+    run_pbf_pipeline(spark, pbf_dir, str(tmp_path / "ok"), n_images=200, n_batches=2)
+    assert not new_persistent_rdds(spark, before, 0)
+
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_pbf_pipeline(spark, pbf_dir, str(tmp_path / "crash"), n_images=200,
+                         n_batches=2, fail_after=1)
+    assert not new_persistent_rdds(spark, before, 0)
+
+    real_write = export_mod.write_table
+
+    def failing_write(df, path, mode="overwrite"):
+        if path.endswith("/waters"):
+            raise RuntimeError("injected sink failure")
+        return real_write(df, path, mode)
+
+    monkeypatch.setattr(export_mod, "write_table", failing_write)
+    with pytest.raises(RuntimeError, match="injected sink failure"):
+        run_pbf_pipeline(spark, pbf_dir, str(tmp_path / "sink"), n_images=200,
+                         n_batches=2)
+    assert not new_persistent_rdds(spark, before, 0)
 
 
 @pytest.fixture

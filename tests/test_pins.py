@@ -5,32 +5,13 @@ durable-result swap evicting through the format's dropper."""
 from __future__ import annotations
 
 import os
-import time
 
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from fs2_osm_spark.pins import Pins, release_pins
-
-
-def _rdd_ids(spark) -> set[int]:
-    it = spark.sparkContext._jsc.sc().getPersistentRDDs().keysIterator()
-    out = set()
-    while it.hasNext():
-        out.add(int(it.next()))
-    return out
-
-
-def _new_after_settle(spark, before: set[int], at_most: int) -> set[int]:
-    """Persistent RDDs created since ``before``, polled until at most
-    ``at_most`` remain (unpersist is asynchronous) or 10 s pass."""
-    for _ in range(40):
-        new = _rdd_ids(spark) - before
-        if len(new) <= at_most:
-            return new
-        time.sleep(0.25)
-    return _rdd_ids(spark) - before
+from tests.conftest import new_persistent_rdds, persistent_rdd_ids
 
 
 def _chain_pairs(spark, n: int = 200):
@@ -69,16 +50,16 @@ def _run_bpe(spark):
 @pytest.mark.parametrize("run", [_run_cc, _run_pagerank, _run_bpe])
 def test_iterative_operator_keeps_only_result_checkpoint(spark, run):
     release_pins()  # drain pins from earlier tests
-    before = _rdd_ids(spark)
+    before = persistent_rdd_ids(spark)
     assert run(spark) > 0
     # the result's own checkpoint is the only pin that outlives the call
-    assert len(_new_after_settle(spark, before, 1)) <= 1
+    assert len(new_persistent_rdds(spark, before, 1)) <= 1
     assert release_pins() == 1
-    assert not _new_after_settle(spark, before, 0)
+    assert not new_persistent_rdds(spark, before, 0)
 
 
 def test_scoped_pins_release_on_exit_and_on_error(spark):
-    before = _rdd_ids(spark)
+    before = persistent_rdd_ids(spark)
     df = spark.range(0, 1000).withColumn("x", F.col("id") * 2)
     with Pins() as pins:
         held = pins.persist(df)
@@ -86,7 +67,7 @@ def test_scoped_pins_release_on_exit_and_on_error(spark):
         assert held.count() == 1000 and ck.count() == 334
         assert held.is_cached
     assert not held.is_cached
-    assert not _new_after_settle(spark, before, 0)
+    assert not new_persistent_rdds(spark, before, 0)
 
     with pytest.raises(RuntimeError, match="boom"):
         with Pins() as pins:
@@ -94,6 +75,19 @@ def test_scoped_pins_release_on_exit_and_on_error(spark):
             held.count()
             raise RuntimeError("boom")
     assert not held.is_cached
+
+
+def test_persisted_shuffle_is_coalesced(spark):
+    """AQE sizes a persisted shuffled frame too: a 10-group aggregate is
+    materialized in fewer partitions than spark.sql.shuffle.partitions,
+    so its consumers do not run one task per empty shuffle partition."""
+    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    with Pins() as pins:
+        agg = pins.persist(
+            spark.range(0, 1000).groupBy((F.col("id") % 10).alias("k")).count()
+        )
+        assert agg.count() == 10
+        assert agg.rdd.getNumPartitions() < n_shuffle
 
 
 def test_unpin_frees_one_frame(spark):
