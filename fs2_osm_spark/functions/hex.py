@@ -55,7 +55,8 @@ def unpack_cell(cell: int) -> tuple[int, int, int]:
 # --------------------------------------------------------------------------
 def hex_cell(lon: Column, lat: Column, res: int) -> Column:
     """lon/lat -> hex cell id at res, as a pure Column expression."""
-    assert 0 <= res <= MAX_RES
+    if not 0 <= res <= MAX_RES:
+        raise ValueError(f"hex res must be in 0..{MAX_RES}, got {res}")
     s = hex_size(res)
     fq = (F.lit(SQRT3 / 3.0) * lon - lat / 3.0) / s
     fr = (F.lit(2.0 / 3.0) * lat) / s
@@ -110,17 +111,22 @@ def hex_cell_ea(lon: Column, lat: Column, res: int) -> Column:
     return hex_cell(lon * _cospoly(lat * DEG2RAD), lat, res)
 
 
+def ea_lon_sql(lon: str, lat: str) -> str:
+    """DuckDB SQL of the equal-area grid's scaled lon, lon * cos(lat)."""
+    return f"(({lon}) * {_cospoly_sql(f'({lat}) * {DEG2RAD!r}')})"
+
+
 def hex_cell_ea_sql(lon: str, lat: str, res: int) -> str:
-    scaled = f"(({lon}) * {_cospoly_sql(f'({lat}) * {DEG2RAD!r}')})"
-    return hex_cell_sql(scaled, lat, res)
+    return hex_cell_sql(ea_lon_sql(lon, lat), lat, res)
 
 
 def hex_cell_ea_np(lon: np.ndarray, lat: np.ndarray, res: int) -> np.ndarray:
     return hex_cell_np(lon * _cospoly(lat * DEG2RAD), lat, res)
 
 
-def hex_cell_sql(lon: str, lat: str, res: int) -> str:
-    """DuckDB SQL rendering, formula-identical to hex_cell()."""
+def hex_axial_sql(lon: str, lat: str, res: int) -> tuple[str, str]:
+    """DuckDB SQL of the axial (q, r) BIGINT coordinates of the cell holding
+    (lon, lat) at res, formula-identical to hex_cell()."""
     s = hex_size(res)
     fq = f"(({SQRT3 / 3.0!r} * ({lon}) - ({lat}) / 3.0) / {s!r})"
     fr = f"(({2.0 / 3.0!r} * ({lat})) / {s!r})"
@@ -131,6 +137,12 @@ def hex_cell_sql(lon: str, lat: str, res: int) -> str:
     r_fix = f"(NOT {q_fix} AND {dr} > {ds})"
     q = f"CAST(CASE WHEN {q_fix} THEN -{rr} - {rs} ELSE {rq} END AS BIGINT)"
     r = f"CAST(CASE WHEN {r_fix} THEN -{rq} - {rs} ELSE {rr} END AS BIGINT)"
+    return q, r
+
+
+def hex_cell_sql(lon: str, lat: str, res: int) -> str:
+    """DuckDB SQL rendering, formula-identical to hex_cell()."""
+    q, r = hex_axial_sql(lon, lat, res)
     return (
         f"(CAST({res} AS BIGINT) * {ID_RES_MUL} + ({q} + {Q_OFFSET}) * {ID_Q_MUL}"
         f" + ({r} + {Q_OFFSET}))"
@@ -192,6 +204,9 @@ def hex_parent(cell: Column, parent_res: int, child_res: int | None = None) -> C
     Pass child_res when the input resolution is statically known — the
     dynamic variant builds a when-chain with one full hex_cell expression
     per possible resolution (heavy codegen)."""
+    finest = MAX_RES if child_res is None else child_res
+    if not 0 <= parent_res < finest:
+        raise ValueError(f"parent_res must be in 0..{finest - 1}, got {parent_res}")
     res_part = cell - (cell % F.lit(ID_RES_MUL))
     rest = cell % F.lit(ID_RES_MUL)
     q = (rest / F.lit(ID_Q_MUL)).cast("bigint") - F.lit(Q_OFFSET)
@@ -204,7 +219,6 @@ def hex_parent(cell: Column, parent_res: int, child_res: int | None = None) -> C
         return hex_cell(lon, lat, parent_res)
 
     if child_res is not None:
-        assert child_res > parent_res
         return parent_for(child_res)
 
     res = (res_part / F.lit(ID_RES_MUL)).cast("int")

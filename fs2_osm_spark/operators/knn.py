@@ -1,21 +1,49 @@
-"""Geospatial kNN: hex k-ring candidate expansion + haversine refine + top-k.
+"""Nearest-neighbour search: candidate generation, then one top-k.
 
-The north-rule operator (SURVEY.md §4.2): instead of a cross join, target
-points are bucketed by hex cell and each query point expands its cell to the
-k-ring — candidate generation is an equi-join on cell id (array join via
-explode), refinement is pure Column haversine, selection is the window
-top-k. Ring radius pairs with the hex resolution: targets farther than one
-ring are farther than one hex inradius, so with ring >= ceil(search_radius /
-inradius) the result equals the exact kNN whenever enough candidates exist
-in the ring (the test pins this against the brute-force oracle)."""
+Every kNN and ANN path (here, in operators/similarity.py and in the kNN and
+retrieval queries) is its own candidate generation plus `keep_top`:
+row_number over the query, ordered by the rounded score (the DuckDB parity
+rule) with an id tie-break, cast to bigint, cut at k.
+
+Geospatial kNN (SURVEY.md §4.2): target points are bucketed by hex cell and
+each query point expands its cell to the k-ring — candidate generation is an
+equi-join on cell id, refinement pure Column haversine. With ring >=
+ceil(search_radius / inradius) the result equals the exact kNN whenever
+enough candidates exist in the ring (the test pins this against the
+brute-force oracle)."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from fs2_osm_spark.functions.geo import haversine_m
 from fs2_osm_spark.functions.hex import hex_cell, hex_cell_ea, hex_kring
+
+
+def keep_top(
+    scored: DataFrame, by: str, order: list[Column], k: int, rank: str = "rank"
+) -> DataFrame:
+    """The one nearest-neighbour top-k: `scored` plus a bigint `rank`
+    (row_number over partitionBy(by).orderBy(*order)), keeping rank <= k."""
+    w = Window.partitionBy(by).orderBy(*order)
+    return scored.withColumn(rank, F.row_number().over(w).cast("bigint")).filter(
+        F.col(rank) <= k
+    )
+
+
+def _haversine_top(
+    cand: DataFrame, k: int, query_id_col: str, target_id_col: str
+) -> DataFrame:
+    """(query, rank, target, dist_m): rank on round(haversine, 3), then the
+    target id, over (query_id, q_lon, q_lat, target_id, t_lon, t_lat)."""
+    dist = haversine_m(F.col("q_lon"), F.col("q_lat"), F.col("t_lon"), F.col("t_lat"))
+    scored = cand.select(
+        query_id_col, target_id_col, F.round(dist, 3).alias("dist_m")
+    )
+    return keep_top(
+        scored, query_id_col, [F.col("dist_m"), F.col(target_id_col)], k
+    ).select(query_id_col, "rank", target_id_col, "dist_m")
 
 
 def knn_kring(
@@ -64,20 +92,7 @@ def knn_kring(
         "q_lat",
         F.explode(hex_kring(F.col("cell0"), ring)).alias("cell"),
     )
-    dist = haversine_m(F.col("q_lon"), F.col("q_lat"), F.col("t_lon"), F.col("t_lat"))
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.round(dist, 3), F.col(target_id_col)
-    )
-    return (
-        q.join(t, "cell")
-        .select(
-            query_id_col,
-            F.row_number().over(w).cast("bigint").alias("rank"),
-            F.col(target_id_col),
-            F.round(dist, 3).alias("dist_m"),
-        )
-        .filter(F.col("rank") <= k)
-    )
+    return _haversine_top(q.join(t, "cell"), k, query_id_col, target_id_col)
 
 
 def knn_brute_force(
@@ -96,17 +111,4 @@ def knn_brute_force(
     q = queries.select(
         F.col(query_id_col), F.col("lon").alias("q_lon"), F.col("lat").alias("q_lat")
     )
-    dist = haversine_m(F.col("q_lon"), F.col("q_lat"), F.col("t_lon"), F.col("t_lat"))
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.round(dist, 3), F.col(target_id_col)
-    )
-    return (
-        q.crossJoin(t)
-        .select(
-            query_id_col,
-            F.row_number().over(w).cast("bigint").alias("rank"),
-            F.col(target_id_col),
-            F.round(dist, 3).alias("dist_m"),
-        )
-        .filter(F.col("rank") <= k)
-    )
+    return _haversine_top(q.crossJoin(t), k, query_id_col, target_id_col)

@@ -1,5 +1,12 @@
 """Similarity search operators: brute-force baseline + IVF ANN scale path.
 
+Every search here is candidate generation, then `cosine_top_k`: the exact
+cosine rerank ranked by operators/knn.keep_top on round(cos, 7) descending
+with the neighbour id as tie-break. Candidates are a broadcast cross join
+(brute force), a centroid-id equi-join (IVF), or the ADC shortlist (PQ,
+itself a `keep_top` on the integer ADC distance). Self-exclusion
+(id != query_id) belongs to candidate generation, never to the tail.
+
 Brute force broadcasts the query set and scores JVM-side (zip_with +
 aggregate fold — no UDF). The IVF path builds a deterministic coarse
 quantizer (strided sample of the corpus as centroids), assigns vectors to
@@ -16,9 +23,11 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from fs2_osm_spark.operators.knn import keep_top
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -33,29 +42,34 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (F.sqrt(dot(a, a)) * F.sqrt(dot(b, b)))
 
 
+def cosine_top_k(
+    cand: DataFrame, k: int, query_id_col: str = "query_id",
+    query_vec_col: str = "qv", id_col: str = "vec_id", vec_col: str = "v",
+) -> DataFrame:
+    """(query, rank, neighbor_id, cos_sim) over candidate (query, neighbour)
+    pairs: exact cosine, ranked on round(cos, 7) descending, then the
+    neighbour id. Keeps every candidate row it is given — a candidate whose
+    id equals the query id is ranked like any other."""
+    scored = cand.select(
+        query_id_col,
+        F.col(id_col).alias("neighbor_id"),
+        cosine(F.col(query_vec_col), F.col(vec_col)).alias("cos"),
+    )
+    return keep_top(
+        scored, query_id_col, [F.round("cos", 7).desc(), F.col("neighbor_id")], k
+    ).select(query_id_col, "rank", "neighbor_id", F.round("cos", 6).alias("cos_sim"))
+
+
 def brute_force_topk(
     corpus: DataFrame, queries: DataFrame, k: int, id_col: str = "vec_id",
     vec_col: str = "v", query_id_col: str = "query_id", query_vec_col: str = "qv",
 ) -> DataFrame:
-    scored = (
+    cand = (
         F.broadcast(queries)
         .crossJoin(corpus)
         .filter(F.col(id_col) != F.col(query_id_col))
-        .select(
-            query_id_col,
-            F.col(id_col).alias("neighbor_id"),
-            cosine(F.col(query_vec_col), F.col(vec_col)).alias("cos"),
-        )
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.round(F.col("cos"), 7).desc(), F.col("neighbor_id")
-    )
-    return scored.select(
-        query_id_col,
-        F.row_number().over(w).cast("bigint").alias("rank"),
-        "neighbor_id",
-        F.round("cos", 6).alias("cos_sim"),
-    ).filter(F.col("rank") <= k)
+    return cosine_top_k(cand, k, query_id_col, query_vec_col, id_col, vec_col)
 
 
 # ----------------------------------------------------------------- IVF -----
@@ -192,23 +206,40 @@ def ivf_search(
     cand = q.join(assigned, "centroid_id").filter(
         F.col(id_col) != F.col(query_id_col)
     )
-    scored = cand.select(
-        query_id_col,
-        F.col(id_col).alias("neighbor_id"),
-        cosine(F.col(query_vec_col), F.col(vec_col)).alias("cos"),
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.round(F.col("cos"), 7).desc(), F.col("neighbor_id")
-    )
-    return scored.select(
-        query_id_col,
-        F.row_number().over(w).cast("bigint").alias("rank"),
-        "neighbor_id",
-        F.round("cos", 6).alias("cos_sim"),
-    ).filter(F.col("rank") <= k)
+    return cosine_top_k(cand, k, query_id_col, query_vec_col, id_col, vec_col)
 
 
 # ------------------------------------------------------------------ PQ -----
+def _pq_check_width(subs: list[np.ndarray]) -> None:
+    """4-bit packing needs K <= 16 codewords and <= 15 subspaces: the 16th
+    subspace would occupy bits 60-63, where numpy packing wraps to a
+    negative BIGINT while the DuckDB twin's code*(1<<(4*m)) overflows
+    instead — the cross-engine contract only holds below the sign bit.
+    17 codewords would pack wrong codes silently, so this raises."""
+    if subs[0].shape[0] > 16 or len(subs) > 15:
+        raise ValueError(
+            f"PQ 4-bit packing needs <= 16 codewords and <= 15 subspaces, got "
+            f"{subs[0].shape[0]} codewords x {len(subs)} subspaces"
+        )
+
+
+def _pq_encode(
+    x: np.ndarray, subs: list[np.ndarray], cc: list[np.ndarray]
+) -> tuple[np.ndarray, np.ndarray]:
+    """(codes (n, n_sub), packed int64 (n,)): per subspace the argmin-L2
+    codeword in expanded form x·x − 2 x·c + c·c (`cc` = per-codeword c·c;
+    ties → lowest code), 4 bits per subspace packed into one int64."""
+    n_sub, d_sub = len(subs), subs[0].shape[1]
+    codes = np.empty((len(x), n_sub), np.int64)
+    for m in range(n_sub):
+        xm = x[:, m * d_sub : (m + 1) * d_sub]
+        xx = np.einsum("ij,ij->i", xm, xm)
+        d2 = xx[:, None] - 2.0 * (xm @ subs[m].T) + cc[m][None, :]
+        codes[:, m] = np.argmin(d2, axis=1)  # first min = lowest code
+    packed = (codes << (4 * np.arange(n_sub, dtype=np.int64))).sum(axis=1)
+    return codes, packed
+
+
 def pq_codes(
     df: DataFrame,
     subs: list[np.ndarray],
@@ -227,15 +258,7 @@ def pq_codes(
     """
     import pyarrow as pa
 
-    n_sub = len(subs)
-    k = subs[0].shape[0]
-    assert k <= 16 and n_sub <= 15, (
-        "4-bit packing needs K<=16 codewords and <=15 subspaces: the 16th "
-        "subspace would occupy bits 60-63, where numpy packing wraps to a "
-        "negative BIGINT while the DuckDB twin's code*(1<<(4*m)) overflows "
-        "instead — the cross-engine contract only holds below the sign bit"
-    )
-    d_sub = subs[0].shape[1]
+    _pq_check_width(subs)
     cc = [np.einsum("ij,ij->i", s, s) for s in subs]
     bc = df.sparkSession.sparkContext.broadcast((subs, cc))
     id_fields = [f for f in df.schema.fields if f.name in id_cols]
@@ -254,15 +277,7 @@ def pq_codes(
         for batch in batches:
             if not batch.num_rows:
                 continue
-            x = _list_to_matrix(batch.column(vidx))
-            codes = np.empty((len(x), n_sub), np.int64)
-            for m in range(n_sub):
-                xm = x[:, m * d_sub : (m + 1) * d_sub]
-                xx = np.einsum("ij,ij->i", xm, xm)
-                xc = xm @ subs_b[m].T
-                d2 = xx[:, None] - 2.0 * xc + cc_b[m][None, :]
-                codes[:, m] = np.argmin(d2, axis=1)  # first min = lowest code
-            packed = (codes << (4 * np.arange(n_sub, dtype=np.int64))).sum(axis=1)
+            _, packed = _pq_encode(_list_to_matrix(batch.column(vidx)), subs_b, cc_b)
             arrays = [batch.column(names.index(c)) for c in present_ids]
             arrays.append(pa.array(packed, pa.int64()))
             yield pa.RecordBatch.from_arrays(
@@ -322,18 +337,10 @@ def pq_encode_recon(
     vec_col: str = "v",
 ) -> DataFrame:
     """(id, pq_code, recon_cos): PQ-encode against `subs` and measure the
-    reconstruction cosine — the quality metric of a codebook. Same kernel
-    shape as pq_codes (one matmul per subspace per Arrow batch) plus the
+    reconstruction cosine — the quality metric of a codebook. The encode
+    core of pq_codes (one matmul per subspace per batch) plus the
     reconstruction gather."""
-    n_sub = len(subs)
-    k = subs[0].shape[0]
-    assert k <= 16 and n_sub <= 15, (
-        "4-bit packing needs K<=16 codewords and <=15 subspaces: the 16th "
-        "subspace would occupy bits 60-63, where numpy packing wraps to a "
-        "negative BIGINT while the DuckDB twin's code*(1<<(4*m)) overflows "
-        "instead — the cross-engine contract only holds below the sign bit"
-    )
-    d_sub = subs[0].shape[1]
+    _pq_check_width(subs)
     cc = [np.einsum("ij,ij->i", s, s) for s in subs]
     bc = corpus.sparkSession.sparkContext.broadcast((subs, cc))
     schema = T.StructType(
@@ -350,15 +357,10 @@ def pq_encode_recon(
             if not len(pdf):
                 continue
             x = np.stack([np.asarray(v, np.float64) for v in pdf[vec_col]])
-            codes = np.empty((len(x), n_sub), np.int64)
-            recon = np.empty_like(x)
-            for m in range(n_sub):
-                xm = x[:, m * d_sub : (m + 1) * d_sub]
-                xx = np.einsum("ij,ij->i", xm, xm)
-                d2 = xx[:, None] - 2.0 * (xm @ subs_b[m].T) + cc_b[m][None, :]
-                codes[:, m] = np.argmin(d2, axis=1)
-                recon[:, m * d_sub : (m + 1) * d_sub] = subs_b[m][codes[:, m]]
-            packed = (codes << (4 * np.arange(n_sub, dtype=np.int64))).sum(axis=1)
+            codes, packed = _pq_encode(x, subs_b, cc_b)
+            recon = np.concatenate(
+                [subs_b[m][codes[:, m]] for m in range(len(subs_b))], axis=1
+            )
             num = np.einsum("ij,ij->i", x, recon)
             cos = num / (
                 np.sqrt(np.einsum("ij,ij->i", x, x))
@@ -453,35 +455,14 @@ def pq_adc_search(
     # scale: the extra 3.8M-row shuffle outweighs the per-query sort it
     # saves. At true cluster scale with orders more candidates per query
     # the two-phase shape is the one to revisit.)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc").asc(), F.col("neighbor_id")
-    )
-    shortlist = (
-        scored.select(
-            "query_id", "qv", "neighbor_id",
-            F.row_number().over(w).alias("adc_rank"),
-        )
-        .filter(F.col("adc_rank") <= rerank)
-    )
+    shortlist = keep_top(
+        scored, "query_id", [F.col("adc").asc(), F.col("neighbor_id")], rerank,
+        rank="adc_rank",
+    ).select("query_id", "qv", "neighbor_id")
     rer = F.broadcast(shortlist).join(
         corpus, F.col(id_col) == F.col("neighbor_id")
     )
-    exact = rer.select(
-        "query_id", "neighbor_id",
-        cosine(F.col("qv"), F.col(vec_col)).alias("cos"),
-    )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.round(F.col("cos"), 7).desc(), F.col("neighbor_id")
-    )
-    return (
-        exact.select(
-            "query_id",
-            F.row_number().over(w2).cast("bigint").alias("rank"),
-            "neighbor_id",
-            F.round("cos", 6).alias("cos_sim"),
-        )
-        .filter(F.col("rank") <= top_k)
-    )
+    return cosine_top_k(rer, top_k, "query_id", "qv", id_col, vec_col)
 
 
 def pq_lut(queries: np.ndarray, subs: list[np.ndarray], scale: int) -> np.ndarray:

@@ -16,6 +16,8 @@ from pyspark.sql import functions as F
 
 from fs2_osm_spark.functions import geo
 from fs2_osm_spark.functions.hex import (
+    ea_lon_sql,
+    hex_axial_sql,
     hex_cell,
     hex_cell_ea,
     hex_cell_ea_sql,
@@ -23,6 +25,7 @@ from fs2_osm_spark.functions.hex import (
 )
 from fs2_osm_spark.functions.pip import PolygonSet
 from fs2_osm_spark.io import load
+from fs2_osm_spark.operators.knn import knn_brute_force, knn_kring
 from fs2_osm_spark.operators.spatial_join import broadcast_pip_join
 from fs2_osm_spark.queries.registry import register
 
@@ -175,33 +178,28 @@ _dist = geo.haversine_m_sql(_q_lon, _q_lat, _c_lon, _c_lat)
     """,
 )
 def geo_knn_haversine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
+    q, t = _knn_points(spark, sf_dir)
+    return knn_brute_force(q, F.broadcast(t), 3, "query_id", "cust_id").select(
+        "query_id", "rank", "cust_id"
+    )
 
+
+def _knn_points(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """(queries, targets) of the geo_knn_* queries: nation points keyed
+    query_id and customer points keyed cust_id, as (id, lon, lat)."""
     nation = load(spark, sf_dir, "nation")
     cust = load(spark, sf_dir, "customer")
     q = nation.select(
         F.col("n_nationkey").cast("bigint").alias("query_id"),
-        geo.synth_lon(F.col("n_nationkey") + 7).alias("q_lon"),
-        geo.synth_lat(F.col("n_nationkey") + 7).alias("q_lat"),
+        geo.synth_lon(F.col("n_nationkey") + 7).alias("lon"),
+        geo.synth_lat(F.col("n_nationkey") + 7).alias("lat"),
     )
-    c = cust.select(
+    t = cust.select(
         F.col("c_custkey").alias("cust_id"),
-        geo.synth_lon(F.col("c_custkey")).alias("c_lon"),
-        geo.synth_lat(F.col("c_custkey")).alias("c_lat"),
+        geo.synth_lon(F.col("c_custkey")).alias("lon"),
+        geo.synth_lat(F.col("c_custkey")).alias("lat"),
     )
-    dist = geo.haversine_m(
-        F.col("q_lon"), F.col("q_lat"), F.col("c_lon"), F.col("c_lat")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.round(dist, 3), F.col("cust_id"))
-    return (
-        q.crossJoin(F.broadcast(c))
-        .select(
-            "query_id",
-            F.row_number().over(w).cast("bigint").alias("rank"),
-            "cust_id",
-        )
-        .filter(F.col("rank") <= 3)
-    )
+    return q, t
 
 
 # --------------------------------------------------------------------------
@@ -234,52 +232,26 @@ def geo_quantized_equality(spark: SparkSession, sf_dir: str) -> DataFrame:
 # candidate restriction (hex distance between axial cells <= ring), so the
 # approximate operator is checked exactly, not just by row count.
 # --------------------------------------------------------------------------
-def _hex_qr_sql(lon: str, lat: str, res: int) -> tuple[str, str]:
-    from fs2_osm_spark.functions.hex import SQRT3, hex_size
-
-    s = hex_size(res)
-    fq = f"(({SQRT3 / 3.0!r} * ({lon}) - ({lat}) / 3.0) / {s!r})"
-    fr = f"(({2.0 / 3.0!r} * ({lat})) / {s!r})"
-    fs = f"(-{fq} - {fr})"
-    rq, rr, rs = (f"floor({v} + 0.5)" for v in (fq, fr, fs))
-    dq, dr, ds = (f"abs({a} - {b})" for a, b in ((rq, fq), (rr, fr), (rs, fs)))
-    q_fix = f"({dq} > {dr} AND {dq} > {ds})"
-    r_fix = f"(NOT {q_fix} AND {dr} > {ds})"
-    q = f"CAST(CASE WHEN {q_fix} THEN -{rr} - {rs} ELSE {rq} END AS BIGINT)"
-    r = f"CAST(CASE WHEN {r_fix} THEN -{rq} - {rs} ELSE {rr} END AS BIGINT)"
-    return q, r
-
-
-def _hex_qr_ea_sql(lon: str, lat: str, res: int) -> tuple[str, str]:
-    """Axial coords on the equal-area grid: lon scaled by the same fixed
-    cos polynomial as hex_cell_ea (bit-identical across engines)."""
-    from fs2_osm_spark.functions.hex import DEG2RAD, _cospoly_sql
-
-    scaled = f"(({lon}) * {_cospoly_sql(f'({lat}) * {DEG2RAD!r}')})"
-    return _hex_qr_sql(scaled, lat, res)
-
-
 _KNN_RES = 2
 _KNN_RING = 3
-_qq, _qr = _hex_qr_sql(_q_lon, _q_lat, _KNN_RES)
-_tq, _tr = _hex_qr_sql(_c_lon, _c_lat, _KNN_RES)
-_qq_ea, _qr_ea = _hex_qr_ea_sql(_q_lon, _q_lat, _KNN_RES)
-_tq_ea, _tr_ea = _hex_qr_ea_sql(_c_lon, _c_lat, _KNN_RES)
 
 
-@register(
-    "geo_knn_kring",
-    oracle=f"""
+def _knn_kring_oracle(qr_sql) -> str:
+    """The k-ring kNN oracle over the axial-coordinate renderer `qr_sql`
+    (lon, lat, res) -> (q, r) of the grid the operator indexes on."""
+    qq, qr = qr_sql(_q_lon, _q_lat, _KNN_RES)
+    tq, tr = qr_sql(_c_lon, _c_lat, _KNN_RES)
+    return f"""
     WITH q AS (
         SELECT n_nationkey AS query_id,
                {_q_lon} AS q_lon, {_q_lat} AS q_lat,
-               {_qq} AS qq, {_qr} AS qr
+               {qq} AS qq, {qr} AS qr
         FROM nation
     ),
     t AS (
         SELECT c_custkey AS cust_id,
                {_c_lon} AS c_lon, {_c_lat} AS c_lat,
-               {_tq} AS tq, {_tr} AS tr
+               {tq} AS tq, {tr} AS tr
         FROM customer
     ),
     cand AS (
@@ -295,86 +267,37 @@ _tq_ea, _tr_ea = _hex_qr_ea_sql(_c_lon, _c_lat, _KNN_RES)
                     ORDER BY round(d, 3), cust_id) AS BIGINT) AS rank
         FROM cand
     ) WHERE rank <= 3
-    """,
-)
-def geo_knn_kring(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """k-ring kNN (candidate equi-join on cell, no cross join) — the scale
-    path of geo_knn_haversine."""
-    from fs2_osm_spark.operators.knn import knn_kring
+    """
 
-    nation = load(spark, sf_dir, "nation")
-    cust = load(spark, sf_dir, "customer")
-    q = nation.select(
-        F.col("n_nationkey").cast("bigint").alias("query_id"),
-        geo.synth_lon(F.col("n_nationkey") + 7).alias("lon"),
-        geo.synth_lat(F.col("n_nationkey") + 7).alias("lat"),
-    )
-    t = cust.select(
-        F.col("c_custkey").alias("cust_id"),
-        geo.synth_lon(F.col("c_custkey")).alias("lon"),
-        geo.synth_lat(F.col("c_custkey")).alias("lat"),
-    )
+
+def _knn_kring_query(spark: SparkSession, sf_dir: str, equal_area: bool) -> DataFrame:
+    q, t = _knn_points(spark, sf_dir)
     out = knn_kring(
         q, t, k=3, res=_KNN_RES, ring=_KNN_RING,
-        query_id_col="query_id", target_id_col="cust_id",
+        query_id_col="query_id", target_id_col="cust_id", equal_area=equal_area,
     )
     return out.select("query_id", "rank", "cust_id")
 
 
+@register("geo_knn_kring", oracle=_knn_kring_oracle(hex_axial_sql))
+def geo_knn_kring(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """k-ring kNN (candidate equi-join on cell, no cross join) — the scale
+    path of geo_knn_haversine."""
+    return _knn_kring_query(spark, sf_dir, equal_area=False)
+
+
 @register(
     "geo_knn_kring_ea",
-    oracle=f"""
-    WITH q AS (
-        SELECT n_nationkey AS query_id,
-               {_q_lon} AS q_lon, {_q_lat} AS q_lat,
-               {_qq_ea} AS qq, {_qr_ea} AS qr
-        FROM nation
+    oracle=_knn_kring_oracle(
+        lambda lon, lat, res: hex_axial_sql(ea_lon_sql(lon, lat), lat, res)
     ),
-    t AS (
-        SELECT c_custkey AS cust_id,
-               {_c_lon} AS c_lon, {_c_lat} AS c_lat,
-               {_tq_ea} AS tq, {_tr_ea} AS tr
-        FROM customer
-    ),
-    cand AS (
-        SELECT q.query_id, t.cust_id,
-               {geo.haversine_m_sql("q.q_lon", "q.q_lat", "t.c_lon", "t.c_lat")} AS d
-        FROM q JOIN t
-          ON (abs(q.qq - t.tq) + abs(q.qr - t.tr) + abs(q.qq + q.qr - t.tq - t.tr)) / 2
-             <= {_KNN_RING}
-    )
-    SELECT query_id, rank, cust_id FROM (
-        SELECT query_id, cust_id,
-               CAST(row_number() OVER (PARTITION BY query_id
-                    ORDER BY round(d, 3), cust_id) AS BIGINT) AS rank
-        FROM cand
-    ) WHERE rank <= 3
-    """,
 )
 def geo_knn_kring_ea(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-ring kNN on the EQUAL-AREA hex grid (lon*cos(lat) indexing) — the
     global-data variant whose ring ground-radius stays ~uniform across
     latitudes; the SQL twin replicates the same EA axial-coordinate ring
     restriction, so candidate generation is checked exactly."""
-    from fs2_osm_spark.operators.knn import knn_kring
-
-    nation = load(spark, sf_dir, "nation")
-    cust = load(spark, sf_dir, "customer")
-    q = nation.select(
-        F.col("n_nationkey").cast("bigint").alias("query_id"),
-        geo.synth_lon(F.col("n_nationkey") + 7).alias("lon"),
-        geo.synth_lat(F.col("n_nationkey") + 7).alias("lat"),
-    )
-    t = cust.select(
-        F.col("c_custkey").alias("cust_id"),
-        geo.synth_lon(F.col("c_custkey")).alias("lon"),
-        geo.synth_lat(F.col("c_custkey")).alias("lat"),
-    )
-    out = knn_kring(
-        q, t, k=3, res=_KNN_RES, ring=_KNN_RING,
-        query_id_col="query_id", target_id_col="cust_id", equal_area=True,
-    )
-    return out.select("query_id", "rank", "cust_id")
+    return _knn_kring_query(spark, sf_dir, equal_area=True)
 
 
 @register("geo_pip_cell_join", oracle=_pip_cases)
@@ -448,7 +371,7 @@ def geo_quadkey(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _hex_parent_sql(lon: str, lat: str, child_res: int, parent_res: int) -> str:
     from fs2_osm_spark.functions.hex import SQRT3, hex_size
 
-    q, r = _hex_qr_sql(lon, lat, child_res)
+    q, r = hex_axial_sql(lon, lat, child_res)
     s = hex_size(child_res)
     # CAST the literals: DuckDB parses long numeric literals as DECIMAL and
     # deep decimal multiplication overflows scale 38
@@ -489,7 +412,7 @@ def geo_hex_parent(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the hex-distance predicate.
 # --------------------------------------------------------------------------
 _KR_RES = 6
-_kr_q, _kr_r = _hex_qr_sql(
+_kr_q, _kr_r = hex_axial_sql(
     geo.synth_lon_sql("s_suppkey"), geo.synth_lat_sql("s_suppkey"), _KR_RES
 )
 

@@ -525,9 +525,10 @@ def img_text_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     live decoded channel-mean magnitudes — a deterministic stand-in for a
     learned joint encoder; the Spark-side plumbing is the real thing:
     decode -> embed -> broadcast the small query side -> JVM higher-order
-    cosine against the full embedding corpus -> windowed top-k). Float
-    discipline follows sim_cosine_topk: scores are ranked on round(cos, 7)
-    with the id tie-break and excluded from the output."""
+    cosine against the full embedding corpus -> operators/similarity
+    cosine_top_k, the same parity-critical left-fold cosine and top-k as
+    sim_cosine_topk: ranked on round(cos, 7) with the id tie-break, scores
+    excluded from the output)."""
     from fs2_osm_spark.io import load
 
     from fs2_osm_spark.operators.multimodal import decode_channel_means
@@ -552,24 +553,14 @@ def img_text_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     corpus = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
 
-    # the parity-critical left-fold cosine — ONE definition shared with
-    # sim_cosine_topk (its sequential fold is what matches DuckDB's
-    # list_dot_product IEEE-exactly)
-    from fs2_osm_spark.operators.similarity import cosine
+    # image ids and vector ids are separate id spaces: every (image, vector)
+    # pair is a candidate, none is excluded as the query itself
+    from fs2_osm_spark.operators.similarity import cosine_top_k
 
-    scored = F.broadcast(queries).crossJoin(corpus).select(
-        "image_id",
-        "vec_id",
-        cosine(F.col("qv"), F.col("embedding")).alias("cos"),
-    )
-    w = Window.partitionBy("image_id").orderBy(
-        F.round(F.col("cos"), 7).desc(), F.col("vec_id")
-    )
-    return scored.select(
-        "image_id",
-        F.row_number().over(w).cast("bigint").alias("rank"),
-        "vec_id",
-    ).where(F.col("rank") <= RETRIEVAL_TOP_K)
+    cand = F.broadcast(queries).crossJoin(corpus)
+    return cosine_top_k(
+        cand, RETRIEVAL_TOP_K, "image_id", "qv", "vec_id", "embedding"
+    ).select("image_id", "rank", F.col("neighbor_id").alias("vec_id"))
 
 
 # --- video_scene_cuts -------------------------------------------------------

@@ -13,11 +13,11 @@ operators/similarity.py with pytest recall checks.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from fs2_osm_spark.io import load
-from fs2_osm_spark.operators.similarity import cosine
+from fs2_osm_spark.operators.similarity import brute_force_topk, cosine, cosine_top_k
 from fs2_osm_spark.queries.registry import register
 
 N_QUERIES = 20
@@ -52,26 +52,8 @@ def sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = corpus.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
     )
-    scored = (
-        F.broadcast(queries)
-        .crossJoin(corpus)
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            cosine(F.col("qv"), F.col("v")).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.round(F.col("cos"), 7).desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.select(
-            "query_id",
-            F.row_number().over(w).cast("bigint").alias("rank"),
-            "neighbor_id",
-        )
-        .filter(F.col("rank") <= TOP_K)
+    return brute_force_topk(corpus, queries, TOP_K).select(
+        "query_id", "rank", "neighbor_id"
     )
 
 
@@ -79,6 +61,16 @@ _bucket_sql_terms = " + ".join(
     f"(CASE WHEN embedding[{d}] > 0 THEN {1 << k} ELSE 0 END)"
     for k, d in enumerate(LSH_DIMS)
 )
+
+
+def _lsh_bucket() -> Column:
+    """The sign-LSH bucket id of `embedding` (bigint), formula-identical to
+    _bucket_sql_terms."""
+    bucket = None
+    for k, d in enumerate(LSH_DIMS):
+        term = F.when(F.element_at("embedding", d) > 0, F.lit(1 << k)).otherwise(0)
+        bucket = term if bucket is None else bucket + term
+    return bucket.cast("bigint")
 
 
 @register(
@@ -93,13 +85,9 @@ def sim_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sign-LSH bucketing: 4 fixed coordinate hyperplanes -> 16 buckets.
     The bucket id is the equi-join key of the ANN path."""
     emb = load(spark, sf_dir, "embeddings")
-    bucket = None
-    for k, d in enumerate(LSH_DIMS):
-        term = F.when(F.element_at("embedding", d) > 0, F.lit(1 << k)).otherwise(0)
-        bucket = term if bucket is None else bucket + term
     return emb.select(
         "vec_id",
-        bucket.cast("bigint").alias("bucket"),
+        _lsh_bucket().alias("bucket"),
         F.col("label").cast("bigint").alias("label"),
     )
 
@@ -132,34 +120,12 @@ def sim_bucket_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN via bucket equi-join + exact rerank — no cross join: candidates
     are co-partitioned by bucket (the 10^12-scale join shape)."""
     emb = load(spark, sf_dir, "embeddings")
-    bucket = None
-    for k, d in enumerate(LSH_DIMS):
-        term = F.when(F.element_at("embedding", d) > 0, F.lit(1 << k)).otherwise(0)
-        bucket = term if bucket is None else bucket + term
-    e = emb.select("vec_id", F.col("embedding").alias("v"), bucket.cast("bigint").alias("bucket"))
+    e = emb.select("vec_id", F.col("embedding").alias("v"), _lsh_bucket().alias("bucket"))
     q = e.filter(F.col("vec_id") < 50).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv"), "bucket"
     )
-    scored = (
-        q.join(e, "bucket")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            cosine(F.col("qv"), F.col("v")).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.round(F.col("cos"), 7).desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.select(
-            "query_id",
-            F.row_number().over(w).cast("bigint").alias("rank"),
-            "neighbor_id",
-        )
-        .filter(F.col("rank") <= 3)
-    )
+    cand = q.join(e, "bucket").filter(F.col("vec_id") != F.col("query_id"))
+    return cosine_top_k(cand, 3).select("query_id", "rank", "neighbor_id")
 
 
 @register(

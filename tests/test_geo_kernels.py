@@ -120,6 +120,27 @@ def test_hex_parent_contains_child_center(spark):
     assert (parents == expect).all()
 
 
+def test_hex_arguments_out_of_range_raise(spark):
+    """res 13 would overflow the cell-id packing; a parent must be coarser
+    than its child (or than res 12 when the child's res is dynamic). Each
+    raises ValueError, also through knn_kring's res."""
+    from pyspark.sql import functions as F
+
+    from fs2_osm_spark.functions.hex import MAX_RES, hex_cell, hex_parent
+    from fs2_osm_spark.operators.knn import knn_kring
+
+    with pytest.raises(ValueError, match="res"):
+        hex_cell(F.col("lon"), F.col("lat"), 13)
+    with pytest.raises(ValueError, match="parent_res"):
+        hex_parent(F.col("cell"), 9, child_res=9)
+    with pytest.raises(ValueError, match="parent_res"):
+        hex_parent(F.col("cell"), MAX_RES)  # no finer child res exists
+    pts = spark.createDataFrame([(0, 9.2, 52.2)], "id long, lon double, lat double")
+    with pytest.raises(ValueError, match="res"):
+        knn_kring(pts.withColumnRenamed("id", "query_id"),
+                  pts.withColumnRenamed("id", "target_id"), k=1, res=13)
+
+
 # ------------------------------------------------------------------ s2 -----
 def test_s2_level_and_parent():
     for level in (10, 16, 30):

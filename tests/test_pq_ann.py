@@ -119,6 +119,21 @@ def test_pq_codes_match_plain_python_argmin(spark):
             assert got == want, (vid, m, got, want)
 
 
+@pytest.mark.parametrize("n_codewords,n_sub", [(17, 2), (16, 16)])
+def test_pq_encode_rejects_codebooks_wider_than_4_bits(spark, n_codewords, n_sub):
+    """17 codewords (or a 16th subspace) cannot pack into 4-bit fields below
+    the sign bit: both encoders raise instead of packing wrong codes (an
+    assert would vanish under python -O)."""
+    from fs2_osm_spark.operators.similarity import pq_codes, pq_encode_recon
+
+    corpus = spark.createDataFrame([(0, [0.0] * 2 * n_sub)], "vec_id long, v array<double>")
+    subs = [np.zeros((n_codewords, 2))] * n_sub
+    with pytest.raises(ValueError, match="4-bit"):
+        pq_codes(corpus, subs)
+    with pytest.raises(ValueError, match="4-bit"):
+        pq_encode_recon(corpus, subs)
+
+
 def test_pq_ann_plan_has_no_cartesian(spark):
     from fs2_osm_spark.queries.registry import QUERIES
 

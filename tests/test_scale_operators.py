@@ -18,6 +18,7 @@ from fs2_osm_spark.operators.dedup import (
 from fs2_osm_spark.operators.knn import knn_brute_force, knn_kring
 from fs2_osm_spark.operators.similarity import (
     brute_force_topk,
+    cosine_top_k,
     ivf_assign,
     ivf_centroids,
     ivf_search,
@@ -152,6 +153,79 @@ def test_knn_kring_matches_brute_force(spark):
     e = sorted((r.query_id, r.rank, r.target_id) for r in exact.collect())
     a = sorted((r.query_id, r.rank, r.target_id) for r in approx.collect())
     assert e == a
+
+
+def _tied_knn(spark, op):
+    """One query whose nearest targets tie: ids 7, 3, 5 share one point,
+    ids 4, 1 a farther one. Equal rounded distances rank by ascending id."""
+    targets = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "target_id": [7, 4, 3, 1, 5, 9],
+                "lon": [9.201, 9.203, 9.201, 9.203, 9.201, 9.3],
+                "lat": [52.2, 52.2, 52.2, 52.2, 52.2, 52.3],
+            }
+        )
+    )
+    queries = spark.createDataFrame(
+        pd.DataFrame({"query_id": [0], "lon": [9.2], "lat": [52.2]})
+    )
+    if op == "knn_kring":
+        out = knn_kring(queries, targets, k=4, res=7, ring=2)
+    else:
+        out = knn_brute_force(queries, targets, k=4)
+    return out, "target_id", [3, 5, 7, 1]
+
+
+def _tied_cosine(spark, op):
+    """Query 0 is [1, 0, 0, 0]; ids 9, 2, 6 point along [1, 1, 0, 0] at
+    different lengths (equal rounded cosine), ids 8, 1 along [1, 0, 1, 1].
+    Corpus id 0 is the query itself, excluded by candidate generation."""
+    rows = [(0, [1.0, 0.0, 0.0, 0.0])]
+    rows += [(i, [c, c, 0.0, 0.0]) for i, c in ((9, 1.0), (2, 3.0), (6, 0.7))]
+    rows += [(i, [c, 0.0, c, c]) for i, c in ((8, 2.0), (1, 0.5))]
+    corpus = spark.createDataFrame(pd.DataFrame(rows, columns=["vec_id", "v"]))
+    queries = corpus.filter(F.col("vec_id") == 0).select(
+        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
+    )
+    if op == "brute_force_topk":
+        out = brute_force_topk(corpus, queries, k=4)
+    else:
+        cents = ivf_centroids(corpus, n_centroids=2, sample_mod=1)
+        out = ivf_search(ivf_assign(corpus, cents), cents, queries, k=4, n_probe=2)
+    return out, "neighbor_id", [2, 6, 9, 1]
+
+
+@pytest.mark.parametrize(
+    "op", ["knn_kring", "knn_brute_force", "brute_force_topk", "ivf_search"]
+)
+def test_nearest_neighbour_top_k_ties_rank_by_id(spark, op):
+    """Every kNN/ANN path ranks through operators/knn.keep_top: ties on the
+    rounded score break by ascending id, and rank is a bigint running
+    1..k without gaps."""
+    build = _tied_knn if op.startswith("knn") else _tied_cosine
+    out, id_col, want = build(spark, op)
+    assert dict(out.dtypes)["rank"] == "bigint"
+    got = sorted((r["rank"], r[id_col]) for r in out.collect())
+    assert got == list(enumerate(want, start=1)), got
+
+
+def test_cosine_top_k_keeps_a_candidate_with_the_query_id(spark):
+    """Self-exclusion belongs to candidate generation: the top-k tail ranks
+    every candidate it is given, the query's own id included."""
+    corpus = spark.createDataFrame(
+        pd.DataFrame(
+            [(0, [1.0, 0.0]), (1, [1.0, 1.0]), (2, [0.0, 1.0])],
+            columns=["vec_id", "v"],
+        )
+    )
+    queries = corpus.filter(F.col("vec_id") == 0).select(
+        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
+    )
+    out = cosine_top_k(F.broadcast(queries).crossJoin(corpus), 2)
+    assert out.columns == ["query_id", "rank", "neighbor_id", "cos_sim"]
+    got = sorted(tuple(r) for r in out.collect())
+    assert got == [(0, 1, 0, 1.0), (0, 2, 1, 0.707107)], got
 
 
 def test_cell_pip_join_matches_broadcast(spark):
