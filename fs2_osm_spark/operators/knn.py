@@ -21,15 +21,13 @@ from fs2_osm_spark.functions.geo import haversine_m
 from fs2_osm_spark.functions.hex import hex_cell, hex_cell_ea, hex_kring
 
 
-def keep_top(
-    scored: DataFrame, by: str, order: list[Column], k: int, rank: str = "rank"
-) -> DataFrame:
+def keep_top(scored: DataFrame, by: str, order: list[Column], k: int) -> DataFrame:
     """The one nearest-neighbour top-k: `scored` plus a bigint `rank`
     (row_number over partitionBy(by).orderBy(*order)), keeping rank <= k."""
     w = Window.partitionBy(by).orderBy(*order)
-    return scored.withColumn(rank, F.row_number().over(w).cast("bigint")).filter(
-        F.col(rank) <= k
-    )
+    return scored.withColumn(
+        "rank", F.row_number().over(w).cast("bigint")
+    ).filter(F.col("rank") <= k)
 
 
 def _haversine_top(

@@ -456,8 +456,7 @@ def pq_adc_search(
     # saves. At true cluster scale with orders more candidates per query
     # the two-phase shape is the one to revisit.)
     shortlist = keep_top(
-        scored, "query_id", [F.col("adc").asc(), F.col("neighbor_id")], rerank,
-        rank="adc_rank",
+        scored, "query_id", [F.col("adc").asc(), F.col("neighbor_id")], rerank
     ).select("query_id", "qv", "neighbor_id")
     rer = F.broadcast(shortlist).join(
         corpus, F.col(id_col) == F.col("neighbor_id")
