@@ -123,7 +123,8 @@ def _ycbcr_to_rgb(ycc: np.ndarray) -> np.ndarray:
 
 def encode_dct(img: np.ndarray, quality: int = DEFAULT_QUALITY) -> bytes:
     """HxWx3 uint8 -> JQ01 bytes (block DCT + quantization + zlib)."""
-    assert img.ndim == 3 and img.shape[2] == 3 and img.dtype == np.uint8
+    if not (img.ndim == 3 and img.shape[2] == 3 and img.dtype == np.uint8):
+        raise ValueError(f"encode_dct needs an HxWx3 uint8 image, got {img.dtype} {img.shape}")
     h, w = img.shape[:2]
     ph, pw = -h % 8, -w % 8
     padded = np.pad(img, ((0, ph), (0, pw), (0, 0)), mode="edge")

@@ -31,7 +31,8 @@ def _chunk(typ: bytes, data: bytes) -> bytes:
 
 def encode_png(img: np.ndarray) -> bytes:
     """HxWx3 uint8 -> PNG bytes (color type 2, bit depth 8, filter 0)."""
-    assert img.ndim == 3 and img.shape[2] == 3 and img.dtype == np.uint8
+    if not (img.ndim == 3 and img.shape[2] == 3 and img.dtype == np.uint8):
+        raise ValueError(f"encode_png needs an HxWx3 uint8 image, got {img.dtype} {img.shape}")
     h, w = img.shape[:2]
     ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
     # prepend filter byte 0 to each scanline

@@ -196,36 +196,16 @@ def hex_kring(cell: Column, k: int) -> Column:
     )
 
 
-def hex_parent(cell: Column, parent_res: int, child_res: int | None = None) -> Column:
-    """Parent cell: the coarser hex containing this cell's center.
-    Geometric containment (consistent, deterministic), matching the H3
-    parent-of-center contract.
-
-    Pass child_res when the input resolution is statically known — the
-    dynamic variant builds a when-chain with one full hex_cell expression
-    per possible resolution (heavy codegen)."""
-    finest = MAX_RES if child_res is None else child_res
-    if not 0 <= parent_res < finest:
-        raise ValueError(f"parent_res must be in 0..{finest - 1}, got {parent_res}")
-    res_part = cell - (cell % F.lit(ID_RES_MUL))
+def hex_parent(cell: Column, parent_res: int, child_res: int) -> Column:
+    """Parent cell: the coarser hex containing the center of `cell`, a cell
+    at resolution `child_res`. Geometric containment (consistent,
+    deterministic), matching the H3 parent-of-center contract."""
+    if not 0 <= parent_res < child_res:
+        raise ValueError(f"parent_res must be in 0..{child_res - 1}, got {parent_res}")
     rest = cell % F.lit(ID_RES_MUL)
     q = (rest / F.lit(ID_Q_MUL)).cast("bigint") - F.lit(Q_OFFSET)
     r = rest % F.lit(ID_Q_MUL) - F.lit(Q_OFFSET)
-
-    def parent_for(cres: int) -> Column:
-        s = hex_size(cres)
-        lon = F.lit(s) * (F.lit(SQRT3) * q + F.lit(SQRT3 / 2.0) * r)
-        lat = F.lit(s) * (F.lit(1.5) * r)
-        return hex_cell(lon, lat, parent_res)
-
-    if child_res is not None:
-        return parent_for(child_res)
-
-    res = (res_part / F.lit(ID_RES_MUL)).cast("int")
-    out = None
-    for cres in range(1, MAX_RES + 1):
-        if parent_res >= cres:
-            continue
-        p = parent_for(cres)
-        out = F.when(res == cres, p) if out is None else out.when(res == cres, p)
-    return out.otherwise(F.lit(None).cast("bigint"))
+    s = hex_size(child_res)
+    lon = F.lit(s) * (F.lit(SQRT3) * q + F.lit(SQRT3 / 2.0) * r)
+    lat = F.lit(s) * (F.lit(1.5) * r)
+    return hex_cell(lon, lat, parent_res)

@@ -104,7 +104,8 @@ def s2_cell_np(
     lon_deg: np.ndarray, lat_deg: np.ndarray, level: int = 30
 ) -> np.ndarray:
     """lat/lon arrays -> S2 cell ids at ``level`` (int64 view of uint64 ids)."""
-    assert 0 <= level <= MAX_LEVEL
+    if not 0 <= level <= MAX_LEVEL:
+        raise ValueError(f"S2 level must be in 0..{MAX_LEVEL}, got {level}")
     x, y, z = _xyz(np.asarray(lon_deg, np.float64), np.asarray(lat_deg, np.float64))
     face, u, v = _face_uv(x, y, z)
     i, j = _ij(_st(u)), _ij(_st(v))

@@ -11,15 +11,13 @@ Brute force broadcasts the query set and scores JVM-side (zip_with +
 aggregate fold — no UDF). The IVF path builds a deterministic coarse
 quantizer (strided sample of the corpus as centroids), assigns vectors to
 their nearest centroid with one vectorized numpy matmul per Arrow batch
-(pandas UDF — the legitimate Python fast path), and probes the n_probe
-nearest lists at query time: candidate generation becomes a centroid-id
+(a rowmap.map_columns kernel), and probes the n_probe nearest lists at
+query time the same way: candidate generation becomes a centroid-id
 equi-join instead of a cross join, which is the shape that survives 10^12
 rows (lists are range-partitionable, hot lists saltable).
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
@@ -28,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from fs2_osm_spark.operators.knn import keep_top
+from fs2_osm_spark.rowmap import map_columns
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -106,75 +105,43 @@ def ivf_centroids(corpus: DataFrame, n_centroids: int, id_col: str = "vec_id",
     return [(i, np.asarray(r[vec_col], np.float64)) for i, r in enumerate(sampled)]
 
 
-def _list_to_matrix(col) -> np.ndarray:
-    """pyarrow list<double> column -> (n, d) float64 matrix.
+def _sq_l2(x: np.ndarray, c: np.ndarray, cc: np.ndarray) -> np.ndarray:
+    """(rows of x, rows of c) squared L2 in the expanded form
+    x·x − 2 x·c + c·c (`cc` = per-row c·c) — the form the DuckDB twins
+    evaluate, so both engines take the same decision on near-ties."""
+    return np.einsum("ij,ij->i", x, x)[:, None] - 2.0 * (x @ c.T) + cc[None, :]
 
-    Zero-copy fast path (guide §4.2): a list column is one contiguous
-    values buffer plus offsets, so when every row has the same length the
-    matrix is just a reshape of the values buffer — no per-row Python
-    boxing (np.stack over 100k object rows was the dominant cost of the
-    1M-vector assign/encode passes). Rows of unequal length (never
-    produced by this engine's vector tables) fall back to per-row stack.
-    """
-    import pyarrow.compute as pc
 
-    n = len(col)
-    if n == 0:
-        return np.zeros((0, 0), np.float64)
-    lens = np.asarray(pc.list_value_length(col))
-    d = int(lens[0])
-    if (lens == d).all():
-        flat = np.asarray(col.flatten(), dtype=np.float64)
-        return flat.reshape(n, d)
-    return np.stack([np.asarray(v, np.float64) for v in col.to_pylist()])
+def _unit(x: np.ndarray) -> np.ndarray:
+    return x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-30)
+
+
+def _nearest(x: np.ndarray, cents: np.ndarray, n: int, metric: str = "cos") -> np.ndarray:
+    """(rows, n) indices of the `n` nearest centroids per row of `x`, nearest
+    first: highest cosine ("cos") or lowest expanded L2 ("l2"). Ties go to
+    the lower centroid index, the (score, cid) order of the SQL twins."""
+    if metric == "cos":
+        score = -(_unit(x) @ _unit(cents).T)
+    else:
+        score = _sq_l2(x, cents, np.einsum("ij,ij->i", cents, cents))
+    if n == 1:  # first-index argmin: the stable order without a sort
+        return np.argmin(score, axis=1)[:, None]
+    return np.argsort(score, axis=1, kind="stable")[:, :n]
 
 
 def ivf_assign(corpus: DataFrame, centroids: list[tuple[int, np.ndarray]],
                vec_col: str = "v", metric: str = "cos") -> DataFrame:
-    """Nearest-centroid id per corpus vector, appended as `centroid_id`.
-
-    r08: mapInArrow over the record batch instead of a pandas UDF on the
-    vector column — the batch's list column reshapes zero-copy into the
-    matmul operand (_list_to_matrix), where the pandas path paid a
-    per-row object conversion. Identical float64 math (same normalize /
-    argmax / expanded-L2 argmin expressions), so assignments are
-    bit-identical."""
-    import pyarrow as pa
-
-    cm = np.stack([c for _, c in centroids])
-    if metric == "cos":
-        cmn = cm / np.linalg.norm(cm, axis=1, keepdims=True)
-        cc = None
-    elif metric == "l2":
-        cmn = cm
-        cc = np.einsum("ij,ij->i", cm, cm)
-    else:
+    """Nearest-centroid id per corpus vector, appended as `centroid_id`:
+    one matmul per Arrow batch against the centroid matrix captured in the
+    kernel (cosine argmax or expanded-L2 argmin, ties to the lower id)."""
+    if metric not in ("cos", "l2"):
         raise ValueError(f"unknown metric {metric!r} (cos|l2)")
-    vidx = corpus.schema.fieldNames().index(vec_col)
-    out_schema = T.StructType(
-        list(corpus.schema.fields) + [T.StructField("centroid_id", T.LongType(), False)]
+    cm = np.stack([c for _, c in centroids])
+    return map_columns(
+        corpus, corpus.columns, [vec_col],
+        lambda x: (_nearest(x, cm, 1, metric)[:, 0],),
+        [T.StructField("centroid_id", T.LongType(), False)],
     )
-
-    def fn(batches):
-        for batch in batches:
-            if not batch.num_rows:  # zero-row Arrow batch: (0,0) matmul throws
-                continue
-            mat = _list_to_matrix(batch.column(vidx))
-            if metric == "cos":
-                m = mat / np.maximum(
-                    np.linalg.norm(mat, axis=1, keepdims=True), 1e-30
-                )
-                ids = np.argmax(m @ cmn.T, axis=1).astype(np.int64)
-            else:
-                xx = np.einsum("ij,ij->i", mat, mat)
-                d2 = xx[:, None] - 2.0 * (mat @ cmn.T) + cc[None, :]
-                ids = np.argmin(d2, axis=1).astype(np.int64)
-            yield batch.append_column(
-                pa.field("centroid_id", pa.int64(), nullable=False),
-                pa.array(ids, pa.int64()),
-            )
-
-    return corpus.mapInArrow(fn, out_schema)
 
 
 def ivf_search(
@@ -190,18 +157,11 @@ def ivf_search(
 ) -> DataFrame:
     """Probe the n_probe nearest inverted lists, exact-rerank candidates."""
     cm = np.stack([c for _, c in centroids])
-    cmn = cm / np.linalg.norm(cm, axis=1, keepdims=True)
-
-    def probe(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for s in it:
-            mat = np.stack([np.asarray(v, np.float64) for v in s])
-            mat = mat / np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-30)
-            sims = mat @ cmn.T
-            top = np.argsort(-sims, axis=1)[:, :n_probe].astype(np.int64)
-            yield pd.Series(list(top))
-
-    probe_udf = F.pandas_udf(probe, T.ArrayType(T.LongType()))
-    q = queries.withColumn("probe_lists", probe_udf(F.col(query_vec_col)))
+    q = map_columns(
+        queries, [query_id_col, query_vec_col], [query_vec_col],
+        lambda qv: (list(_nearest(qv, cm, n_probe)),),
+        [T.StructField("probe_lists", T.ArrayType(T.LongType()))],
+    )
     q = q.select(query_id_col, query_vec_col, F.explode("probe_lists").alias("centroid_id"))
     cand = q.join(assigned, "centroid_id").filter(
         F.col(id_col) != F.col(query_id_col)
@@ -223,20 +183,26 @@ def _pq_check_width(subs: list[np.ndarray]) -> None:
         )
 
 
-def _pq_encode(
-    x: np.ndarray, subs: list[np.ndarray], cc: list[np.ndarray]
-) -> tuple[np.ndarray, np.ndarray]:
-    """(codes (n, n_sub), packed int64 (n,)): per subspace the argmin-L2
-    codeword in expanded form x·x − 2 x·c + c·c (`cc` = per-codeword c·c;
-    ties → lowest code), 4 bits per subspace packed into one int64."""
-    n_sub, d_sub = len(subs), subs[0].shape[1]
-    codes = np.empty((len(x), n_sub), np.int64)
-    for m in range(n_sub):
-        xm = x[:, m * d_sub : (m + 1) * d_sub]
-        xx = np.einsum("ij,ij->i", xm, xm)
-        d2 = xx[:, None] - 2.0 * (xm @ subs[m].T) + cc[m][None, :]
-        codes[:, m] = np.argmin(d2, axis=1)  # first min = lowest code
-    packed = (codes << (4 * np.arange(n_sub, dtype=np.int64))).sum(axis=1)
+def _pq_subspaces(x: np.ndarray, subs: list[np.ndarray]) -> list[np.ndarray]:
+    """The per-subspace column slices of `x`; its width must be exactly
+    n_sub × d_sub (a wider vector would be encoded on a prefix only)."""
+    d_sub = subs[0].shape[1]
+    if x.shape[1] != len(subs) * d_sub:
+        raise ValueError(
+            f"PQ codebook covers {len(subs)} x {d_sub} dims, vectors have width {x.shape[1]}"
+        )
+    return [x[:, m * d_sub : (m + 1) * d_sub] for m in range(len(subs))]
+
+
+def _pq_encode(x: np.ndarray, subs: list[np.ndarray]) -> tuple[np.ndarray, np.ndarray]:
+    """(codes (n, n_sub), packed int64 (n,)): per subspace the nearest
+    codeword by expanded L2 (ties → lowest code), 4 bits per subspace packed
+    into one int64."""
+    codes = np.stack(
+        [_nearest(xm, s, 1, "l2")[:, 0] for xm, s in zip(_pq_subspaces(x, subs), subs)],
+        axis=1,
+    )
+    packed = (codes << (4 * np.arange(len(subs), dtype=np.int64))).sum(axis=1)
     return codes, packed
 
 
@@ -252,39 +218,16 @@ def pq_codes(
     the argmin-L2 codeword index (expanded form x·x − 2 x·c + c·c, ties →
     lowest code) and the 4-bit codes pack into ONE BIGINT — a billion-row
     index is 8 bytes/vector plus ids, small enough to keep hot. One numpy
-    matmul per subspace per Arrow batch against the broadcast codebook; the
-    payload vector column is DROPPED on output (that is the point: ADC
-    search never touches raw vectors until the exact rerank).
+    matmul per subspace per Arrow batch against the codebook captured in
+    the kernel; the payload vector column is DROPPED on output (that is the
+    point: ADC search never touches raw vectors until the exact rerank).
     """
-    import pyarrow as pa
-
     _pq_check_width(subs)
-    cc = [np.einsum("ij,ij->i", s, s) for s in subs]
-    bc = df.sparkSession.sparkContext.broadcast((subs, cc))
-    id_fields = [f for f in df.schema.fields if f.name in id_cols]
-    present_ids = [f.name for f in id_fields]
-    schema = T.StructType(
-        id_fields + [T.StructField("pq_code", T.LongType(), False)]
+    return map_columns(
+        df, [c for c in df.columns if c in id_cols], [vec_col],
+        lambda x: (_pq_encode(x, subs)[1],),
+        [T.StructField("pq_code", T.LongType(), False)],
     )
-    names = df.schema.fieldNames()
-    vidx = names.index(vec_col)
-
-    # r08: mapInArrow with the zero-copy list->matrix reshape (the pandas
-    # path re-boxed every vector row before the per-subspace matmuls);
-    # identical float64 expressions, so codes are bit-identical.
-    def fn(batches):
-        subs_b, cc_b = bc.value
-        for batch in batches:
-            if not batch.num_rows:
-                continue
-            _, packed = _pq_encode(_list_to_matrix(batch.column(vidx)), subs_b, cc_b)
-            arrays = [batch.column(names.index(c)) for c in present_ids]
-            arrays.append(pa.array(packed, pa.int64()))
-            yield pa.RecordBatch.from_arrays(
-                arrays, names=[*present_ids, "pq_code"]
-            )
-
-    return df.mapInArrow(fn, schema)
 
 
 def pq_train(
@@ -341,40 +284,22 @@ def pq_encode_recon(
     core of pq_codes (one matmul per subspace per batch) plus the
     reconstruction gather."""
     _pq_check_width(subs)
-    cc = [np.einsum("ij,ij->i", s, s) for s in subs]
-    bc = corpus.sparkSession.sparkContext.broadcast((subs, cc))
-    schema = T.StructType(
-        [
-            next(f for f in corpus.schema.fields if f.name == id_col),
-            T.StructField("pq_code", T.LongType(), False),
-            T.StructField("recon_cos", T.DoubleType(), False),
-        ]
+
+    def fn(x: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+        codes, packed = _pq_encode(x, subs)
+        recon = np.concatenate([s[codes[:, m]] for m, s in enumerate(subs)], axis=1)
+        num = np.einsum("ij,ij->i", x, recon)
+        cos = num / (
+            np.sqrt(np.einsum("ij,ij->i", x, x))
+            * np.sqrt(np.einsum("ij,ij->i", recon, recon))
+        )
+        return packed, np.round(cos, 5)
+
+    return map_columns(
+        corpus, [id_col], [vec_col], fn,
+        [T.StructField("pq_code", T.LongType(), False),
+         T.StructField("recon_cos", T.DoubleType(), False)],
     )
-
-    def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        subs_b, cc_b = bc.value
-        for pdf in it:
-            if not len(pdf):
-                continue
-            x = np.stack([np.asarray(v, np.float64) for v in pdf[vec_col]])
-            codes, packed = _pq_encode(x, subs_b, cc_b)
-            recon = np.concatenate(
-                [subs_b[m][codes[:, m]] for m in range(len(subs_b))], axis=1
-            )
-            num = np.einsum("ij,ij->i", x, recon)
-            cos = num / (
-                np.sqrt(np.einsum("ij,ij->i", x, x))
-                * np.sqrt(np.einsum("ij,ij->i", recon, recon))
-            )
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "pq_code": packed,
-                    "recon_cos": np.round(cos, 5),
-                }
-            )
-
-    return corpus.mapInPandas(fn, schema)
 
 
 def pq_adc_search(
@@ -412,13 +337,7 @@ def pq_adc_search(
     n_sub = len(subs)
     k = subs[0].shape[0]
     spark = index.sparkSession
-    qn = qmat / np.maximum(np.linalg.norm(qmat, axis=1, keepdims=True), 1e-30)
-    cmn = cents / np.maximum(
-        np.linalg.norm(cents, axis=1, keepdims=True), 1e-30
-    )
-    sims = qn @ cmn.T
-    # stable argsort on -sims: ties keep ascending centroid id
-    probes = np.argsort(-sims, axis=1, kind="stable")[:, :n_probe]
+    probes = _nearest(qmat, cents, n_probe)
     luts = pq_lut(qmat, subs, lut_scale)
     qdf = spark.createDataFrame(
         pd.DataFrame(
@@ -470,20 +389,11 @@ def pq_lut(queries: np.ndarray, subs: list[np.ndarray], scale: int) -> np.ndarra
     `scale`, floor(x+0.5)-rounded to BIGINT. Integer LUTs make the ADC sum
     exact arithmetic — bit-identical across engines and reduce orders —
     instead of a float knife-edge. Shape (n_queries, n_sub * k), m-major."""
-    n_sub = len(subs)
-    k = subs[0].shape[0]
-    d_sub = subs[0].shape[1]
-    luts = np.empty((len(queries), n_sub * k), np.int64)
-    for m in range(n_sub):
-        xm = queries[:, m * d_sub : (m + 1) * d_sub]
-        xx = np.einsum("ij,ij->i", xm, xm)
-        xc = xm @ subs[m].T
-        cc = np.einsum("ij,ij->i", subs[m], subs[m])
-        d2 = xx[:, None] - 2.0 * xc + cc[None, :]
-        luts[:, m * k : (m + 1) * k] = np.floor(d2 * scale + 0.5).astype(
-            np.int64
-        )
-    return luts
+    d2 = [
+        _sq_l2(xm, s, np.einsum("ij,ij->i", s, s))
+        for xm, s in zip(_pq_subspaces(queries, subs), subs)
+    ]
+    return np.floor(np.concatenate(d2, axis=1) * scale + 0.5).astype(np.int64)
 
 
 # -------------------------------------------------------------- k-means ----

@@ -507,11 +507,12 @@ def _write_frame_fixture() -> str:
     """The deterministic 100-node framed fixture shared by the frame-source
     and http-source queries (same closed-form oracle); written once per
     process."""
-    from fs2_osm_spark.sources.pbf_frames import encode_block, write_frames
+    from fs2_osm_spark.sources.pbf_frames import write_frames
+    from fs2_osm_spark.sources.proto_wire import encode_primitive_block
 
     path = os.path.join(_fixture_dir(), "nodes.opf")
     blocks = [
-        encode_block(
+        encode_primitive_block(
             ids=list(range(1, 101)),
             lats=[500000000] + [1000000] * 99,
             lons=[80000000] + [1000000] * 99,
@@ -717,10 +718,11 @@ def osm_decode_semantics_oracle(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _wire_fixture() -> str:
     """One framed PBF file holding a dense block + a ways/relations block;
     written once per process."""
-    from fs2_osm_spark.sources.pbf_frames import encode_block, write_frames
+    from fs2_osm_spark.sources.pbf_frames import write_frames
     from fs2_osm_spark.sources.proto_wire import (
         encode_entity_group,
         encode_info,
+        encode_primitive_block,
         encode_relation,
         encode_way,
     )
@@ -757,7 +759,7 @@ def _wire_fixture() -> str:
         for i in range(5)
     ]
     blocks = [
-        encode_block(
+        encode_primitive_block(
             ids=list(range(1, 11)), lats=[1000000] * 10, lons=[2000000] * 10,
             keys_vals=[], string_table=[""],
         ),
@@ -874,8 +876,8 @@ _DENSE_INFO_ORACLE = """
 def _dense_info_fixture() -> str:
     """One dense block of three nodes with DenseInfo; written once per
     process."""
-    from fs2_osm_spark.sources.pbf_frames import encode_block, write_frames
-    from fs2_osm_spark.sources.proto_wire import encode_dense_info
+    from fs2_osm_spark.sources.pbf_frames import write_frames
+    from fs2_osm_spark.sources.proto_wire import encode_dense_info, encode_primitive_block
 
     info = encode_dense_info(
         versions=[1, 3, 2],
@@ -884,7 +886,7 @@ def _dense_info_fixture() -> str:
         uids=[42, 0, -2],
         user_sids=[1, 1, -1],                   # deltas into string table
     )
-    block = encode_block(
+    block = encode_primitive_block(
         ids=[100, 1, 1],
         lats=[0, 0, 0],
         lons=[0, 0, 0],

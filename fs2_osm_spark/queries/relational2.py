@@ -338,11 +338,11 @@ def _s2_oracle() -> str:
 
 @register("geo_s2_cell_assignment", oracle=_s2_oracle())
 def geo_s2_cell_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
     from pyspark.sql import types as T
 
     from fs2_osm_spark.functions.geo import synth_lat, synth_lon
     from fs2_osm_spark.functions.s2 import s2_cell_np
+    from fs2_osm_spark.rowmap import map_columns
 
     cust = load(spark, sf_dir, "customer")
     pts = cust.select(
@@ -350,25 +350,12 @@ def geo_s2_cell_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
         synth_lon(F.col("c_custkey")).alias("lon"),
         synth_lat(F.col("c_custkey")).alias("lat"),
     )
-
-    def assign(it):
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "point_id": pdf["point_id"],
-                    "s2_l12": s2_cell_np(pdf["lon"].to_numpy(), pdf["lat"].to_numpy(), 12),
-                    "s2_l30": s2_cell_np(pdf["lon"].to_numpy(), pdf["lat"].to_numpy(), 30),
-                }
-            )
-
-    schema = T.StructType(
-        [
-            T.StructField("point_id", T.LongType(), False),
-            T.StructField("s2_l12", T.LongType(), False),
-            T.StructField("s2_l30", T.LongType(), False),
-        ]
+    return map_columns(
+        pts, ["point_id"], ["lon", "lat"],
+        lambda lon, lat: (s2_cell_np(lon, lat, 12), s2_cell_np(lon, lat, 30)),
+        [T.StructField("s2_l12", T.LongType(), False),
+         T.StructField("s2_l30", T.LongType(), False)],
     )
-    return pts.mapInPandas(assign, schema)
 
 
 # --------------------------------------------------------------------------

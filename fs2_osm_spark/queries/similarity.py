@@ -13,16 +13,72 @@ operators/similarity.py with pytest recall checks.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from fs2_osm_spark.functions.text import h16_sql
 from fs2_osm_spark.io import load
-from fs2_osm_spark.operators.similarity import brute_force_topk, cosine, cosine_top_k
+from fs2_osm_spark.operators.similarity import (
+    brute_force_topk,
+    cosine,
+    cosine_top_k,
+    ivf_assign,
+    ivf_centroids,
+    ivf_search,
+    kmeans_assignments,
+    kmeans_fit,
+    pq_adc_search,
+    pq_codes,
+    pq_encode_recon,
+    pq_train,
+)
 from fs2_osm_spark.queries.registry import register
 
 N_QUERIES = 20
 TOP_K = 5
 LSH_DIMS = (1, 9, 17, 25)  # 1-based dims for the sign-bucket hash
+IVF_K = 16
+IVF_PROBE = 4
+IVF_MOD = 17
+PQ_M = 8       # subspaces
+PQ_D = 8       # dims per subspace (embeddings are 64-d)
+PQ_K = 16      # codewords per subspace -> 4-bit codes
+
+
+def _corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, v): the embeddings table as a vector corpus."""
+    return load(spark, sf_dir, "embeddings").select("vec_id", F.col("embedding").alias("v"))
+
+
+def _queries(corpus: DataFrame) -> DataFrame:
+    """(query_id, qv): the first N_QUERIES corpus vectors as the query set."""
+    return corpus.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
+    )
+
+
+def _md5_centroids(corpus: DataFrame) -> list[tuple[int, np.ndarray]]:
+    """The portable coarse quantizer: the IVF_K corpus vectors with
+    md5-hash % IVF_MOD == 0 and the smallest (hash, vec_id), numbered in
+    that order — the `cents` CTE of the DuckDB twins."""
+    h = F.expr(h16_sql("CAST(vec_id AS STRING)")).cast("bigint")
+    sampled = (
+        corpus.withColumn("h", h)
+        .filter(F.pmod(F.col("h"), F.lit(IVF_MOD)) == 0)
+        .orderBy("h", "vec_id")
+        .limit(IVF_K)
+        .collect()
+    )
+    return [(i, np.asarray(r.v, np.float64)) for i, r in enumerate(sampled)]
+
+
+def _fixed_codebook(corpus: DataFrame) -> list[np.ndarray]:
+    """The fixed PQ codebook: the first PQ_K corpus vectors, split into PQ_M
+    sub-slices of PQ_D dims (deterministic, no fit)."""
+    rows = corpus.filter(F.col("vec_id") < PQ_K).orderBy("vec_id").collect()
+    cmat = np.asarray([r.v for r in rows], np.float64)
+    return [cmat[:, m * PQ_D : (m + 1) * PQ_D] for m in range(PQ_M)]
 
 
 @register(
@@ -47,12 +103,8 @@ LSH_DIMS = (1, 9, 17, 25)  # 1-based dims for the sign-bucket hash
 def sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k: broadcast the (small) query set, score all
     corpus vectors JVM-side via higher-order functions, window top-k."""
-    emb = load(spark, sf_dir, "embeddings")
-    corpus = emb.select("vec_id", F.col("embedding").alias("v"))
-    queries = corpus.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    return brute_force_topk(corpus, queries, TOP_K).select(
+    corpus = _corpus(spark, sf_dir)
+    return brute_force_topk(corpus, _queries(corpus), TOP_K).select(
         "query_id", "rank", "neighbor_id"
     )
 
@@ -183,33 +235,20 @@ def sim_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     inverted-list search + exact rerank), hard-oracled (r07) on the fixed
     synth/vectors.py corpus: the committed fixture records, by driver-side
     BRUTE FORCE (per-pair python-loop cosines — no matmul assign kernel,
-    no probe UDF, no broadcast join), the full search result; Spark
+    no probe kernel, no broadcast join), the full search result; Spark
     contributed only the two xxhash64 columns, which ARE the sampler's
     definition (anti-drift pytest: tests/test_sim_fixture.py). The
     sf-scaled tables stay covered by the portable md5 twin
     (sim_ivf_ann_md5, full DuckDB re-derivation). Recall vs brute force is
     additionally pinned by tests/test_scale_operators.py."""
-    from fs2_osm_spark.operators.similarity import (
-        ivf_assign,
-        ivf_centroids,
-        ivf_search,
-    )
     from fs2_osm_spark.synth.staging import ensure_sim_fixture
     from fs2_osm_spark.synth.vectors import sim_corpus
 
     ensure_sim_fixture(spark)
     corpus = sim_corpus(spark)
-    queries = corpus.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
     cents = ivf_centroids(corpus, n_centroids=16)
     assigned = ivf_assign(corpus, cents)
-    return ivf_search(assigned, cents, queries, k=TOP_K, n_probe=4)
-
-
-IVF_K = 16
-IVF_PROBE = 4
-IVF_MOD = 17
+    return ivf_search(assigned, cents, _queries(corpus), k=TOP_K, n_probe=4)
 
 
 def _ivf_md5_oracle(cand_filter: str = "") -> str:
@@ -218,8 +257,6 @@ def _ivf_md5_oracle(cand_filter: str = "") -> str:
     exact rerank with the (round(cos,7) DESC, neighbor_id) tie-break the
     engine's window uses. `cand_filter` narrows the searchable inverted
     lists (metadata-filtered retrieval — sim_ivf_ann_filtered)."""
-    from fs2_osm_spark.functions.text import h16_sql
-
     h = h16_sql("CAST(vec_id AS VARCHAR)")
     return f"""
     WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
@@ -285,27 +322,10 @@ def sim_ivf_ann_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     a DuckDB re-derivation. Same plan shape as the fast path (stride
     filter -> TakeOrderedAndProject sample -> broadcast assign -> bucket
     equi-join), so the oracle certifies the real scale machinery."""
-    import numpy as np
-
-    from fs2_osm_spark.functions.text import h16_sql
-    from fs2_osm_spark.operators.similarity import ivf_assign, ivf_search
-
-    emb = load(spark, sf_dir, "embeddings")
-    corpus = emb.select("vec_id", F.col("embedding").alias("v"))
-    h = F.expr(h16_sql("CAST(vec_id AS STRING)")).cast("bigint")
-    sampled = (
-        corpus.withColumn("h", h)
-        .filter(F.pmod(F.col("h"), F.lit(IVF_MOD)) == 0)
-        .orderBy("h", "vec_id")
-        .limit(IVF_K)
-        .collect()
-    )
-    cents = [(i, np.asarray(r.v, np.float64)) for i, r in enumerate(sampled)]
+    corpus = _corpus(spark, sf_dir)
+    cents = _md5_centroids(corpus)
     assigned = ivf_assign(corpus, cents)
-    queries = corpus.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    return ivf_search(assigned, cents, queries, k=TOP_K, n_probe=IVF_PROBE)
+    return ivf_search(assigned, cents, _queries(corpus), k=TOP_K, n_probe=IVF_PROBE)
 
 
 @register(
@@ -381,19 +401,17 @@ def sim_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     one vectorized numpy matmul per Arrow batch). Proves the Python fast
     path agrees exactly with the SQL argmax; the iterative Lloyd FIT has no
     SQL twin and stays pytest-pinned (sim_kmeans_clusters)."""
-    import numpy as np
-
-    from fs2_osm_spark.operators.similarity import ivf_assign
-
-    emb = load(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").alias("v")
-    )
+    emb = _corpus(spark, sf_dir)
     cents = [
         np.asarray(r.v, np.float64)
         for r in emb.filter(F.col("vec_id") < KMEANS_K).orderBy("vec_id").collect()
     ]
-    # centroid index == vec_id because ids are dense from 0 (asserted)
-    assert len(cents) == KMEANS_K
+    # the oracle's centroid id is the vec_id: the index equals it only when
+    # ids 0..KMEANS_K-1 all exist
+    if len(cents) != KMEANS_K:
+        raise ValueError(
+            f"sim_kmeans_assign needs vec_ids 0..{KMEANS_K - 1}, found {len(cents)}"
+        )
     assigned = ivf_assign(emb, list(enumerate(cents)))
     return assigned.select("vec_id", F.col("centroid_id").cast("bigint"))
 
@@ -410,8 +428,6 @@ def _kmeans_fit_md5_oracle() -> str:
     pins the iteration to a shared fixed point — floating reduce-order
     drift cannot compound across rounds). Empty clusters keep the previous
     centroid via the LEFT JOIN coalesce, mirroring kmeans_fit."""
-    from fs2_osm_spark.functions.text import h16_sql
-
     h = h16_sql("CAST(vec_id AS VARCHAR)")
 
     def cos(a: str, b: str) -> str:
@@ -491,28 +507,8 @@ def sim_kmeans_fit_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     survive the 1e-9 quantizer, so the trajectories stay bit-identical).
     The DuckDB twin unrolls the whole fit as chained SQL CTEs and
     re-derives every assignment and centroid independently."""
-    import numpy as np
-
-    from fs2_osm_spark.functions.text import h16_sql
-    from fs2_osm_spark.operators.similarity import (
-        kmeans_assignments,
-        kmeans_fit,
-    )
-
-    emb = load(spark, sf_dir, "embeddings")
-    corpus = emb.select("vec_id", F.col("embedding").alias("v"))
-    h = F.expr(h16_sql("CAST(vec_id AS STRING)")).cast("bigint")
-    sampled = (
-        corpus.withColumn("h", h)
-        .filter(F.pmod(F.col("h"), F.lit(IVF_MOD)) == 0)
-        .orderBy("h", "vec_id")
-        .limit(IVF_K)
-        .collect()
-    )
-    init = [
-        (i, np.round(np.asarray(r.v, np.float64), KMFIT_ROUND))
-        for i, r in enumerate(sampled)
-    ]
+    corpus = _corpus(spark, sf_dir)
+    init = [(i, np.round(v, KMFIT_ROUND)) for i, v in _md5_centroids(corpus)]
     model = kmeans_fit(
         corpus, k=IVF_K, n_iters=KMFIT_ITERS, init=init,
         round_decimals=KMFIT_ROUND,
@@ -543,7 +539,6 @@ def sim_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     by the portable md5 twin (sim_kmeans_fit_md5, full unrolled DuckDB
     re-derivation). Returns one row per vector with its cluster and
     similarity to the fitted centroid."""
-    from fs2_osm_spark.operators.similarity import kmeans_assignments, kmeans_fit
     from fs2_osm_spark.synth.staging import ensure_sim_fixture
     from fs2_osm_spark.synth.vectors import sim_corpus
 
@@ -551,11 +546,6 @@ def sim_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = sim_corpus(spark)
     model = kmeans_fit(corpus, k=8, n_iters=3, round_decimals=9)
     return kmeans_assignments(corpus, model)
-
-
-PQ_M = 8       # subspaces
-PQ_D = 8       # dims per subspace (embeddings are 64-d)
-PQ_K = 16      # codewords per subspace -> 4-bit codes
 
 
 def _pq_oracle() -> str:
@@ -613,23 +603,13 @@ def sim_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     one BIGINT (32x compression: 256-byte float32 vector -> one
     8-byte packed long), plus the reconstruction
     cosine measuring quantization quality. The kernel (one numpy matmul
-    per subspace per Arrow batch against the broadcast codebook) is
+    per subspace per Arrow batch against the codebook it captures) is
     operators/similarity.pq_encode_recon — shared with sim_pq_trained so
     the encode semantics cannot desynchronize; the oracle re-derives
     codes, packing, and reconstruction independently in SQL with the same
     expanded L2 form."""
-    import numpy as np
-
-    from fs2_osm_spark.operators.similarity import pq_encode_recon
-
-    emb = load(spark, sf_dir, "embeddings")
-    corpus = emb.select("vec_id", F.col("embedding").alias("v"))
-    cb_rows = (
-        corpus.filter(F.col("vec_id") < PQ_K).orderBy("vec_id").collect()
-    )
-    cmat = np.asarray([r.v for r in cb_rows], np.float64)  # (K, 64)
-    subs = [cmat[:, m * PQ_D : (m + 1) * PQ_D] for m in range(PQ_M)]
-    return pq_encode_recon(corpus, subs)
+    corpus = _corpus(spark, sf_dir)
+    return pq_encode_recon(corpus, _fixed_codebook(corpus))
 
 
 PQ_PROBE = 6             # IVF lists probed by ADC search (ADC scoring is
@@ -647,8 +627,6 @@ def _pq_ann_oracle() -> str:
     exact BIGINT arithmetic on both engines, so candidate ranking cannot
     drift on float reduce order), top-RERANK shortlist, exact cosine
     rerank with the engine's (round(cos,7) DESC, id) tie-break."""
-    from fs2_osm_spark.functions.text import h16_sql
-
     h = h16_sql("CAST(vec_id AS VARCHAR)")
     sub = f"v[m.m * {PQ_D} + 1 : m.m * {PQ_D} + {PQ_D}]"
     d2 = (
@@ -770,46 +748,21 @@ def sim_pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     The DuckDB twin re-derives the whole pipeline — codes, probes, integer
     LUTs, ADC sums, shortlist, rerank — independently in SQL; recall vs
     exact brute force is pinned by tests/test_pq_ann.py."""
-    import numpy as np
-
-    from fs2_osm_spark.functions.text import h16_sql
-    from fs2_osm_spark.operators.similarity import (
-        ivf_assign,
-        pq_adc_search,
-        pq_codes,
-    )
-
-    emb = load(spark, sf_dir, "embeddings")
-    corpus = emb.select("vec_id", F.col("embedding").alias("v"))
-
-    # coarse quantizer: the portable md5-strided sample
-    h = F.expr(h16_sql("CAST(vec_id AS STRING)")).cast("bigint")
-    sampled = (
-        corpus.withColumn("h", h)
-        .filter(F.pmod(F.col("h"), F.lit(IVF_MOD)) == 0)
-        .orderBy("h", "vec_id")
-        .limit(IVF_K)
-        .collect()
-    )
-    cents = [(i, np.asarray(r.v, np.float64)) for i, r in enumerate(sampled)]
-    cm = np.stack([c for _, c in cents])
-
-    # codebook: first PQ_K corpus vectors' sub-slices (fixed, no fit)
-    cb_rows = corpus.filter(F.col("vec_id") < PQ_K).orderBy("vec_id").collect()
-    cmat = np.asarray([r.v for r in cb_rows], np.float64)
-    subs = [cmat[:, m * PQ_D : (m + 1) * PQ_D] for m in range(PQ_M)]
+    corpus = _corpus(spark, sf_dir)
+    cents = _md5_centroids(corpus)
+    subs = _fixed_codebook(corpus)
 
     # compressed index: codes only, vectors dropped
     index = pq_codes(ivf_assign(corpus, cents), subs)
 
     # query side, driver-built (O(N_QUERIES) rows): probe lists + int LUTs
-    q_rows = corpus.filter(F.col("vec_id") < N_QUERIES).orderBy("vec_id").collect()
+    q_rows = _queries(corpus).orderBy("query_id").collect()
     return pq_adc_search(
         index,
         corpus,
-        q_ids=np.asarray([r.vec_id for r in q_rows], np.int64),
-        qmat=np.asarray([r.v for r in q_rows], np.float64),
-        cents=cm,
+        q_ids=np.asarray([r.query_id for r in q_rows], np.int64),
+        qmat=np.asarray([r.qv for r in q_rows], np.float64),
+        cents=np.stack([c for _, c in cents]),
         subs=subs,
         n_probe=PQ_PROBE,
         rerank=PQ_RERANK,
@@ -928,17 +881,10 @@ def sim_pq_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     packing and reconstruction cosine independently. Codebook quality
     improvement over the fixed sample codebook is pinned by
     tests/test_pq_ann.py."""
-    import numpy as np
-
-    from fs2_osm_spark.operators.similarity import pq_encode_recon, pq_train
-
-    emb = load(spark, sf_dir, "embeddings")
-    corpus = emb.select("vec_id", F.col("embedding").alias("v"))
-    cb_rows = corpus.filter(F.col("vec_id") < PQ_K).orderBy("vec_id").collect()
-    cmat = np.asarray([r.v for r in cb_rows], np.float64)
-    subs0 = [cmat[:, m * PQ_D : (m + 1) * PQ_D] for m in range(PQ_M)]
+    corpus = _corpus(spark, sf_dir)
     trained = pq_train(
-        corpus, subs0, n_iters=PQ_TRAIN_ITERS, round_decimals=PQ_TRAIN_ROUND
+        corpus, _fixed_codebook(corpus), n_iters=PQ_TRAIN_ITERS,
+        round_decimals=PQ_TRAIN_ROUND,
     )
     return pq_encode_recon(corpus, trained)
 
@@ -957,24 +903,7 @@ def sim_ivf_ann_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     post-filtering a top-k that may then underflow k). Same md5-portable
     quantizer as sim_ivf_ann_md5; the DuckDB twin applies the identical
     predicate to its assigned CTE."""
-    import numpy as np
-
-    from fs2_osm_spark.functions.text import h16_sql
-    from fs2_osm_spark.operators.similarity import ivf_assign, ivf_search
-
-    emb = load(spark, sf_dir, "embeddings")
-    corpus = emb.select("vec_id", F.col("embedding").alias("v"))
-    h = F.expr(h16_sql("CAST(vec_id AS STRING)")).cast("bigint")
-    sampled = (
-        corpus.withColumn("h", h)
-        .filter(F.pmod(F.col("h"), F.lit(IVF_MOD)) == 0)
-        .orderBy("h", "vec_id")
-        .limit(IVF_K)
-        .collect()
-    )
-    cents = [(i, np.asarray(r.v, np.float64)) for i, r in enumerate(sampled)]
+    corpus = _corpus(spark, sf_dir)
+    cents = _md5_centroids(corpus)
     assigned = ivf_assign(corpus, cents).filter(F.expr(ANN_FILTER_SQL))
-    queries = corpus.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    return ivf_search(assigned, cents, queries, k=TOP_K, n_probe=IVF_PROBE)
+    return ivf_search(assigned, cents, _queries(corpus), k=TOP_K, n_probe=IVF_PROBE)

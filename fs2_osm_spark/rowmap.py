@@ -1,21 +1,29 @@
-"""One adapter for per-row Python kernels: ``map_rows``.
+"""The two Arrow kernel adapters: ``map_rows`` and ``map_columns``.
 
 Domain work that cannot be Column math — image, audio and geometry passes,
 the PBF entity decode (one frame file or encoded block in, its entities
-out) — is a function of one input row. The adapter owns everything around
+out) — is a function of one input row. ``map_rows`` owns everything around
 that function: the column selection, the Arrow batch loop, plain Python
 values in and typed Arrow arrays out. A kernel is a generator over one
 row's values.
 
-Batch and column kernels (PIP, PQ/IVF encode, the synth generators) work
-on whole Arrow columns and call ``mapInArrow``/``mapInPandas`` themselves.
+Vectorized numpy work that emits one value per input row (IVF assignment
+and probing, PQ encoding, S2 cell ids) goes through ``map_columns``: the
+kernel sees whole batch columns as numpy arrays, a vector column as one
+matrix, and returns one array per output column.
+
+Kernels that change the row count per batch (PIP, the cover builder, the
+PBF writer, the synth generators) call ``mapInArrow``/``mapInPandas``
+themselves.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable, Iterable, Iterator, Sequence
 
+import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
@@ -54,3 +62,52 @@ def map_rows(
                 yield pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
 
     return df.select(*cols).mapInArrow(run, schema)
+
+
+def _column_array(col: pa.Array, name: str) -> np.ndarray:
+    """One batch column as numpy: a list column as a (rows, width) float64
+    matrix reshaped from its values buffer (no per-row boxing), any other
+    column as a 1-D array."""
+    if not pa.types.is_list(col.type):
+        return col.to_numpy(zero_copy_only=False)
+    lens = pc.list_value_length(col).to_numpy(zero_copy_only=False)
+    if col.null_count or (lens != lens[0]).any():
+        raise ValueError(
+            f"map_columns: column {name!r} needs one non-null vector of one "
+            f"width per row in a batch"
+        )
+    return np.asarray(col.flatten(), np.float64).reshape(len(col), -1)
+
+
+def map_columns(
+    df: DataFrame,
+    keep: Sequence[str],
+    cols: Sequence[str],
+    fn: Callable[..., Sequence],
+    fields: Sequence[T.StructField],
+) -> DataFrame:
+    """``df``'s ``keep`` columns plus ``fields``, computed ``fn(*arrays)`` over
+    ``cols`` one Arrow batch at a time.
+
+    ``fn`` receives the batch's ``cols`` as numpy arrays: a ``list<number>``
+    column as one (rows, width) float64 matrix, any other column as a 1-D
+    array. It returns one array per field, one value per input row; each
+    becomes an Arrow array of the field's type, appended after the kept
+    columns. Zero-row batches are skipped. A vector column whose rows in one
+    batch are null or differ in width raises ValueError naming it. One
+    narrow ``mapInArrow`` stage."""
+    schema = T.StructType([df.schema[c] for c in keep] + list(fields))
+    arrow_schema = to_arrow_schema(schema)
+    new_types = arrow_schema.types[len(keep) :]
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            if not batch.num_rows:
+                continue
+            out = fn(*(_column_array(batch.column(c), c) for c in cols))
+            arrays = [batch.column(c) for c in keep] + [
+                pa.array(a, t) for a, t in zip(out, new_types, strict=True)
+            ]
+            yield pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
+
+    return df.select(*dict.fromkeys([*keep, *cols])).mapInArrow(run, schema)

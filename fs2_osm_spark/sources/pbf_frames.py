@@ -41,28 +41,7 @@ from fs2_osm_spark.sources.proto_wire import (
     decode_primitive_block,
     encode_blob,
     encode_blob_header,
-    encode_primitive_block,
 )
-
-
-def encode_block(
-    ids: list[int],
-    lats: list[int],
-    lons: list[int],
-    keys_vals: list[int],
-    string_table: list[str],
-    granularity: int = 100,
-    lat_offset: int = 0,
-    lon_offset: int = 0,
-    dense_info: bytes | None = None,
-    date_granularity: int = 1000,
-) -> bytes:
-    """Protobuf PrimitiveBlock bytes (ids/lats/lons delta-coded, as on the
-    wire)."""
-    return encode_primitive_block(
-        ids, lats, lons, keys_vals, string_table,
-        granularity, lat_offset, lon_offset, dense_info, date_granularity,
-    )
 
 
 def write_frames(path: str, blocks: list[bytes]) -> None:

@@ -512,7 +512,7 @@ def sim_ground_truth(spark) -> dict[str, "pd.DataFrame"]:
     filter, `xxhash64(1, vec_id)` for the sample order — those hashes ARE
     the operators' definition, the dedup-fixture stance); everything
     downstream is recomputed driver-side with plain per-pair numpy dots
-    and python loops — none of the matmul assign kernel, the probe UDF,
+    and python loops — none of the matmul assign kernel, the probe kernel,
     the broadcast joins, or the distributed mean-update under test.
 
     - ivf_ann: strided centroid sample -> argmax-cosine inverted lists ->

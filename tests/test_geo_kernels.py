@@ -112,7 +112,8 @@ def test_hex_parent_contains_child_center(spark):
     rows = [(float(lo), float(la)) for lo, la in zip(LONS[:300], LATS[:300])]
     df = spark.createDataFrame(rows, "lon double, lat double")
     child = hex_cell(F.col("lon"), F.col("lat"), 9)
-    got = df.select(child.alias("child"), hex_parent(child, 8).alias("parent")).collect()
+    parent = hex_parent(child, 8, child_res=9)
+    got = df.select(child.alias("child"), parent.alias("parent")).collect()
     childs = np.array([r.child for r in got], dtype=np.int64)
     parents = np.array([r.parent for r in got], dtype=np.int64)
     clon, clat = hex_center_np(childs)
@@ -122,19 +123,16 @@ def test_hex_parent_contains_child_center(spark):
 
 def test_hex_arguments_out_of_range_raise(spark):
     """res 13 would overflow the cell-id packing; a parent must be coarser
-    than its child (or than res 12 when the child's res is dynamic). Each
-    raises ValueError, also through knn_kring's res."""
+    than its child. Each raises ValueError, also through knn_kring's res."""
     from pyspark.sql import functions as F
 
-    from fs2_osm_spark.functions.hex import MAX_RES, hex_cell, hex_parent
+    from fs2_osm_spark.functions.hex import hex_cell, hex_parent
     from fs2_osm_spark.operators.knn import knn_kring
 
     with pytest.raises(ValueError, match="res"):
         hex_cell(F.col("lon"), F.col("lat"), 13)
     with pytest.raises(ValueError, match="parent_res"):
         hex_parent(F.col("cell"), 9, child_res=9)
-    with pytest.raises(ValueError, match="parent_res"):
-        hex_parent(F.col("cell"), MAX_RES)  # no finer child res exists
     pts = spark.createDataFrame([(0, 9.2, 52.2)], "id long, lon double, lat double")
     with pytest.raises(ValueError, match="res"):
         knn_kring(pts.withColumnRenamed("id", "query_id"),
@@ -142,6 +140,11 @@ def test_hex_arguments_out_of_range_raise(spark):
 
 
 # ------------------------------------------------------------------ s2 -----
+def test_s2_level_out_of_range_raises():
+    with pytest.raises(ValueError, match="level"):
+        s2m.s2_cell_np(LONS, LATS, 31)
+
+
 def test_s2_level_and_parent():
     for level in (10, 16, 30):
         cells = s2m.s2_cell_np(LONS, LATS, level)

@@ -22,10 +22,10 @@ from fs2_osm_spark.sources.http_source import (
     read_nodes_from_urls,
 )
 from fs2_osm_spark.sources.pbf_frames import (
-    encode_block,
     read_nodes_from_frames,
     write_frames,
 )
+from fs2_osm_spark.sources.proto_wire import encode_primitive_block
 
 
 @pytest.fixture(scope="module")
@@ -33,7 +33,7 @@ def served_fixture():
     """Temp dir with two framed .osm.pbf files served over loopback."""
     d = tempfile.mkdtemp(prefix="http_fx_")
     for i, base in enumerate((1, 1001)):
-        block = encode_block(
+        block = encode_primitive_block(
             ids=[base, 1, 1],
             lats=[500000000 + i, 1000000, 1000000],
             lons=[80000000, 1000000, 1000000],

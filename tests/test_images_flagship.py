@@ -24,6 +24,8 @@ def test_png_roundtrip_lossless():
     rng = np.random.default_rng(7)
     img = rng.integers(0, 256, size=(24, 32, 3), dtype=np.uint8)
     assert (decode_png(encode_png(img)) == img).all()
+    with pytest.raises(ValueError, match="HxWx3 uint8"):
+        encode_png(img[:, :, 0])  # a 2-D image; an assert would vanish under -O
 
 
 def test_lossy_roundtrip_psnr():

@@ -134,6 +134,22 @@ def test_pq_encode_rejects_codebooks_wider_than_4_bits(spark, n_codewords, n_sub
         pq_encode_recon(corpus, subs)
 
 
+def test_pq_encode_and_lut_reject_vectors_wider_than_the_codebook(spark):
+    """A 4 x 4 codebook covers 16 dims: 20-d vectors and queries raise
+    instead of being encoded on their first 16 dims."""
+    from fs2_osm_spark.operators.similarity import pq_codes, pq_lut
+
+    corpus = spark.createDataFrame(
+        [(0, 0, [0.5] * 20)], "vec_id long, centroid_id long, v array<double>"
+    )
+    subs = [np.eye(4)] * 4
+    msg = "PQ codebook covers 4 x 4 dims, vectors have width 20"
+    with pytest.raises(Exception, match=f"ValueError: {msg}"):
+        pq_codes(corpus, subs).collect()
+    with pytest.raises(ValueError, match=msg):
+        pq_lut(np.zeros((2, 20)), subs, 1_000_000)
+
+
 def test_pq_ann_plan_has_no_cartesian(spark):
     from fs2_osm_spark.queries.registry import QUERIES
 

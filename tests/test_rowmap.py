@@ -1,12 +1,15 @@
-"""The row-kernel adapter ``map_rows``: fan-out, empty batches, nulls,
-nested/binary output types, and kernel errors reaching the driver."""
+"""The kernel adapters. ``map_rows``: fan-out, empty batches, nulls,
+nested/binary output types, and kernel errors reaching the driver.
+``map_columns``: matrix and 1-D kernels, empty frames, and ragged or null
+vector rows."""
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 from pyspark.sql import types as T
 
-from fs2_osm_spark.rowmap import map_rows
+from fs2_osm_spark.rowmap import map_columns, map_rows
 
 
 def test_one_to_many_kernel(spark):
@@ -98,4 +101,54 @@ def test_row_of_wrong_width_fails(spark):
 
     out = map_rows(spark.range(0, 5, 1, 1), ["id"], kernel, "n long")
     with pytest.raises(Exception, match=r"zip\(\) argument \d+ is (longer|shorter)"):
+        out.collect()
+
+
+def _vectors(spark, rows):
+    """(id, v) rows in one partition, so they share one Arrow batch."""
+    return spark.createDataFrame(rows, "id long, v array<double>").coalesce(1)
+
+
+def test_map_columns_matrix_and_1d_kernels(spark):
+    """A vector column arrives as one (rows, width) matrix, a scalar column
+    as a 1-D array; the outputs follow the kept columns."""
+    df = _vectors(spark, [(1, [1.0, 2.0]), (2, [3.0, 4.0]), (3, [5.0, 6.0])])
+    fields = [
+        T.StructField("norm2", T.DoubleType(), False),
+        T.StructField("twice", T.LongType(), False),
+    ]
+
+    def kernel(v, i):
+        assert v.shape == (len(i), 2) and v.dtype == np.float64 and i.ndim == 1
+        return (v * v).sum(axis=1), i * 2
+
+    out = map_columns(df, ["id", "v"], ["v", "id"], kernel, fields)
+    assert out.columns == ["id", "v", "norm2", "twice"]
+    assert sorted(tuple(r) for r in out.collect()) == [
+        (1, [1.0, 2.0], 5.0, 2), (2, [3.0, 4.0], 25.0, 4), (3, [5.0, 6.0], 61.0, 6),
+    ]
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInArrow") == 1 and "MapInPandas" not in plan
+
+
+def test_map_columns_empty_frame_keeps_schema(spark):
+    df = _vectors(spark, [(1, [1.0])]).filter("id < 0")
+    out = map_columns(
+        df, ["id"], ["v"], lambda v: (v[:, 0],),
+        [T.StructField("x", T.DoubleType(), False)],
+    )
+    assert out.collect() == [] and out.columns == ["id", "x"]
+    assert out.schema["x"].dataType == T.DoubleType()
+
+
+@pytest.mark.parametrize(
+    "rows", [[(1, [1.0, 2.0]), (2, [3.0])], [(1, [1.0, 2.0]), (2, None)]],
+    ids=["ragged", "null"],
+)
+def test_map_columns_rejects_ragged_or_null_vectors(spark, rows):
+    out = map_columns(
+        _vectors(spark, rows), ["id"], ["v"], lambda v: (v[:, 0],),
+        [T.StructField("x", T.DoubleType(), False)],
+    )
+    with pytest.raises(Exception, match="ValueError: map_columns: column 'v'"):
         out.collect()

@@ -17,11 +17,11 @@ from fs2_osm_spark.operators.partitioning import (
 )
 from fs2_osm_spark.operators.skew import salted_broadcast_join, salted_count_sum
 from fs2_osm_spark.sources.pbf_frames import (
-    encode_block,
     iter_frames,
     read_nodes_from_frames,
     write_frames,
 )
+from fs2_osm_spark.sources.proto_wire import encode_primitive_block
 
 
 def test_salted_agg_equals_plain(spark):
@@ -94,11 +94,12 @@ def test_hilbert_range_partition_locality(spark):
 
 def test_frame_roundtrip_and_spark_decode(spark):
     blocks = [
-        encode_block([42, 1, 2], [530000000, 10000000, 2000000],
-                     [100000000, 5000000, 1000000], [1, 2, 0, 0, 0],
-                     ["", "amenity", "cafe"]),
-        encode_block([7], [10000000], [10000000], [0], [""],
-                     granularity=200, lat_offset=500000000, lon_offset=-300000000),
+        encode_primitive_block([42, 1, 2], [530000000, 10000000, 2000000],
+                               [100000000, 5000000, 1000000], [1, 2, 0, 0, 0],
+                               ["", "amenity", "cafe"]),
+        encode_primitive_block([7], [10000000], [10000000], [0], [""],
+                               granularity=200, lat_offset=500000000,
+                               lon_offset=-300000000),
     ]
     with tempfile.TemporaryDirectory() as d:
         path = os.path.join(d, "fixture.opf")
@@ -122,7 +123,7 @@ def test_frame_corruption_detected(spark):
 
     from fs2_osm_spark.sources.proto_wire import encode_blob, encode_blob_header
 
-    payload = encode_block([1], [0], [0], [0], [""])
+    payload = encode_primitive_block([1], [0], [0], [0], [""])
     blob = encode_blob(zlib.compress(payload), len(payload) + 5)  # wrong raw size
     hdr = encode_blob_header("OSMData", len(blob))
     data = struct.pack(">i", len(hdr)) + hdr + blob
@@ -141,7 +142,7 @@ def test_pbf_wire_format_is_real_protobuf():
         write_varint_field,
     )
 
-    blk = encode_block(
+    blk = encode_primitive_block(
         [42, -1, 2], [530000000, -10000000, 2000000], [1, 2, 3],
         [1, 2, 0], ["", "k", "v"], granularity=200,
         lat_offset=500000000, lon_offset=-300000000,
@@ -177,7 +178,7 @@ def test_info_timestamps_respect_date_granularity(spark):
     from fs2_osm_spark.sources.proto_wire import encode_dense_info
 
     di = encode_dense_info([1, 1], [750_000_000, 5], [7, 1], [3, 0], [1, 0])
-    blk = encode_block(
+    blk = encode_primitive_block(
         [100, 1], [0, 1], [0, 1], [], ["", "alice"],
         dense_info=di, date_granularity=2000,
     )

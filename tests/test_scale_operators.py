@@ -22,6 +22,8 @@ from fs2_osm_spark.operators.similarity import (
     ivf_assign,
     ivf_centroids,
     ivf_search,
+    pq_codes,
+    pq_encode_recon,
 )
 
 
@@ -127,6 +129,53 @@ def test_ivf_recall_vs_brute_force(vectors):
     a = {(r.query_id, r.neighbor_id) for r in approx.collect()}
     recall = len(e & a) / len(e)
     assert recall >= 0.8, recall
+
+
+def _column_kernel(vectors, op):
+    cents = ivf_centroids(vectors, n_centroids=8)
+    subs = [np.eye(4)] * 4  # 4 subspaces x 4 codewords over the 16 dims
+    listed = vectors.withColumn("centroid_id", F.col("vec_id") % 8)
+    if op == "ivf_assign":
+        return ivf_assign(vectors, cents)
+    if op == "pq_codes":
+        return pq_codes(listed, subs)
+    if op == "pq_encode_recon":
+        return pq_encode_recon(vectors, subs)
+    queries = vectors.filter(F.col("vec_id") < 5).select(
+        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
+    )
+    return ivf_search(listed, cents, queries, k=3, n_probe=2)
+
+
+@pytest.mark.parametrize("op", ["ivf_assign", "pq_codes", "pq_encode_recon", "ivf_search"])
+def test_column_kernels_are_one_map_in_arrow(vectors, op):
+    """Every IVF and PQ batch kernel is one rowmap.map_columns stage: one
+    MapInArrow, no pandas map and no scalar Python UDF."""
+    plan = _column_kernel(vectors, op)._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("MapInArrow") == 1, plan
+    for node in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
+        assert node not in plan, plan
+
+
+def test_ivf_centroid_ties_go_to_the_lower_index(spark):
+    """Centroids 0-19 are one far vector and 20-39 one near vector, so the
+    near ones tie exactly. Assignment takes index 20, and the probe lists
+    20 first: with n_probe=1 only list 20 (vec 1) is searched, not list 24
+    (vec 2)."""
+    near, far = np.array([1.0, 0.1, 0.0, 0.0]), np.array([0.0, 0.0, 1.0, 0.0])
+    cents = list(enumerate([far] * 20 + [near] * 20))
+    corpus = spark.createDataFrame(
+        pd.DataFrame({"vec_id": [0, 1, 2], "v": [near.tolist()] * 3})
+    )
+    assert {r.centroid_id for r in ivf_assign(corpus, cents).collect()} == {20}
+    listed = corpus.withColumn(
+        "centroid_id", F.when(F.col("vec_id") == 2, 24).otherwise(20).cast("long")
+    )
+    queries = corpus.filter(F.col("vec_id") == 0).select(
+        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
+    )
+    out = ivf_search(listed, cents, queries, k=3, n_probe=1)
+    assert [r.neighbor_id for r in out.collect()] == [1]
 
 
 def test_knn_kring_matches_brute_force(spark):

@@ -33,7 +33,7 @@ def test_fixture_matches_live_ground_truth(spark):
 
 
 def test_engine_queries_match_fixture(spark):
-    """The distributed pipelines (matmul assign kernel, probe UDF,
+    """The distributed pipelines (matmul assign kernel, probe kernel,
     broadcast joins, shuffle mean-update) reproduce the brute-force
     fixture bit-for-bit — the same comparison the driver's oracle makes,
     pinned here so a regression fails before the round gate."""
