@@ -104,8 +104,7 @@ def s2_cell_np(
     lon_deg: np.ndarray, lat_deg: np.ndarray, level: int = 30
 ) -> np.ndarray:
     """lat/lon arrays -> S2 cell ids at ``level`` (int64 view of uint64 ids)."""
-    if not 0 <= level <= MAX_LEVEL:
-        raise ValueError(f"S2 level must be in 0..{MAX_LEVEL}, got {level}")
+    _check_level(level)
     x, y, z = _xyz(np.asarray(lon_deg, np.float64), np.asarray(lat_deg, np.float64))
     face, u, v = _face_uv(x, y, z)
     i, j = _ij(_st(u)), _ij(_st(v))
@@ -120,11 +119,7 @@ def s2_cell_np(
         orientation = orientation ^ _POS_TO_ORIENTATION[p]
 
     cell = (face.astype(np.uint64) << np.uint64(61)) | (pos << np.uint64(1)) | np.uint64(1)
-    if level < MAX_LEVEL:
-        lsb = np.uint64(1) << np.uint64(2 * (MAX_LEVEL - level))
-        # parent truncation: (id & -new_lsb) | new_lsb
-        cell = (cell & (~lsb + np.uint64(1))) | lsb
-    return cell.view(np.int64)
+    return s2_parent(cell, level)
 
 
 def s2_level(cell: np.ndarray) -> np.ndarray:
@@ -142,10 +137,17 @@ def s2_level(cell: np.ndarray) -> np.ndarray:
 
 
 def s2_parent(cell: np.ndarray, level: int) -> np.ndarray:
-    """Ancestor cell id at the given (coarser) level."""
+    """Ancestor cell id at the given (coarser) level: the parent truncation
+    ``(id & -new_lsb) | new_lsb``."""
+    _check_level(level)
     c = np.asarray(cell).view(np.uint64)
     lsb = np.uint64(1) << np.uint64(2 * (MAX_LEVEL - level))
     return ((c & (~lsb + np.uint64(1))) | lsb).view(np.int64)
+
+
+def _check_level(level: int) -> None:
+    if not 0 <= level <= MAX_LEVEL:
+        raise ValueError(f"S2 level must be in 0..{MAX_LEVEL}, got {level}")
 
 
 def s2_token(cell: np.ndarray) -> np.ndarray:

@@ -9,14 +9,14 @@ whole table into ONE task, the canonical 100 TB scale-killer.
 
 distributed_prefix_sum implements the classic two-pass alternative:
 
-  1. range-partition by the global sort key (one shuffle, the same shuffle
-     a global sort would need anyway),
-  2. per-partition partial sums in a single narrow pass,
-  3. collect the P partial sums (P ~ thousands, driver-trivial), compute
-     per-partition starting offsets, broadcast them back,
-  4. second narrow pass adds the offset — every row gets its exact global
-     exclusive prefix sum with TWO narrow passes + one range shuffle,
-     never a single-task stage.
+  1. one collected job of range first keys and totals: range-partition the
+     (key, value) columns by the global sort key and aggregate each range
+     partition to its first key and its total (P rows, driver-trivial);
+  2. then a lazy window: each row's offset is the running total of the
+     ranges before its own, looked up from the collected first keys as
+     constants, and a window partitioned by that offset adds the row's
+     running sum inside its range — every row gets its exact global
+     exclusive prefix sum, never in a single-task stage.
 
 Packing then assigns bin_id = floor(prefix_sum / budget): contiguous
 documents share a bin until the budget rolls over (documents larger than
@@ -27,14 +27,8 @@ bin-packing search). offset_in_bin = prefix_sum % budget.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StructField, StructType
-
-from fs2_osm_spark.pins import persist
 
 
 def distributed_prefix_sum(
@@ -46,80 +40,68 @@ def distributed_prefix_sum(
 ) -> DataFrame:
     """Exclusive prefix sum of value_col over the global order_cols order,
     without a single-task global window. Rows keep all original columns.
-    The ranged frame is a session pin (see the recompute guard below)."""
+
+    The result is a lazy frame that gives the same answer however often it
+    is recomputed: the sampled range partitioner runs in one collected job
+    and only decides balance; from then on the ranges are constants (each
+    range's first key and its total), so a re-execution, a re-sample or an
+    AQE coalesce cannot change any row's offset. The offset lookup is a
+    binary search of nested ``when``s over struct literals of the first
+    keys (O(log ranges) comparisons per row, all in codegen). A range whose
+    total is 0 shares its offset with the next one and adds nothing to the
+    running sum, so partitioning the window by the offset stays exact.
+    Ties in order_cols get an arbitrary order, as in any row-frame window.
+    The input plan runs twice (the collected job and the result): stage an
+    expensive input first."""
     parts = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    ranged = (
-        df.repartitionByRange(parts, *[F.col(c) for c in order_cols])
+    key = F.struct(*order_cols)
+    ranges = (
+        df.select(*order_cols, value_col)
+        .repartitionByRange(parts, *order_cols)
+        .groupBy(F.spark_partition_id().alias("_pid"))
+        .agg(F.min(key).alias("first"), F.sum(value_col).alias("total"))
+        .orderBy("_pid")
+        .collect()
+    )
+    fields = [df.schema[c] for c in order_cols]
+    firsts, offsets, running = [], [], 0
+    for r in ranges:
+        firsts.append(
+            F.struct(*[F.lit(v).cast(f.dataType).alias(f.name)
+                       for f, v in zip(fields, r.first, strict=True)])
+        )
+        offsets.append(running)
+        running += r.total or 0
+    off = _range_offset(key, firsts, offsets)
+    w = Window.partitionBy("_off").orderBy(*order_cols).rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    val = F.col(value_col)
+    # key order first: the window's own sort leads with _off, constant over
+    # a range, so its sort prefix decides nothing and every comparison reads
+    # whole keys (a 2M-row string key sorted 2x slower); on rows already in
+    # key order, hence in (_off, key) order, that sort is one linear pass
+    return (
+        df.withColumn("_off", off)
+        .repartition(parts, "_off")
         .sortWithinPartitions(*order_cols)
-        # the partition id is pinned as DATA and the frame persisted: pass 1
-        # and pass 2 are separate actions, and a re-execution (or an AQE
-        # partition coalesce) between them could renumber physical
-        # partitions — reading the id from the row makes the offset lookup
-        # immune to that. At a scale where persisting the ranged frame is
-        # too big for memory+disk, stage it to a parquet table instead (the
-        # shuffle was already paid; the staging read is narrow).
-        .withColumn("_pid", F.spark_partition_id())
+        .select(
+            *df.columns,
+            (F.col("_off") + F.sum(val).over(w) - val).cast("bigint").alias(out_col),
+        )
     )
-    ranged = persist(ranged)
 
-    # pass 1: per-range-partition totals (narrow)
-    totals = (
-        ranged.groupBy("_pid").agg(F.sum(value_col).alias("_total")).collect()
-    )
-    sums = {r._pid: r._total for r in totals}
-    offsets = {}
-    running = 0
-    for p in sorted(sums):
-        offsets[p] = running
-        running += sums[p]
-    expected = dict(sums)
 
-    # pass 2: add each range-partition's start offset to the local running
-    # sum (narrow; mapInPandas preserves the sorted in-partition order
-    # across Arrow batches, and the per-_pid carry handles both batch
-    # splits and any coalescing of ranges into one task)
-    bc = df.sparkSession.sparkContext.broadcast((offsets, expected))
-    out_fields = [c for c in ranged.schema.fieldNames() if c != "_pid"] + [out_col]
-    # a new StructType: schema.add() would mutate the one PySpark caches
-    # on the caller's frame
-    schema = StructType([*df.schema.fields, StructField(out_col, LongType())])
-
-    def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        offs, exp = bc.value
-        carry: dict[int, int] = {}
-        for pdf in it:
-            if pdf.empty:  # a zero-row Arrow batch: nothing to emit
-                continue
-            pdf = pdf.copy()
-            out = []
-            for pid_val, grp in pdf.groupby("_pid", sort=False):
-                base = carry.get(pid_val, offs.get(pid_val, 0))
-                vals = grp[value_col].to_numpy()
-                csum = vals.cumsum()
-                grp = grp.copy()
-                grp[out_col] = base + csum - vals  # exclusive
-                carry[pid_val] = base + (int(csum[-1]) if len(vals) else 0)
-                out.append(grp)
-            yield pd.concat(out)[out_fields]
-        # Fail-fast guard for the release_pins() contract: if the pinned
-        # ranged frame was recomputed under a DIFFERENT physical
-        # partitioning (e.g. post-release AQE coalesce renumbers
-        # spark_partition_id), the _pid column no longer matches the
-        # collected offset map. A merged/renumbered pid shows up here as
-        # a per-pid running total that disagrees with pass 1 — raise
-        # instead of emitting silently wrong prefix sums.
-        for pid_val, end in carry.items():
-            want = offs.get(pid_val, 0) + exp.get(pid_val, 0)
-            if pid_val not in exp or end != want:
-                raise RuntimeError(
-                    "distributed_prefix_sum: ranged frame was recomputed "
-                    f"with a different partitioning (pid {pid_val}: saw "
-                    f"running total {end}, pass 1 expected {want}). "
-                    "Re-run distributed_prefix_sum instead of re-executing "
-                    "a result after release_pins()."
-                )
-
-    return ranged.mapInPandas(fn, schema)
+def _range_offset(key: Column, firsts: list[Column], offsets: list[int]) -> Column:
+    """The offset of the last range whose first key is <= key (a binary
+    search over the sorted first keys; the first range starts at the global
+    minimum, so every key has one)."""
+    if len(firsts) <= 1:
+        return F.lit(offsets[0] if offsets else 0).cast("bigint")
+    mid = len(firsts) // 2
+    return F.when(
+        key >= firsts[mid], _range_offset(key, firsts[mid:], offsets[mid:])
+    ).otherwise(_range_offset(key, firsts[:mid], offsets[:mid]))
 
 
 def pack_token_bins(

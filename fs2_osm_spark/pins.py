@@ -84,6 +84,5 @@ unpin = session_pins.unpin
 
 def release_pins() -> int:
     """Free every session pin. Only after materializing what reads them: a
-    released persist recomputes, a released checkpoint is gone, and the
-    prefix sum's recompute guard raises."""
+    released persist recomputes, and a released checkpoint is gone."""
     return session_pins.release()

@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 
 from fs2_osm_spark.functions.text import minhash_sql
 from fs2_osm_spark.io import load
-from fs2_osm_spark.operators.dedup import _band_join
+from fs2_osm_spark.operators.dedup import _band_join, shingles
 from fs2_osm_spark.queries.registry import register
 
 N_HASHES = 8
@@ -89,25 +89,8 @@ def _corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.unionByName(mut)
 
 
-def _shingles(corpus: DataFrame) -> DataFrame:
-    words = corpus.select(
-        "doc_id", F.posexplode(F.split(F.col("text"), " ")).alias("pos", "w")
-    )
-    win = Window.partitionBy("doc_id").orderBy("pos")
-    sh = F.concat_ws(
-        " ", F.col("w"), F.lead("w", 1).over(win), F.lead("w", 2).over(win)
-    )
-    # lead() yields NULL past the end; concat_ws skips nulls, so guard with
-    # an explicit null check on the last member
-    return (
-        words.select("doc_id", sh.alias("sh"), F.lead("w", 2).over(win).alias("_w2"))
-        .filter(F.col("_w2").isNotNull())
-        .select("doc_id", "sh")
-    )
-
-
 def _signatures(corpus: DataFrame) -> DataFrame:
-    sh = _shingles(corpus)
+    sh = shingles(corpus, "doc_id", "text")
     aggs = [
         F.min(F.expr(minhash_sql("sh", i))).alias(f"m{i}") for i in range(N_HASHES)
     ]
@@ -199,7 +182,7 @@ def dedup_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_jaccard_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact n-gram Jaccard verification of the LSH candidates (>= 0.5)."""
     pairs = _lsh_pairs(spark, sf_dir)
-    sh = _shingles(_corpus(spark, sf_dir)).distinct()
+    sh = shingles(_corpus(spark, sf_dir), "doc_id", "text").distinct()
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     x = sh.alias("x")
     y = sh.alias("y")

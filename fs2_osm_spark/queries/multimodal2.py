@@ -271,32 +271,22 @@ def img_shard_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Webdataset-style shard manifest: images are packed into ~64 KiB
     training shards by cumulative byte size in deterministic image_id
     order. The naive formulation is a single-task global window; this runs
-    the distributed exclusive prefix sum (range shuffle + two narrow
-    passes — the machinery sequence packing uses), so shard assignment
-    parallelizes at any corpus size. The manifest is written durably before
-    the pins are released, so a late re-execution scans the table and never
-    reaches the prefix-sum machinery (r07's cache()+count() could recompute
-    through a re-sampled range partitioner: the CORRECTNESS_r07 window)."""
-    from fs2_osm_spark.catalog import swap_durable_result
+    the distributed exclusive prefix sum (the machinery sequence packing
+    uses), so shard assignment parallelizes at any corpus size. The
+    manifest is a lazy frame: the prefix sum's range offsets are collected
+    constants, so a late re-execution gives the same shards."""
     from fs2_osm_spark.operators.packing import distributed_prefix_sum
-    from fs2_osm_spark.pins import release_pins
 
     imgs = spark.read.parquet(ensure_images_fixture()).select(
         "image_id", F.octet_length("bytes").cast("bigint").alias("sz")
     )
     off = distributed_prefix_sum(imgs, "sz", ["image_id"], out_col="off")
-    manifest = (
-        off.groupBy(F.expr(f"off div {SHARD_BUDGET}").alias("shard_id"))
-        .agg(
-            F.count(F.lit(1)).alias("n_images"),
-            F.sum("sz").alias("shard_bytes"),
-            F.min("image_id").alias("first_id"),
-            F.max("image_id").alias("last_id"),
-        )
+    return off.groupBy(F.expr(f"off div {SHARD_BUDGET}").alias("shard_id")).agg(
+        F.count(F.lit(1)).alias("n_images"),
+        F.sum("sz").alias("shard_bytes"),
+        F.min("image_id").alias("first_id"),
+        F.max("image_id").alias("last_id"),
     )
-    out = swap_durable_result(manifest, "img_shard_pack")
-    release_pins()
-    return out
 
 
 # --- img_cell_mosaic --------------------------------------------------------

@@ -341,7 +341,7 @@ def geo_s2_cell_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import types as T
 
     from fs2_osm_spark.functions.geo import synth_lat, synth_lon
-    from fs2_osm_spark.functions.s2 import s2_cell_np
+    from fs2_osm_spark.functions.s2 import s2_cell_np, s2_parent
     from fs2_osm_spark.rowmap import map_columns
 
     cust = load(spark, sf_dir, "customer")
@@ -350,9 +350,13 @@ def geo_s2_cell_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
         synth_lon(F.col("c_custkey")).alias("lon"),
         synth_lat(F.col("c_custkey")).alias("lat"),
     )
+
+    def cells(lon, lat):
+        leaf = s2_cell_np(lon, lat, 30)
+        return s2_parent(leaf, 12), leaf
+
     return map_columns(
-        pts, ["point_id"], ["lon", "lat"],
-        lambda lon, lat: (s2_cell_np(lon, lat, 12), s2_cell_np(lon, lat, 30)),
+        pts, ["point_id"], ["lon", "lat"], cells,
         [T.StructField("s2_l12", T.LongType(), False),
          T.StructField("s2_l30", T.LongType(), False)],
     )

@@ -181,13 +181,12 @@ PACK_BUDGET = 512
 def text_pack_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sequence packing: token-budget bin assignment over the global doc_id
     order (concat-and-chunk, the LM-training packing shape). The Spark side
-    runs the DISTRIBUTED prefix sum (range shuffle + two narrow passes —
-    operators/packing.py; a global Window would collapse to one task); the
-    oracle is DuckDB's single-node window cumsum, so the distributed
-    decomposition must reproduce the sequential scan exactly."""
-    from fs2_osm_spark.catalog import swap_durable_result
+    runs the DISTRIBUTED prefix sum (one collected job of range totals,
+    then a window per range — operators/packing.py; a global Window would
+    collapse to one task); the oracle is DuckDB's single-node window
+    cumsum, so the distributed decomposition must reproduce the sequential
+    scan exactly."""
     from fs2_osm_spark.operators.packing import pack_token_bins
-    from fs2_osm_spark.pins import release_pins
 
     docs = load(spark, sf_dir, "documents")
     counted = docs.select(
@@ -195,18 +194,10 @@ def text_pack_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size(F.split(F.col("text"), " ")).cast("bigint").alias("n_tokens"),
     )
     packed = pack_token_bins(counted, "n_tokens", ["doc_id"], PACK_BUDGET)
-    # durable, then release: a late re-execution through the released
-    # ranged frame would trip the prefix sum's recompute guard
-    out = swap_durable_result(
-        packed.select(
-            "doc_id", "n_tokens",
-            F.col("bin_id"),
-            F.col("offset_in_bin").cast("bigint").alias("offset_in_bin"),
-        ),
-        "text_pack_bins",
+    return packed.select(
+        "doc_id", "n_tokens", "bin_id",
+        F.col("offset_in_bin").cast("bigint").alias("offset_in_bin"),
     )
-    release_pins()
-    return out
 
 
 # deterministic mixing weights: keep-permille per source bucket (a "data
@@ -408,26 +399,19 @@ def text_global_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     document gets its position in a seeded hash order. The naive Spark
     formulation (row_number over a global ORDER BY with no partitions)
     collapses to ONE task; this runs the hash order through
-    distributed_prefix_sum (range shuffle + two narrow passes — the same
-    scale-safe machinery sequence packing uses), counting 1 per row, so
-    rank assignment parallelizes at any corpus size."""
-    from fs2_osm_spark.catalog import swap_durable_result
+    distributed_prefix_sum (the same scale-safe machinery sequence packing
+    uses), counting 1 per row, so rank assignment parallelizes at any
+    corpus size."""
     from fs2_osm_spark.operators.packing import distributed_prefix_sum
-    from fs2_osm_spark.pins import release_pins
 
     docs = load(spark, sf_dir, "documents")
     h = F.expr(h16_sql("doc_id || '|shuf'")).cast("bigint")
     keyed = docs.select("doc_id").withColumn("h", h).withColumn(
         "one", F.lit(1)
     )
-    ranked = distributed_prefix_sum(
+    return distributed_prefix_sum(
         keyed, "one", ["h", "doc_id"], out_col="shuffle_rank"
-    ).select("doc_id", F.col("shuffle_rank").cast("bigint").alias("shuffle_rank"))
-    # durable, then release: a late re-execution through the released
-    # ranged frame would trip the prefix sum's recompute guard
-    out = swap_durable_result(ranked, "text_global_shuffle")
-    release_pins()
-    return out
+    ).select("doc_id", "shuffle_rank")
 
 
 _DECON_N = 5  # n-gram size for contamination matching
@@ -802,12 +786,14 @@ def text_pipeline_end2end(spark: SparkSession, sf_dir: str) -> DataFrame:
     that the stages compose — one DuckDB CTE chain re-derives the whole
     pipeline. Scale shape: the only shuffles are the dedup hash partition,
     the gram equi-join (eval side broadcast), and the pack range shuffle —
-    filters and the mix are narrow."""
+    filters and the mix are narrow. The mixed survivors are the one durable
+    result: the prefix sum reads its input twice (range totals, then the
+    windows), and the staged table keeps the dedup and gram joins to one
+    run; the packing on top stays lazy."""
     from pyspark.sql import Window
 
     from fs2_osm_spark.catalog import swap_durable_result
     from fs2_osm_spark.operators.packing import pack_token_bins
-    from fs2_osm_spark.pins import release_pins
 
     docs = load(spark, sf_dir, "documents")
     base = docs.select("doc_id", "text", "source", "n_chars")
@@ -856,16 +842,12 @@ def text_pipeline_end2end(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("split"),
         F.size(toks).cast("bigint").alias("n_tokens"),
     )
+    mixed = swap_durable_result(mixed, "text_pipeline_end2end")
     packed = pack_token_bins(mixed, "n_tokens", ["doc_id"], PACK_BUDGET)
-    out = swap_durable_result(
-        packed.select(
-            "doc_id", "source", "split", "n_tokens",
-            "bin_id", F.col("offset_in_bin").cast("bigint").alias("offset_in_bin"),
-        ),
-        "text_pipeline_end2end",
+    return packed.select(
+        "doc_id", "source", "split", "n_tokens",
+        "bin_id", F.col("offset_in_bin").cast("bigint").alias("offset_in_bin"),
     )
-    release_pins()  # as in text_pack_bins
-    return out
 
 
 BPE_MERGES = 3

@@ -24,7 +24,7 @@ bridge (plans/pbf_pipeline.py).
 from __future__ import annotations
 
 import os
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -65,6 +65,21 @@ def _delta(vals) -> list[int]:
     return out.tolist()
 
 
+def _string_table() -> tuple[list[str], Callable[[str], int]]:
+    """A block string table (index 0 is the empty string) and the function
+    that interns a string into it, returning its index."""
+    st: list[str] = [""]
+    sid: dict[str, int] = {"": 0}
+
+    def intern(x: str) -> int:
+        if x not in sid:
+            sid[x] = len(st)
+            st.append(x)
+        return sid[x]
+
+    return st, intern
+
+
 def encode_zone_blocks(zones: np.ndarray) -> list[bytes]:
     """Zone ids -> [dense-node block, way/relation entity block]."""
     from fs2_osm_spark.synth.osm import _gen_zone_tables
@@ -76,15 +91,7 @@ def encode_zone_blocks(zones: np.ndarray) -> list[bytes]:
     ids = nd["osm_id"].to_numpy(np.int64)
     lat_u = np.round(nd["lat"].to_numpy(np.float64) * 1e7).astype(np.int64)
     lon_u = np.round(nd["lon"].to_numpy(np.float64) * 1e7).astype(np.int64)
-    st: list[str] = [""]
-    sid: dict[str, int] = {"": 0}
-
-    def intern(x: str) -> int:
-        if x not in sid:
-            sid[x] = len(st)
-            st.append(x)
-        return sid[x]
-
+    st, intern = _string_table()
     kv: list[int] = []
     if any(tags for tags in nd["tags"]):
         for tags in nd["tags"]:
@@ -96,14 +103,7 @@ def encode_zone_blocks(zones: np.ndarray) -> list[bytes]:
     )
 
     # ---- ways + relations entity group (shared string table) ----
-    st2: list[str] = [""]
-    sid2: dict[str, int] = {"": 0}
-
-    def intern2(x: str) -> int:
-        if x not in sid2:
-            sid2[x] = len(st2)
-            st2.append(x)
-        return sid2[x]
+    st2, intern2 = _string_table()
 
     def info_for(osm_id: int) -> bytes:
         ver, ts, cs, uid, user = synth_info_fields(osm_id)
@@ -131,8 +131,6 @@ def encode_zone_blocks(zones: np.ndarray) -> list[bytes]:
     # All three member kinds merge into ONE index-ordered member list per
     # relation, carrying the MemberType enum (node=0/way=1/relation=2 —
     # osmformat.proto Relation.MemberType), as real PBF relations do.
-    import pandas as pd
-
     member_frames = [
         t["relations_ways"].rename(columns={"way_id": "member_id"}).assign(mtype=1),
         t["relations_nodes"].rename(columns={"node_id": "member_id"}).assign(mtype=0),

@@ -1,13 +1,16 @@
-"""Determinism pins for the two CORRECTNESS_r07 red rows (VERDICT item 1c)
-and for the queries that release their pins before returning a durable
-result.
+"""Determinism pins for the two CORRECTNESS_r07 red rows (VERDICT item 1c),
+for the queries that release their pins before returning a durable result,
+and for the packing queries, which return lazy frames.
 
 Each query's fn runs TWICE in one session with induced cache pressure
 (`spark.catalog.clearCache()` between runs — evicting anything the first
 run cached) and the order-insensitive value hashes must match. The r07
 failure mode was exactly a second evaluation diverging from the first
-after cache state changed; the r08 durable-table swap removes the window,
-and this test keeps it removed.
+after cache state changed. The durable-table swap removes that window for
+the pinned queries; the packing queries (`img_shard_pack`, `text_*`) hold
+no pin, and their first result frame must recompute identically after
+`clearCache()`, because the prefix sum's range offsets are collected
+constants.
 """
 
 from __future__ import annotations

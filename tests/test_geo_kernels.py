@@ -143,6 +143,10 @@ def test_hex_arguments_out_of_range_raise(spark):
 def test_s2_level_out_of_range_raises():
     with pytest.raises(ValueError, match="level"):
         s2m.s2_cell_np(LONS, LATS, 31)
+    leaf = s2m.s2_cell_np(LONS, LATS, 30)
+    for level in (-1, 31):
+        with pytest.raises(ValueError, match="level"):
+            s2m.s2_parent(leaf, level)
 
 
 def test_s2_level_and_parent():
@@ -150,7 +154,7 @@ def test_s2_level_and_parent():
         cells = s2m.s2_cell_np(LONS, LATS, level)
         assert (s2m.s2_level(cells) == level).all()
     leaf = s2m.s2_cell_np(LONS, LATS, 30)
-    for level in (8, 20):
+    for level in (8, 12, 20):
         direct = s2m.s2_cell_np(LONS, LATS, level)
         via_parent = s2m.s2_parent(leaf, level)
         assert (direct == via_parent).all()
