@@ -1,9 +1,13 @@
 """Multimodal (image) operators over binary columns.
 
 Images travel as opaque `bytes` columns with typed metadata (input_hint
-schema). All pixel work happens in row kernels behind `rowmap.map_rows`
-(one Arrow-batched mapInArrow stage each) with the pure-numpy codecs — no
-image libs required.
+schema). Every pixel pass is one image pass, ``map_images``: it decodes each
+row once with the pure-numpy codecs (no image libs required) and hands the
+array to a named per-image function (``pixel_stats``, ``channel_means``,
+``roundtrip_psnr``, ``block_mean_resize``, ``augment_values``, ``phash64``)
+inside one ``rowmap.map_rows`` stage. The fixture recorders of
+synth/staging.py call the same per-image functions. Video passes decode
+media, not images, and keep their own kernels.
 
 Scale notes: the binary column is the widest thing in the table, so these
 operators keep it out of shuffles — geotag/cell/tile derivation works on
@@ -15,6 +19,8 @@ join of operators/dedup.py over the phash column.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable, Sequence
 
 import numpy as np
 from pyspark.sql import Column, DataFrame
@@ -73,20 +79,45 @@ def geotag(images: DataFrame) -> DataFrame:
     )
 
 
-DECODE_STATS_SCHEMA = T.StructType(
-    [
-        T.StructField("image_id", T.StringType(), False),
-        T.StructField("dec_w", T.IntegerType(), False),
-        T.StructField("dec_h", T.IntegerType(), False),
-        T.StructField("mean_r", T.DoubleType(), False),
-        T.StructField("mean_g", T.DoubleType(), False),
-        T.StructField("mean_b", T.DoubleType(), False),
-        T.StructField("std_r", T.DoubleType(), False),
-        T.StructField("std_g", T.DoubleType(), False),
-        T.StructField("std_b", T.DoubleType(), False),
-        T.StructField("phash_match", T.BooleanType(), False),
-    ]
-)
+def map_images(
+    images: DataFrame,
+    inputs: Sequence[str],
+    fn: Callable[..., tuple],
+    fields: Sequence[T.StructField],
+    id_col: str = "image_id",
+) -> DataFrame:
+    """The one image pass: rows ``(id_col, *fields)``, one per image.
+
+    Selects ``[id_col, "bytes", "fmt", *inputs]``, decodes each row's bytes
+    once with ``decode_image`` and emits ``(id, *fn(img, fmt, *values))``
+    where ``values`` are the row's ``inputs``. The id field is a non-null
+    string. One narrow ``rowmap.map_rows`` stage, no shuffle."""
+    schema = T.StructType([T.StructField(id_col, T.StringType(), False), *fields])
+
+    def kernel(row_id, data, fmt, *values):
+        yield (row_id, *fn(decode_image(data, fmt), fmt, *values))
+
+    return map_rows(images, [id_col, "bytes", "fmt", *inputs], kernel, schema)
+
+
+def _not_null(spark_type: T.DataType, *names: str) -> list[T.StructField]:
+    return [T.StructField(n, spark_type, False) for n in names]
+
+
+_MEANS = ("mean_r", "mean_g", "mean_b")
+
+
+def channel_means(img: np.ndarray) -> list[float]:
+    """Per-channel float64 means of one decoded HxWx3 image."""
+    return img.reshape(-1, 3).astype(np.float64).mean(axis=0).tolist()
+
+
+def pixel_stats(img: np.ndarray) -> tuple:
+    """(w, h, mean_r, mean_g, mean_b, std_r, std_g, std_b) of one decoded
+    HxWx3 image."""
+    stds = img.reshape(-1, 3).astype(np.float64).std(axis=0).tolist()
+    return (img.shape[1], img.shape[0], *channel_means(img), *stds)
+
 
 # phash is designed to survive high-quality lossy compression: the JQ01
 # path decodes within a few bits of the stored hash (measured max 4 over
@@ -101,19 +132,17 @@ def decode_stats(images: DataFrame) -> DataFrame:
     for lossless PNG, hamming <= PHASH_LOSSY_TOLERANCE for the lossy JQ01
     decode — a distorting decoder breaks it either way."""
 
-    def kernel(image_id, data, fmt, phash):
-        img = decode_image(data, fmt)
-        flat = img.reshape(-1, 3).astype(np.float64)
+    def stats(img, fmt, phash):
         dist = hamming64(phash64(img), phash)
-        ph_ok = dist == 0 if fmt == "png" else dist <= PHASH_LOSSY_TOLERANCE
-        yield (
-            image_id, img.shape[1], img.shape[0],
-            *flat.mean(axis=0).tolist(), *flat.std(axis=0).tolist(), ph_ok,
-        )
+        ok = dist == 0 if fmt == "png" else dist <= PHASH_LOSSY_TOLERANCE
+        return (*pixel_stats(img), ok)
 
-    return map_rows(
-        images, ["image_id", "bytes", "fmt", "phash"], kernel, DECODE_STATS_SCHEMA
-    )
+    fields = [
+        *_not_null(T.IntegerType(), "dec_w", "dec_h"),
+        *_not_null(T.DoubleType(), *_MEANS, "std_r", "std_g", "std_b"),
+        T.StructField("phash_match", T.BooleanType(), False),
+    ]
+    return map_images(images, ["phash"], stats, fields)
 
 
 def decode_channel_means(
@@ -124,56 +153,40 @@ def decode_channel_means(
     cell mosaic). decode_stats additionally computes stds + the phash
     verification per image, which column pruning cannot remove through an
     opaque Python map (guide §4.1) — profiled at 77% of that pass's
-    per-image Python time. The mean expression is byte-for-byte the one
-    decode_stats uses, so derived luma values are bit-identical.
+    per-image Python time. Both take the means from one expression, so
+    derived luma values are bit-identical.
 
     ``carry`` names extra input columns to pass through unchanged (e.g.
     the caption): consumers that need decode output AND row metadata then
     read both off this one pass instead of equi-joining two scans of the
     corpus — at 250k images that join was its own shuffle plus a second
     full parquet scan."""
-    schema = T.StructType(
-        [T.StructField("image_id", T.StringType(), False)]
-        + [images.schema[c] for c in carry]
-        + [
-            T.StructField("mean_r", T.DoubleType(), False),
-            T.StructField("mean_g", T.DoubleType(), False),
-            T.StructField("mean_b", T.DoubleType(), False),
-        ]
+    fields = [images.schema[c] for c in carry] + _not_null(T.DoubleType(), *_MEANS)
+    return map_images(
+        images, carry, lambda img, fmt, *kept: (*kept, *channel_means(img)), fields
     )
 
-    def kernel(*vals):
-        *head, data, fmt = vals  # image_id and the carry values ride through
-        img = decode_image(data, fmt)
-        means = img.reshape(-1, 3).astype(np.float64).mean(axis=0)
-        yield (*head, *means.tolist())
 
-    return map_rows(images, ["image_id", *carry, "bytes", "fmt"], kernel, schema)
-
-
-ROUNDTRIP_SCHEMA = T.StructType(
-    [
-        T.StructField("image_id", T.StringType(), False),
-        T.StructField("caption", T.StringType(), False),
-        T.StructField("psnr_db", T.DoubleType(), False),
-        T.StructField("lossless", T.BooleanType(), False),
-    ]
-)
+def roundtrip_psnr(img: np.ndarray, fmt: str) -> float:
+    """PSNR of one decoded image against its re-encode -> decode in its own
+    codec: +inf for lossless PNG, >= 40 dB for lossy JQ01 (input_hint)."""
+    re_bytes = encode_png(img) if fmt == "png" else encode_lossy(img)
+    return psnr(img, decode_image(re_bytes, fmt))
 
 
 def pixel_roundtrip(images: DataFrame) -> DataFrame:
     """decode -> re-encode -> decode, report PSNR (input_hint invariant:
     allclose for lossless, >= 40 dB for lossy) with caption passthrough."""
 
-    def kernel(image_id, data, fmt, caption):
-        img = decode_image(data, fmt)
-        re_bytes = encode_png(img) if fmt == "png" else encode_lossy(img)
-        again = decode_image(re_bytes, fmt)
-        yield (image_id, caption, psnr(img, again), fmt == "png")
+    def roundtrip(img, fmt, caption):
+        return (caption, roundtrip_psnr(img, fmt), fmt == "png")
 
-    return map_rows(
-        images, ["image_id", "bytes", "fmt", "caption"], kernel, ROUNDTRIP_SCHEMA
-    )
+    fields = [
+        T.StructField("caption", T.StringType(), False),
+        T.StructField("psnr_db", T.DoubleType(), False),
+        T.StructField("lossless", T.BooleanType(), False),
+    ]
+    return map_images(images, ["caption"], roundtrip, fields)
 
 
 def block_mean_resize(img: np.ndarray, out_w: int, out_h: int) -> np.ndarray:
@@ -203,26 +216,22 @@ def resize_block_mean(images: DataFrame, out_w: int, out_h: int) -> DataFrame:
 
     The rasterize/vectorize round-trip building block (north_star): decode,
     transform on the numpy array, re-encode — all inside one narrow stage.
+    The phash of the DERIVED image rides along: downstream decode_stats
+    can verify the thumbnail losslessly, and thumbnail-level near-dup
+    joins get their key for free.
     """
-    schema = T.StructType(
-        [
-            T.StructField("image_id", T.StringType(), False),
-            T.StructField("bytes", T.BinaryType(), False),
-            T.StructField("w", T.IntegerType(), False),
-            T.StructField("h", T.IntegerType(), False),
-            T.StructField("fmt", T.StringType(), False),
-            T.StructField("phash", T.LongType(), False),
-        ]
-    )
 
-    def kernel(image_id, data, fmt):
-        small = block_mean_resize(decode_image(data, fmt), out_w, out_h)
-        # phash of the DERIVED image rides along: downstream decode_stats
-        # can verify the thumbnail losslessly, and thumbnail-level near-dup
-        # joins get their key for free
-        yield (image_id, encode_png(small), out_w, out_h, "png", phash64(small))
+    def thumbnail(img, fmt):
+        small = block_mean_resize(img, out_w, out_h)
+        return (encode_png(small), out_w, out_h, "png", phash64(small))
 
-    return map_rows(images, ["image_id", "bytes", "fmt"], kernel, schema)
+    fields = [
+        T.StructField("bytes", T.BinaryType(), False),
+        *_not_null(T.IntegerType(), "w", "h"),
+        T.StructField("fmt", T.StringType(), False),
+        T.StructField("phash", T.LongType(), False),
+    ]
+    return map_images(images, [], thumbnail, fields)
 
 
 FRAME_SCHEMA = T.StructType(
@@ -321,34 +330,23 @@ def sample_frames_indexed(media: DataFrame, every_n: int = 4) -> DataFrame:
 
 # --- perceptual-hash near-duplicate detection -------------------------------
 
-PHASH_FRAME_SCHEMA = T.StructType(
-    [
-        T.StructField("img_id", T.StringType(), False),
-        T.StructField("phash", T.LongType(), False),
-    ]
-)
-
-
-def phash_frame(images: DataFrame, id_col: str = "img_id") -> DataFrame:
+def phash_frame(images: DataFrame) -> DataFrame:
     """Decode every image and compute its 64-bit perceptual hash — the
     narrow (shuffle-free) pixel pass that turns a binary image table into a
-    1-row-per-image hash table the dedup machinery can band and join."""
-
-    def kernel(img_id, data, fmt):
-        yield (img_id, phash64(decode_image(data, fmt)))
-
-    return map_rows(images, [id_col, "bytes", "fmt"], kernel, PHASH_FRAME_SCHEMA)
+    1-row-per-image (img_id, phash) table the dedup machinery can band and
+    join."""
+    phash = [T.StructField("phash", T.LongType(), False)]
+    return map_images(
+        images, [], lambda img, fmt: (phash64(img),), phash, id_col="img_id"
+    )
 
 
 def phash_band_pairs(
-    hashed: DataFrame,
-    id_col: str = "img_id",
-    n_bands: int = 8,
-    hamming_t: int = 6,
+    hashed: DataFrame, n_bands: int = 8, hamming_t: int = 6
 ) -> DataFrame:
-    """Near-dup pairs (id_a, id_b), id_a < id_b, within hamming_t of each
-    other's 64-bit perceptual hash: exact banding through the one banded
-    self-join (operators/dedup.hamming_pairs, probe_bits=0).
+    """Near-dup pairs (id_a, id_b) of img_ids, id_a < id_b, within
+    hamming_t of each other's 64-bit perceptual hash: exact banding through
+    the one banded self-join (operators/dedup.hamming_pairs, probe_bits=0).
 
     With 8 bands of 8 bits, pigeonhole guarantees FULL recall for any pair
     within hamming 7 (>= the verify threshold 6): d flipped bits can dirty
@@ -356,9 +354,9 @@ def phash_band_pairs(
     n_bands-1 raises ValueError. Only (id, band, key, phash) is shuffled,
     never the pixel bytes.
     """
-    sims = hashed.select(F.col(id_col), F.col("phash").alias("simhash"))
+    sims = hashed.select("img_id", F.col("phash").alias("simhash"))
     return hamming_pairs(
-        sims, id_col, hamming_t, n_bands=n_bands, probe_bits=0
+        sims, "img_id", hamming_t, n_bands=n_bands, probe_bits=0
     ).select("id_a", "id_b")
 
 
@@ -374,31 +372,24 @@ def center_crop(img: np.ndarray) -> np.ndarray:
     return img[y0 : y0 + ch, x0 : x0 + cw]
 
 
-AUGMENT_SCHEMA = T.StructType(
-    [
-        T.StructField("image_id", T.StringType(), False),
-        T.StructField("fl_phash", T.LongType(), False),
-        T.StructField("cr_phash", T.LongType(), False),
-        T.StructField("cr_mean_r", T.DoubleType(), False),
-        T.StructField("cr_mean_g", T.DoubleType(), False),
-        T.StructField("cr_mean_b", T.DoubleType(), False),
-    ]
-)
+def augment_values(img: np.ndarray) -> tuple:
+    """(fl_phash, cr_phash, cr_mean_r, cr_mean_g, cr_mean_b) of one decoded
+    image: the phash of its horizontal flip, then the phash and channel
+    means of its ``center_crop``. Both transforms are numpy views, so the
+    cost is two aHashes."""
+    crop = center_crop(img)
+    return (phash64(img[:, ::-1]), phash64(crop), *channel_means(crop))
 
 
 def augment_stats(images: DataFrame) -> DataFrame:
     """Deterministic augmentation pass (hflip + centered half crop) with
-    verification hashes/stats per image — one narrow row-kernel pass, no
-    shuffle; the geometry ops are numpy views/slices (zero-copy) so the
-    per-image cost is the decode plus two aHashes."""
-
-    def kernel(image_id, data, fmt):
-        img = decode_image(data, fmt)
-        crop = center_crop(img)
-        cm = crop.reshape(-1, 3).astype(np.float64).mean(axis=0)
-        yield (image_id, phash64(img[:, ::-1]), phash64(crop), *cm.tolist())
-
-    return map_rows(images, ["image_id", "bytes", "fmt"], kernel, AUGMENT_SCHEMA)
+    verification hashes/stats per image — one narrow image pass, no
+    shuffle."""
+    fields = [
+        *_not_null(T.LongType(), "fl_phash", "cr_phash"),
+        *_not_null(T.DoubleType(), "cr_mean_r", "cr_mean_g", "cr_mean_b"),
+    ]
+    return map_images(images, [], lambda img, fmt: augment_values(img), fields)
 
 
 # --- video scene-cut detection ----------------------------------------------

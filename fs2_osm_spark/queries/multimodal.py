@@ -242,11 +242,12 @@ def _resize_stats_oracle() -> str:
 
 @register("img_resize_stats", oracle=_resize_stats_oracle())
 def img_resize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two chained narrow pixel passes — resize feeding decode_stats (two
-    map_rows kernels), no shuffle between them — verified against
-    the fixture's recorded thumbnail stats. phash_match must be true for
-    every row: the thumbnail is PNG (lossless), so the phash emitted by the
-    resize stage must survive the encode/decode hop exactly."""
+    """Two chained narrow image passes — resize feeding decode_stats, which
+    decodes the thumbnail's PNG on purpose — no shuffle between them,
+    verified against the fixture's recorded thumbnail stats. phash_match
+    must be true for every row: the thumbnail is PNG (lossless), so the
+    phash emitted by the resize stage must survive the encode/decode hop
+    exactly."""
     from fs2_osm_spark.synth.staging import ensure_images_fixture
 
     images = spark.read.parquet(ensure_images_fixture())

@@ -514,7 +514,8 @@ def img_text_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     derive a 64-d embedding in the text-embedding space (phash bit signs x
     live decoded channel-mean magnitudes — a deterministic stand-in for a
     learned joint encoder; the Spark-side plumbing is the real thing:
-    decode -> embed -> broadcast the small query side -> JVM higher-order
+    decode (the stored phash rides through the image pass) -> embed ->
+    broadcast the small query side -> JVM higher-order
     cosine against the full embedding corpus -> operators/similarity
     cosine_top_k, the same parity-critical left-fold cosine and top-k as
     sim_cosine_topk: ranked on round(cos, 7) with the id tie-break, scores
@@ -526,7 +527,7 @@ def img_text_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     images = spark.read.parquet(ensure_images_fixture()).where(
         F.col("image_id") < _RETRIEVAL_MAX_ID
     )
-    means = decode_channel_means(images)
+    means = decode_channel_means(images, carry=("phash",))
     chans = ("mean_r", "mean_g", "mean_b")
     feats = [
         (
@@ -536,11 +537,7 @@ def img_text_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for j in range(64)
     ]
-    queries = (
-        images.select("image_id", "phash")
-        .join(means, "image_id")
-        .select("image_id", F.array(*feats).alias("qv"))
-    )
+    queries = means.select("image_id", F.array(*feats).alias("qv"))
     corpus = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
 
     # image ids and vector ids are separate id spaces: every (image, vector)

@@ -29,9 +29,11 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from fs2_osm_spark.codecs.png import phash64
 from fs2_osm_spark.operators.dedup import band_cols
-from fs2_osm_spark.operators.multimodal import phash_frame
+from fs2_osm_spark.operators.multimodal import map_images
 from fs2_osm_spark.pins import Pins
 
 
@@ -126,11 +128,20 @@ def stream_image_dedup(
         def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
             # pin the decoded hashes: `hashed` feeds the dup join twice (probe
             # side + prior union), the flags join, and the state snapshot —
-            # unpersisted, every micro-batch would decode its images ~4x
+            # unpersisted, every micro-batch would decode its images ~4x.
+            # arrival rides through the image pass: one read of the batch
+            fields = [
+                T.StructField("phash", T.LongType(), False),
+                batch_df.schema["arrival"],
+            ]
             with Pins() as pins:
                 hashed = pins.persist(
-                    phash_frame(batch_df).join(
-                        batch_df.select("img_id", "arrival"), "img_id"
+                    map_images(
+                        batch_df,
+                        ["arrival"],
+                        lambda img, fmt, arrival: (phash64(img), arrival),
+                        fields,
+                        id_col="img_id",
                     )
                 )
                 prev_path = holder["state"]

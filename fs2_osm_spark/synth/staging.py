@@ -26,70 +26,77 @@ _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__f
 IMAGES_FIXTURE = os.path.join(_REPO_ROOT, "fixtures", "images_oracle.parquet")
 
 
+def _write_parquet(path: str, data) -> None:
+    """Write ``data`` (a pandas frame or an Arrow table) to ``path`` as
+    parquet through a ``.tmp`` sibling and a rename, so an interrupted
+    staging run never leaves a half-written fixture behind."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    if not isinstance(data, pa.Table):
+        data = pa.Table.from_pandas(data, preserve_index=False)
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    pq.write_table(data, path + ".tmp")
+    os.replace(path + ".tmp", path)
+
+
+def _record(pdf, names: tuple[str, ...], fn) -> dict[str, np.ndarray]:
+    """One recorded column per name: ``fn(img, fmt)`` returns one value per
+    name for each fixture row's decoded image. The recorders' one decode
+    loop; ``fn`` calls the per-image functions the image passes of
+    operators/multimodal.py run, so the query and its ground truth share
+    one body."""
+    from fs2_osm_spark.codecs.png import decode_image
+
+    rows = [fn(decode_image(bytes(r.bytes), r.fmt), r.fmt) for r in pdf.itertuples()]
+    return {n: np.array(c) for n, c in zip(names, zip(*rows), strict=True)}
+
+
 def decoded_stats_columns(pdf) -> dict[str, np.ndarray]:
     """Per-channel mean/std of each row's DECODED pixels (PNG exact, JQ01
     through the lossy decoder) — the recorded ground truth the
-    img_decode_stats oracle reads back. Computed once at staging time; the
-    anti-drift test recomputes a sample so a silently-changed decoder
-    invalidates the fixture loudly instead of the oracle quietly."""
-    from fs2_osm_spark.codecs.png import decode_image
+    img_decode_stats oracle reads back, from ``pixel_stats``, the function
+    decode_stats runs. Computed once at staging time; the anti-drift test
+    recomputes a sample so a silently-changed decoder invalidates the
+    fixture loudly instead of the oracle quietly."""
+    from fs2_osm_spark.operators.multimodal import pixel_stats
 
-    means = np.empty((len(pdf), 3))
-    stds = np.empty((len(pdf), 3))
-    for k, r in enumerate(pdf.itertuples()):
-        flat = decode_image(bytes(r.bytes), r.fmt).reshape(-1, 3).astype(np.float64)
-        means[k] = flat.mean(axis=0)
-        stds[k] = flat.std(axis=0)
-    return {
-        "dec_mean_r": means[:, 0], "dec_mean_g": means[:, 1],
-        "dec_mean_b": means[:, 2],
-        "dec_std_r": stds[:, 0], "dec_std_g": stds[:, 1], "dec_std_b": stds[:, 2],
-    }
+    names = ("dec_mean_r", "dec_mean_g", "dec_mean_b",
+             "dec_std_r", "dec_std_g", "dec_std_b")
+    return _record(pdf, names, lambda img, fmt: pixel_stats(img)[2:])
 
 
-def derived_image_columns(pdf) -> dict[str, object]:
+def derived_image_columns(pdf) -> dict[str, np.ndarray]:
     """Ground truth for the derived-image oracles, recorded at staging time
-    with the SAME kernels the queries run (anti-drift test recomputes a
+    with the functions the queries run (anti-drift test recomputes a
     sample, so a changed codec/resampler invalidates the fixture loudly):
 
-    - rt_psnr: decode -> re-encode -> decode PSNR (img_pixel_roundtrip).
-      NULL for lossless PNG rows (their PSNR is +inf; NULL keeps infinities
-      out of the parquet/oracle comparison entirely).
-    - rs_mean_r/g/b + rs_phash: per-channel means and phash of the 8x8
-      block-mean thumbnail (img_resize_stats).
+    - rt_psnr: ``roundtrip_psnr``, decode -> re-encode -> decode PSNR
+      (img_pixel_roundtrip). NaN, NULL in the parquet, for lossless PNG
+      rows (their PSNR is +inf; NULL keeps infinities out of the
+      parquet/oracle comparison entirely).
+    - rs_mean_r/g/b + rs_phash: ``channel_means`` and phash of the 8x8
+      ``block_mean_resize`` thumbnail (img_resize_stats).
     """
-    from fs2_osm_spark.codecs.png import (
-        decode_image,
-        encode_lossy,
-        phash64,
-        psnr,
+    from fs2_osm_spark.codecs.png import phash64
+    from fs2_osm_spark.operators.multimodal import (
+        block_mean_resize,
+        channel_means,
+        roundtrip_psnr,
     )
-    from fs2_osm_spark.operators.multimodal import block_mean_resize
 
-    rt_psnr: list[float | None] = []
-    rs_means = np.empty((len(pdf), 3))
-    rs_phash = np.empty(len(pdf), np.int64)
-    for k, r in enumerate(pdf.itertuples()):
-        img = decode_image(bytes(r.bytes), r.fmt)
-        if r.fmt == "png":
-            rt_psnr.append(None)
-        else:
-            again = decode_image(encode_lossy(img), r.fmt)
-            rt_psnr.append(float(psnr(img, again)))
+    def derived(img, fmt):
         small = block_mean_resize(img, 8, 8)
-        rs_means[k] = small.reshape(-1, 3).mean(axis=0)
-        rs_phash[k] = phash64(small)
-    return {
-        "rt_psnr": rt_psnr,
-        "rs_mean_r": rs_means[:, 0], "rs_mean_g": rs_means[:, 1],
-        "rs_mean_b": rs_means[:, 2],
-        "rs_phash": rs_phash,
-    }
+        rt = np.nan if fmt == "png" else roundtrip_psnr(img, fmt)
+        return (rt, *channel_means(small), phash64(small))
+
+    names = ("rt_psnr", "rs_mean_r", "rs_mean_g", "rs_mean_b", "rs_phash")
+    return _record(pdf, names, derived)
 
 
 def augment_image_columns(pdf) -> dict[str, np.ndarray]:
-    """Ground truth for the img_augment oracle (r07), recorded with the
-    SAME kernels the query runs (operators/multimodal.augment_stats):
+    """Ground truth for the img_augment oracle (r07), recorded with
+    ``augment_values``, the function augment_stats runs:
 
     - fl_phash: aHash64 of the horizontally flipped decode. The flip
       permutes hash-block columns, so a decoder or hasher that ignores
@@ -99,25 +106,10 @@ def augment_image_columns(pdf) -> dict[str, np.ndarray]:
       anchor) — crops change the pixel population, so these pin real
       geometry, unlike flip means which are trivially invariant.
     """
-    from fs2_osm_spark.codecs.png import decode_image, phash64
-    from fs2_osm_spark.operators.multimodal import center_crop
+    from fs2_osm_spark.operators.multimodal import augment_values
 
-    fl_phash = np.empty(len(pdf), np.int64)
-    cr_phash = np.empty(len(pdf), np.int64)
-    cr_means = np.empty((len(pdf), 3))
-    for k, r in enumerate(pdf.itertuples()):
-        img = decode_image(bytes(r.bytes), r.fmt)
-        fl_phash[k] = phash64(img[:, ::-1])
-        crop = center_crop(img)
-        cr_phash[k] = phash64(crop)
-        cr_means[k] = crop.reshape(-1, 3).astype(np.float64).mean(axis=0)
-    return {
-        "fl_phash": fl_phash,
-        "cr_phash": cr_phash,
-        "cr_mean_r": cr_means[:, 0],
-        "cr_mean_g": cr_means[:, 1],
-        "cr_mean_b": cr_means[:, 2],
-    }
+    names = ("fl_phash", "cr_phash", "cr_mean_r", "cr_mean_g", "cr_mean_b")
+    return _record(pdf, names, lambda img, fmt: augment_values(img))
 
 
 OSM_FIXTURE_DIR = os.path.join(_REPO_ROOT, "fixtures", "osm_256")
@@ -144,13 +136,9 @@ def ensure_osm_fixture(spark) -> str:
     defended by the anti-drift test in tests/test_osm_fixture_oracles.py.
     """
     if not os.path.exists(osm_fixture_path("relations_relations")):
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
         from fs2_osm_spark.functions.geom_ops import simplify_dp
         from fs2_osm_spark.synth.osm import osm_tables
 
-        os.makedirs(OSM_FIXTURE_DIR, exist_ok=True)
         t = osm_tables(spark, OSM_FIXTURE_ZONES)
         nodes = (
             t["nodes"].select("osm_id", "lon", "lat", "name")
@@ -212,9 +200,7 @@ def ensure_osm_fixture(spark) -> str:
             ("relations_nodes", relations_nodes),
             ("relations_relations", relations_relations),
         ):
-            tmp = osm_fixture_path(name) + ".tmp"
-            pq.write_table(pa.Table.from_pandas(pdf, preserve_index=False), tmp)
-            os.replace(tmp, osm_fixture_path(name))
+            _write_parquet(osm_fixture_path(name), pdf)
     return OSM_FIXTURE_DIR
 
 
@@ -236,7 +222,6 @@ def ensure_raster_fixture(spark) -> str:
     test time against the committed fixture."""
     if not os.path.exists(RASTER_FIXTURE):
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
         from fs2_osm_spark.operators.raster import (
             hot_city_tiles,
@@ -257,19 +242,13 @@ def ensure_raster_fixture(spark) -> str:
              for i in range(5)],
             names=["z", "x", "y", "covered_px", "n_rings_vectorized"],
         )
-        os.makedirs(os.path.dirname(RASTER_FIXTURE), exist_ok=True)
-        tmp = RASTER_FIXTURE + ".tmp"
-        pq.write_table(tbl, tmp)
-        os.replace(tmp, RASTER_FIXTURE)
+        _write_parquet(RASTER_FIXTURE, tbl)
     return RASTER_FIXTURE
 
 
 def ensure_images_fixture() -> str:
     """Write the staged image corpus if absent; return its absolute path."""
     if not os.path.exists(IMAGES_FIXTURE):
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
         from fs2_osm_spark.synth.images import generate_batch
 
         pdf = generate_batch(np.arange(N_FIXTURE_IMAGES, dtype=np.int64))
@@ -279,10 +258,7 @@ def ensure_images_fixture() -> str:
             pdf[name] = vals
         for name, vals in augment_image_columns(pdf).items():
             pdf[name] = vals
-        os.makedirs(os.path.dirname(IMAGES_FIXTURE), exist_ok=True)
-        tmp = IMAGES_FIXTURE + ".tmp"
-        pq.write_table(pa.Table.from_pandas(pdf, preserve_index=False), tmp)
-        os.replace(tmp, IMAGES_FIXTURE)
+        _write_parquet(IMAGES_FIXTURE, pdf)
     return IMAGES_FIXTURE
 
 
@@ -343,14 +319,7 @@ def ensure_flagship_fixture(spark) -> str:
     """Record the brute-force flagship ground truth (committed parquet;
     anti-drift test recomputes it live in tests/test_images_flagship.py)."""
     if not os.path.exists(FLAGSHIP_FIXTURE):
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        pdf = flagship_ground_truth(spark)
-        os.makedirs(os.path.dirname(FLAGSHIP_FIXTURE), exist_ok=True)
-        tmp = FLAGSHIP_FIXTURE + ".tmp"
-        pq.write_table(pa.Table.from_pandas(pdf, preserve_index=False), tmp)
-        os.replace(tmp, FLAGSHIP_FIXTURE)
+        _write_parquet(FLAGSHIP_FIXTURE, flagship_ground_truth(spark))
     return FLAGSHIP_FIXTURE
 
 
@@ -447,14 +416,8 @@ def ensure_dedup_fixture(spark) -> str:
         os.path.exists(dedup_fixture_path(n))
         for n in ("simhash_d3", "simhash_d8", "minhash_cc")
     ):
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        os.makedirs(DEDUP_FIXTURE_DIR, exist_ok=True)
         for name, pdf in dedup_ground_truth(spark).items():
-            tmp = dedup_fixture_path(name) + ".tmp"
-            pq.write_table(pa.Table.from_pandas(pdf, preserve_index=False), tmp)
-            os.replace(tmp, dedup_fixture_path(name))
+            _write_parquet(dedup_fixture_path(name), pdf)
     return DEDUP_FIXTURE_DIR
 
 
@@ -469,9 +432,6 @@ def ensure_audio_fixture() -> str:
     recorded with the same numpy kernels the distributed query runs;
     the anti-drift test recomputes a sample live."""
     if not os.path.exists(AUDIO_FIXTURE):
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
         from fs2_osm_spark.operators.audio import (
             clip_features_from_samples,
             spectral_fingerprint,
@@ -491,10 +451,7 @@ def ensure_audio_fixture() -> str:
         )
         pdf["clip_ratio"], pdf["duration_s"] = feats[:, 3], feats[:, 4]
         pdf["fingerprint"] = fps
-        os.makedirs(os.path.dirname(AUDIO_FIXTURE), exist_ok=True)
-        tmp = AUDIO_FIXTURE + ".tmp"
-        pq.write_table(pa.Table.from_pandas(pdf, preserve_index=False), tmp)
-        os.replace(tmp, AUDIO_FIXTURE)
+        _write_parquet(AUDIO_FIXTURE, pdf)
     return AUDIO_FIXTURE
 
 
@@ -612,14 +569,8 @@ def ensure_sim_fixture(spark) -> str:
     if not all(
         os.path.exists(sim_fixture_path(n)) for n in ("ivf_ann", "kmeans_clusters")
     ):
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        os.makedirs(SIM_FIXTURE_DIR, exist_ok=True)
         for name, pdf in sim_ground_truth(spark).items():
-            tmp = sim_fixture_path(name) + ".tmp"
-            pq.write_table(pa.Table.from_pandas(pdf, preserve_index=False), tmp)
-            os.replace(tmp, sim_fixture_path(name))
+            _write_parquet(sim_fixture_path(name), pdf)
     return SIM_FIXTURE_DIR
 
 
@@ -635,14 +586,8 @@ def ensure_phash_corpus() -> str:
     tests/test_phash_neardup.py re-synthesizes a sample so a drifting
     generator or codec invalidates the fixture loudly."""
     if not os.path.exists(PHASH_CORPUS):
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
         from fs2_osm_spark.synth.images import neardup_batch
 
         pdf = neardup_batch(np.arange(PHASH_N_BASE, dtype=np.int64))
-        os.makedirs(os.path.dirname(PHASH_CORPUS), exist_ok=True)
-        tmp = PHASH_CORPUS + ".tmp"
-        pq.write_table(pa.Table.from_pandas(pdf, preserve_index=False), tmp)
-        os.replace(tmp, PHASH_CORPUS)
+        _write_parquet(PHASH_CORPUS, pdf)
     return PHASH_CORPUS

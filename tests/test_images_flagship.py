@@ -135,6 +135,49 @@ def test_pixel_roundtrip_all_pass(spark):
         assert r.caption.startswith("img ")  # caption passthrough intact
 
 
+def test_pixel_pass_schemas(spark):
+    """Every pixel pass keeps its declared output columns: names, order,
+    types and nullability, written out literally. The id column is non-null
+    whatever the input says; carried columns keep the input's field."""
+    from fs2_osm_spark.operators import multimodal as mm
+    from fs2_osm_spark.synth.staging import ensure_images_fixture, ensure_phash_corpus
+
+    images = spark.read.parquet(ensure_images_fixture())
+    i = ("image_id", "string", False)
+    means = [(c, "double", False) for c in ("mean_r", "mean_g", "mean_b")]
+    cases = [
+        (mm.decode_stats(images), [
+            i, ("dec_w", "int", False), ("dec_h", "int", False), *means,
+            ("std_r", "double", False), ("std_g", "double", False),
+            ("std_b", "double", False), ("phash_match", "boolean", False),
+        ]),
+        (mm.decode_channel_means(images), [i, *means]),
+        (mm.decode_channel_means(images, carry=("caption", "phash")), [
+            i, ("caption", "string", True), ("phash", "bigint", True), *means,
+        ]),
+        (mm.pixel_roundtrip(images), [
+            i, ("caption", "string", False), ("psnr_db", "double", False),
+            ("lossless", "boolean", False),
+        ]),
+        (mm.resize_block_mean(images, 8, 8), [
+            i, ("bytes", "binary", False), ("w", "int", False),
+            ("h", "int", False), ("fmt", "string", False),
+            ("phash", "bigint", False),
+        ]),
+        (mm.phash_frame(spark.read.parquet(ensure_phash_corpus())), [
+            ("img_id", "string", False), ("phash", "bigint", False),
+        ]),
+        (mm.augment_stats(images), [
+            i, ("fl_phash", "bigint", False), ("cr_phash", "bigint", False),
+            ("cr_mean_r", "double", False), ("cr_mean_g", "double", False),
+            ("cr_mean_b", "double", False),
+        ]),
+    ]
+    for df, want in cases:
+        got = [(f.name, f.dataType.simpleString(), f.nullable) for f in df.schema]
+        assert got == want
+
+
 def test_geotag_matches_generation(spark):
     images = images_table(spark, 200)
     got = geotag(images).select("image_id", "lon", "lat").collect()

@@ -1,7 +1,8 @@
 """The kernel adapters. ``map_rows``: fan-out, empty batches, nulls,
 nested/binary output types, and kernel errors reaching the driver.
 ``map_columns``: matrix and 1-D kernels, empty frames, and ragged or null
-vector rows."""
+vector rows. ``map_images``, the image pass on ``map_rows``: inputs and the
+id column."""
 
 from __future__ import annotations
 
@@ -152,3 +153,37 @@ def test_map_columns_rejects_ragged_or_null_vectors(spark, rows):
     )
     with pytest.raises(Exception, match="ValueError: map_columns: column 'v'"):
         out.collect()
+
+
+def test_map_images_inputs_and_id_column(spark):
+    """The one image pass: one row per image, the id column named by the
+    caller and declared non-null, then ``fn``'s values; ``fn`` gets the
+    decoded array, the format and the inputs in the order they are named."""
+    from fs2_osm_spark.codecs.png import encode_png
+    from fs2_osm_spark.operators.multimodal import map_images
+
+    imgs = [np.full((h, 3, 3), h * 10, np.uint8) for h in (2, 4, 5)]
+    df = spark.createDataFrame(
+        [(f"k{i}", bytearray(encode_png(a)), "png", i * 1.5, f"t{i}")
+         for i, a in enumerate(imgs)],
+        "key string, bytes binary, fmt string, b double, a string",
+    )
+
+    def fn(img, fmt, a, b):
+        return (a, b, fmt, int(img.shape[0]), int(img[0, 0, 0]))
+
+    fields = [
+        T.StructField("a", T.StringType()),
+        T.StructField("b", T.DoubleType()),
+        T.StructField("f", T.StringType(), False),
+        T.StructField("h", T.LongType(), False),
+        T.StructField("px", T.LongType(), False),
+    ]
+    out = map_images(df, ["a", "b"], fn, fields, id_col="key")
+    nullable = [(f.name, f.nullable) for f in out.schema]
+    assert nullable[:2] == [("key", False), ("a", True)]
+    assert sorted(tuple(r) for r in out.collect()) == [
+        ("k0", "t0", 0.0, "png", 2, 20),
+        ("k1", "t1", 1.5, "png", 4, 40),
+        ("k2", "t2", 3.0, "png", 5, 50),
+    ]
