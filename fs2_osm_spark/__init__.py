@@ -11,4 +11,49 @@ Everything here derives from public knowledge only: the Apache Spark / PySpark
 API, the reference repo's observable behavior, and published algorithms.
 """
 
+import os
+import sys
+import zipimport
+
 __version__ = "0.1.0"
+
+
+def install_lazy_zip_invalidation() -> None:
+    """Backport CPython 3.13's cheap ``zipimporter.invalidate_caches``.
+
+    A PySpark worker calls ``importlib.invalidate_caches()`` before every
+    task, and it imports PySpark from ``pyspark.zip``. On CPython 3.10-3.12
+    each zipimporter then re-reads the archive's whole directory, once per
+    imported pyspark package: ~0.1 s of CPU per task. Installed here, it
+    re-reads an archive only when its ``(st_mtime_ns, st_size)`` differs
+    from the last read, so an archive rewritten in place is still re-read
+    (unless the rewrite keeps both its size and its mtime). A worker imports
+    this package when it unpickles an engine kernel, so its tasks after that
+    pay one ``os.stat`` per importer instead.
+
+    Does nothing on Python >= 3.13 (already lazy there), when
+    ``zipimporter`` has no ``invalidate_caches``, or when already installed.
+    """
+    cls = zipimport.zipimporter
+    original = getattr(cls, "invalidate_caches", None)
+    if sys.version_info >= (3, 13) or original is None or original.__module__ == __name__:
+        return
+    read_at = {}  # archive -> (st_mtime_ns, st_size) it was last read at
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+            stamp = (st.st_mtime_ns, st.st_size)
+        except OSError:
+            stamp = None
+        files = zipimport._zip_directory_cache.get(self.archive)
+        if stamp is not None and files is not None and read_at.get(self.archive) == stamp:
+            self._files = files
+            return
+        original(self)
+        read_at[self.archive] = stamp
+
+    cls.invalidate_caches = invalidate_caches
+
+
+install_lazy_zip_invalidation()

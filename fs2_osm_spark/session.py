@@ -11,6 +11,11 @@ AQE also coalesces the plans it caches
 persisted shuffled frame is materialized in as many partitions as its data
 needs, not ``spark.sql.shuffle.partitions``, so every consumer of a small
 pin runs a few tasks instead of one per shuffle partition.
+
+The codegen cache holds 1,000 compiled classes, not Spark's 100: one
+lifecycle pass uses ~200 (class loader, source) keys, so at 100 every warm
+``run_pbf_pipeline`` recompiled ~140 classes (~1.5 s of Janino). It is a
+static conf, so it is set here and not per query.
 """
 
 from __future__ import annotations
@@ -56,6 +61,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", DRIVER_MEM))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

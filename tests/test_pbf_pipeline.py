@@ -111,7 +111,9 @@ def test_wire_info_round_trip(spark, pbf_dir):
 def test_pbf_pipeline_summary_and_resume(spark, pbf_dir):
     """Full lifecycle golden counts: the export Summary from the wire path
     equals the direct path's Summary table-for-table; the flagship stage
-    resumes idempotently after an injected crash."""
+    resumes idempotently after an injected crash. The second run finds its
+    generated classes in the codegen cache: it compiles at most 10 (~140
+    when the cache held Spark's default 100 entries)."""
     from fs2_osm_spark.plans.export import run_export
     from fs2_osm_spark.plans.lineage import LineageLog, read_all_batches
     from fs2_osm_spark.synth.osm import osm_tables
@@ -135,7 +137,10 @@ def test_pbf_pipeline_summary_and_resume(spark, pbf_dir):
         assert len(LineageLog(spark, flag_root).completed()) == 2
 
         # resume: remaining batches only; export summary matches direct path
+        codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        before = codegen.METRIC_COMPILATION_TIME().getCount()
         out = run_pbf_pipeline(spark, pbf_dir, root, n_images=400, n_batches=5)
+        assert codegen.METRIC_COMPILATION_TIME().getCount() - before <= 10
         assert out["summary"] == want
         assert out["batches"] == 3
 

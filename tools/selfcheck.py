@@ -3,6 +3,9 @@
 Usage:  python tools/selfcheck.py [sf_dir] [name_filter]
         python tools/selfcheck.py --driver-sim [sf_dir] [n_queries]
 
+``sf_dir`` defaults to the sf0.01 scale beside ``io.DEFAULT_SF_DIR``. An
+unknown flag exits non-zero with the usage; ``--help`` prints it.
+
 --driver-sim replicates the DRIVER's environment instead of the engine's:
 a vanilla ``SparkSession.builder.getOrCreate()`` (none of session.py's
 confs — Arrow off, 200 shuffle partitions, default broadcast threshold),
@@ -15,12 +18,14 @@ round-end commit.
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from fs2_osm_spark.io import DEFAULT_SF_DIR  # noqa: E402
 from fs2_osm_spark.oracle import compare, duckdb_connection  # noqa: E402
 from fs2_osm_spark.queries import QUERIES, queries_map  # noqa: E402
 
@@ -54,14 +59,40 @@ def run_driver_sim(sf_dir: str, n_queries: int) -> int:
     return 1 if failures else 0
 
 
+def parse_args() -> argparse.Namespace:
+    ap = argparse.ArgumentParser(
+        description="Run the registry's queries against the DuckDB oracle.",
+        usage="%(prog)s [sf_dir] [name_filter]\n"
+        "       %(prog)s --driver-sim [sf_dir] [n_queries]",
+    )
+    ap.add_argument(
+        "sf_dir", nargs="?",
+        default=os.path.join(os.path.dirname(DEFAULT_SF_DIR), "sf0.01"),
+    )
+    ap.add_argument(
+        "select", nargs="?", default=None, metavar="name_filter|n_queries",
+        help="queries whose name contains this; with --driver-sim, how many "
+        "of the first queries in registry order to run (default 50)",
+    )
+    ap.add_argument(
+        "--driver-sim", action="store_true",
+        help="a vanilla session, the first n_queries, no inter-query hygiene",
+    )
+    args = ap.parse_args()
+    if args.driver_sim:
+        try:
+            args.select = int(args.select or 50)
+        except ValueError:
+            ap.error(f"n_queries must be an integer, not {args.select!r}")
+    return args
+
+
 def main() -> int:
-    argv = [a for a in sys.argv[1:] if not a.startswith("--")]
-    if "--driver-sim" in sys.argv[1:]:
-        sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
-        n_queries = int(argv[1]) if len(argv) > 1 else 50
-        return run_driver_sim(sf_dir, n_queries)
-    sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
-    name_filter = argv[1] if len(argv) > 1 else ""
+    args = parse_args()
+    if args.driver_sim:
+        return run_driver_sim(args.sf_dir, args.select)
+    sf_dir = args.sf_dir
+    name_filter = args.select or ""
 
     from fs2_osm_spark.pins import release_pins
     from fs2_osm_spark.session import get_spark
