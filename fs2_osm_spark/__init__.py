@@ -19,16 +19,20 @@ __version__ = "0.1.0"
 
 
 def install_lazy_zip_invalidation() -> None:
-    """Backport CPython 3.13's cheap ``zipimporter.invalidate_caches``.
+    """A stat-stamped ``zipimporter.invalidate_caches``, modelled on CPython
+    3.13's fix.
 
     A PySpark worker calls ``importlib.invalidate_caches()`` before every
     task, and it imports PySpark from ``pyspark.zip``. On CPython 3.10-3.12
     each zipimporter then re-reads the archive's whole directory, once per
     imported pyspark package: ~0.1 s of CPU per task. Installed here, it
     re-reads an archive only when its ``(st_mtime_ns, st_size)`` differs
-    from the last read, so an archive rewritten in place is still re-read
-    (unless the rewrite keeps both its size and its mtime). A worker imports
-    this package when it unpickles an engine kernel, so its tasks after that
+    from the last read, so an archive rewritten in place is still re-read.
+    Unlike 3.13, which drops the cached directory and re-reads it on next
+    use, this trusts the stamp: a rewrite that keeps both the size and the
+    mtime (within the filesystem's mtime granularity) keeps the stale
+    directory. A worker imports this package when it unpickles an engine
+    kernel (``rowmap``'s adapters make sure of it), so its tasks after that
     pay one ``os.stat`` per importer instead.
 
     Does nothing on Python >= 3.13 (already lazy there), when

@@ -49,19 +49,30 @@ def map_rows(
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
-            rows = [
-                out
-                for vals in zip(*(c.to_pylist() for c in batch.columns))
-                for out in fn(*vals)
-            ]
-            if rows:
-                arrays = [
-                    pa.array(c, f.type)
-                    for c, f in zip(zip(*rows, strict=True), arrow_schema, strict=True)
-                ]
-                yield pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
+            out = _rows_batch(batch, fn, arrow_schema)
+            if out is not None:
+                yield out
 
     return df.select(*cols).mapInArrow(run, schema)
+
+
+# The batch bodies are module functions, not part of the ``run`` closures:
+# cloudpickle ships a closure by value but a module function by reference,
+# so a Python worker that unpickles either adapter's kernel imports this
+# package, and with it ``install_lazy_zip_invalidation``.
+
+
+def _rows_batch(
+    batch: pa.RecordBatch, fn: Callable[..., Iterable[tuple]], arrow_schema: pa.Schema
+) -> pa.RecordBatch | None:
+    """One ``map_rows`` batch; None when its rows yield nothing."""
+    rows = [out for vals in zip(*(c.to_pylist() for c in batch.columns)) for out in fn(*vals)]
+    if not rows:
+        return None
+    arrays = [
+        pa.array(c, f.type) for c, f in zip(zip(*rows, strict=True), arrow_schema, strict=True)
+    ]
+    return pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
 
 
 def _column_array(col: pa.Array, name: str) -> np.ndarray:
@@ -98,16 +109,26 @@ def map_columns(
     narrow ``mapInArrow`` stage."""
     schema = T.StructType([df.schema[c] for c in keep] + list(fields))
     arrow_schema = to_arrow_schema(schema)
-    new_types = arrow_schema.types[len(keep) :]
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
-            if not batch.num_rows:
-                continue
-            out = fn(*(_column_array(batch.column(c), c) for c in cols))
-            arrays = [batch.column(c) for c in keep] + [
-                pa.array(a, t) for a, t in zip(out, new_types, strict=True)
-            ]
-            yield pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
+            if batch.num_rows:
+                yield _columns_batch(batch, fn, keep, cols, arrow_schema)
 
     return df.select(*dict.fromkeys([*keep, *cols])).mapInArrow(run, schema)
+
+
+def _columns_batch(
+    batch: pa.RecordBatch,
+    fn: Callable[..., Sequence],
+    keep: Sequence[str],
+    cols: Sequence[str],
+    arrow_schema: pa.Schema,
+) -> pa.RecordBatch:
+    """One non-empty ``map_columns`` batch."""
+    out = fn(*(_column_array(batch.column(c), c) for c in cols))
+    new_types = arrow_schema.types[len(keep) :]
+    arrays = [batch.column(c) for c in keep] + [
+        pa.array(a, t) for a, t in zip(out, new_types, strict=True)
+    ]
+    return pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)

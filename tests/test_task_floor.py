@@ -6,13 +6,19 @@ from __future__ import annotations
 
 import importlib
 import os
+import subprocess
 import sys
 import zipfile
 import zipimport
 
 import pytest
+from pyspark import cloudpickle
+from pyspark.sql import types as T
 
 from fs2_osm_spark import install_lazy_zip_invalidation
+from fs2_osm_spark.rowmap import map_columns, map_rows
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _write_zip(path, modules: dict[str, str]) -> None:
@@ -88,16 +94,65 @@ def test_install_is_idempotent():
     assert zipimport.zipimporter.invalidate_caches is installed
 
 
+class _KernelCapture:
+    """Stands in for a DataFrame: keeps the function handed to mapInArrow."""
+
+    schema = T.StructType([T.StructField("x", T.LongType())])
+
+    def select(self, *cols):
+        return self
+
+    def mapInArrow(self, fn, schema):
+        self.kernel = fn
+
+
+def _unpickled_in_fresh_interpreter(kernel) -> str:
+    """Unpickle ``kernel`` the way a new Python worker does, in an
+    interpreter that has not imported the engine; returns the module that
+    then defines ``zipimporter.invalidate_caches``."""
+    code = (
+        "import pickle, sys, zipimport\n"
+        "assert 'fs2_osm_spark' not in sys.modules\n"
+        "pickle.loads(sys.stdin.buffer.read())\n"
+        "print(zipimport.zipimporter.invalidate_caches.__module__)\n"
+    )
+    r = subprocess.run(
+        [sys.executable, "-c", code],
+        input=cloudpickle.dumps(kernel),
+        capture_output=True,
+        cwd=REPO,
+        timeout=120,
+    )
+    assert r.returncode == 0, r.stderr.decode()
+    return r.stdout.decode().strip()
+
+
+@pytest.mark.skipif(sys.version_info >= (3, 13), reason="CPython >= 3.13 is lazy")
+def test_unpickling_an_adapter_kernel_installs_the_fix():
+    """cloudpickle ships the adapters' ``run`` closures by value; their batch
+    bodies are module functions of ``fs2_osm_spark.rowmap``, so unpickling
+    either kernel imports the package whatever ``fn`` the caller passed
+    (here lambdas, shipped by value, that import nothing)."""
+    rows = _KernelCapture()
+    map_rows(rows, ["x"], lambda x: [(x,)], _KernelCapture.schema)
+    cols = _KernelCapture()
+    map_columns(cols, ["x"], ["x"], lambda x: [x], [T.StructField("y", T.LongType())])
+    for kernel in (rows.kernel, cols.kernel):
+        assert _unpickled_in_fresh_interpreter(kernel) == "fs2_osm_spark"
+
+
 @pytest.mark.skipif(sys.version_info >= (3, 13), reason="CPython >= 3.13 is lazy")
 def test_workers_carry_the_fix_and_a_cheap_task_floor(spark):
-    """A one-row map_rows kernel run twice: every worker of the second run
-    has the engine's invalidate_caches, one importlib.invalidate_caches()
+    """A one-row map_rows kernel run twice (its probe imports nothing of the
+    engine; the session's workers may be reused, so the test above is the
+    one that pins how a new worker gets the fix): every worker of the second
+    run has the engine's invalidate_caches, one importlib.invalidate_caches()
     there costs <= 10 ms of CPU (100-220 ms when it re-reads pyspark.zip), and
     a warm worker spends <= 70 ms of CPU between tasks (130-250 ms before; the
     rest is mostly the daemon's gc.collect() after every task)."""
     from tools.task_floor import worker_probe
 
-    got = worker_probe(spark, tasks=16)
+    got = worker_probe(spark)
     assert got["invalidate_modules"] == ["fs2_osm_spark"]
     assert got["invalidate_ms"] <= 10, got
     assert got["worker_gap_ms"] is not None and got["worker_gap_ms"] <= 70, got

@@ -14,14 +14,13 @@ Prints one JSON line with two numbers:
 
 It enforces no bound; it only shows the next regression of either number.
 Run from the repository root (Python workers import the engine from the
-working directory):
+working directory). Both numbers are taken on ``local[4]``, so runs compare:
 
-    python tools/task_floor.py [--cores 4] [--tasks 16]
+    python tools/task_floor.py
 """
 
 from __future__ import annotations
 
-import argparse
 import json
 import os
 import shutil
@@ -31,6 +30,10 @@ import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+CORES = 4
+TASKS = 16  # per probe run: 4 tasks per worker on 4 cores
+N_ZONES, N_FILES = 40, 4  # the warm pass's PBF window
 
 PROBE_SCHEMA = (
     "pid long, start_s double, end_s double, run int, invalidate_module string"
@@ -44,8 +47,6 @@ def _probe(run: int):
     import importlib
     import zipimport
 
-    import fs2_osm_spark  # noqa: F401 — what unpickling any engine kernel does
-
     start = time.process_time()
     importlib.invalidate_caches()
     yield (
@@ -57,9 +58,11 @@ def _probe(run: int):
     )
 
 
-def worker_probe(spark, tasks: int = 16) -> dict:
-    """Run a one-row-per-task ``map_rows`` kernel twice over ``tasks``
-    partitions. Over the second run's tasks, returns the median worker CPU
+def worker_probe(spark) -> dict:
+    """Run a one-row-per-task ``map_rows`` kernel twice over ``TASKS``
+    partitions. The probe imports nothing of the engine: a worker has the
+    engine's ``invalidate_caches`` only if unpickling the kernel brought
+    the package in. Over the second run's tasks, returns the median worker CPU
     (ms) between the end of the previous task of the same worker and the
     start of this one, the most CPU (ms) one ``importlib.invalidate_caches()``
     took inside the kernel, and the set of ``invalidate_caches`` modules."""
@@ -69,7 +72,7 @@ def worker_probe(spark, tasks: int = 16) -> dict:
 
     rows = []
     for run in (1, 2):
-        df = spark.range(0, tasks, 1, tasks).select(F.lit(run).alias("run"))
+        df = spark.range(0, TASKS, 1, TASKS).select(F.lit(run).alias("run"))
         rows += map_rows(df, ["run"], _probe, PROBE_SCHEMA).collect()
     by_pid: dict[int, list] = {}
     for r in rows:
@@ -86,7 +89,7 @@ def worker_probe(spark, tasks: int = 16) -> dict:
     }
 
 
-def warm_pass_compiled(spark, n_zones: int = 40, n_files: int = 4) -> int:
+def warm_pass_compiled(spark) -> int:
     """Classes compiled by the second of two ``run_pbf_pipeline`` passes."""
     from fs2_osm_spark.plans.pbf_pipeline import run_pbf_pipeline
     from fs2_osm_spark.sources.pbf_writer import write_osm_pbf
@@ -95,7 +98,7 @@ def warm_pass_compiled(spark, n_zones: int = 40, n_files: int = 4) -> int:
     root = tempfile.mkdtemp(prefix="task_floor_")
     try:
         pbf = os.path.join(root, "pbf")
-        write_osm_pbf(spark, pbf, n_zones, n_files).collect()
+        write_osm_pbf(spark, pbf, N_ZONES, N_FILES).collect()
         run_pbf_pipeline(spark, pbf, os.path.join(root, "cold"), n_images=400, n_batches=2)
         before = metrics.METRIC_COMPILATION_TIME().getCount()
         run_pbf_pipeline(spark, pbf, os.path.join(root, "warm"), n_images=400, n_batches=2)
@@ -105,15 +108,10 @@ def warm_pass_compiled(spark, n_zones: int = 40, n_files: int = 4) -> int:
 
 
 def main() -> int:
-    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
-    ap.add_argument("--cores", type=int, default=4)
-    ap.add_argument("--tasks", type=int, default=16)
-    args = ap.parse_args()
-
     from fs2_osm_spark.session import get_spark
 
-    spark = get_spark(cores=args.cores, app_name="task_floor")
-    gap_ms = worker_probe(spark, args.tasks)["worker_gap_ms"]
+    spark = get_spark(cores=CORES, app_name="task_floor")
+    gap_ms = worker_probe(spark)["worker_gap_ms"]
     compiled = warm_pass_compiled(spark)
     print(json.dumps({"worker_gap_ms": gap_ms, "warm_pass_compiled": compiled}))
     return 0
